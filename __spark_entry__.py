@@ -236,10 +236,8 @@ def _release_refresh_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _eventops_df_query(fn_name: str):
     """Event-plane DF twins: retention/funnel materialize their
     multiply-referenced intermediate once per run instead of
-    re-evaluating it per CTE reference under Spark inlining; the
-    attribution pair join is a DF twin so its equi-join can route
-    through salted_join under eventops.set_skew_mode. The SQL forms
-    stay the oracles."""
+    re-evaluating it per CTE reference under Spark inlining. The SQL
+    forms stay the oracles."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         from aws_trusted_advisor_explorer_spark.operators import eventops
@@ -997,11 +995,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["knn_filtered"] = _knn_filtered_query
     q["events_retention"] = _eventops_df_query("events_retention_df")
     q["events_funnel"] = _eventops_df_query("events_funnel_df")
-    # attribution pair join: DF twin so the join can route through
-    # salted_join under eventops.set_skew_mode("salted"); default
-    # "aqe" mode plans the SQL form's join exactly
-    q["events_purchase_click_pairs"] = _eventops_df_query(
-        "events_purchase_click_pairs_df")
     q["docs_release_manifest"] = _release_manifest_query
     q["docs_release_refresh"] = _release_refresh_query
     q["docs_pack_bins"] = _pack_bins_query

@@ -42,6 +42,9 @@ partial-agg combine.
 from __future__ import annotations
 
 from aws_trusted_advisor_explorer_spark.functions.dual import Dialect
+from aws_trusted_advisor_explorer_spark.session import (
+    materialize_plane_df, session_plane,
+)
 
 KMEANS_K = 8
 KMEANS_DIM = 64        # embeddings.embedding is fixed 64-dim (TESTDATA.md)
@@ -500,8 +503,6 @@ GROUP BY ex.query_id"""
 ASG_VIEW = "__emb_kmeans_asg"
 PQ_MEMBERS_VIEW = "__emb_pq_members"
 PQ_CENTS_VIEW = "__emb_pq_cents"
-# id(spark) -> (weakref, key, pinned DFs); see session.ensure_session_plane
-_CLUSTER_STATE: dict[int, tuple[object, object, list]] = {}
 
 
 def _np_round_half_up(x):
@@ -601,6 +602,7 @@ def _collect_seed_matrix(spark, k: int):
     return ids, V
 
 
+@session_plane("cluster_index")
 def ensure_cluster_views(spark, key: object = None) -> None:
     """Materialize the trained cluster/PQ index ONCE per (session,
     dataset) as localCheckpoint-backed temp views: the KMeans
@@ -609,173 +611,154 @@ def ensure_cluster_views(spark, key: object = None) -> None:
     the builders instead of re-running the unrolled training CTE
     chains per query — on a cluster this is the train-once / persist /
     search-many index lifecycle, and the oracle keeps the inlined
-    self-contained form. Plane-mode aware (session.set_plane_mode):
-    under "table" the assignment and code tables bucket on vec_id (the
-    probe/search join key) and the codebook on its subspace id."""
+    self-contained form."""
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
+
+    # Kernel-twin index build (r12 optimization: let Spark do the
+    # distribution and hand batches to numpy): the unrolled
+    # SQL training chains re-derived the exploded element relation
+    # per CTE reference and paid two windowed argmins per chain —
+    # measured 5.2 s warm at sf0.1 for the three materializations.
+    # The kernel form is the production KMeans shape: codebooks are
+    # BOUNDED relations (<= PQ_K x DIM doubles — the frozen-model
+    # tier, like structured.py's MODEL_BROADCAST_MAX collects) that
+    # broadcast to every assign task; each corpus pass is one
+    # mapInPandas with exact scaled-integer arithmetic replaying
+    # the SQL ops bit-for-bit (_np_round_half_up / _np_assign /
+    # _np_update); the one-update partial aggregate ships
+    # K x DIM-row integer partials, combined by the builtin hash
+    # aggregate. Row/type equality with the SQL chains is pinned by
+    # test_cluster_kernel_views_match_sql_chains (plus the standing
+    # independent-numpy and oracle gates). Measured 5.2 s -> ~0.9 s.
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    seed_ids, seedV = _collect_seed_matrix(spark, max(KMEANS_K, PQ_K))
+    bc = spark.sparkContext.broadcast(
+        (seed_ids[:KMEANS_K], seedV[:KMEANS_K],
+         seed_ids[:PQ_K], seedV[:PQ_K]))
+
+    km_pos = np.arange(1, KMEANS_DIM + 1, dtype=np.int64)
+
+    def upd_partial(batches):
+        km_ids, kmC0, pq_ids, pqC0 = bc.value
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = np.stack(pdf["embedding"].to_numpy()).astype(
+                np.float64)
+            lab, _ = _np_assign(V, km_ids, kmC0)
+            s1, n1 = _np_update(V, lab, km_ids)
+            labs, _ = _np_assign(V, pq_ids, pqC0, sub=True)
+            s2, n2 = _np_update(V, labs, pq_ids, sub=True)
+            frames = [pd.DataFrame({
+                "kind": np.int64(0),
+                "s": np.int64(-1),
+                "cid": np.repeat(km_ids, KMEANS_DIM),
+                "pos": np.tile(km_pos, KMEANS_K),
+                "sm": s1.ravel(),
+                "n": np.repeat(n1, KMEANS_DIM)})]
+            for s in range(PQ_SUB):
+                sl = slice(s * PQ_SUBDIM, (s + 1) * PQ_SUBDIM)
+                frames.append(pd.DataFrame({
+                    "kind": np.int64(1),
+                    "s": np.int64(s),
+                    "cid": np.repeat(pq_ids, PQ_SUBDIM),
+                    "pos": np.tile(km_pos[sl], PQ_K),
+                    "sm": s2[s][:, sl].ravel(),
+                    "n": np.repeat(n2[s], PQ_SUBDIM)}))
+            yield pd.concat(frames, ignore_index=True)
+
     from aws_trusted_advisor_explorer_spark.session import (
-        ensure_session_plane, materialize_plane_df, plane_cache_key,
-        plane_key_ok,
+        kernel_partitions,
     )
 
-    def build(spark):
-        # Kernel-twin index build (r12 optimization; guide §4.2 "let
-        # Spark do distribution, hand batches to numpy"): the unrolled
-        # SQL training chains re-derived the exploded element relation
-        # per CTE reference and paid two windowed argmins per chain —
-        # measured 5.2 s warm at sf0.1 for the three materializations.
-        # The kernel form is the production KMeans shape: codebooks are
-        # BOUNDED relations (<= PQ_K x DIM doubles — the frozen-model
-        # tier, like structured.py's MODEL_BROADCAST_MAX collects) that
-        # broadcast to every assign task; each corpus pass is one
-        # mapInPandas with exact scaled-integer arithmetic replaying
-        # the SQL ops bit-for-bit (_np_round_half_up / _np_assign /
-        # _np_update); the one-update partial aggregate ships
-        # K x DIM-row integer partials, combined by the builtin hash
-        # aggregate. Row/type equality with the SQL chains is pinned by
-        # test_cluster_kernel_views_match_sql_chains (plus the standing
-        # independent-numpy and oracle gates). Measured 5.2 s -> ~0.9 s.
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import functions as F
+    # repartition once before the two kernel passes: the
+    # single-file embeddings scan is one task, which serialized
+    # both corpus passes (r13 — see dedup.ensure_gram_fold_view);
+    # the update partials are exact int64 sums merged by the
+    # builtin aggregate, so partitioning never changes results
+    emb = spark.table("embeddings").select("vec_id", "embedding")
+    emb = emb.repartition(kernel_partitions(emb))
+    agg = (emb.select("embedding")
+           .mapInPandas(upd_partial,
+                        schema="kind long, s long, cid long, "
+                               "pos long, sm long, n long")
+           .groupBy("kind", "s", "cid", "pos")
+           .agg(F.sum("sm").alias("sm"), F.sum("n").alias("n"))
+           .collect())  # bounded: <= K*DIM + PQ_SUB*PQ_K*PQ_SUBDIM
 
-        seed_ids, seedV = _collect_seed_matrix(spark, max(KMEANS_K, PQ_K))
-        bc = spark.sparkContext.broadcast(
-            (seed_ids[:KMEANS_K], seedV[:KMEANS_K],
-             seed_ids[:PQ_K], seedV[:PQ_K]))
+    def updated(rows):
+        # cells with members only (the SQL update emits no row for
+        # an empty cell); val = one IEEE division, the SQL's op
+        by_cid: dict = {}
+        for r in rows:
+            if r.n > 0:
+                by_cid.setdefault(r.cid, {})[r.pos] = (
+                    float(r.sm) / (r.n * _ESCALE))
+        cids = np.array(sorted(by_cid), dtype=np.int64)
+        return cids, by_cid
 
-        km_pos = np.arange(1, KMEANS_DIM + 1, dtype=np.int64)
-        pq_s = np.repeat(np.arange(PQ_SUB, dtype=np.int64), PQ_SUBDIM)
+    km_cids, km_by = updated([r for r in agg if r.kind == 0])
+    kmC1 = np.zeros((len(km_cids), KMEANS_DIM))
+    for i, cid in enumerate(km_cids):
+        for pos, val in km_by[cid].items():
+            kmC1[i, pos - 1] = val
+    pq_books = []  # per subspace: (cids, C) with only its slice set
+    cent_rows = []
+    for s in range(PQ_SUB):
+        cids_s, by_s = updated(
+            [r for r in agg if r.kind == 1 and r.s == s])
+        C_s = np.zeros((len(cids_s), KMEANS_DIM))
+        for i, cid in enumerate(cids_s):
+            for pos, val in by_s[cid].items():
+                C_s[i, pos - 1] = val
+                cent_rows.append((s, int(cid), int(pos), val))
+        pq_books.append((cids_s, C_s))
+    bc2 = spark.sparkContext.broadcast((km_cids, kmC1, pq_books))
 
-        def upd_partial(batches):
-            km_ids, kmC0, pq_ids, pqC0 = bc.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.stack(pdf["embedding"].to_numpy()).astype(
-                    np.float64)
-                lab, _ = _np_assign(V, km_ids, kmC0)
-                s1, n1 = _np_update(V, lab, km_ids)
-                labs, _ = _np_assign(V, pq_ids, pqC0, sub=True)
-                s2, n2 = _np_update(V, labs, pq_ids, sub=True)
-                frames = [pd.DataFrame({
-                    "kind": np.int64(0),
-                    "s": np.int64(-1),
-                    "cid": np.repeat(km_ids, KMEANS_DIM),
-                    "pos": np.tile(km_pos, KMEANS_K),
-                    "sm": s1.ravel(),
-                    "n": np.repeat(n1, KMEANS_DIM)})]
-                for s in range(PQ_SUB):
-                    sl = slice(s * PQ_SUBDIM, (s + 1) * PQ_SUBDIM)
-                    frames.append(pd.DataFrame({
-                        "kind": np.int64(1),
-                        "s": np.int64(s),
-                        "cid": np.repeat(pq_ids, PQ_SUBDIM),
-                        "pos": np.tile(km_pos[sl], PQ_K),
-                        "sm": s2[s][:, sl].ravel(),
-                        "n": np.repeat(n2[s], PQ_SUBDIM)}))
-                yield pd.concat(frames, ignore_index=True)
+    def final_assign(batches):
+        km_cids, kmC1, pq_books = bc2.value
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ids = pdf["vec_id"].to_numpy()
+            V = np.stack(pdf["embedding"].to_numpy()).astype(
+                np.float64)
+            lab, dist = _np_assign(V, km_cids, kmC1)
+            out = [pd.DataFrame({
+                "kind": np.int64(0), "vec_id": ids, "s": np.int64(-1),
+                "cid": lab, "dist": dist})]
+            for s, (cids_s, C_s) in enumerate(pq_books):
+                sl = slice(s * PQ_SUBDIM, (s + 1) * PQ_SUBDIM)
+                d = np.zeros((len(V), len(cids_s)), dtype=np.int64)
+                for c in range(len(cids_s)):
+                    dd = V[:, sl] - C_s[c, sl]
+                    d[:, c] = _np_round_half_up(
+                        (dd * dd) * float(_DSCALE)).sum(axis=1)
+                li = d.argmin(axis=1)
+                out.append(pd.DataFrame({
+                    "kind": np.int64(1), "vec_id": ids,
+                    "s": np.int64(s), "cid": cids_s[li],
+                    "dist": d[np.arange(len(V)), li]}))
+            yield pd.concat(out, ignore_index=True)
 
-        from aws_trusted_advisor_explorer_spark.session import (
-            kernel_partitions,
-        )
+    both = emb.mapInPandas(
+        final_assign,
+        schema="kind long, vec_id long, s long, cid long, dist long"
+    ).localCheckpoint(eager=True)
 
-        # repartition once before the two kernel passes: the
-        # single-file embeddings scan is one task, which serialized
-        # both corpus passes (r13 — see dedup.ensure_gram_fold_view);
-        # the update partials are exact int64 sums merged by the
-        # builtin aggregate, so partitioning never changes results
-        emb = spark.table("embeddings").select("vec_id", "embedding")
-        emb = emb.repartition(kernel_partitions(emb))
-        agg = (emb.select("embedding")
-               .mapInPandas(upd_partial,
-                            schema="kind long, s long, cid long, "
-                                   "pos long, sm long, n long")
-               .groupBy("kind", "s", "cid", "pos")
-               .agg(F.sum("sm").alias("sm"), F.sum("n").alias("n"))
-               .collect())  # bounded: <= K*DIM + PQ_SUB*PQ_K*PQ_SUBDIM
-
-        def updated(rows):
-            # cells with members only (the SQL update emits no row for
-            # an empty cell); val = one IEEE division, the SQL's op
-            by_cid: dict = {}
-            for r in rows:
-                if r.n > 0:
-                    by_cid.setdefault(r.cid, {})[r.pos] = (
-                        float(r.sm) / (r.n * _ESCALE))
-            cids = np.array(sorted(by_cid), dtype=np.int64)
-            return cids, by_cid
-
-        km_cids, km_by = updated([r for r in agg if r.kind == 0])
-        kmC1 = np.zeros((len(km_cids), KMEANS_DIM))
-        for i, cid in enumerate(km_cids):
-            for pos, val in km_by[cid].items():
-                kmC1[i, pos - 1] = val
-        pq_books = []  # per subspace: (cids, C) with only its slice set
-        cent_rows = []
-        for s in range(PQ_SUB):
-            cids_s, by_s = updated(
-                [r for r in agg if r.kind == 1 and r.s == s])
-            C_s = np.zeros((len(cids_s), KMEANS_DIM))
-            for i, cid in enumerate(cids_s):
-                for pos, val in by_s[cid].items():
-                    C_s[i, pos - 1] = val
-                    cent_rows.append((s, int(cid), int(pos), val))
-            pq_books.append((cids_s, C_s))
-        bc2 = spark.sparkContext.broadcast((km_cids, kmC1, pq_books))
-
-        def final_assign(batches):
-            km_cids, kmC1, pq_books = bc2.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ids = pdf["vec_id"].to_numpy()
-                V = np.stack(pdf["embedding"].to_numpy()).astype(
-                    np.float64)
-                lab, dist = _np_assign(V, km_cids, kmC1)
-                out = [pd.DataFrame({
-                    "kind": np.int64(0), "vec_id": ids, "s": np.int64(-1),
-                    "cid": lab, "dist": dist})]
-                for s, (cids_s, C_s) in enumerate(pq_books):
-                    sl = slice(s * PQ_SUBDIM, (s + 1) * PQ_SUBDIM)
-                    d = np.zeros((len(V), len(cids_s)), dtype=np.int64)
-                    for c in range(len(cids_s)):
-                        dd = V[:, sl] - C_s[c, sl]
-                        d[:, c] = _np_round_half_up(
-                            (dd * dd) * float(_DSCALE)).sum(axis=1)
-                    li = d.argmin(axis=1)
-                    out.append(pd.DataFrame({
-                        "kind": np.int64(1), "vec_id": ids,
-                        "s": np.int64(s), "cid": cids_s[li],
-                        "dist": d[np.arange(len(V)), li]}))
-                yield pd.concat(out, ignore_index=True)
-
-        both = emb.mapInPandas(
-            final_assign,
-            schema="kind long, vec_id long, s long, cid long, dist long"
-        ).localCheckpoint(eager=True)
-
-        dfs = []
-        dfs.append(materialize_plane_df(
-            spark, both.filter("kind = 0").selectExpr(
-                "vec_id", "cid AS cluster_id", "dist AS dist_scaled"),
-            ASG_VIEW, key, ["vec_id"]))
-        cents_df = spark.createDataFrame(
-            pd.DataFrame(cent_rows, columns=["s", "cid", "pos", "val"]),
-            schema="s long, cid long, pos int, val double")  # pos int:
-        # the SQL chain's explode(sequence(1, DIM)) yields int — keep
-        # the materialized schema byte-identical to the chain's
-        dfs.append(materialize_plane_df(
-            spark, cents_df, PQ_CENTS_VIEW, key, ["s"]))
-        dfs.append(materialize_plane_df(
-            spark, both.filter("kind = 1").select(
-                "vec_id", "s", "cid", "dist"),
-            PQ_MEMBERS_VIEW, key, ["vec_id"]))
-        return dfs
-
-    build.plane_label = "cluster_index"
-    ensure_session_plane(_CLUSTER_STATE, spark, plane_cache_key(key), build,
-                         key_ok=plane_key_ok(key))
+    materialize_plane_df(both.filter("kind = 0").selectExpr(
+        "vec_id", "cid AS cluster_id", "dist AS dist_scaled"), ASG_VIEW)
+    cents_df = spark.createDataFrame(
+        pd.DataFrame(cent_rows, columns=["s", "cid", "pos", "val"]),
+        schema="s long, cid long, pos int, val double")  # pos int:
+    # the SQL chain's explode(sequence(1, DIM)) yields int — keep
+    # the materialized schema byte-identical to the chain's
+    materialize_plane_df(cents_df, PQ_CENTS_VIEW)
+    materialize_plane_df(both.filter("kind = 1").select(
+        "vec_id", "s", "cid", "dist"), PQ_MEMBERS_VIEW)
 
 
 def semdedup_pairs_df(spark):
@@ -874,31 +857,16 @@ def _semdedup_cluster_pairs_pdf(pdf):
 
 
 SEM_PAIRS_VIEW = "__semdedup_pairs"
-# id(spark) -> (weakref, key, pinned DFs); see session.ensure_session_plane
-_PAIRS_STATE: dict[int, tuple[object, object, list]] = {}
 
 
+@session_plane("semdedup_pairs")
 def ensure_semdedup_pairs(spark, key: object = None):
     """Materialize the semdedup pair relation once per (session,
     dataset): both the pair query and the prune report consume it, so
     the within-cluster pair join (the expensive stage) runs once —
     same build-once pattern as the cluster/PQ index views. Requires
-    ensure_cluster_views to have registered the assignment first.
-    Plane-mode aware; under "table" buckets on vec_b (the drop-rule
-    join key)."""
-    from aws_trusted_advisor_explorer_spark.session import (
-        ensure_session_plane, materialize_plane_df, plane_cache_key,
-        plane_key_ok,
-    )
-
-    def build(spark):
-        df = materialize_plane_df(spark, semdedup_pairs_df(spark),
-                                  SEM_PAIRS_VIEW, key, ["vec_b"])
-        return [df]
-
-    build.plane_label = "semdedup_pairs"
-    ensure_session_plane(_PAIRS_STATE, spark, plane_cache_key(key), build,
-                         key_ok=plane_key_ok(key))
+    ensure_cluster_views to have registered the assignment first."""
+    materialize_plane_df(semdedup_pairs_df(spark), SEM_PAIRS_VIEW)
     return spark.table(SEM_PAIRS_VIEW)
 
 

@@ -20,6 +20,9 @@ from __future__ import annotations
 import re
 
 from aws_trusted_advisor_explorer_spark.functions.dual import Dialect
+from aws_trusted_advisor_explorer_spark.session import (
+    materialize_plane_df, session_plane,
+)
 
 TRAIN_PCT = 80
 VAL_PCT = 10  # test = remainder
@@ -184,9 +187,9 @@ if CONTAM_NGRAM not in _GRAM_FOLD_KS:
 
 
 CONTAM_VIEW = "__contam_hits_plane"
-_CONTAM_STATE: dict = {}
 
 
+@session_plane("contam_hits_plane")
 def ensure_contam_view(spark, key: object = None) -> str:
     """Materialize the contaminated-hits relation (train_doc_id,
     n_shared_shingles, witness_eval_doc_id) once per (session,
@@ -199,29 +202,24 @@ def ensure_contam_view(spark, key: object = None) -> str:
     is exactly how a production decontamination pass ships anyway:
     compute the contaminated-id list once, reuse it for the report,
     the shipping anti-join, and the audit)."""
-    from aws_trusted_advisor_explorer_spark.session import (
-        register_session_plane,
+    # the 5-gram hv relation comes from the fused fold plane's
+    # stream-CONTAM_NGRAM slice (r13 — one tokenize+char-fold pass
+    # shared with the shingle/span planes; r12 ran
+    # dedup.make_gram_hv_kernel(CONTAM_NGRAM) standalone here);
+    # the ev/tr split + probe join + aggregate stay the SQL shape
+    # of docs_contamination. The self-contained SQL remains the
+    # oracle and the equality reference
+    # (test_contam_plane_matches_sql). Both arms read a slice of
+    # the already-checkpointed fold plane, so the r12 per-build
+    # localCheckpoint (which guarded against the kernel running
+    # once PER ARM) is no longer needed.
+    from aws_trusted_advisor_explorer_spark.operators.dedup import (
+        gram_fold_stream_df,
     )
 
-    def build_df(s):
-        # the 5-gram hv relation comes from the fused fold plane's
-        # stream-CONTAM_NGRAM slice (r13 — one tokenize+char-fold pass
-        # shared with the shingle/span planes; r12 ran
-        # dedup.make_gram_hv_kernel(CONTAM_NGRAM) standalone here);
-        # the ev/tr split + probe join + aggregate stay the SQL shape
-        # of docs_contamination. The self-contained SQL remains the
-        # oracle and the equality reference
-        # (test_contam_plane_matches_sql). Both arms read a slice of
-        # the already-checkpointed fold plane, so the r12 per-build
-        # localCheckpoint (which guarded against the kernel running
-        # once PER ARM) is no longer needed.
-        from aws_trusted_advisor_explorer_spark.operators.dedup import (
-            gram_fold_stream_df,
-        )
-
-        kdf = gram_fold_stream_df(s, key, CONTAM_NGRAM, with_pos=False)
-        kdf.createOrReplaceTempView("__contam_gram_hv")
-        return s.sql(f"""WITH ev AS (
+    kdf = gram_fold_stream_df(spark, key, CONTAM_NGRAM, with_pos=False)
+    kdf.createOrReplaceTempView("__contam_gram_hv")
+    materialize_plane_df(spark.sql(f"""WITH ev AS (
   SELECT hv, min(doc_id) AS witness FROM __contam_gram_hv
   WHERE doc_id % {BENCH_MOD} = 0 GROUP BY hv
 ),
@@ -231,10 +229,8 @@ SELECT tr.doc_id AS train_doc_id,
   count(DISTINCT tr.hv) AS n_shared_shingles,
   min(ev.witness) AS witness_eval_doc_id
 FROM tr JOIN ev ON ev.hv = tr.hv
-GROUP BY tr.doc_id""")
-
-    return register_session_plane(
-        _CONTAM_STATE, spark, key, CONTAM_VIEW, build_df)
+GROUP BY tr.doc_id"""), CONTAM_VIEW)
+    return CONTAM_VIEW
 
 
 def docs_contamination(d: Dialect, base: str | None = None) -> str:
@@ -611,8 +607,6 @@ BLOCK_MAX_DF = 4  # keep blocks seen in <= this many distinct docs
 
 
 BLOCK_VIEW = "__doc_block"
-# id(spark) -> (weakref, key, pinned DFs); see session.ensure_session_plane
-_BLOCK_STATE: dict[int, tuple[object, object, list]] = {}
 
 
 def _block_parts(d: Dialect) -> tuple[str, str, str]:
@@ -654,6 +648,7 @@ b AS (
 )"""
 
 
+@session_plane("doc_block")
 def ensure_block_view(spark, key: object = None) -> str:
     """Materialize the fixed-width segment relation once per (session,
     dataset) — docs_block_dedup and docs_boilerplate_topk both consume
@@ -663,14 +658,11 @@ def ensure_block_view(spark, key: object = None) -> str:
     dedup.ensure_shingle_view (localCheckpoint locally; a persisted
     table on a cluster)."""
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-    from aws_trusted_advisor_explorer_spark.session import (
-        register_session_plane,
-    )
 
-    return register_session_plane(
-        _BLOCK_STATE, spark, key, BLOCK_VIEW,
-        lambda s: s.sql(_block_cte(SPARK, None)
-                        + "\nSELECT doc_id, block_no, blk, hv FROM b"))
+    materialize_plane_df(
+        spark.sql(_block_cte(SPARK, None)
+                  + "\nSELECT doc_id, block_no, blk, hv FROM b"), BLOCK_VIEW)
+    return BLOCK_VIEW
 
 
 def docs_block_dedup(d: Dialect, base: str | None = None) -> str:
@@ -1312,9 +1304,9 @@ def _release_rel_df(spark, key: object = None,
 
 
 RELEASE_REL_VIEW = "__release_rel_ranged"
-_RELEASE_REL_STATE: dict = {}
 
 
+@session_plane("release_rel_ranged")
 def ensure_release_rel_view(spark, key: object = None) -> str:
     """Materialize the RANGED released-doc relation (the
     :func:`_release_rel_df` rail composition range-partitioned by
@@ -1331,17 +1323,14 @@ def ensure_release_rel_view(spark, key: object = None) -> str:
     from pyspark.sql import functions as F
 
     from aws_trusted_advisor_explorer_spark.session import (
-        range_partitions_for, register_session_plane,
+        range_partitions_for,
     )
 
-    def build_df(s):
-        rel = _release_rel_df(s, key=key)
-        return (rel.repartitionByRange(range_partitions_for(rel),
-                                       "split", "doc_id")
-                .withColumn("pid", F.spark_partition_id()))
-
-    return register_session_plane(
-        _RELEASE_REL_STATE, spark, key, RELEASE_REL_VIEW, build_df)
+    rel = _release_rel_df(spark, key=key)
+    materialize_plane_df(
+        rel.repartitionByRange(range_partitions_for(rel), "split", "doc_id")
+        .withColumn("pid", F.spark_partition_id()), RELEASE_REL_VIEW)
+    return RELEASE_REL_VIEW
 
 
 def _release_assignments_df(spark, key: object = None,

@@ -26,6 +26,9 @@ from __future__ import annotations
 from aws_trusted_advisor_explorer_spark.functions.dual import (
     Dialect, P_MOD, minhash_params,
 )
+from aws_trusted_advisor_explorer_spark.session import (
+    materialize_plane_df, session_plane,
+)
 
 N_PERM = 16
 N_BANDS = 4  # 4 rows per band
@@ -74,8 +77,6 @@ SELECT doc_id, {d.poly_hash('shingle')} AS hv FROM e"""
 SHINGLE_VIEW = "__doc_shingle_hv"
 SHINGLE_DISTINCT_VIEW = "__doc_shingle_hv_distinct"
 SHINGLE_CAPPED_VIEW = "__doc_shingle_hv_capped"
-# id(spark) -> (weakref, key, pinned DFs); see session.ensure_session_plane
-_SHINGLE_STATE: dict[int, tuple[object, object, list]] = {}
 
 
 def _tokenize_batch(texts):
@@ -237,12 +238,17 @@ def _shingle_hash_kernel(batches):
 
 
 GRAM_FOLD_VIEW = "__gram_fold"
-# id(spark) -> (weakref, key, pinned DFs); see session.ensure_session_plane
-_GRAM_FOLD_STATE: dict[int, tuple[object, object, list]] = {}
 # window widths of the token-hash-combinator streams riding the fused
 # fold pass: 5 == corpusops.CONTAM_NGRAM (cross-checked at corpusops
 # import), 8 == SPAN_GRAM (asserted below the constant's definition)
 GRAM_FOLD_COMBI_KS = (5, 8)
+if set(GRAM_FOLD_COMBI_KS) & {3, 4}:
+    # a combinator stream's id is its width, and ids 3 and 4 carry the
+    # 3-gram string hash and its per-doc distinct set: a width there
+    # would mix its rows into those streams
+    raise ValueError(
+        f"GRAM_FOLD_COMBI_KS {GRAM_FOLD_COMBI_KS} collides with the "
+        f"reserved stream ids 3 and 4")
 
 
 def _gram_fold_kernel(batches):
@@ -259,8 +265,9 @@ def _gram_fold_kernel(batches):
     into 1 of each. Per-stream rows are BIT-IDENTICAL to the
     single-plane kernels (same numpy expressions, same guard
     conditions) — pinned by test_gram_fold_kernel_matches_per_plane_kernels
-    and the standing plane-vs-SQL pins. ``pos`` is 0 for the
-    positionless streams (3, 5); consumers select it only on stream 8."""
+    and the standing plane-vs-SQL pins. ``pos`` is 0 on stream 3, the
+    per-doc distinct count on stream 4, and the 1-based window start
+    on the combinator streams (5, 8)."""
     import numpy as np
     import pandas as pd
 
@@ -339,6 +346,7 @@ def _gram_fold_kernel(batches):
                 "hv": h})
 
 
+@session_plane("gram_fold")
 def ensure_gram_fold_view(spark, key: object = None) -> str:
     """Materialize the FUSED gram-hash relation (stream, doc_id, pos,
     hv) once per (session, dataset) — the shared tokenize+char-fold
@@ -347,45 +355,23 @@ def ensure_gram_fold_view(spark, key: object = None) -> str:
     full corpus). Priced as its own ``plane:gram_fold`` row; the
     per-plane ensure functions read their stream slice from it inside
     their own builds, so their rows price only the per-plane
-    materialization/aggregation that remains.
+    materialization/aggregation that remains."""
+    from aws_trusted_advisor_explorer_spark.session import kernel_partitions
 
-    ``key=None`` (single-fixture test sessions) drops this session's
-    cached fold before ensuring: a keyless consumer rebuild signals
-    "documents may have been re-pointed", and a stale fused fold would
-    silently serve the old corpus to all three planes."""
-    from aws_trusted_advisor_explorer_spark.session import (
-        ensure_session_plane, materialize_plane_df, plane_cache_key,
-        plane_key_ok,
-    )
-
-    if key is None:
-        _GRAM_FOLD_STATE.pop(id(spark), None)
-
-    def build(spark):
-        from aws_trusted_advisor_explorer_spark.session import (
-            kernel_partitions,
-        )
-
-        # repartition BEFORE the kernel (r13, guide §2.3/§6 inverted):
-        # the driver corpus ships as ONE parquet file with one row
-        # group, so the scan is a single task and the whole fused fold
-        # ran single-threaded at any core count (the flat 8-vs-32
-        # ratios in SCALING.md's core-scaling block). The exchange
-        # moves only the narrow (doc_id, text) rows once; the
-        # checkpointed plane then inherits the parallel layout for
-        # every consumer.
-        base_rel = spark.table("documents").select("doc_id", "text")
-        kdf = (base_rel.repartition(kernel_partitions(base_rel))
-               .mapInPandas(_gram_fold_kernel,
-                            schema="stream int, doc_id long, pos int, "
-                                   "hv long"))
-        df = materialize_plane_df(spark, kdf, GRAM_FOLD_VIEW, key,
-                                  ["doc_id"])
-        return [df]
-
-    build.plane_label = "gram_fold"
-    ensure_session_plane(_GRAM_FOLD_STATE, spark, plane_cache_key(key),
-                         build, key_ok=plane_key_ok(key))
+    # repartition BEFORE the kernel (r13):
+    # the input corpus ships as ONE parquet file with one row
+    # group, so the scan is a single task and the whole fused fold
+    # ran single-threaded at any core count (the flat 8-vs-32
+    # ratios in SCALING.md's core-scaling block). The exchange
+    # moves only the narrow (doc_id, text) rows once; the
+    # checkpointed plane then inherits the parallel layout for
+    # every consumer.
+    base_rel = spark.table("documents").select("doc_id", "text")
+    kdf = (base_rel.repartition(kernel_partitions(base_rel))
+           .mapInPandas(_gram_fold_kernel,
+                        schema="stream int, doc_id long, pos int, "
+                               "hv long"))
+    materialize_plane_df(kdf, GRAM_FOLD_VIEW)
     return GRAM_FOLD_VIEW
 
 
@@ -398,6 +384,7 @@ def gram_fold_stream_df(spark, key: object, k: int, with_pos: bool):
     return spark.table(GRAM_FOLD_VIEW).where(f"stream = {k}").select(*cols)
 
 
+@session_plane("shingle")
 def ensure_shingle_view(spark, key: object = None) -> str:
     """Materialize the shingle-hash relation as a localCheckpoint-backed
     temp view, once per (session, dataset). ``key`` identifies the
@@ -408,67 +395,49 @@ def ensure_shingle_view(spark, key: object = None) -> str:
     checkpoint the shingle table, then every dedup query is a cheap
     join against it instead of re-running the explode+hash pipeline
     (which Spark would otherwise re-evaluate per CTE reference, since
-    CTEs are inlined). Materialization honors the session plane mode
-    (session.set_plane_mode): localCheckpoint locally, bucketed
-    warehouse tables under "table" — the base view bucketed on doc_id
-    (MinHash signatures group on it), the distinct/capped ride-alongs
-    on hv (the frequency-join / self-join key)."""
-    from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-    from aws_trusted_advisor_explorer_spark.session import (
-        ensure_session_plane, materialize_plane_df, plane_cache_key,
-        plane_key_ok,
-    )
-
-    def build(spark):
-        # the kernel twin of shingle_hash_sql (r12): same rows, exact
-        # integer arithmetic, ~4x the interpreted char fold — see
-        # _shingle_hash_kernel (the standalone reference form); since
-        # r13 the rows come from the FUSED fold plane's stream-3 slice
-        # (ensure_gram_fold_view — one tokenize+fold pass shared with
-        # the span/contamination planes instead of three)
-        kdf = gram_fold_stream_df(spark, key, 3, with_pos=False)
-        df = materialize_plane_df(
-            spark, kdf, SHINGLE_VIEW, key, ["doc_id"])
-        # the deduplicated per-doc shingle set with its count rides along —
-        # MinHash / exact-Jaccard would otherwise re-run the DISTINCT +
-        # window once per CTE reference (2-3x per query). Since r13 the
-        # distinct set and the per-doc count come straight from the
-        # fused kernel's stream-4 slice (per-doc distinct is local to
-        # the kernel because each doc is one input row) — the
-        # corpus-wide DISTINCT exchange + count window are gone.
-        ddf = materialize_plane_df(
-            spark, spark.table(GRAM_FOLD_VIEW).where("stream = 4")
-            .selectExpr("doc_id", "hv", "cast(pos as bigint) AS n"),
-            SHINGLE_DISTINCT_VIEW, key, ["hv"])
-        # the DF-capped relation (hot boilerplate shingles dropped, per-doc
-        # counts over the SURVIVORS) rides along too: it feeds both sides
-        # of the exact-Jaccard/containment self-join, which would otherwise
-        # re-run the cap filter + count window once per join side under
-        # CTE inlining (measured 1.11s -> 0.75s per query at sf0.1).
-        # r13 shape (guide §2.4/§3): the keep-set join + corpus-wide
-        # count window became (a) an ANTI join against the OVER-cap hv
-        # set (boilerplate only — small and selective, AQE broadcasts
-        # it) and (b) the survivor count as ``n - removed`` via a
-        # per-doc correction aggregate over the over-cap rows only —
-        # identical rows (every distinct hv is kept xor removed, so
-        # count-over-survivors == n - |this doc's over-cap hvs|), no
-        # window exchange+sort over the full distinct relation.
-        from pyspark.sql import functions as F
-        over = (ddf.groupBy("hv").agg(F.count("*").alias("df_"))
-                .where(f"df_ > {NGRAM_DF_CAP}").select("hv"))
-        rem = (ddf.join(over, "hv").groupBy("doc_id")
-               .agg(F.count("*").alias("r_")))
-        cdf = materialize_plane_df(
-            spark, ddf.join(over, "hv", "left_anti")
-            .join(rem, "doc_id", "left")
-            .selectExpr("doc_id", "hv",
-                        "n - coalesce(r_, 0L) AS n"),
-            SHINGLE_CAPPED_VIEW, key, ["hv"])
-        return [df, ddf, cdf]
-
-    build.plane_label = "shingle"
-    ensure_session_plane(_SHINGLE_STATE, spark, plane_cache_key(key), build,
-                         key_ok=plane_key_ok(key))
+    CTEs are inlined)."""
+    # the kernel twin of shingle_hash_sql (r12): same rows, exact
+    # integer arithmetic, ~4x the interpreted char fold — see
+    # _shingle_hash_kernel (the standalone reference form); since
+    # r13 the rows come from the FUSED fold plane's stream-3 slice
+    # (ensure_gram_fold_view — one tokenize+fold pass shared with
+    # the span/contamination planes instead of three)
+    kdf = gram_fold_stream_df(spark, key, 3, with_pos=False)
+    materialize_plane_df(kdf, SHINGLE_VIEW)
+    # the deduplicated per-doc shingle set with its count rides along —
+    # MinHash / exact-Jaccard would otherwise re-run the DISTINCT +
+    # window once per CTE reference (2-3x per query). Since r13 the
+    # distinct set and the per-doc count come straight from the
+    # fused kernel's stream-4 slice (per-doc distinct is local to
+    # the kernel because each doc is one input row) — the
+    # corpus-wide DISTINCT exchange + count window are gone.
+    ddf = materialize_plane_df(
+        spark.table(GRAM_FOLD_VIEW).where("stream = 4")
+        .selectExpr("doc_id", "hv", "cast(pos as bigint) AS n"),
+        SHINGLE_DISTINCT_VIEW)
+    # the DF-capped relation (hot boilerplate shingles dropped, per-doc
+    # counts over the SURVIVORS) rides along too: it feeds both sides
+    # of the exact-Jaccard/containment self-join, which would otherwise
+    # re-run the cap filter + count window once per join side under
+    # CTE inlining (measured 1.11s -> 0.75s per query at sf0.1).
+    # r13 shape: the keep-set join + corpus-wide
+    # count window became (a) an ANTI join against the OVER-cap hv
+    # set (boilerplate only — small and selective, AQE broadcasts
+    # it) and (b) the survivor count as ``n - removed`` via a
+    # per-doc correction aggregate over the over-cap rows only —
+    # identical rows (every distinct hv is kept xor removed, so
+    # count-over-survivors == n - |this doc's over-cap hvs|), no
+    # window exchange+sort over the full distinct relation.
+    from pyspark.sql import functions as F
+    over = (ddf.groupBy("hv").agg(F.count("*").alias("df_"))
+            .where(f"df_ > {NGRAM_DF_CAP}").select("hv"))
+    rem = (ddf.join(over, "hv").groupBy("doc_id")
+           .agg(F.count("*").alias("r_")))
+    materialize_plane_df(
+        ddf.join(over, "hv", "left_anti")
+        .join(rem, "doc_id", "left")
+        .selectExpr("doc_id", "hv", "n - coalesce(r_, 0L) AS n"),
+        SHINGLE_CAPPED_VIEW)
     return SHINGLE_VIEW
 
 
@@ -654,10 +623,9 @@ def _minhash_mins_sql(n_perm: int) -> str:
 
 
 MINHASH_SIGS_VIEW = "__minhash_sigs"
-# id(spark) -> (weakref, key, pinned DFs); see session.ensure_session_plane
-_MINHASH_SIGS_STATE: dict = {}
 
 
+@session_plane("minhash_sigs")
 def ensure_minhash_sigs_view(spark, key: object = None) -> str:
     """Materialize the {N_PERM}-perm MinHash signature relation
     (doc_id, m0..m{N_PERM - 1}) once per (session, dataset) — r13,
@@ -669,24 +637,13 @@ def ensure_minhash_sigs_view(spark, key: object = None) -> str:
     ``mh_view``. Ensures the shingle plane first; priced as its own
     ``plane:minhash_sigs`` row."""
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-    from aws_trusted_advisor_explorer_spark.session import (
-        ensure_session_plane, materialize_plane_df, plane_cache_key,
-        plane_key_ok,
-    )
 
-    def build(spark):
-        base = ensure_shingle_view(spark, key)
-        df = materialize_plane_df(
-            spark, spark.sql(
-                f"{_shingle_cte(SPARK, base)}\n"
-                f"SELECT doc_id,\n    {_minhash_mins_sql(N_PERM)}\n"
-                f"FROM sh GROUP BY doc_id"),
-            MINHASH_SIGS_VIEW, key, ["doc_id"])
-        return [df]
-
-    build.plane_label = "minhash_sigs"
-    ensure_session_plane(_MINHASH_SIGS_STATE, spark, plane_cache_key(key),
-                         build, key_ok=plane_key_ok(key))
+    base = ensure_shingle_view(spark, key)
+    materialize_plane_df(
+        spark.sql(f"{_shingle_cte(SPARK, base)}\n"
+                  f"SELECT doc_id,\n    {_minhash_mins_sql(N_PERM)}\n"
+                  f"FROM sh GROUP BY doc_id"),
+        MINHASH_SIGS_VIEW)
     return MINHASH_SIGS_VIEW
 
 
@@ -808,8 +765,6 @@ WHERE cast(n_common as double) / (na + nb - n_common) >= {JACCARD_THRESHOLD}"""
 
 
 NGRAM_COMMON_VIEW = "__ngram_common"
-# id(spark) -> (weakref, key, pinned DFs); see session.ensure_session_plane
-_NGRAM_COMMON_STATE: dict = {}
 
 
 def _ngram_common_cte(d: Dialect, base: str | None,
@@ -832,6 +787,7 @@ common AS (
 )"""
 
 
+@session_plane("ngram_common")
 def ensure_ngram_common_view(spark, key: object = None) -> str:
     """Materialize the shared-shingle pair aggregate ``common(ia, ib,
     n_common, na, nb)`` once per (session, dataset) — r13, guide §2.4:
@@ -842,23 +798,12 @@ def ensure_ngram_common_view(spark, key: object = None) -> str:
     output (the DF cap bounds fan-out). Ensures the shingle plane
     first; priced as its own ``plane:ngram_common`` row."""
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-    from aws_trusted_advisor_explorer_spark.session import (
-        ensure_session_plane, materialize_plane_df, plane_cache_key,
-        plane_key_ok,
-    )
 
-    def build(spark):
-        base = ensure_shingle_view(spark, key)
-        df = materialize_plane_df(
-            spark, spark.sql(
-                f"{_ngram_common_cte(SPARK, base)}\n"
-                f"SELECT ia, ib, n_common, na, nb FROM common"),
-            NGRAM_COMMON_VIEW, key, ["ia"])
-        return [df]
-
-    build.plane_label = "ngram_common"
-    ensure_session_plane(_NGRAM_COMMON_STATE, spark, plane_cache_key(key),
-                         build, key_ok=plane_key_ok(key))
+    base = ensure_shingle_view(spark, key)
+    materialize_plane_df(
+        spark.sql(f"{_ngram_common_cte(SPARK, base)}\n"
+                  f"SELECT ia, ib, n_common, na, nb FROM common"),
+        NGRAM_COMMON_VIEW)
     return NGRAM_COMMON_VIEW
 
 
@@ -922,10 +867,9 @@ if PREFIX_T_NUM / PREFIX_T_DEN != JACCARD_THRESHOLD:
 
 PREFIX_VIEW = "__doc_shingle_prefix"
 SETS_VIEW = "__doc_shingle_sets"
-# id(spark) -> (weakref, key, pinned DFs); see session.ensure_session_plane
-_PREFIX_STATE: dict[int, tuple[object, object, list]] = {}
 
 
+@session_plane("prefix")
 def ensure_prefix_views(spark, key: object = None) -> tuple[str, str]:
     """Materialize the prefix-join inputs once per (session, dataset):
     the rarest-first per-doc prefix relation (both sides of the
@@ -933,22 +877,13 @@ def ensure_prefix_views(spark, key: object = None) -> tuple[str, str]:
     aggregate + rank window per side) and the doc-level shingle-set
     dimension the verify stage intersects against (read once per
     candidate side). Layered on the shingle plane like the capped
-    ride-along. Materialization honors the session plane mode: under
-    "table" the prefix relation buckets on hv (the candidate
-    self-join key) and the sets dimension on doc_id (the verify-join
-    key)."""
-    from aws_trusted_advisor_explorer_spark.session import (
-        ensure_session_plane, materialize_plane_df, plane_cache_key,
-        plane_key_ok,
-    )
-
-    def build(spark):
-        ensure_shingle_view(spark, key=key)
-        pl = (f"n - ((n * {PREFIX_T_NUM} + {PREFIX_T_DEN} - 1) "
-              f"div {PREFIX_T_DEN}) + 1")
-        # r (the rank within the doc's FULL rarest-first ordering) rides
-        # along — the position filter's upper bound needs it per side
-        pref = materialize_plane_df(spark, spark.sql(f"""
+    ride-along."""
+    ensure_shingle_view(spark, key=key)
+    pl = (f"n - ((n * {PREFIX_T_NUM} + {PREFIX_T_DEN} - 1) "
+          f"div {PREFIX_T_DEN}) + 1")
+    # r (the rank within the doc's FULL rarest-first ordering) rides
+    # along — the position filter's upper bound needs it per side
+    materialize_plane_df(spark.sql(f"""
             SELECT doc_id, hv, n, r FROM (
               SELECT f.doc_id, f.hv, f.n,
                 row_number() OVER (PARTITION BY f.doc_id
@@ -957,17 +892,11 @@ def ensure_prefix_views(spark, key: object = None) -> tuple[str, str]:
               JOIN (SELECT hv, cast(count(*) as bigint) AS df
                     FROM {SHINGLE_CAPPED_VIEW} GROUP BY hv) fr
                 ON fr.hv = f.hv
-            ) o WHERE r <= {pl}"""), PREFIX_VIEW, key, ["hv"])
-        sets = materialize_plane_df(spark, spark.sql(
-            f"SELECT doc_id, collect_list(hv) AS arr, "
-            f"cast(max(n) as bigint) AS n "
-            f"FROM {SHINGLE_CAPPED_VIEW} GROUP BY doc_id"),
-            SETS_VIEW, key, ["doc_id"])
-        return [pref, sets]
-
-    build.plane_label = "prefix"
-    ensure_session_plane(_PREFIX_STATE, spark, plane_cache_key(key), build,
-                         key_ok=plane_key_ok(key))
+            ) o WHERE r <= {pl}"""), PREFIX_VIEW)
+    materialize_plane_df(spark.sql(
+        f"SELECT doc_id, collect_list(hv) AS arr, "
+        f"cast(max(n) as bigint) AS n "
+        f"FROM {SHINGLE_CAPPED_VIEW} GROUP BY doc_id"), SETS_VIEW)
     return PREFIX_VIEW, SETS_VIEW
 
 
@@ -1236,9 +1165,6 @@ FROM isl GROUP BY doc_id, grp"""
 
 SPAN_GRAM_VIEW = "__doc_span_gram"
 TOKEN_POS_VIEW = "__doc_token_pos"
-# id(spark) -> (weakref, key, pinned DFs); see session.ensure_session_plane
-_SPAN_STATE: dict[int, tuple[object, object, list]] = {}
-_TOKEN_STATE: dict[int, tuple[object, object, list]] = {}
 
 
 def _tpos_from_t(d: Dialect) -> str:
@@ -1254,6 +1180,7 @@ def _tpos_from_t(d: Dialect) -> str:
 tpos AS (SELECT doc_id, s.pos AS pos, s.tok AS tok FROM tp)"""
 
 
+@session_plane("token")
 def ensure_token_view(spark, key: object = None) -> str:
     """Materialize the positional token plane ``__doc_token_pos``
     (doc_id, pos, tok) once per (session, dataset) — the cheap prefix
@@ -1261,32 +1188,21 @@ def ensure_token_view(spark, key: object = None) -> str:
     commonness) and layered under the span-gram plane
     (ensure_span_views). Split from the gram plane so token-only
     consumers don't pay for the char-fold gram hashing they never
-    read. Plane-mode aware; under "table" buckets on doc_id (the
-    scrub join / per-doc rollup key)."""
+    read."""
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-    from aws_trusted_advisor_explorer_spark.session import (
-        ensure_session_plane, materialize_plane_df, plane_cache_key,
-        plane_key_ok,
-    )
 
-    def build(spark):
-        d = SPARK
-        # ONE template (the _tpos_from_t the scrub oracle inlines) —
-        # a hand-restated copy here could silently desync the
-        # materialized Spark plane from the DuckDB oracle
-        tp = materialize_plane_df(spark, spark.sql(
-            f"WITH t AS (SELECT doc_id, {d.tokens('text')} AS toks "
-            f"FROM documents),\n{_tpos_from_t(d)}\n"
-            f"SELECT doc_id, pos, tok FROM tpos"),
-            TOKEN_POS_VIEW, key, ["doc_id"])
-        return [tp]
-
-    build.plane_label = "token"
-    ensure_session_plane(_TOKEN_STATE, spark, plane_cache_key(key), build,
-                         key_ok=plane_key_ok(key))
+    d = SPARK
+    # ONE template (the _tpos_from_t the scrub oracle inlines) —
+    # a hand-restated copy here could silently desync the
+    # materialized Spark plane from the DuckDB oracle
+    materialize_plane_df(spark.sql(
+        f"WITH t AS (SELECT doc_id, {d.tokens('text')} AS toks "
+        f"FROM documents),\n{_tpos_from_t(d)}\n"
+        f"SELECT doc_id, pos, tok FROM tpos"), TOKEN_POS_VIEW)
     return TOKEN_POS_VIEW
 
 
+@session_plane("span")
 def ensure_span_views(spark, key: object = None) -> str:
     """Materialize the POSITIONAL gram plane once per (session,
     dataset): ``__doc_span_gram`` (doc_id, pos, hv — the {SPAN_GRAM}-
@@ -1294,32 +1210,17 @@ def ensure_span_views(spark, key: object = None) -> str:
     layers on (ensure_token_view). The char-fold token hashing is the
     expensive interpreted prefix shared by dedup_span_exact and
     docs_span_scrub; building it once is the same build-once-index
-    step as ensure_shingle_view (localCheckpoint locally; a bucketed
-    table under the "table" plane mode, bucketed on hv — the
-    duplicated-gram group/join key)."""
-    from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-    from aws_trusted_advisor_explorer_spark.session import (
-        ensure_session_plane, materialize_plane_df, plane_cache_key,
-        plane_key_ok,
-    )
-
+    step as ensure_shingle_view."""
     ensure_token_view(spark, key)
-
-    def build(spark):
-        # kernel twin of _span_gram_cte (r12): same rows, exact
-        # modular arithmetic, no interpreted char fold — the SQL
-        # template stays the oracle/test reference, and the kernel is
-        # pinned row-equal to it by test_span_kernel_matches_sql;
-        # since r13 the rows come from the fused fold plane's
-        # stream-{SPAN_GRAM} slice (one tokenize+fold pass shared with
-        # the shingle/contamination planes)
-        kdf = gram_fold_stream_df(spark, key, SPAN_GRAM, with_pos=True)
-        g = materialize_plane_df(spark, kdf, SPAN_GRAM_VIEW, key, ["hv"])
-        return [g]
-
-    build.plane_label = "span"
-    ensure_session_plane(_SPAN_STATE, spark, plane_cache_key(key), build,
-                         key_ok=plane_key_ok(key))
+    # kernel twin of _span_gram_cte (r12): same rows, exact
+    # modular arithmetic, no interpreted char fold — the SQL
+    # template stays the oracle/test reference, and the kernel is
+    # pinned row-equal to it by test_span_kernel_matches_sql;
+    # since r13 the rows come from the fused fold plane's
+    # stream-{SPAN_GRAM} slice (one tokenize+fold pass shared with
+    # the shingle/contamination planes)
+    kdf = gram_fold_stream_df(spark, key, SPAN_GRAM, with_pos=True)
+    materialize_plane_df(kdf, SPAN_GRAM_VIEW)
     return SPAN_GRAM_VIEW
 
 
@@ -1392,10 +1293,9 @@ BLOOM_SALTS = ((1_000_003, 17), (999_983, 291), (1_000_033, 7919),
 
 
 DOCHASH_VIEW = "__doc_content_hv"
-# id(spark) -> (weakref, key, pinned DFs); see session.ensure_session_plane
-_DOCHASH_STATE: dict[int, tuple[object, object, list]] = {}
 
 
+@session_plane("doc_content_hv")
 def ensure_dochash_view(spark, key: object = None) -> str:
     """Materialize the per-document content poly-hash plane (doc_id,
     source, hv) once per (session, dataset): the char-fold hash is an
@@ -1405,22 +1305,17 @@ def ensure_dochash_view(spark, key: object = None) -> str:
     re-hash the corpus (same build-once discipline as
     ensure_shingle_view)."""
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-    from aws_trusted_advisor_explorer_spark.session import (
-        register_session_plane,
-    )
 
-    return register_session_plane(
-        _DOCHASH_STATE, spark, key, DOCHASH_VIEW,
-        lambda spark: spark.sql(
-            f"SELECT doc_id, source, {SPARK.poly_hash('text')} AS hv "
-            f"FROM documents"))
+    materialize_plane_df(spark.sql(
+        f"SELECT doc_id, source, {SPARK.poly_hash('text')} AS hv "
+        f"FROM documents"), DOCHASH_VIEW)
+    return DOCHASH_VIEW
 
 
 MINHASH_PAIRS_VIEW = "__minhash_pairs"
-# id(spark) -> (weakref, key, pinned DFs); see session.ensure_session_plane
-_PAIRS_STATE: dict[int, tuple[object, object, list]] = {}
 
 
+@session_plane("minhash_pairs")
 def ensure_minhash_pairs_view(spark, key: object = None) -> str:
     """Materialize the MinHash-LSH near-dup pair graph (doc_a, doc_b,
     jaccard) once per (session, dataset) — the shared input of
@@ -1434,20 +1329,15 @@ def ensure_minhash_pairs_view(spark, key: object = None) -> str:
     docs_dedup_rate_by_source) would otherwise re-run the whole
     band-join pipeline per CTE reference under Spark inlining."""
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-    from aws_trusted_advisor_explorer_spark.session import (
-        register_session_plane,
-    )
 
-    def build_df(spark):
-        base = ensure_shingle_view(spark, key=key)
-        # r13: signatures come from the shared sigs plane (banding-
-        # independent; also read by the LSH query, the band-tuning
-        # ladder, and the estimator audit)
-        return spark.sql(dedup_minhash_lsh(
-            SPARK, base, mh_view=ensure_minhash_sigs_view(spark, key)))
-
-    return register_session_plane(
-        _PAIRS_STATE, spark, key, MINHASH_PAIRS_VIEW, build_df)
+    base = ensure_shingle_view(spark, key=key)
+    # r13: signatures come from the shared sigs plane (banding-
+    # independent; also read by the LSH query, the band-tuning
+    # ladder, and the estimator audit)
+    materialize_plane_df(spark.sql(dedup_minhash_lsh(
+        SPARK, base, mh_view=ensure_minhash_sigs_view(spark, key))),
+        MINHASH_PAIRS_VIEW)
+    return MINHASH_PAIRS_VIEW
 
 
 def _pairs_cte(d: Dialect, base: str | None,

@@ -658,71 +658,6 @@ FROM p JOIN c ON c.user_id = p.user_id
   AND c.c_us >= p.p_us - {CLICK_ATTR_WINDOW_US} AND c.c_us <= p.p_us"""
 
 
-# join strategy for the wired attribution pair join: "aqe" (default)
-# leaves skew handling to AQE's byte-threshold split; "salted" routes
-# the user_id equi-join through functions/skew.salted_join — the
-# manual tool for the wall-clock-dominant hot key AQE provably misses
-# under its 256MB skewedPartitionThresholdInBytes (measured 2.8x,
-# bench_results/SKEW.md). Module-global (the set_money_mode precedent)
-# so tests flip the wired plan without re-plumbing the entry.
-SKEW_MODE = "aqe"
-
-
-def set_skew_mode(mode: str) -> None:
-    """Switch the attribution join's skew strategy ("aqe" | "salted").
-    Results are identical in both modes for ANY input (salting only
-    re-shards the shuffle; the equality pytest pins it) — the mode
-    exists because driver fixtures have no hot key, so the salted
-    plan's WIN can't show in bench rows, only its correctness can."""
-    global SKEW_MODE
-    if mode not in ("aqe", "salted"):
-        raise ValueError(f"unknown skew mode {mode!r}")
-    SKEW_MODE = mode
-
-
-def events_purchase_click_pairs_df(spark):
-    """Wired Spark twin of :func:`events_purchase_click_pairs`: the
-    same purchase⋈click user_id equi-join + attribution-window range
-    predicate, built as DataFrame ops so the join can route through
-    :func:`functions.skew.salted_join` under ``set_skew_mode("salted")``
-    — the hot-user regime (one bot user holding a large share of
-    clicks AND purchases makes this pair join the canonical skew
-    blow-up) that AQE's byte-threshold split misses (SKEW.md). Default
-    "aqe" mode plans exactly the SQL form's join; the SQL stays the
-    DuckDB oracle. In salted mode the click side (the big side —
-    clicks dominate purchases) is salted and the purchase side
-    replicated ``n_salts``-fold, so the hot user's pairs build across
-    ``n_salts`` tasks; the range predicate applies after the equi-join
-    exactly as the SQL plan does."""
-    from pyspark.sql import functions as F
-
-    from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-    from aws_trusted_advisor_explorer_spark.functions.skew import (
-        salted_join,
-    )
-
-    ep = SPARK.epoch_us("ts")
-    ev = spark.table("events")
-    p = (ev.where(F.col("event_type") == "purchase")
-         .select(F.col("event_id").alias("purchase_id"), "user_id",
-                 F.expr(ep).alias("p_us")))
-    c = (ev.where(F.col("event_type") == "click")
-         .select(F.col("event_id").alias("click_id"),
-                 F.col("user_id").alias("c_user_id"),
-                 F.expr(ep).alias("c_us")))
-    if SKEW_MODE == "salted":
-        joined = salted_join(
-            c.withColumnRenamed("c_user_id", "user_id"), p, ["user_id"])
-    else:
-        joined = c.join(p, c["c_user_id"] == p["user_id"]).drop("c_user_id")
-    return (joined
-            .where((F.col("c_us") >= F.col("p_us") - CLICK_ATTR_WINDOW_US)
-                   & (F.col("c_us") <= F.col("p_us")))
-            .select("purchase_id", "user_id", "click_id",
-                    (F.col("p_us") - F.col("c_us"))
-                    .alias("us_before_purchase")))
-
-
 def events_session_attribution(d: Dialect) -> str:
     """Point-in-interval (range) join: attribute each PURCHASE to the
     browsing session (gap-sessionized over view/click activity only)

@@ -35,6 +35,9 @@ from pyspark.sql.types import (
 )
 
 from aws_trusted_advisor_explorer_spark.functions.dual import Dialect
+from aws_trusted_advisor_explorer_spark.session import (
+    materialize_plane_df, session_plane,
+)
 
 MEDIA_TYPE_CASE = ("CASE doc_id % 3 WHEN 0 THEN 'image' "
                    "WHEN 1 THEN 'audio' ELSE 'video' END")
@@ -524,23 +527,18 @@ s AS (
 
 
 PHASH_VIEW = "__media_phash_sig"
-# id(spark) -> (weakref, key, pinned DFs); see session.ensure_session_plane
-_PHASH_STATE: dict[int, tuple[object, object, list]] = {}
 
 
+@session_plane("media_phash_sig")
 def ensure_phash_view(spark, key: object = None) -> str:
     """Materialize the (doc_id, ph) perceptual-hash relation once per
     (session, dataset) — locally a localCheckpoint, in production the
     stored per-asset hash column the docstring above describes."""
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-    from aws_trusted_advisor_explorer_spark.session import (
-        register_session_plane,
-    )
 
-    return register_session_plane(
-        _PHASH_STATE, spark, key, PHASH_VIEW,
-        lambda spark: spark.sql(
-            _phash_sig_cte(SPARK) + "\nSELECT doc_id, ph FROM s"))
+    materialize_plane_df(spark.sql(
+        _phash_sig_cte(SPARK) + "\nSELECT doc_id, ph FROM s"), PHASH_VIEW)
+    return PHASH_VIEW
 
 
 def _phash_band_cands(d: Dialect, rel: str = "s",
@@ -1130,9 +1128,9 @@ def _pairs_manifest_agg_df(a, with_path: bool = True):
 
 
 PAIRS_RELEASE_REL_VIEW = "__pairs_release_rel_ranged"
-_PAIRS_RELEASE_REL_STATE: dict = {}
 
 
+@session_plane("pairs_release_rel_ranged")
 def ensure_pairs_release_rel_view(spark, key: object = None) -> str:
     """Materialize the RANGED pair-release rail (the
     :func:`_pairs_release_rel_df` composition range-partitioned by
@@ -1144,18 +1142,14 @@ def ensure_pairs_release_rel_view(spark, key: object = None) -> str:
     from pyspark.sql import functions as F
 
     from aws_trusted_advisor_explorer_spark.session import (
-        range_partitions_for, register_session_plane,
+        range_partitions_for,
     )
 
-    def build_df(s):
-        rel = _pairs_release_rel_df(s, key=key)
-        return (rel.repartitionByRange(range_partitions_for(rel),
-                                       "split", "pair_id")
-                .withColumn("pid", F.spark_partition_id()))
-
-    return register_session_plane(
-        _PAIRS_RELEASE_REL_STATE, spark, key, PAIRS_RELEASE_REL_VIEW,
-        build_df)
+    rel = _pairs_release_rel_df(spark, key=key)
+    materialize_plane_df(
+        rel.repartitionByRange(range_partitions_for(rel), "split", "pair_id")
+        .withColumn("pid", F.spark_partition_id()), PAIRS_RELEASE_REL_VIEW)
+    return PAIRS_RELEASE_REL_VIEW
 
 
 def _pairs_release_assignments_df(spark, key: object = None,

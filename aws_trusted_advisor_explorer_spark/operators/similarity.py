@@ -20,6 +20,9 @@ from __future__ import annotations
 from aws_trusted_advisor_explorer_spark.functions.dual import (
     Dialect, hyperplane_weight,
 )
+from aws_trusted_advisor_explorer_spark.session import (
+    materialize_plane_df, session_plane,
+)
 
 TOP_K = 3
 QUERY_MOD = 100  # vec_id % 100 == 0 -> query set (~1% of vectors)
@@ -1089,10 +1092,9 @@ def _gram_acc(vs):
 
 
 EMB_GRAM_VIEW = "__emb_gram"
-# id(spark) -> (weakref, key, pinned DFs); see session.ensure_session_plane
-_EMB_GRAM_STATE: dict = {}
 
 
+@session_plane("emb_gram")
 def ensure_emb_gram_view(spark, key: object = None) -> str:
     """Materialize the aggregated embedding Gram relation —
     :func:`embeddings_covariance_df`'s output, ≤ dim(dim+1)/2 rows —
@@ -1100,15 +1102,9 @@ def ensure_emb_gram_view(spark, key: object = None) -> str:
     report, the power-iteration twin, and the PCA direction plane each
     re-ran the corpus-scale partial kernel + aggregate (~0.4 s each at
     sf0.1; one corpus scan each at 100 TB). Train-once/serve-many like
-    the PCA plane itself; plane-mode aware via
-    register_session_plane."""
-    from aws_trusted_advisor_explorer_spark.session import (
-        register_session_plane,
-    )
-
-    return register_session_plane(
-        _EMB_GRAM_STATE, spark, key, EMB_GRAM_VIEW,
-        embeddings_covariance_df, bucket_cols=["dim_i"])
+    the PCA plane itself."""
+    materialize_plane_df(embeddings_covariance_df(spark), EMB_GRAM_VIEW)
+    return EMB_GRAM_VIEW
 
 
 def embeddings_covariance_df(spark, base: str | None = None):
@@ -1705,23 +1701,17 @@ def pca_dirs_df(spark, base: str | None = None):
 
 
 PCA_DIRS_VIEW = "__emb_pca_dirs"
-# id(spark) -> (weakref, key, pinned DFs); see session.ensure_session_plane
-_PCA_STATE: dict[int, tuple[object, object, list]] = {}
 
 
+@session_plane("emb_pca_dirs")
 def ensure_pca_dirs(spark, key: object = None) -> str:
     """Materialize the trained PCA direction table once per (session,
     dataset) — the train-once / serve-many rotation every PCA-prefix
-    probe reads (a {PCA_DIRS}-row broadcastable dimension). Plane-mode
-    aware like every register_session_plane site."""
-    from aws_trusted_advisor_explorer_spark.session import (
-        register_session_plane,
-    )
-
-    return register_session_plane(
-        _PCA_STATE, spark, key, PCA_DIRS_VIEW,
-        lambda s: pca_dirs_df(s, base=ensure_emb_gram_view(s, key)),
-        bucket_cols=["r"])
+    probe reads (a {PCA_DIRS}-row broadcastable dimension)."""
+    materialize_plane_df(
+        pca_dirs_df(spark, base=ensure_emb_gram_view(spark, key)),
+        PCA_DIRS_VIEW)
+    return PCA_DIRS_VIEW
 
 
 CLIP_LO_PCT = 0.01   # robust clip bounds: p1 / p99 per dimension

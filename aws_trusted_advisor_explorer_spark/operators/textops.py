@@ -17,6 +17,9 @@ from __future__ import annotations
 from aws_trusted_advisor_explorer_spark.functions.dual import (
     Dialect, INT64_MAX, P_MOD,
 )
+from aws_trusted_advisor_explorer_spark.session import (
+    materialize_plane_df, session_plane,
+)
 
 # Per-language discriminator token profiles for the n-gram/stopword
 # language-ID heuristic. Fixed vocabulary, fixed priority order for
@@ -1436,11 +1439,10 @@ FROM tc JOIN documents dd ON dd.doc_id = tc.doc_id
 GROUP BY dd.lang"""
 
 
-# id(spark) -> (weakref, key, pinned DFs); see session.ensure_session_plane
-_BPE_PRICED_STATE: dict = {}
 BPE_PRICED_VIEW = "__bpe_priced_docs"
 
 
+@session_plane("bpe_priced_docs")
 def ensure_bpe_priced_view(spark, key: object = None,
                            merges=None) -> str:
     """Materialize the per-doc BPE pricing relation
@@ -1451,13 +1453,9 @@ def ensure_bpe_priced_view(spark, key: object = None,
     ``merges`` must be the model ensure_bpe_merges trained for the
     same ``key`` (deterministic per dataset, so the dataset key alone
     identifies the plane)."""
-    from aws_trusted_advisor_explorer_spark.session import (
-        register_session_plane,
-    )
-
-    return register_session_plane(
-        _BPE_PRICED_STATE, spark, key, BPE_PRICED_VIEW,
-        lambda spark: text_bpe_tokenize_count_df(spark, merges=merges))
+    materialize_plane_df(text_bpe_tokenize_count_df(spark, merges=merges),
+                         BPE_PRICED_VIEW)
+    return BPE_PRICED_VIEW
 
 
 def text_bpe_fertility_by_lang_df(spark,
@@ -1490,32 +1488,20 @@ def text_bpe_fertility_by_lang_df(spark,
                  .alias("chars_per_bpe_token")))
 
 
-# id(spark) -> (weakref, key, pinned DFs); see session.ensure_session_plane
-_BPE_DICT_STATE: dict = {}
 BPE_DICT_VIEW = "__bpe_word_dict"
 
 
+@session_plane("bpe_dict")
 def ensure_bpe_dict_view(spark, key: object = None) -> str:
     """Materialize the top-{BPE_WORD_CAP} word-frequency dictionary
     (token, freq, syms) once per (session, dataset) — the single
     corpus-scale pass of BPE training; every merge round reads this
     {BPE_WORD_CAP}-row plane."""
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-    from aws_trusted_advisor_explorer_spark.session import (
-        ensure_session_plane, materialize_plane_df, plane_cache_key,
-        plane_key_ok,
-    )
 
-    def build(spark):
-        df = materialize_plane_df(
-            spark, spark.sql("WITH " + _bpe_dict_cte(SPARK, None) +
-                             "\nSELECT token, freq, syms FROM w0"),
-            BPE_DICT_VIEW, key, ["token"])
-        return [df]
-
-    build.plane_label = "bpe_dict"
-    ensure_session_plane(_BPE_DICT_STATE, spark, plane_cache_key(key), build,
-                         key_ok=plane_key_ok(key))
+    materialize_plane_df(
+        spark.sql("WITH " + _bpe_dict_cte(SPARK, None) +
+                  "\nSELECT token, freq, syms FROM w0"), BPE_DICT_VIEW)
     return BPE_DICT_VIEW
 
 
@@ -1722,44 +1708,22 @@ def text_bpe_merge_train_df(spark, base: str | None = None):
                      "merged_sym string, pair_count bigint")
 
 
-# id(spark) -> (weakref, key, merge list) — the trained merge TABLE
-# cached per (session, dataset); apply is a separate operator from
-# training (train offline / price online — the streaming twin's
-# semantics), so repeated apply calls must not re-run the trainer
-_BPE_MERGE_STATE: dict = {}
-
-
+# the trained merge TABLE is a session plane whose value is the merge
+# list, not a view: apply is a separate operator from training (train
+# offline / price online — the streaming twin's semantics), so repeated
+# apply calls must not re-run the trainer
+@session_plane("bpe_merges")
 def ensure_bpe_merges(spark, key: object = None,
                       base: str | None = None,
                       ) -> list[list[tuple[str, str]]]:
     """Train once per (session, dataset), return the ROUND-structured
     merge table [[(left, right), ...], ...] (rounds in order; pairs in
     in-round rank order; within a round symbols are pairwise disjoint,
-    so per-round simultaneous apply == flat sequential apply). Same
-    weakref-guarded cache discipline as session.ensure_session_plane
-    (the cached value here is the merge list, not a view)."""
-    import weakref
-
-    st = _BPE_MERGE_STATE.get(id(spark))
-    if st is not None and st[0]() is not spark:
-        st = None
-    if st is not None and (key is None or st[1] == key):
-        return st[2]
-    from aws_trusted_advisor_explorer_spark.session import timed_plane_build
-
-    # timed_plane_build (not a bare perf_counter window): a cold train
-    # triggers the bpe_dict plane build inside this window, and the
-    # frame discipline nets that inner row out of this one so the two
-    # rows sum to the true total instead of double-counting (r11
-    # advice finding)
-    merges = timed_plane_build(
-        "bpe_merges",
-        lambda: [[(left, right) for left, right, _ in rnd]
-                 for rnd in _bpe_train_rounds(spark, base=base)])
-    for sid in [sid for sid, s in _BPE_MERGE_STATE.items() if s[0]() is None]:
-        del _BPE_MERGE_STATE[sid]
-    _BPE_MERGE_STATE[id(spark)] = (weakref.ref(spark), key, merges)
-    return merges
+    so per-round simultaneous apply == flat sequential apply). A cold
+    train triggers the bpe_dict plane build inside this one, whose row
+    the timing frames net out of this one's."""
+    return [[(left, right) for left, right, _ in rnd]
+            for rnd in _bpe_train_rounds(spark, base=base)]
 
 
 def bpe_apply_python(tok: str, flat_merges: list[tuple[str, str]]) -> int:

@@ -478,6 +478,11 @@ def raw_table_sql() -> dict[str, str]:
     return RAW_TABLES
 
 
+# the input tables the raw fixture SQL reads
+FIXTURE_BASE_TABLES = ("lineitem", "orders", "customer", "part", "supplier",
+                       "nation", "region")
+
+
 def to_spark_sql(sql: str) -> str:
     """Rewrite double-quoted identifiers to backticks for Spark SQL.
 
@@ -496,7 +501,8 @@ def register_raw_tables(spark: SparkSession, sf_dir: str,
     """Register the fixture raw layer as temp views over the driver parquet.
 
     ``materialize=True`` (default) lands each raw table as parquet once
-    per (fixture-SQL, sf_dir) under a content-keyed scratch dir and
+    per (fixture-SQL, sf_dir, source files' size and mtime) under a
+    content-keyed scratch dir and
     registers scans over it — mirroring the reference, where the raw
     layer is *landed* CSV, not recomputed per query, and giving every
     downstream view a real columnar scan (pushdown + pruning) instead
@@ -512,7 +518,9 @@ def register_raw_tables(spark: SparkSession, sf_dir: str,
     import os
     import tempfile
 
-    from aws_trusted_advisor_explorer_spark.session import load_tables
+    from aws_trusted_advisor_explorer_spark.session import (
+        load_tables, source_stamp,
+    )
 
     load_tables(spark, sf_dir)
     sqls = raw_table_sql()
@@ -538,7 +546,9 @@ def register_raw_tables(spark: SparkSession, sf_dir: str,
     # parallel tasks and shuffles only the base columns (2.3 s, 6x).
     n_files = spark.sparkContext.defaultParallelism
     key_src = ("|".join(f"{n}={s}" for n, s in sorted(sqls.items()))
-               + sf_dir + f"|layout=v3:{n_files}")
+               + sf_dir + f"|layout=v3:{n_files}|" + source_stamp(
+                   *(os.path.join(sf_dir, f"{t}.parquet")
+                     for t in FIXTURE_BASE_TABLES)))
     key = hashlib.md5(key_src.encode()).hexdigest()[:12]
     base = os.path.join(tempfile.gettempdir(), "spark_fixture_cache", key)
     landed_bases: set[str] = set()
@@ -561,9 +571,7 @@ def register_raw_tables(spark: SparkSession, sf_dir: str,
             return f"{kw} __land_{b}"
 
         return re.sub(
-            r"(FROM|JOIN) (lineitem|orders|customer|part|supplier"
-            r"|nation|region)\b",
-            sub, sql)
+            rf"(FROM|JOIN) ({'|'.join(FIXTURE_BASE_TABLES)})\b", sub, sql)
 
     for name, sql in sqls.items():
         path = os.path.join(base, name)

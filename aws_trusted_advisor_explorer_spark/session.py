@@ -131,6 +131,15 @@ def kernel_partitions(df) -> int:
     return max(1, min(cap, size // KERNEL_TASK_BYTES))
 
 
+def source_stamp(*paths: str) -> str:
+    """Size and mtime of each input path, for the keys of the on-disk
+    caches derived from them: a fixture regenerated in place under the
+    same path gets a new key, so the cache is rebuilt instead of
+    served stale."""
+    stats = [os.stat(p) for p in paths]
+    return "|".join(f"{st.st_size}:{st.st_mtime_ns}" for st in stats)
+
+
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None) -> dict:
     """Register the driver's parquet tables as temp views; return {name: df}.
 
@@ -189,7 +198,7 @@ def _land_multifile(spark: SparkSession, sf_dir: str, name: str,
                     path: str, df):
     """Land ``df`` (the loaded driver table, post timestamp rebuild)
     as a multi-file parquet copy under the fixture scratch dir, once
-    per (dataset, table, layout); returns the landed scan, or ``df``
+    per (source file, table, layout); returns the landed scan, or ``df``
     unchanged when the table is too small to split. Content-identical
     rows (repartition is a row-preserving round-robin); the one-time
     landing is priced as a ``fixture_land:land_<name>`` plane row."""
@@ -200,6 +209,7 @@ def _land_multifile(spark: SparkSession, sf_dir: str, name: str,
     if name not in LAND_TABLES:
         return df
     try:
+        stamp = source_stamp(path)
         raw_bytes = os.path.getsize(path)
     except OSError:
         return df
@@ -208,7 +218,7 @@ def _land_multifile(spark: SparkSession, sf_dir: str, name: str,
     if n_files < 2:
         return df
     key = hashlib.md5(
-        f"{sf_dir}|{name}|corpus-land-v1|{n_files}".encode()
+        f"{sf_dir}|{name}|corpus-land-v1|{n_files}|{stamp}".encode()
     ).hexdigest()[:12]
     base = os.path.join(tempfile.gettempdir(), "spark_fixture_cache",
                         f"land-{key}")
@@ -256,14 +266,13 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
 
 
 # (label, seconds) per session-plane build, appended by
-# ensure_session_plane and drained by bench.py (r10 verdict task 2:
+# timed_plane_build and drained by bench.py (since r10:
 # first-consumer keys absorbed their family's plane build, so per-key
 # bench numbers measured the plane lottery, not the query — bench.py
 # now subtracts drained build seconds from the triggering query's
 # elapsed and reports them as their own "plane:<label>" rows). Callers
-# never need to touch this; anything funnelling through
-# ensure_session_plane / register_session_plane is captured. A custom
-# cache site (the BPE merges trainer) records through record_plane().
+# never need to touch this; every @session_plane build is captured, and
+# the fixture landings record through record_plane().
 PLANE_TIMINGS: list[tuple[str, float]] = []
 
 # Per-active-build accumulators of NESTED plane-build seconds (plane
@@ -295,8 +304,7 @@ def timed_plane_build(label: str, fn):
     """Run ``fn()`` as a timed plane build and record a ``(label,
     seconds)`` row NET of any nested plane builds recorded while it ran
     (each nested row already priced itself). Returns ``fn()``'s
-    result. The shared timing discipline of ensure_session_plane and
-    the custom cache sites (the BPE merges trainer)."""
+    result. The timing discipline of every @session_plane build."""
     import time
 
     t0 = time.perf_counter()
@@ -317,174 +325,91 @@ def drain_plane_timings() -> list[tuple[str, float]]:
     return out
 
 
-def ensure_session_plane(state: dict, spark: SparkSession, key: object,
-                         build, key_ok=None) -> bool:
-    """Build-once-per-(session, dataset) cache for localCheckpoint-backed
-    temp views ("session planes": the shingle, span, cluster, and
-    semdedup-pair relations).
+# label -> the memoized ensure function of every session plane (the
+# shared relations built once per (session, dataset)); filled by
+# @session_plane as the operator modules import
+SESSION_PLANES: dict[str, object] = {}
 
-    ``state`` maps ``id(spark)`` to ``(weakref to the session, cache
-    key, pinned DataFrames)``. The weakref guards CPython id reuse: an
-    entry counts only if its session is still the LIVE object, so a new
-    session allocated at a recycled id re-registers instead of
-    resolving a dead session's stale views. On hit (live session and
-    ``key is None`` or the stored key matches) nothing runs; on miss
-    ``build(spark)`` materializes the plane (registering its temp
-    views) and returns the DataFrames to pin. A superseded entry is
-    simply dropped — ``unpersist()`` is a cache-manager call and a
-    no-op for localCheckpoint blocks, which are freed when their RDD
-    is GC'd. Dead-session entries are swept on every rebuild so the
-    dict does not grow with session churn. Returns True iff the plane
-    was (re)built.
-
-    ``key_ok`` (optional) replaces the hit predicate: when given, a
-    live entry hits iff ``key_ok(stored_key)`` — the hook callers with
-    structured keys (register_session_plane's (key, mode) pairs) use
-    to express "any dataset, but only my mode" without this function
-    having to know their key layout, and without them reaching into
-    the state-tuple layout this function owns.
-    """
-    import weakref
-
-    st = state.get(id(spark))
-    if st is not None and st[0]() is not spark:
-        st = None  # dead session's id was recycled — never trust it
-    if st is not None and (key_ok(st[1]) if key_ok is not None
-                           else (key is None or st[1] == key)):
-        return False
-    dfs = timed_plane_build(
-        getattr(build, "plane_label", None)
-        or getattr(build, "__qualname__", repr(build)),
-        lambda: build(spark))
-    for sid in [sid for sid, s in state.items() if s[0]() is None]:
-        del state[sid]
-    state[id(spark)] = (weakref.ref(spark), key, list(dfs))
-    return True
+# DataFrames pinned by the plane builds now running, innermost last
+# (plane builds nest like the timing frames above)
+_PLANE_PINS: list[list] = []
 
 
-# Session-plane materialization mode (the set_money_mode/set_skew_mode
-# precedent): "local" = localCheckpoint(eager=True) — the single-JVM
-# optimization (executor-local blocks, lineage cut; right on local[32],
-# NOT fault-tolerant on a cluster, SCALE.md policy table); "table" =
-# the documented production swap: write the plane once to a bucketed
-# warehouse table and read it back — restart-safe, shareable across
-# sessions/jobs, and the bucketed layout removes downstream join
-# exchanges on the bucket key (BUCKETING.md). Governs every plane that
-# funnels through register_session_plane; the multi-view shingle plane
-# documents the same swap at its own build site.
-_PLANE_MODE = "local"
+def _session_planes(spark: SparkSession) -> dict:
+    """The session's plane entries: label -> (key, value, pinned
+    DataFrames). Held on the session object itself, so a plane lives
+    exactly as long as the session whose temp views it registered."""
+    planes = getattr(spark, "_session_planes", None)
+    if planes is None:
+        planes = spark._session_planes = {}
+    return planes
 
 
-def set_plane_mode(mode: str) -> None:
-    """Select session-plane materialization: "local" (localCheckpoint,
-    the single-JVM default) or "table" (bucketed warehouse table — the
-    production fault-tolerance swap named in SCALE.md). Takes effect on
-    the next plane build; the mode is part of the plane cache key, so
-    switching modes rebuilds the plane rather than silently reusing the
-    other mode's materialization."""
-    global _PLANE_MODE
-    if mode not in ("local", "table"):
-        raise ValueError(f"plane mode must be 'local' or 'table', got {mode!r}")
-    _PLANE_MODE = mode
+def session_plane(label: str):
+    """Turn a plane build ``build(spark, key, **extra)`` into its
+    memoized ``ensure(spark, key=None, **extra)`` function.
+
+    ``key`` identifies the dataset (the sf_dir the query entry points
+    pass).
+    An explicit key hits only a plane built under the same key;
+    ``key=None`` ("whatever ``documents`` currently is", for
+    single-fixture sessions) takes whatever plane the session already
+    holds. Extra build arguments pass through and are not part of the
+    key. A miss drops the old entry, then runs the build as a timed
+    plane build under ``label`` (:func:`timed_plane_build`); the
+    entry is stored only when the build returns, so a build that
+    raises leaves none and the next call retries. On a hit the
+    build's return value is returned again. Labels are unique: they
+    name the plane's timing rows and its :func:`drop_planes` handle."""
+    import functools
+
+    if label in SESSION_PLANES:
+        raise ValueError(f"session plane {label!r} is already registered")
+
+    def wrap(build):
+        @functools.wraps(build)
+        def ensure(spark, key=None, **extra):
+            planes = _session_planes(spark)
+            entry = planes.get(label)
+            if entry is not None and (key is None or entry[0] == key):
+                return entry[1]
+            planes.pop(label, None)
+            _PLANE_PINS.append([])
+            try:
+                value = timed_plane_build(
+                    label, lambda: build(spark, key, **extra))
+            finally:
+                pins = _PLANE_PINS.pop()
+            planes[label] = (key, value, pins)
+            return value
+
+        SESSION_PLANES[label] = ensure
+        return ensure
+
+    return wrap
 
 
-def plane_cache_key(key: object) -> tuple:
-    """The ``(key, mode)`` cache key every mode-aware plane build
-    stores: the mode is part of the key, so ``set_plane_mode``'s
-    documented rebuild-on-switch contract holds — switching modes
-    rebuilds instead of silently reusing the other mode's
-    materialization."""
-    return (key, _PLANE_MODE)
+def drop_planes(spark: SparkSession, *labels: str) -> None:
+    """Forget this session's planes under ``labels``, so their next
+    ensure call rebuilds them (their temp views stay registered until
+    then)."""
+    planes = _session_planes(spark)
+    for label in labels:
+        if label not in SESSION_PLANES:
+            raise KeyError(f"no session plane labelled {label!r}")
+        planes.pop(label, None)
 
 
-def plane_key_ok(key: object):
-    """The hit predicate to pass ``ensure_session_plane`` alongside
-    :func:`plane_cache_key`. ``key=None`` keeps its wildcard meaning
-    ("any registered plane for this session counts") WITHIN a mode: a
-    wildcard hit must still match the current plane mode, or the
-    rebuild-on-switch contract would be silently void for default-key
-    callers (r9 review finding). Explicit keys use plain ``(key,
-    mode)`` equality (predicate None)."""
-    if key is not None:
-        return None
-    mode = _PLANE_MODE
-    return (lambda sk: isinstance(sk, tuple) and len(sk) == 2
-            and sk[1] == mode)
-
-
-def materialize_plane_df(spark: SparkSession, df, view_name: str,
-                         key: object,
-                         bucket_cols: list[str] | None = None):
-    """Materialize ONE plane DataFrame per the current ``_PLANE_MODE``
-    and register it under ``view_name``; returns the materialized
-    DataFrame (callers pin it in their plane state). "local" =
-    ``localCheckpoint(eager=True)`` (single-JVM default); "table" =
-    bucketed external warehouse table read back — the production
-    fault-tolerance swap named in SCALE.md's policy table, and the
-    bucketed layout removes downstream exchanges on ``bucket_cols``
-    (the dominant downstream join/group key; first column when
-    omitted — bucketing never changes semantics, only which exchanges
-    disappear).
-
-    Table naming: the name carries a dataset discriminator (hash of
-    the plane key — driver keys are sf_dir strings, so repr is
-    stable): a fixed per-view name would let a rebuild for ANOTHER
-    dataset overwrite the table a still-pinned view resolves lazily —
-    local mode was immune because localCheckpoint pins blocks per
-    session. key=None has no dataset identity, so it discriminates by
-    SESSION id instead (per-session table; a concurrent sibling
-    session can't overwrite it). Two CONCURRENT sessions on the SAME
-    explicit key still share one table name; the production form
-    versions table names through the model-registry pattern (SCALE.md
-    streaming-dims row) — out of scope for the local-mode
-    demonstration."""
-    if _PLANE_MODE == "table":
-        import hashlib
-
-        from aws_trusted_advisor_explorer_spark.sinks.writers import (
-            write_bucketed_table,
-        )
-
-        ident = repr(key) if key is not None else f"nokey-{id(spark)}"
-        disc = hashlib.md5(ident.encode()).hexdigest()[:8]
-        tbl = f"plane_{view_name.strip('_')}_{disc}"
-        # external table at the warehouse location: a MANAGED
-        # saveAsTable refuses a leftover directory from a previous
-        # process (LOCATION_ALREADY_EXISTS — the local derby catalog
-        # is per-JVM but the warehouse dir persists), while an
-        # external overwrite replaces it
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        loc = spark.conf.get(
-            "spark.sql.warehouse.dir").rstrip("/") + "/" + tbl
-        write_bucketed_table(df, tbl,
-                             list(bucket_cols or df.columns[:1]),
-                             path=loc)
-        df = spark.table(tbl)
-    else:
-        df = df.localCheckpoint(eager=True)
+def materialize_plane_df(df, view_name: str):
+    """Checkpoint one DataFrame of the plane being built
+    (``localCheckpoint(eager=True)``: executor-local blocks, lineage
+    cut), register it under ``view_name`` and pin it in the plane's
+    entry; returns the checkpointed DataFrame."""
+    if not _PLANE_PINS:
+        raise RuntimeError(
+            f"materialize_plane_df({view_name!r}) outside a @session_plane "
+            f"build: the view would have no plane entry to pin it")
+    df = df.localCheckpoint(eager=True)
     df.createOrReplaceTempView(view_name)
+    _PLANE_PINS[-1].append(df)
     return df
-
-
-def register_session_plane(state: dict, spark: SparkSession, key: object,
-                           view_name: str, df_factory,
-                           bucket_cols: list[str] | None = None) -> str:
-    """The common single-view plane shape: build a DataFrame once per
-    (session, dataset, plane mode), materialize it per ``_PLANE_MODE``
-    (:func:`materialize_plane_df`), register it under ``view_name``,
-    pin it in ``state``. The multi-view planes (shingle + its
-    ride-alongs, the prefix/span/cluster index families) keep their
-    custom ``build`` functions but share the same materialization and
-    (key, mode) cache-key discipline through
-    :func:`materialize_plane_df` / :func:`plane_cache_key` /
-    :func:`plane_key_ok`; everything else collapses to one call of
-    this."""
-
-    def build(spark):
-        return [materialize_plane_df(spark, df_factory(spark), view_name,
-                                     key, bucket_cols)]
-
-    build.plane_label = view_name.strip("_")
-    ensure_session_plane(state, spark, plane_cache_key(key), build,
-                         key_ok=plane_key_ok(key))
-    return view_name

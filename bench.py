@@ -63,8 +63,7 @@ def main() -> None:
     queries = entrymod.queries()
 
     # session-plane attribution (r10 verdict task 2): every
-    # ensure_session_plane / register_session_plane build and every
-    # cold fixture landing records (label, seconds); bench.py drains
+    # @session_plane build and every cold fixture landing records (label, seconds); bench.py drains
     # after each execution, so one-time plane builds become their own
     # "plane:<label>" rows instead of silently landing inside whichever
     # query runs first in its family, and timed-pass query numbers are

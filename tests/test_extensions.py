@@ -2847,129 +2847,102 @@ def test_blocklist_score_matches_python_replay(spark, ddb):
         corpusops.BLOCKLIST = orig
 
 
-def test_plane_mode_table_equality(spark):
-    """r8 verdict ask #4: the localCheckpoint session-plane production
-    swap is a MODE, not prose (the set_money_mode/set_skew_mode
-    precedent). set_plane_mode("table") must materialize the plane as
-    a bucketed warehouse table (restart-safe, the SCALE.md policy
-    table's named swap) and the plane-consuming query must return the
-    identical result in both modes. Exercised on media_phash_dedup —
-    the phash signature plane is a register_session_plane site."""
-    from aws_trusted_advisor_explorer_spark import session as sess
-    from aws_trusted_advisor_explorer_spark.operators import multimodal
-    from tests.conftest import canonicalize
-
-    view = multimodal.ensure_phash_view(spark, key="plane-mode-test")
-    local = canonicalize(spark.sql(
-        multimodal.media_phash_dedup(SPARK, base=view)).toPandas())
-    sess.set_plane_mode("table")
-    try:
-        view = multimodal.ensure_phash_view(spark, key="plane-mode-test")
-        tabled = canonicalize(spark.sql(
-            multimodal.media_phash_dedup(SPARK, base=view)).toPandas())
-    finally:
-        sess.set_plane_mode("local")
-        # restore a local-mode plane so later tests reuse the default
-        multimodal.ensure_phash_view(spark, key="plane-mode-test")
-    assert local.equals(tabled)
-    # the table mode really went through the warehouse: the backing
-    # table exists and its scan is bucketed (the exchange-elimination
-    # layout BUCKETING.md measures)
-    planes = [t.name for t in spark.catalog.listTables()
-              if t.name.startswith("plane_media_phash_sig_")]
-    assert planes, "no warehouse plane table written"
-    desc = {r.col_name: r.data_type for r in spark.sql(
-        f"DESCRIBE FORMATTED {planes[0]}").collect()}
-    assert desc.get("Num Buckets") == "32", desc
-    assert "doc_id" in desc.get("Bucket Columns", ""), desc
+PLANE_LABELS = {
+    "gram_fold", "shingle", "minhash_sigs", "ngram_common", "prefix",
+    "token", "span", "doc_content_hv", "minhash_pairs", "cluster_index",
+    "semdedup_pairs", "bpe_priced_docs", "bpe_dict", "bpe_merges",
+    "contam_hits_plane", "doc_block", "release_rel_ranged",
+    "media_phash_sig", "pairs_release_rel_ranged", "emb_gram",
+    "emb_pca_dirs",
+}
 
 
-def test_plane_mode_wildcard_key_rebuilds_on_switch(spark):
-    """r9 review finding: default-key (wildcard) plane callers must
-    still honor set_plane_mode — a wildcard hit only counts within the
-    CURRENT mode, so switching modes rebuilds instead of silently
-    reusing the other mode's materialization."""
+def test_session_plane_registry_key_rule(spark):
+    """session.session_plane is the one owner of plane caching: an
+    explicit key hits only its own plane and key=None takes whatever
+    plane the session holds; another key rebuilds; every session builds
+    its own; a build that raises leaves no entry, so the next call
+    retries; and every plane registers under its timing label."""
     from aws_trusted_advisor_explorer_spark import session as sess
 
-    calls = []
+    assert set(sess.SESSION_PLANES) == PLANE_LABELS
+    with pytest.raises(ValueError, match="already registered"):
+        sess.session_plane("shingle")
+    calls, fail = [], []
 
-    def factory(s):
-        calls.append(1)
-        return s.range(3)
+    def build(s, key, n=3):
+        calls.append(key)
+        if fail:
+            raise RuntimeError("planted build failure")
+        sess.materialize_plane_df(s.range(n), "__registry_test")
+        return "__registry_test"
 
-    state: dict = {}
-    sess.set_plane_mode("local")
+    ensure = sess.session_plane("registry_test")(build)
     try:
-        sess.register_session_plane(state, spark, None,
-                                    "__pm_wild_test", factory)
-        sess.register_session_plane(state, spark, None,
-                                    "__pm_wild_test", factory)
-        assert len(calls) == 1  # wildcard reuse within one mode
-        sess.set_plane_mode("table")
-        sess.register_session_plane(state, spark, None,
-                                    "__pm_wild_test", factory)
-        assert len(calls) == 2  # mode switch rebuilt the plane
-        assert any(t.name.startswith("plane_pm_wild_test")
-                   for t in spark.catalog.listTables())
-        sess.set_plane_mode("local")
-        sess.register_session_plane(state, spark, None,
-                                    "__pm_wild_test", factory)
-        assert len(calls) == 3  # and back
+        ns = spark.newSession()
+        assert ensure(ns, "a") == "__registry_test"
+        assert ensure(ns, "a") == ensure(ns) == "__registry_test"
+        assert calls == ["a"]  # the same key and None both hit
+        ensure(ns, "b", n=5)   # another key rebuilds; extras pass through
+        assert calls == ["a", "b"]
+        assert ns.table("__registry_test").count() == 5
+        other = spark.newSession()
+        ensure(other)          # another session builds its own plane
+        ensure(ns)
+        assert calls == ["a", "b", None]
+        fail.append(True)
+        with pytest.raises(RuntimeError, match="planted"):
+            ensure(ns, "c")
+        fail.clear()
+        ensure(ns)             # no entry left: a keyless call rebuilds
+        ensure(ns)
+        assert calls == ["a", "b", None, "c", None]
+        sess.drop_planes(ns, "registry_test")
+        ensure(ns)
+        assert len(calls) == 6
+        with pytest.raises(KeyError):
+            sess.drop_planes(ns, "no_such_plane")
+        with pytest.raises(RuntimeError, match="outside"):
+            sess.materialize_plane_df(ns.range(1), "__registry_test")
     finally:
-        sess.set_plane_mode("local")
+        sess.SESSION_PLANES.pop("registry_test", None)
 
 
-def test_plane_mode_table_heavy_planes_equality(spark):
-    """r11 verdict task 1: the four most expensive custom plane builds
-    (shingle, prefix, span, cluster_index — the planes SCALE.md's
-    fault-tolerance policy table prescribes bucketed-table
-    materialization for) must route through set_plane_mode("table"),
-    and each plane-consuming query must return the identical result in
-    both modes. Also pins that the table mode really wrote bucketed
-    warehouse tables for every view of every family (the multi-view
-    builds each materialize several relations)."""
+def test_landing_cache_keyed_on_source_file(spark, tmp_path, monkeypatch):
+    """The landed multi-file copy of an input table is keyed on the
+    source file's size and mtime, not only its directory: a
+    documents.parquet regenerated in place must load its new rows,
+    not the stale landing of the old file."""
+    import tempfile
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from aws_trusted_advisor_explorer_spark import session as sess
-    from aws_trusted_advisor_explorer_spark.operators import (
-        clusterops as C, dedup,
-    )
-    from tests.conftest import canonicalize
 
-    KEY = "plane-mode-heavy-test"
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    path = sf / "documents.parquet"
+    rng = np.random.default_rng(7)
+    ns = spark.newSession()
+    cap = ns.sparkContext.defaultParallelism
 
-    def consumers():
-        base = dedup.ensure_shingle_view(spark, key=KEY)
-        dedup.ensure_prefix_views(spark, key=KEY)
-        span = dedup.ensure_span_views(spark, key=KEY)
-        C.ensure_cluster_views(spark, key=KEY)
-        return {
-            "shingle": spark.sql(dedup.dedup_minhash_lsh(SPARK, base)),
-            "prefix": spark.sql(dedup.dedup_prefix_join(SPARK, base=base)),
-            "span": spark.sql(dedup.dedup_span_exact(SPARK, base=span)),
-            "cluster": spark.sql(C.knn_ivfpq_adc(
-                SPARK, asg=C.ASG_VIEW, members=C.PQ_MEMBERS_VIEW,
-                cents=C.PQ_CENTS_VIEW)),
-        }
+    def land(n, tag):
+        pq.write_table(pa.table({
+            "doc_id": np.arange(n, dtype=np.int64),
+            "text": [f"{tag} {rng.bytes(300).hex()}" for _ in range(n)],
+        }), path)
+        # both files split into the same file count, so only the
+        # source stamp can tell their landings apart
+        assert path.stat().st_size // sess.LAND_FILE_BYTES >= cap
+        df = sess.load_tables(ns, str(sf), names=("documents",))["documents"]
+        return {r.text.split()[0] for r in df.select("text").collect()}, \
+            df.count()
 
-    local = {k: canonicalize(df.toPandas())
-             for k, df in consumers().items()}
-    sess.set_plane_mode("table")
-    try:
-        tabled = {k: canonicalize(df.toPandas())
-                  for k, df in consumers().items()}
-        tables = [t.name for t in spark.catalog.listTables()]
-        for view in ("doc_shingle_hv", "doc_shingle_hv_distinct",
-                     "doc_shingle_hv_capped", "doc_shingle_prefix",
-                     "doc_shingle_sets", "doc_span_gram",
-                     "doc_token_pos", "emb_kmeans_asg",
-                     "emb_pq_members", "emb_pq_cents"):
-            assert any(t.startswith(f"plane_{view}_") for t in tables), \
-                f"no warehouse table for plane view {view}: {tables}"
-    finally:
-        sess.set_plane_mode("local")
-        # restore local-mode planes so later tests reuse the default
-        consumers()
-    for k in local:
-        assert local[k].equals(tabled[k]), f"{k} differs across modes"
+    assert land(2500, "old") == ({"old"}, 2500)
+    assert land(2600, "new") == ({"new"}, 2600)
 
 
 def test_plane_timing_nested_builds_not_double_counted():
@@ -3010,73 +2983,6 @@ def test_plane_timing_nested_builds_not_double_counted():
     # child's row excludes the grandchild's 0.30s; outer's excludes both
     assert 0.13 <= rows["c"] <= 0.27, rows
     assert 0.03 <= rows["o"] <= 0.17, rows
-
-
-def test_purchase_click_pairs_skew_mode_equality(spark):
-    """r7 verdict stretch ask: salted_join wired into a real query
-    behind a mode. The attribution pair join's DF twin must return the
-    identical pair set in BOTH skew modes ("aqe" plain equi-join vs
-    "salted" — big click side salted, purchase side replicated), each
-    equal to the SQL oracle form — on the driver corpus AND on a
-    planted hot-key fixture where one bot user holds most of the rows
-    (the regime the salted plan exists for, SKEW.md)."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from tests.conftest import canonicalize
-
-    def run_all(sess):
-        want = canonicalize(sess.sql(
-            eventops.events_purchase_click_pairs(SPARK)).toPandas())
-        got = {}
-        try:
-            for mode in ("aqe", "salted"):
-                eventops.set_skew_mode(mode)
-                got[mode] = canonicalize(
-                    eventops.events_purchase_click_pairs_df(sess)
-                    .toPandas())
-        finally:
-            eventops.set_skew_mode("aqe")
-        assert list(got["aqe"].columns) == list(want.columns)
-        assert got["aqe"].equals(want)
-        assert got["salted"].equals(want)
-        return len(want)
-
-    run_all(spark)  # driver corpus
-
-    # planted hot user: 40 clicks + 6 purchases on user 1 inside the
-    # attribution window; two sparse users, one click outside the
-    # window (must NOT pair)
-    t0 = dt.datetime(2025, 3, 1)
-    s = lambda sec: t0 + dt.timedelta(seconds=sec)
-    rows = []
-    eid = 0
-    for i in range(40):
-        eid += 1
-        rows.append((eid, s(100 + i), 1, "click", 0.0, "{}"))
-    for j in range(6):
-        eid += 1
-        rows.append((eid, s(200 + j), 1, "purchase", 0.0, "{}"))
-    rows += [
-        (eid + 1, s(50), 2, "click", 0.0, "{}"),
-        (eid + 2, s(60), 2, "purchase", 0.0, "{}"),
-        (eid + 3, s(70), 3, "purchase", 0.0, "{}"),
-        # 7h before user 3's next purchase: outside the 6h window
-        (eid + 4, s(10_000), 3, "purchase", 0.0, "{}"),
-        (eid + 5, s(10_000 - 7 * 3600), 3, "click", 0.0, "{}"),
-    ]
-    pdf = pd.DataFrame(rows, columns=[
-        "event_id", "ts", "user_id", "event_type", "value", "props"])
-    ns = spark.newSession()
-    ns.conf.set("spark.sql.session.timeZone", "UTC")
-    ns.createDataFrame(pdf).createOrReplaceTempView("events")
-    n = run_all(ns)
-    # hot user pairs: every purchase sees all 40 clicks (all within
-    # 6h, clicks precede purchases); user 2: 1 pair; user 3: the
-    # click at s(-15200) is outside the LATE purchase's window (7h
-    # before it) but inside the EARLY s(70) purchase's 6h look-back
-    assert n == 40 * 6 + 1 + 1
 
 
 def test_disorder_sharded_empty_shard_gap_and_multishard_jump(spark):

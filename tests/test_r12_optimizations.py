@@ -12,6 +12,7 @@ import pytest
 
 sys.path.insert(0, "/root/repo")
 
+from aws_trusted_advisor_explorer_spark.session import drop_planes
 from tests.conftest import SF_DIR
 
 
@@ -26,7 +27,7 @@ def test_cluster_kernel_views_match_sql_chains(spark):
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
     from aws_trusted_advisor_explorer_spark.operators import clusterops as C
 
-    C._CLUSTER_STATE.clear()
+    drop_planes(spark, "cluster_index")
     C.ensure_cluster_views(spark, key=SF_DIR)
 
     old_asg = spark.sql(C.kmeans_assign(SPARK))
@@ -50,7 +51,7 @@ def test_shingle_kernel_matches_sql(spark):
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
     from aws_trusted_advisor_explorer_spark.operators import dedup
 
-    dedup._SHINGLE_STATE.clear()
+    drop_planes(spark, "shingle")
     dedup.ensure_shingle_view(spark, key=SF_DIR)
     new = spark.table(dedup.SHINGLE_VIEW)
     old = spark.sql(dedup.shingle_hash_sql(SPARK))
@@ -94,7 +95,7 @@ def test_span_kernel_matches_sql(spark):
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
     from aws_trusted_advisor_explorer_spark.operators import dedup
 
-    dedup._SPAN_STATE.clear()
+    drop_planes(spark, "span")
     dedup.ensure_span_views(spark, key=SF_DIR)
     new = spark.table(dedup.SPAN_GRAM_VIEW)
     old = spark.sql(f"WITH {dedup._span_gram_cte(SPARK, None)}\n"
@@ -137,7 +138,7 @@ def test_contam_plane_matches_sql(spark):
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
     from aws_trusted_advisor_explorer_spark.operators import corpusops
 
-    corpusops._CONTAM_STATE.clear()
+    drop_planes(spark, "contam_hits_plane")
     corpusops.ensure_contam_view(spark, key=SF_DIR)
     new = spark.table(corpusops.CONTAM_VIEW)
     old = spark.sql(corpusops.docs_contamination(SPARK))
@@ -153,7 +154,7 @@ def test_minhash_lsh_df_matches_sql(spark):
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
     from aws_trusted_advisor_explorer_spark.operators import dedup
 
-    dedup._SHINGLE_STATE.clear()
+    drop_planes(spark, "shingle")
     base = dedup.ensure_shingle_view(spark, key=SF_DIR)
     new = dedup.dedup_minhash_lsh_df(spark, base)
     old = spark.sql(dedup.dedup_minhash_lsh(SPARK, base))
@@ -168,7 +169,7 @@ def test_band_tuning_array_verify_matches_join_verify(spark):
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
     from aws_trusted_advisor_explorer_spark.operators import dedup
 
-    dedup._SHINGLE_STATE.clear()
+    drop_planes(spark, "shingle")
     base = dedup.ensure_shingle_view(spark, key=SF_DIR)
     new = dedup.dedup_band_tuning_df(spark, base)
     old = spark.sql(dedup.dedup_band_tuning(SPARK, None))

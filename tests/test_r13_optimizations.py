@@ -12,6 +12,7 @@ import pytest
 
 sys.path.insert(0, "/root/repo")
 
+from aws_trusted_advisor_explorer_spark.session import drop_planes
 from tests.conftest import SF_DIR
 
 
@@ -84,7 +85,7 @@ def test_gram_fold_corpus_slices_match_per_plane_kernels(spark):
     plane: each ensured stream slice equals its standalone kernel."""
     from aws_trusted_advisor_explorer_spark.operators import dedup
 
-    dedup._GRAM_FOLD_STATE.clear()
+    drop_planes(spark, "gram_fold")
     dedup.ensure_gram_fold_view(spark, key=SF_DIR)
     docs = spark.table("documents").select("doc_id", "text")
     fused = spark.table(dedup.GRAM_FOLD_VIEW)
@@ -104,7 +105,7 @@ def test_capped_shingle_antijoin_matches_window_form(spark):
     keep-join + count-window form."""
     from aws_trusted_advisor_explorer_spark.operators import dedup
 
-    dedup._SHINGLE_STATE.clear()
+    drop_planes(spark, "shingle")
     dedup.ensure_shingle_view(spark, key=SF_DIR)
     new = spark.table(dedup.SHINGLE_CAPPED_VIEW)
     old = spark.sql(
@@ -171,7 +172,7 @@ def test_ngram_common_plane_backed_forms_match_standalone(spark):
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
     from aws_trusted_advisor_explorer_spark.operators import dedup
 
-    dedup._NGRAM_COMMON_STATE.clear()
+    drop_planes(spark, "ngram_common")
     base = dedup.ensure_shingle_view(spark, key=SF_DIR)
     cv = dedup.ensure_ngram_common_view(spark, key=SF_DIR)
     pv = dedup.ensure_minhash_pairs_view(spark, key=SF_DIR)
@@ -201,7 +202,7 @@ def test_minhash_sigs_plane_backed_forms_match_standalone(spark):
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
     from aws_trusted_advisor_explorer_spark.operators import dedup
 
-    dedup._MINHASH_SIGS_STATE.clear()
+    drop_planes(spark, "minhash_sigs")
     base = dedup.ensure_shingle_view(spark, key=SF_DIR)
     sv = dedup.ensure_minhash_sigs_view(spark, key=SF_DIR)
     pv = dedup.ensure_minhash_pairs_view(spark, key=SF_DIR)
@@ -227,7 +228,7 @@ def test_emb_gram_plane_backed_forms_match_standalone(spark):
     must equal their standalone forms row-for-row."""
     from aws_trusted_advisor_explorer_spark.operators import similarity as S
 
-    S._EMB_GRAM_STATE.clear()
+    drop_planes(spark, "emb_gram")
     base = S.ensure_emb_gram_view(spark, key=SF_DIR)
     for name, new, old in [
         ("cov", S.embeddings_covariance_df(spark, base=base),
@@ -266,8 +267,7 @@ def test_release_rel_plane_backed_forms_match_fresh_rail(spark):
         corpusops, multimodal,
     )
 
-    corpusops._RELEASE_REL_STATE.clear()
-    multimodal._PAIRS_RELEASE_REL_STATE.clear()
+    drop_planes(spark, "release_rel_ranged", "pairs_release_rel_ranged")
     new_m = corpusops.docs_release_manifest_df(spark, key=SF_DIR)
     old_m = corpusops._manifest_agg_df(corpusops._split_pack_df(
         corpusops._release_rel_df(spark, key=SF_DIR)))
