@@ -12,7 +12,6 @@ Athena SQL views. This package re-expresses that surface Spark-first:
                   text analysis, multimodal)
 - ``functions/``  Presto->Spark scalar-function compatibility shims
 - ``plans/``      the 10 view definitions + deterministic fixture layer
-- ``streaming/``  Structured Streaming operators over the events table
 - ``sinks/``      partitioned writers
 """
 

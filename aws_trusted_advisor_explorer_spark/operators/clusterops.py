@@ -620,9 +620,9 @@ def ensure_cluster_views(spark, key: object = None) -> None:
     # per CTE reference and paid two windowed argmins per chain —
     # measured 5.2 s warm at sf0.1 for the three materializations.
     # The kernel form is the production KMeans shape: codebooks are
-    # BOUNDED relations (<= PQ_K x DIM doubles — the frozen-model
-    # tier, like structured.py's MODEL_BROADCAST_MAX collects) that
-    # broadcast to every assign task; each corpus pass is one
+    # BOUNDED relations (<= PQ_K x DIM doubles — a frozen model small
+    # enough to collect) that broadcast to every assign task; each
+    # corpus pass is one
     # mapInPandas with exact scaled-integer arithmetic replaying
     # the SQL ops bit-for-bit (_np_round_half_up / _np_assign /
     # _np_update); the one-update partial aggregate ships

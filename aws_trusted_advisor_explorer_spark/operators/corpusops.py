@@ -388,8 +388,8 @@ CHUNK_STRIDE = 48   # chunk start stride (overlap = CHUNK_TOKS - stride)
 def chunk_parts(d: Dialect) -> tuple[str, str, str]:
     """(n_chunks, start-position, token-slice) expressions over a
     token-array column ``toks`` and a 0-based window index ``k`` —
-    the SINGLE definition of the chunk geometry, shared by the batch
-    builder and the streaming chunker (structured.chunk_stream)."""
+    the SINGLE definition of the chunk geometry used by
+    :func:`docs_chunking`."""
     n = d.arr_len("toks")
     n_chunks = (f"CASE WHEN {n} <= {CHUNK_TOKS} THEN 1 "
                 f"ELSE {d.idiv(f'({n} - {CHUNK_TOKS} + {CHUNK_STRIDE} - 1)', str(CHUNK_STRIDE))} + 1 END")

@@ -592,8 +592,7 @@ def dedup_exact_groups(d: Dialect) -> str:
     100 TB the shuffle key IS the cost; md5 collision risk at 128 bits
     is nil). One row per duplicated text, keeper = min doc_id.
     Dialect-invariant SQL — md5 is hex-string-identical in Spark and
-    DuckDB. Matches the streaming twin's content-hash key
-    (streaming/structured.py)."""
+    DuckDB."""
     return """SELECT min(doc_id) AS keeper_id, count(*) AS n_copies
 FROM documents
 GROUP BY md5(text)
@@ -601,8 +600,8 @@ HAVING count(*) > 1"""
 
 
 def dedup_exact_flags(d: Dialect) -> str:
-    """Per-document exact-dup verdict via a window min — the streaming-
-    friendly form (no second join back). The window partitions on the
+    """Per-document exact-dup verdict via a window min (no second join
+    back to the groups). The window partitions on the
     content hash, projected BEFORE the exchange so the raw text never
     enters the shuffle. Dialect-invariant SQL."""
     return """WITH k AS (SELECT doc_id, md5(text) AS content_key FROM documents)

@@ -1,7 +1,6 @@
 """Event-stream analytics over the ``events`` table: tumbling-window
-aggregation, gap-based sessionization, and per-user top-k — the batch
-forms; streaming/structured.py runs the same windowed aggregate as a
-Structured Streaming job and is tested equal to the batch plan.
+aggregation, gap-based sessionization, and per-user top-k, each one
+batch query over the landed table.
 
 Dual-dialect SQL (functions/dual.py). Determinism notes:
 - ``sum(double)`` is order-dependent under parallel aggregation, so
@@ -40,13 +39,12 @@ def events_sliding_window(d: Dialect) -> str:
     every 30 minutes — each event lands in exactly window//hop = 2
     windows, generated by exploding the two covering window starts
     (pure integer epoch arithmetic, so both engines bucket
-    identically; no timestamp rounding). The structured-streaming
-    analog is ``F.window(ts, '1 hour', '30 minutes')``; this batch
-    form is its oracle — window starts use FLOOR semantics (the
-    double-mod formula, not truncating div) so pre-1970 negative
-    epochs land in the same two windows F.window assigns; every event
-    covers exactly 2 hopping windows at any epoch sign. Decimal value
-    sums for associativity.
+    identically; no timestamp rounding). Window starts use FLOOR
+    semantics (the double-mod formula, not truncating div), the
+    windows ``F.window(ts, '1 hour', '30 minutes')`` would assign:
+    pre-1970 negative epochs land in their two covering windows too,
+    and every event covers exactly 2 hopping windows at any epoch
+    sign. Decimal value sums for associativity.
 
     Scale posture: the explode doubles rows BEFORE one hash shuffle on
     (type, window) with map-side combine — same shape as the tumbling
@@ -77,7 +75,7 @@ def _gap_flag_cte(d: Dialect, src: str) -> str:
     SINGLE definition of session boundaries shared by
     events_sessionize and events_session_attribution (two hand-copied
     variants could silently desynchronize session counts from
-    attribution windows; the anomaly_stats_ctes discipline). The
+    attribution windows). The
     lagged timestamp is computed ONCE in an inner select instead of
     twice inside the CASE."""
     return f"""g AS (
@@ -262,8 +260,8 @@ FROM events GROUP BY date_trunc('day', ts)"""
 def events_daily_active_approx_df(spark):
     """HLL twin of events_daily_active: approx_count_distinct is a
     mergeable sketch — constant memory per day regardless of user
-    cardinality, and partial sketches merge across executors (and
-    across streaming micro-batches) without a distinct shuffle. Not
+    cardinality, and partial sketches merge across executors without
+    a distinct shuffle. Not
     oracle-gated (sketch internals are engine-specific); tests bound
     its error against the exact query."""
     from pyspark.sql import functions as F
@@ -477,24 +475,6 @@ ANOM_Z2_MIN = 4 * ANOM_Z2_SCALE   # flag hours with |z| >= 2
 ANOM_MIN_HOURS = 24          # need a day of history before flagging
 
 
-def anomaly_stats_ctes(d: Dialect, table: str = "events") -> str:
-    """``hourly``/``stats`` CTE pair: per-type hourly counts and the
-    exact-integer control-chart statistics (H hours, S = Σn, Q = Σn²).
-    The SINGLE definition of the trained stats — composed by the batch
-    detector and by the streaming twin's offline training side
-    (streaming/structured.anomaly_stream), so the two can't drift."""
-    return f"""hourly AS (
-  SELECT event_type, date_trunc('hour', ts) AS hour,
-    cast(count(*) as bigint) AS n
-  FROM {table} GROUP BY event_type, date_trunc('hour', ts)
-),
-stats AS (
-  SELECT event_type, cast(count(*) as bigint) AS h,
-    cast(sum(n) as bigint) AS s, cast(sum(n * n) as bigint) AS q
-  FROM hourly GROUP BY event_type
-)"""
-
-
 def events_hourly_anomaly(d: Dialect) -> str:
     """Hourly volume anomalies per event type: hours whose event count
     sits >= 2 population standard deviations from that type's mean
@@ -521,9 +501,7 @@ def events_hourly_anomaly(d: Dialect) -> str:
     the COMPACTED hourly relation (hours-per-type partitions) — the
     join-back of a stats aggregate would re-run the events scan per
     reference under CTE inlining (the q2/q11/q15 lesson); this form
-    touches the event scan exactly once. The shared
-    anomaly_stats_ctes pair stays as the streaming twin's offline
-    trainer, where the stats RELATION itself is the product."""
+    touches the event scan exactly once."""
     num = "(n * h - s) * (n * h - s)"
     den = "(h * q - s * s)"
     z2 = (f"CASE WHEN {den} > 0 THEN "
@@ -633,16 +611,11 @@ def events_purchase_click_pairs(d: Dialect) -> str:
     same user where the click lands within the {CLICK_ATTR_WINDOW_US}us
     window ending at the purchase — the pair-level attribution relation
     (events_session_attribution is the session-level rollup of the
-    same idea). This is deliberately the BATCH TWIN of the streaming
-    stream-stream join (streaming/structured.purchase_click_join_stream):
-    the pair set is what both must agree on.
+    same idea).
 
     Scale posture (100 TB): the range predicate rides a user_id
     equi-join — both sides co-partitioned on user_id, never a cross
-    product; the click side prunes to one event type at the scan. The
-    streaming form bounds state by the watermark + the join's time
-    range, which is the point of running it at ingest instead of
-    re-joining the full history."""
+    product; the click side prunes to one event type at the scan."""
     ep = d.epoch_us("ts")
     return f"""WITH p AS (
   SELECT event_id AS purchase_id, user_id, {ep} AS p_us FROM events
@@ -734,7 +707,7 @@ def _lateness_audit_sql(src: str, order_key: str) -> str:
     arithmetic shared by events_disorder_audit and its non-zero-signal
     twin (the twin exists to pin THIS arithmetic on a disordered
     ordering; a hand-copied second SELECT would stop testing the first
-    the moment either is edited — the anomaly_stats_ctes discipline)."""
+    the moment either is edited)."""
     return f"""w AS (
   SELECT event_type, ep,
     max(ep) OVER (PARTITION BY event_type ORDER BY {order_key}
@@ -1290,7 +1263,7 @@ FROM f WHERE event_type = 'purchase'"""
 LABEL_HORIZON_US = 30 * 86_400_000_000  # 30-day forward label window
 
 
-def events_training_labels(d: Dialect, horizon_us: int | None = None) -> str:
+def events_training_labels(d: Dialect) -> str:
     """Forward-looking LABEL generation (the other half of the
     training-example assembly whose backward half is
     :func:`events_pit_features`): for every purchase, whether the user
@@ -1311,7 +1284,7 @@ def events_training_labels(d: Dialect, horizon_us: int | None = None) -> str:
     one user_id exchange + in-partition sort shared by both forward
     frames; no self-join of purchases against future history."""
     ep = d.epoch_us("ts")
-    over = _label_over(horizon_us)
+    over = _label_over()
     return f"""WITH p AS (
   SELECT user_id, event_id, value, {ep} AS us FROM events
   WHERE event_type = 'purchase'
@@ -1330,15 +1303,12 @@ SELECT user_id, event_id AS purchase_id, value AS label_value,
 FROM f"""
 
 
-def _label_over(horizon_us: int | None = None) -> str:
+def _label_over() -> str:
     """The forward label frame — strictly after the anchor, horizon-
     bounded — shared by events_training_labels and the fused
-    events_training_examples. ``horizon_us`` overrides the 30-day
-    default for measurement runs whose corpus span must exceed the
-    horizon (scripts/bench_streaming.py's delayed-label drain)."""
-    h = LABEL_HORIZON_US if horizon_us is None else horizon_us
+    events_training_examples."""
     return (f"PARTITION BY user_id ORDER BY us RANGE BETWEEN 1 FOLLOWING "
-            f"AND {h} FOLLOWING")
+            f"AND {LABEL_HORIZON_US} FOLLOWING")
 
 
 def events_training_examples(d: Dialect) -> str:

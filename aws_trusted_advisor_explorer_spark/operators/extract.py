@@ -108,11 +108,3 @@ def mask_name_email(col: Column) -> Column:
     (extract-tag-data-lambda.py:40-45)."""
     return F.concat(F.substring(col, 1, 3), F.lit("-MASKED-"),
                     F.substring(col, -3, 3))
-
-
-def work_list(types_df: DataFrame, regions_df: DataFrame) -> DataFrame:
-    """P11: resourceTypes × regions fan-out work items
-    (get-tags-lambda.py:66-87). In Spark the Step Functions Map state
-    becomes plain task parallelism over this DataFrame."""
-    return types_df.crossJoin(regions_df)
-

@@ -345,8 +345,7 @@ def build_filtered_ivf_index(spark, sf_dir: str) -> str:
     layout for FILTERED search, where the metadata predicate prunes
     physical directories exactly like the coarse cell does (a probe of
     (bucket=b, label=l) touches only that one leaf). This is the
-    implemented form of knn_filtered's docstring claim; the measured
-    file-count evidence is bench_results/IVF_PRUNING.md. Idempotent
+    implemented form of knn_filtered's docstring claim. Idempotent
     per (sf_dir, plane count)."""
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
 
@@ -679,8 +678,7 @@ def knn_filtered(d: Dialect) -> str:
     block ~|labels|-fold vs knn_lsh; the IMPLEMENTED serving form is
     :func:`knn_filtered_df` over the two-level (bucket, label)
     physical layout of :func:`build_filtered_ivf_index`, where the
-    probe partition-prunes on both columns (measured file counts in
-    bench_results/IVF_PRUNING.md). Same recall caveats as any
+    probe partition-prunes on both columns. Same recall caveats as any
     single-probe LSH — the multi-probe rail composes unchanged."""
     cos = f"{d.dot('q.embedding', 'c.embedding')} / (q.nrm * c.nrm)"
     return f"""WITH h AS ({_labeled_vec_base(d)}),
@@ -1172,9 +1170,9 @@ def embeddings_drift_audit_df(spark):
     2080-row aggregate. Bit-identical integers to the SQL explode
     fold (per-row floor then int64 sum), and each mean/drift is the
     same single bigint/bigint division + subtraction — the SQL form
-    stays the cross-engine oracle. Measured 4.8x on the identical
-    Gram shape (bench_results/covariance_twin.json), which is why the
-    registered Spark form is this twin (VERDICT r9 task 2)."""
+    stays the cross-engine oracle. Measured 4.8x faster than the SQL
+    explode fold on the identical Gram shape in round 9, which is why
+    the registered Spark form is this twin (VERDICT r9 task 2)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import Window

@@ -371,20 +371,6 @@ SELECT srcs.n_sources, exact.n_exact,
 FROM srcs, exact, agree, dstats, mstats"""
 
 
-def hll_registers_sql(d: Dialect) -> str:
-    """The bare register relation (event_type, bucket, rho) — the
-    sketch STATE events_hll_distinct estimates from, exposed for the
-    streaming twin's equality test (streaming/structured.py
-    hll_registers_stream maintains exactly this table as a native
-    streaming aggregation)."""
-    return f"""WITH e AS (
-  SELECT event_type, user_id, {_mix(d, 'user_id')} AS hv
-  FROM events WHERE user_id IS NOT NULL
-),
-reg AS ({_hll_registers(d, 'event_type', 'e')})
-SELECT event_type, bucket, rho FROM reg"""
-
-
 # --- fixed-bin histogram quantiles ---------------------------------------
 HIST_BINS = 256
 

@@ -467,24 +467,23 @@ LM_REF_PCT = 20   # reference-slice share (salted id-hash percent)
 LM_SCALE = 1000   # milli units for the integer surprise score
 
 
-def lm_model_ctes(d: Dialect, table: str = "documents") -> str:
+def lm_model_ctes(d: Dialect) -> str:
     """The reference-LM TRAINING relations as a CTE chain — c12
     (per-language bigram counts from the reference slice), ch (head
     counts, an aggregate of c12), vl (per-language head-vocab sizes)
-    — SHARED between the batch scorer and the streaming twin
-    (structured.lm_score_stream) so the frozen model is one
-    implementation, never a drifted copy. The salted ref-slice hash
-    (an interpreted per-character fold) is computed ONCE per document
-    in t and carried as a boolean through the occurrence relation —
-    filtering bg on the hash expression directly would re-run the
-    fold once per bigram occurrence (the _nb_train_ctes shape)."""
+    — the frozen model text_lm_score_ref scores against. The salted
+    ref-slice hash (an interpreted per-character fold) is computed
+    ONCE per document in t and carried as a boolean through the
+    occurrence relation — filtering bg on the hash expression directly
+    would re-run the fold once per bigram occurrence (the
+    _nb_train_ctes shape)."""
     from aws_trusted_advisor_explorer_spark.functions.dual import id_hash_pct
 
     toks = d.tokens("text")
     w1 = d.elem(d.split("bigram", " "), "1")
     pct = id_hash_pct(d, "doc_id", "lm")
     return f"""t AS (SELECT doc_id, lang, {toks} AS toks,
-  ({pct} < {LM_REF_PCT}) AS in_ref FROM {table}),
+  ({pct} < {LM_REF_PCT}) AS in_ref FROM documents),
 bg0 AS (SELECT doc_id, lang, in_ref,
   {d.explode(d.shingles('toks', 2))} AS bigram FROM t),
 bg AS (SELECT doc_id, lang, in_ref, bigram, {w1} AS w1h FROM bg0),
@@ -1206,8 +1205,8 @@ def _bpe_apply_expr(d: Dialect, syms_expr: str,
 def _bpe_count_parts(d: Dialect, round_sets: list[str]) -> tuple[str, str]:
     """(n_token_chars, n_bpe_tokens) expressions over a token-array
     column ``toks`` for per-round pair-set expressions (literal arrays
-    or column refs) — shared by the batch apply query and the
-    streaming twin. Tokens map to bigint counts BEFORE the fold: the
+    or column refs) for the apply query. Tokens map to bigint counts
+    BEFORE the fold: the
     DuckDB fold trick ([init] || list) needs accumulator type ==
     element type."""
     apply_ = _bpe_apply_expr(d, d.chars("tok"), round_sets)
@@ -1358,10 +1357,9 @@ def text_bpe_tokenize_count(d: Dialect, base: str | None = None,
     With ``merges`` (the literal path) the learned rounds are inlined
     as array literals and this is ONE whole-stage-codegen projection
     over documents — zero shuffles, zero joins; the trained model
-    rides in the plan exactly like the streaming scorer's frozen
-    weights. The self-contained form (the DuckDB oracle) trains
-    in-query and CROSS JOINs the {BPE_ROUNDS} 1-row selected-set
-    relations into the apply expression.
+    rides in the plan as frozen weights. The self-contained form (the
+    DuckDB oracle) trains in-query and CROSS JOINs the {BPE_ROUNDS}
+    1-row selected-set relations into the apply expression.
 
     Scale posture (100 TB): apply is embarrassingly parallel (pure
     projection); training cost is the dictionary count (see
@@ -1710,8 +1708,8 @@ def text_bpe_merge_train_df(spark, base: str | None = None):
 
 # the trained merge TABLE is a session plane whose value is the merge
 # list, not a view: apply is a separate operator from training (train
-# offline / price online — the streaming twin's semantics), so repeated
-# apply calls must not re-run the trainer
+# once, apply many times), so repeated apply calls must not re-run the
+# trainer
 @session_plane("bpe_merges")
 def ensure_bpe_merges(spark, key: object = None,
                       base: str | None = None,
@@ -1775,9 +1773,8 @@ def text_bpe_tokenize_count_df(spark, base: str | None = None,
     BROADCAST variable consumed by an Arrow-batched pandas UDF over
     the same distinct-word dim (``bpe_apply_python`` kernel, pinned
     equal to the expression path by pytest). Unlike the membership-set
-    models (eval shingles, Bloom words — see
-    streaming.structured.MODEL_BROADCAST_MAX's no-collect join
-    tier), the BPE model is VOCAB-bounded by construction — a merge
+    models (eval shingles, Bloom words), which grow with the corpus and
+    stay joins, the BPE model is VOCAB-bounded by construction — a merge
     table is at most the target vocabulary (~30k-100k pairs, ~1 MB),
     never corpus-scale — so the one driver hop here is constant-size
     and a join tier is structurally impossible anyway (greedy merge
@@ -1853,7 +1850,7 @@ def sanitize_parts(d: Dialect) -> tuple[str, str, str, str, str]:
     (planted ``raw`` derivation over (doc_id, text), replacement-char
     count, zero-width count, control count, cleaned text) — all over a
     ``raw`` column. Consumed by :func:`text_unicode_sanitize` and the
-    streaming ingest twin (streaming/structured.sanitize_stream)."""
+    planted-damage audit that re-derives ``raw``."""
     # raw regex — Dialect.re_replace owns the Spark literal doubling
     cpat = CTRL_PATTERN
     raw = (f"CASE WHEN doc_id % 5 = 0 THEN '{REPL_CH}{REPL_CH}' || text || "
@@ -2079,21 +2076,20 @@ NB_MIN_TOKENS = 20      # weak label: long enough ...
 NB_STOP_PCT = 5         # ... and >= 5% stopwords -> "good"
 
 
-def _nb_train_ctes(d: Dialect, table: str = "documents") -> str:
+def _nb_train_ctes(d: Dialect) -> str:
     """Shared train-CTE chain (t/m/lab/trainrows) of the NB classifier:
     deterministic 80% id-hash split (functions.dual.id_hash_pct — the
     SAME stream as docs_split_assign, so classifier training composes
-    with corpus splitting) + the weak rule label. Both nb_weights_sql
-    and text_nb_quality_score build on this one string, so the label
-    rule and smoothing can never drift between the standalone train
-    query, the batch scorer, and the streaming scorer."""
+    with corpus splitting) + the weak rule label, ending in the (tok,
+    weight) model relation ``w`` that text_nb_quality_score scores
+    against."""
     from aws_trusted_advisor_explorer_spark.functions.dual import id_hash_pct
 
     pct = id_hash_pct(d)
     n_tok = d.arr_len("toks")
     n_stop = d.arr_len(d.filter_("toks", "x", f"x IN {_in_list(STOPWORDS)}"))
     return f"""WITH t AS (
-  SELECT doc_id, {d.tokens('text')} AS toks FROM {table}
+  SELECT doc_id, {d.tokens('text')} AS toks FROM documents
 ),
 m AS (
   SELECT doc_id, toks, cast({n_tok} as bigint) AS n_tokens,
@@ -2117,24 +2113,14 @@ w AS (
 )"""
 
 
-def nb_weights_sql(d: Dialect, table: str = "documents") -> str:
-    """Standalone TRAIN query: the (tok, weight) model relation of
-    text_nb_quality_score (same shared CTE chain, weights only). Batch
-    training runs this once and persists the result; the streaming
-    scorer (streaming/structured.nb_score_stream) ships it in-plan."""
-    return f"""{_nb_train_ctes(d, table)}
-SELECT tok, weight FROM w"""
-
-
 def text_nb_quality_score(d: Dialect) -> str:
     """Supervised quality classifier (fastText/naive-Bayes shape,
     arXiv:1607.01759 as the published pattern): train token weights on
     a deterministic 80% split with a weak rule label (n_tokens >=
     {NB_MIN_TOKENS} AND stopword share >= {NB_STOP_PCT}%), then score
     EVERY doc as the integer mean of its token weights; keep verdict
-    at the calibrated midpoint. Train CTEs are the SHARED
-    _nb_train_ctes chain (one string for this query, nb_weights_sql,
-    and the streaming scorer — the rule cannot drift between them).
+    at the calibrated midpoint. Train CTEs are the _nb_train_ctes
+    chain.
 
     Weight = ((n_good + 1) * {NB_SCALE}) div (n_docs + 2) — Laplace-
     smoothed P(good | token appears), integer-exact. Docs with zero

@@ -13,11 +13,9 @@ is computed per row as a double, scaled to integer micros with
 bigints; ratios/averages divide the exact sums once at the end — the
 same scaled-integer discipline as the KMeans trainer and the events
 money sums. int64 headroom: ~1e12 micros/row x 6e5 rows at sf0.1 =
-6e17 << 9.2e18; at TPC-H sf100+ the sums would overflow int64, so
-``set_money_mode("decimal")`` switches every money term to
-DECIMAL(38,0) micros (exact 38-digit integer arithmetic, identical
-values where both modes are in range — pinned mode-vs-mode and
-cross-engine by tests/test_extensions.py::test_tpch_money_modes).
+6e17 << 9.2e18. A sum past the int64 bound (TPC-H sf100+) raises
+ARITHMETIC_OVERFLOW under ANSI mode, Spark's default, instead of
+wrapping — pinned by test_tpch_money_sum_overflow_raises.
 
 Scale posture (100 TB): pure declarative joins + aggregates — Catalyst
 picks broadcast for the dimension sides (region/nation/customer at
@@ -31,31 +29,9 @@ from aws_trusted_advisor_explorer_spark.functions.dual import Dialect
 
 _US = 1_000_000  # money scale: micros
 
-# money representation: "micros" = int64 micro-units (fastest; safe
-# through ~sf10, documented bound above); "decimal" = DECIMAL(38,0)
-# micro-units (exact through sf100+ where int64 sums would overflow).
-# Both engines render from the same module global, so oracle and Spark
-# always agree on the mode.
-MONEY_MODE = "micros"
-
-
-def set_money_mode(mode: str) -> None:
-    """Switch the money representation for every TPC-H builder
-    ("micros" int64 | "decimal" DECIMAL(38,0)). Module-global on
-    purpose: the driver renders Spark and oracle SQL in one process,
-    so both sides flip together."""
-    global MONEY_MODE
-    if mode not in ("micros", "decimal"):
-        raise ValueError(f"unknown money mode {mode!r}")
-    MONEY_MODE = mode
-
-
-def _money_t() -> str:
-    return "bigint" if MONEY_MODE == "micros" else "decimal(38,0)"
-
 
 def _micros(expr: str) -> str:
-    return f"cast(round(({expr}) * {_US}) as {_money_t()})"
+    return f"cast(round(({expr}) * {_US}) as bigint)"
 
 
 Q1_CUTOFF = "1998-09-02 00:00:00"
@@ -162,7 +138,7 @@ def tpch_q6(d: Dialect) -> str:
     predicate reaches the parquet scan; the aggregate sees only
     qualifying rows). Exact micro sum as everywhere in this module."""
     return f"""SELECT
-  cast(sum({_micros('l_extendedprice * l_discount')}) as {_money_t()})
+  cast(sum({_micros('l_extendedprice * l_discount')}) as bigint)
     AS revenue_us,
   cast(count(*) as bigint) AS n_lineitems
 FROM lineitem
@@ -191,8 +167,8 @@ def tpch_q14(d: Dialect) -> str:
     AND l.l_shipdate < timestamp '{Q14_TO}'
 )
 SELECT
-  cast(sum(promo_us) as {_money_t()}) AS promo_revenue_us,
-  cast(sum(rev_us) as {_money_t()}) AS total_revenue_us,
+  cast(sum(promo_us) as bigint) AS promo_revenue_us,
+  cast(sum(rev_us) as bigint) AS total_revenue_us,
   CASE WHEN sum(rev_us) = 0 THEN cast(NULL as double)
        ELSE cast(100 as double) * sum(promo_us) / sum(rev_us)
   END AS promo_revenue_pct
@@ -316,7 +292,7 @@ w AS (
 )
 SELECT
   cast(count(*) as bigint) AS n_small_orders,
-  cast(sum({_micros('l_extendedprice')}) as {_money_t()}) AS revenue_us
+  cast(sum({_micros('l_extendedprice')}) as bigint) AS revenue_us
 FROM w
 WHERE qty_us * {Q17_FRACTION_DEN} * cnt
       < cast({Q17_FRACTION_NUM} as bigint) * sum_qty_us"""

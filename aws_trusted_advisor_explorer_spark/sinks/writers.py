@@ -131,8 +131,8 @@ def compact_table(spark: SparkSession, path: str,
                   fmt: str = "parquet") -> int:
     """Small-file compaction (the data-lake maintenance pass): rewrite
     a table directory into files of ~``target_file_bytes``. Landed
-    layers accumulate per-task files (streaming micro-batches, fanned-
-    out ingests); scans then pay per-file open/footer costs and lose
+    layers accumulate per-task files (repeated appends, fanned-out
+    ingests); scans then pay per-file open/footer costs and lose
     row-group-sized reads. Compaction restores scan efficiency without
     touching semantics.
 

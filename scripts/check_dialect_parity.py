@@ -7,11 +7,13 @@ run verbatim in both engines, so every function here must agree.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 from aws_trusted_advisor_explorer_spark.session import get_spark, load_tables
 
 SF_DIR = "/root/testdata/sf0.001"

@@ -2,12 +2,14 @@
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 from aws_trusted_advisor_explorer_spark.plans import fixtures
 from aws_trusted_advisor_explorer_spark.session import get_spark
 

@@ -50,8 +50,8 @@ KNOWN_SUPRALINEAR = {
         "in the solo reading, not this slot."),
     "dedup_ngram_jaccard": (
         "`dedup_ngram_jaccard`: 1.05 normalized is linear within the "
-        "measured same-code band — variance.json's three sweeps span "
-        "0.87–1.19 s for this key (spread 0.32 s, wider than the "
+        "measured same-code band — three same-code sf0.1 sweeps "
+        "spanned 0.87–1.19 s for this key (spread 0.32 s, wider than the "
         "distance to 1.0); like its sibling above it is the exact "
         "ORACLE of the LSH scale path, pair-bound by the DF cap."),
 }
@@ -69,41 +69,6 @@ def input_growth(key: str) -> float:
     if key in _EMB_EXACT or key.startswith(_EMB_PREFIXES):
         return GROWTH_EMBEDDINGS
     return GROWTH_DEFAULT
-
-
-def _scd2_reading(v: dict) -> str:
-    """Verdict prose COMPUTED from the measured growths (the evidence-
-    script convention: prose must not be able to contradict its own
-    numbers). Each claim gets its own computed condition: "at or
-    under" only when growth <= the 2.0x input growth, "within noise
-    of" for (2.0, 2.2], flagged past that; the depth-tracks-population
-    sentence is emitted only when the two growths actually agree."""
-    gu = v["2x_users"]["growth"]
-    gd = v["2x_events_per_user"]["growth"]
-    worst = max(gu, gd)
-    if worst <= 2.0:
-        verdict = (f"Reading: both variants grow the input 2x and the "
-                   f"wall stays at or under input growth ({gu:.2f}x / "
-                   f"{gd:.2f}x).")
-    elif worst <= 2.2:
-        verdict = (f"Reading: both variants grow the input 2x and the "
-                   f"wall stays within run-to-run noise of input "
-                   f"growth ({gu:.2f}x / {gd:.2f}x vs 2x).")
-    else:
-        verdict = (f"Reading: **SUPER-LINEAR — investigate**: wall "
-                   f"growth ({gu:.2f}x users / {gd:.2f}x depth) "
-                   f"exceeds the 2x input growth; the stacked-window "
-                   f"plan is degrading and needs a bisect before the "
-                   f"linear claim can stand.")
-    if worst <= 2.2 and abs(gu - gd) <= 0.3:
-        verdict += (" The depth variant tracks the population variant"
-                    " — run depth does not degrade the one-exchange"
-                    " stacked-window plan.")
-    elif worst <= 2.2:
-        verdict += (f" The two variants DIVERGE ({abs(gu - gd):.2f}x "
-                    f"apart) — whichever is higher is the axis to "
-                    f"watch at the next stretch.")
-    return verdict
 
 
 def main() -> None:
@@ -192,51 +157,6 @@ Reading: every query's normalized ratio stays at or below ~1
 across this window — the quadratic-risk operators (shared-shingle
 joins, cluster-blocked cosine, band joins) stay bounded by their DF
 caps / learned blocks exactly as SCALE.md claims.""")
-    stretch_path = os.path.join(root, "bench_results",
-                                "prefix_stretch.json")
-    if os.path.exists(stretch_path):
-        with open(stretch_path) as f:
-            st = json.load(f)["keys"]
-        out.append("""
-## sf0.2 stretch point (shared-shingle joins)
-
-`scripts/bench_prefix_stretch.py`: the sf0.1 documents corpus plus a
-deterministically perturbed near-duplicate copy (2x docs; every doc
-gains a near-dup twin and duplication clusters double, so the OUTPUT
-pair set explodes far faster than the corpus — the worst case for the
-exact joins). Wall growth should track each operator's true driver
-(pair set for the exact forms, corpus for the banded LSH):
-
-| query | sf0.1 | 2x corpus | wall growth | pair growth |
-|---|---|---|---|---|""")
-        for key, d in st.items():
-            out.append(
-                f"| `{key}` | {d['sf0.1']['sec']:.2f}s "
-                f"({d['sf0.1']['rows']} rows) | {d['sf0.2x']['sec']:.2f}s "
-                f"({d['sf0.2x']['rows']} rows) | {d['growth']:.2f}x "
-                f"| {d['pair_growth']:.2f}x |")
-        out.append("""
-Reading: the exact forms (`dedup_prefix_join`, `dedup_ngram_jaccard`)
-are pair-set-bound — wall growth far below the measured pair growth
-means the prefix/position filters and DF caps are doing their job,
-and the prefix join growing markedly slower than the full join is the
-post-r3-fix growth claim this stretch point exists to anchor; the LSH
-rung staying ~flat (corpus-linear work, pair-count-independent) is
-the scale path working as designed. The substring plane (r6 rows):
-`dedup_span_exact` self-joins the FULL positional-gram relation
-(duplicated-gram rows explode with the doubled dup clusters), while
-`dedup_winnow_overlap` joins only the winnowed ~2/(w+1) fingerprint
-sample — its wall growing visibly slower than the span join's on the
-same corpus is the measured form of the winnowing claim ("downstream
-joins run on the thinned relation, never the full gram relation").
-`dedup_containment` (r8 row, stretch-tested per the r7 verdict: at
-0.90 normalized growth it was the closest operator to super-linear in
-the 3-SF window) rides the same DF-capped shared-shingle pair join as
-`dedup_ngram_jaccard` — like the full Jaccard join it is pair-set-
-bound, so its wall growing far below the pair explosion is the DF cap
-bounding its pair mass; it remains the documented exact ORACLE form
-beside the scalable rungs (`dedup_minhash_lsh`, `dedup_prefix_join`),
-not the 100 TB path.""")
     cs_path = os.path.join(root, "bench_results", "core_scaling.json")
     if os.path.exists(cs_path):
         with open(cs_path) as f:
@@ -281,259 +201,6 @@ The structural finding stands: input-split parallelism, not operator
 shape, was the local scaling ceiling, and the landing/repartition fix
 removes it in the same way real multi-split inputs would at cluster
 scale.""")
-    lm_path = os.path.join(root, "bench_results", "lm_stretch.json")
-    if os.path.exists(lm_path):
-        with open(lm_path) as f:
-            lm = json.load(f)["keys"]
-        out.append("""
-## sf0.2 stretch point (LM/CCNet plane + interval join)
-
-`scripts/bench_lm_stretch.py` (r7): the r6 heavyweights pinned past
-the 3-SF sweep — documents 2x (perturbed near-dup copy) for the
-reference-LM scorer and the CCNet tercile bucketing, events 2x (a
-DISJOINT second epoch, so the interval join's output pair set grows
-with the input instead of quadratically within buckets):
-
-| query | sf0.1 | 2x input | wall growth | output growth |
-|---|---|---|---|---|""")
-        for key, d in lm.items():
-            out.append(
-                f"| `{key}` | {d['sf0.1']['sec']:.2f}s "
-                f"({d['sf0.1']['rows']} rows) | {d['sf0.2x']['sec']:.2f}s "
-                f"({d['sf0.2x']['rows']} rows) | {d['growth']:.2f}x "
-                f"| {d['row_growth']:.2f}x |")
-        out.append("""
-Reading: `text_lm_score_ref`'s occurrence relation and
-`docs_ccnet_buckets`'s score plane are corpus-linear with vocab-sized
-model dims, so wall growth ~= input growth is the claim; the interval
-join's wall tracking its ~2x output (buckets double, per-bucket
-density is unchanged) is the bucketization working — a naive range
-join would have grown ~4x in candidate pairs.""")
-    scd2_path = os.path.join(root, "bench_results", "scd2_stretch.json")
-    if os.path.exists(scd2_path):
-        with open(scd2_path) as f:
-            sc = json.load(f)
-        v, base = sc["variants"], sc["variants"]["sf0.1"]
-        out.append(f"""
-## sf0.2 stretch points (SCD2 window stack)
-
-`scripts/bench_scd2_stretch.py` (r9): `events_scd2_history` pinned
-with TWO different 2x-events variants — "2x users" (copy offsets
-user_id: twice the window partitions, per-user work unchanged) and
-"2x events/user" (same users, a second disjoint epoch: run count and
-the lead() relation double per user — the variant that would expose
-super-linear degradation in the stacked windows). Both re-assert the
-non-overlap/one-open-run invariants at stretch scale:
-
-| variant | wall | history rows | wall growth | row growth |
-|---|---|---|---|---|
-| sf0.1 baseline | {base['sec']:.2f}s | {base['rows']} | — | — |
-| 2x users | {v['2x_users']['sec']:.2f}s | {v['2x_users']['rows']} \
-| {v['2x_users']['growth']:.2f}x | {v['2x_users']['row_growth']:.2f}x |
-| 2x events/user | {v['2x_events_per_user']['sec']:.2f}s \
-| {v['2x_events_per_user']['rows']} \
-| {v['2x_events_per_user']['growth']:.2f}x \
-| {v['2x_events_per_user']['row_growth']:.2f}x |
-
-{_scd2_reading(v)}""")
-    pit_path = os.path.join(root, "bench_results", "pit_stretch.json")
-    if os.path.exists(pit_path):
-        with open(pit_path) as f:
-            ps = json.load(f)
-        pv, pbase = ps["variants"], ps["variants"]["sf0.1"]
-        prow = []
-        for key in ps["keys"]:
-            prow.append(
-                f"| `{key}` | {pbase[key]['sec']:.2f}s "
-                f"| {pv['2x_users'][key]['sec']:.2f}s "
-                f"({pv['2x_users'][key]['growth']:.2f}x) "
-                f"| {pv['2x_events_per_user'][key]['sec']:.2f}s "
-                f"({pv['2x_events_per_user'][key]['growth']:.2f}x) |")
-        prows = "\n".join(prow)
-        out.append(f"""
-## sf0.2 stretch points (training-example window pair, r9)
-
-`scripts/bench_pit_stretch.py`: `events_pit_features` (backward
-feature frames) and `events_training_labels` (forward label frames)
-pinned with the SCD2 stretch's two 2x-events variants — "2x users"
-(twice the window partitions) and "2x events/user" (same population,
-second epoch: every RANGE frame scans deeper per partition — the
-variant that would expose super-linear frame degradation). Output
-rows double exactly in both (one row per purchase, asserted):
-
-| query | sf0.1 wall | 2x users | 2x events/user |
-|---|---|---|---|
-{prows}
-
-Reading: both growths track at-or-below the 2x row growth — the
-value-range frames stay linear in partition depth (one exchange, one
-sort, frame evaluation is a running scan), so the pair holds the
-same linear claim as the SCD2 stack it shares rails with.""")
-    tn_path = os.path.join(root, "bench_results",
-                           "transition_novelty_stretch.json")
-    if os.path.exists(tn_path):
-        with open(tn_path) as f:
-            tn = json.load(f)
-        tv, tb = tn["variants"], tn["variants"]["sf0.1"]
-        trow = []
-        for key, axes in (("events_transition_matrix",
-                           ("2x_users", "2x_events_per_user")),
-                          ("docs_ngram_novelty", ("2x_docs",))):
-            for axis in axes:
-                v = tv[axis][key]
-                trow.append(f"| `{key}` | {tb[key]['sec']:.2f}s "
-                            f"| {axis.replace('_', ' ')} "
-                            f"| {v['sec']:.2f}s | {v['growth']:.2f}x |")
-        trows = "\n".join(trow)
-        out.append(f"""
-## sf0.2 stretch points (transition matrix + ngram novelty, r10)
-
-`scripts/bench_transition_novelty_stretch.py`: the two r9 operators
-whose growth story previously rested on prose, pinned with doubled
-fixtures. `events_transition_matrix` rides both events axes (2x lag
-partitions / 2x chain depth); `docs_ngram_novelty` gets a verbatim
-2x-docs corpus, where the per-doc distinct shingle relation — the
-timed query's input — doubles exactly while corpus-wide novelty mass
-is INVARIANT (every copy's shingle was introduced by its original;
-sum(n_novel) equal and copies all score 0, asserted — the
-first-introducer semantics pinned at stretch scale). Conservation
-asserted everywhere: transitions == total_events - n_users at every
-point:
-
-| query | sf0.1 wall | axis | 2x wall | growth |
-|---|---|---|---|---|
-{trows}
-
-Reading: all points land at-or-under the 2x input growth — the
-transition matrix is one user_id exchange + a type²-sized aggregate
-(cells constant at 2x), and novelty is one hv exchange + one doc_id
-groupBy; neither has a pair-shaped term to go super-linear.""")
-    bk_path = os.path.join(root, "bench_results", "band_knn_stretch.json")
-    if os.path.exists(bk_path):
-        with open(bk_path) as f:
-            bk = json.load(f)
-        bv, bb = bk["variants"], bk["variants"]["sf0.1"]
-        brow = []
-        for key, axes in (("dedup_band_tuning",
-                           ("2x_docs", "4x_docs", "8x_docs")),
-                          ("knn_serving_report",
-                           ("2x_corpus", "4x_corpus", "8x_corpus"))):
-            for axis in axes:
-                v = bv.get(axis, {}).get(key)
-                if v is None or "growth" not in v:
-                    continue  # partial run (incremental flush)
-                brow.append(f"| `{key}` | {bb[key]['sec']:.2f}s "
-                            f"| {axis.replace('_', ' ')} "
-                            f"| {v['sec']:.2f}s | {v['growth']:.2f}x |")
-        brows = "\n".join(brow)
-        tc = bk["truth_combinatorics"]
-        sc = tc["scales"]
-        t8 = sc["8x_docs"]
-        out.append(f"""
-## 2x / 4x / 8x stretch points (band tuning + ANN serving, r11; 8x r12)
-
-`scripts/bench_band_knn_stretch.py`: the two most expensive measured
-keys, whose growth story previously rested on the single sf0.1
-point. `dedup_band_tuning` rides verbatim doc-copy axes where the
-exact truth set obeys the CAP-AWARE law
-{tc['law']} — both terms recomputed on the base corpus under the
-effective df cap, ZERO free parameters, reconciling exactly at every
-scale (8x: T_8={t8['n_truth']} = 64·{t8['t1_at_eff_cap']} +
-28·{t8['eligible_at_eff_cap']} at effective base-df cap
-{t8['eff_base_df_cap']} — the r12 rung that exposed the cap
-dependence; no timing noise can fake that); the star-candidate
-recall floor holds ≥ 95% at every scale (conservative bandings ≥
-98.9%; the 16-band config slides to 96.9% at 8x — SCALE.md) and
-capped-config candidate growth saturates sublinearly.
-`knn_serving_report` rides corpus-only axes (copy offsets preserve
-residue classes, so the query set is IDENTICAL at every scale):
-exact-rung recall is 1.0 everywhere, its cand_rows/bytes scale
-exactly k×, and the serving-ladder orderings hold:
-
-| query | sf0.1 wall | axis | wall | growth |
-|---|---|---|---|---|
-{brows}
-
-Reading: band tuning's wall grows with its candidate-PAIR term (the
-quadratic the ladder exists to measure — at production scale you
-pick the config from this table, not run all four); the serving
-report grows with the brute-force truth arm (nq·nc), the rung whose
-cost the LSH/IVF rungs exist to avoid — and SUBLINEARLY in corpus
-duplication (3.04x wall at 8x corpus).""")
-    cov_path = os.path.join(root, "bench_results", "covariance_twin.json")
-    if os.path.exists(cov_path):
-        with open(cov_path) as f:
-            cv = json.load(f)
-        out.append(f"""
-## Covariance twin justification (r9)
-
-`scripts/bench_covariance_twin.py`: `embeddings_covariance`'s two
-forms compute the SAME exact integers (asserted per run) over
-{cv['n_vectors']} vectors — the SQL explode form pays a dim²/2-fold
-interpreted-lambda row inflation before its partial aggregate, the
-registered Arrow/numpy twin computes the floored terms with
-vectorized einsum outer products and ships 2080-row partials:
-
-| form | wall | vs twin |
-|---|---|---|
-| SQL explode (the oracle) | {cv['sql_explode_sec']:.2f}s | {cv['speedup']:.2f}x |
-| Arrow/numpy partial twin (registered) | {cv['arrow_twin_sec']:.2f}s | 1x |
-
-Both shuffle O(partitions x dim²) integers; the twin's advantage is
-pure per-row compute, which is the term that scales with corpus
-size.""")
-    var_path = os.path.join(root, "bench_results", "variance.json")
-    if os.path.exists(var_path):
-        with open(var_path) as f:
-            var = json.load(f)
-        tot = " / ".join(f"{t:.1f}s" for t in var["totals_sec"])
-        out.append(f"""
-## r7 riser adjudication ({var['protocol']})
-
-`scripts/bench_variance.py`: BENCH_r06 → BENCH_r07 showed five
-queries rising 10–16% with no plan-shape change. Per-query spread
-across three same-code sweeps (totals {tot}) vs the r6→r7 delta —
-"noise" means the same-code spread covers the delta or a sweep lands
-at/below the r6 number:
-
-| query | r6 | r7 | 3 sweeps @ HEAD | spread | r6→r7 delta | verdict |
-|---|---|---|---|---|---|---|""")
-        for key, d in var["keys"].items():
-            sw = " / ".join(f"{v:.2f}" for v in d["sweeps_sec"])
-            out.append(
-                f"| `{key}` | {d['r6_sec']:.2f}s | {d['r7_sec']:.2f}s "
-                f"| {sw} | {d['spread']:.2f}s "
-                f"| {d['r6_to_r7_delta']:.2f}s | **{d['verdict']}** |")
-        out.append("""
-A key verdicted "investigate" reproduces its rise outside the
-same-code variance band and needs a bisect (the r7 candidate is the
-shingle-plane regex-escaping centralization); "noise" keys are pinned
-here and their r7 deltas need no further chasing.""")
-        if "band" in var:
-            b = var["band"]
-            out.append(f"""
-## Accepted full-sweep noise band (r9)
-
-Three same-code sf0.1 sweeps at HEAD ({b['n_queries']} queries)
-totalled **{b['min_total_sec']:.1f}–{b['max_total_sec']:.1f} s**.
-Adjudication rule: {b['rule']}.""")
-        if "top30" in var:
-            out.append("""
-## Top-30 per-key same-code bands (r11)
-
-The r10 adjudication failed for want of per-key bands (5 tracked
-keys vs a 23-key rise). `bench_variance.py` now records the 30 most
-expensive keys' three-sweep spreads next to the committed anchor —
-the next cross-round riser adjudicates per key against ITS band:
-
-| query | anchor | 3 sweeps @ HEAD | spread |
-|---|---|---|---|""")
-            for key, d in var["top30"].items():
-                sw = " / ".join(f"{v:.2f}" for v in d["sweeps_sec"])
-                anc = (f"{d['anchor_sec']:.2f}s"
-                       if d.get("anchor_sec") is not None else "—")
-                out.append(f"| `{key}` | {anc} | {sw} "
-                           f"| {d['spread']:.2f}s |")
     out.append("""
 The absolute numbers are NOT cluster predictions; they are regression
 anchors — a future change that pushes a normalized ratio well past 1

@@ -5,13 +5,16 @@ value comparison)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout these tests belong to, whatever directory it lives in
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from aws_trusted_advisor_explorer_spark.session import get_spark, load_tables
 

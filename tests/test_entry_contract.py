@@ -6,11 +6,15 @@ Pure-Python (no Spark jobs): queries() only builds closures."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
+import glob
+import os
+import re
 
 import __spark_entry__ as ent
+
+# this file's own checkout (``tests.conftest`` may resolve to another
+# one: ``__spark_entry__`` puts the driver's checkout first on sys.path)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_every_query_is_oracled_and_vice_versa():
@@ -79,9 +83,8 @@ def test_parked_tail_incap_citations_are_actually_incap():
     the 50-row head — rotations kept silently invalidating these
     (r7 review found a circular pair and a dozen stale cites), and
     test_cited_names_resolve only checks existence, not cap status."""
-    import re
-
-    src = open("/root/repo/__spark_entry__.py", encoding="utf-8").read()
+    src = open(os.path.join(ROOT, "__spark_entry__.py"),
+               encoding="utf-8").read()
     region = src[src.index("_PARKED_TAIL = ("):]
     head = set(list(ent.queries())[:50])
     keys = set(ent.queries())
@@ -140,19 +143,13 @@ def test_cited_names_resolve():
     repo. A claim of evidence that exists only in the comment citing
     it (the r4 phantom MinHash test, the r5 phantom
     events_disorder_audit_signal) fails here."""
-    import glob
-    import re
-
     keys = set(ent.queries())
     prefixes = sorted({k.split("_")[0] for k in keys})
     key_pat = re.compile(r"\b(?:%s)_[a-z0-9_]+\b" % "|".join(prefixes))
     test_pat = re.compile(r"\btest_[a-zA-Z0-9_]+\b")
 
-    files = (glob.glob("/root/repo/aws_trusted_advisor_explorer_spark/**/*.py",
-                       recursive=True)
-             + ["/root/repo/__spark_entry__.py", "/root/repo/bench.py"]
-             + glob.glob("/root/repo/scripts/*.py"))
-    test_files = glob.glob("/root/repo/tests/*.py")
+    files = _source_files()
+    test_files = glob.glob(os.path.join(ROOT, "tests", "*.py"))
 
     cited = set()
     all_code = []
@@ -163,7 +160,7 @@ def test_cited_names_resolve():
     for p in test_files:
         _, code = _comment_and_docstring_text(p)
         all_code.append(code)
-        all_code.append(p)  # file path: "tests/test_streaming.py" cites resolve
+        all_code.append(p)  # file path: "tests/test_views.py" cites resolve
     code_blob = "\n".join(all_code)
 
     unresolved = sorted(
@@ -173,3 +170,109 @@ def test_cited_names_resolve():
     assert not unresolved, (
         "phantom references (cited in comments/docstrings but defined "
         f"nowhere in code, tests, or queries()): {unresolved}")
+
+
+def _source_files():
+    """The package, entry, bench and script sources whose prose the
+    reference guards read."""
+    return (glob.glob(os.path.join(ROOT, "aws_trusted_advisor_explorer_spark",
+                                   "**", "*.py"), recursive=True)
+            + [os.path.join(ROOT, "__spark_entry__.py"),
+               os.path.join(ROOT, "bench.py")]
+            + glob.glob(os.path.join(ROOT, "scripts", "*.py")))
+
+
+# a repo-relative file path cited in prose; ``{sf}``/``<sf>`` mark a
+# templated name of a generated file
+_CITED_PATH = re.compile(
+    r"\b(?:scripts|tests|bench_results|streaming)/[\w.{}<>/-]*[\w}>]")
+
+
+def test_cited_file_paths_exist():
+    """Every ``scripts/``, ``tests/``, ``bench_results/`` or
+    ``streaming/`` path cited in a comment or docstring of any python
+    file names a file that exists (``streaming/`` relative to the
+    package, the rest relative to the checkout), so no file keeps
+    citing one that was deleted. A templated name (``{sf}``, ``<sf>``)
+    names generated output: only its directory must exist, and a
+    ``dir/module.name`` citation resolves to ``dir/module.py``."""
+    pkg = os.path.join(ROOT, "aws_trusted_advisor_explorer_spark")
+    files = _source_files() + glob.glob(os.path.join(ROOT, "tests", "*.py"))
+    missing = []
+    for p in files:
+        prose, _ = _comment_and_docstring_text(p)
+        for cited in set(_CITED_PATH.findall(prose)):
+            base = pkg if cited.startswith("streaming/") else ROOT
+            if re.search(r"[{<]", cited):
+                cited = os.path.dirname(re.split(r"[{<]", cited)[0])
+            as_module = re.sub(r"\.\w+$", ".py", cited)
+            if not any(os.path.exists(os.path.join(base, c))
+                       for c in (cited, as_module)):
+                missing.append(f"{os.path.relpath(p, ROOT)}: {cited}")
+    assert not missing, f"cited files that do not exist: {sorted(missing)}"
+
+
+def _literals_in(path):
+    import ast
+
+    src = open(path, encoding="utf-8").read()
+    return [n.value for n in ast.walk(ast.parse(src))
+            if isinstance(n, ast.Constant) and isinstance(n.value, str)]
+
+
+def test_no_hard_coded_checkout_path():
+    """Tests and scripts find the checkout from their own ``__file__``.
+    No string literal in them may be this checkout's absolute path, an
+    absolute path into any checkout of this repo (one that names a
+    top-level entry of it, such as ``/x/repo/__spark_entry__.py``), or
+    a directory put on ``sys.path`` by literal: run from a clone, such
+    a path tests another checkout's code."""
+    top = {e for e in os.listdir(ROOT)
+           if not e.startswith(".") and e != "__pycache__"}
+    assert "__spark_entry__.py" in top
+    bad = []
+    for p in (glob.glob(os.path.join(ROOT, "tests", "*.py"))
+              + glob.glob(os.path.join(ROOT, "scripts", "*.py"))):
+        src = open(p, encoding="utf-8").read()
+        rel = os.path.relpath(p, ROOT)
+        if re.search(r"sys\.path\.insert\(\s*0\s*,\s*[\"']", src):
+            bad.append(f"{rel}: literal sys.path entry")
+        for lit in _literals_in(p):
+            if not lit.startswith("/"):
+                continue
+            if (lit == ROOT or lit.startswith(ROOT + "/")
+                    or any(c in top for c in lit.split("/"))):
+                bad.append(f"{rel}: {lit}")
+    assert not bad, f"hard-coded checkout paths: {bad}"
+
+
+def test_verify_entry_output_keyed_on_exact_scale():
+    """scripts/verify_entry.py writes each committed artifact only from
+    its own scale factor; a run at any other scale (the sf0.001 smoke
+    drive) writes an untracked file instead of overwriting one."""
+    import fnmatch
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "verify_entry", os.path.join(ROOT, "scripts", "verify_entry.py"))
+    ve = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(ve)
+
+    def rel(sf_dir, ansi=False):
+        return os.path.relpath(ve.output_path(sf_dir, ansi), ROOT)
+
+    assert rel("/data/sf0.01") == "CORRECTNESS_FULL.json"
+    assert rel("/data/sf0.01/") == "CORRECTNESS_FULL.json"
+    assert rel("/data/sf0.1") == "CORRECTNESS_FULL_SF0.1.json"
+    assert rel("/data/sf0.01", ansi=True) == "ANSI_PARITY.json"
+    committed = {"CORRECTNESS_FULL.json", "CORRECTNESS_FULL_SF0.1.json",
+                 "ANSI_PARITY.json"}
+    with open(os.path.join(ROOT, ".gitignore"), encoding="utf-8") as f:
+        ignored = [ln.strip() for ln in f
+                   if ln.strip() and not ln.startswith("#")]
+    for sf_dir, ansi in (("/data/sf0.001", False), ("/data/sf1", False),
+                         ("/data/sf0.1", True), ("/data/xsf0.1", False)):
+        out = rel(sf_dir, ansi)
+        assert out not in committed, (sf_dir, ansi, out)
+        assert any(fnmatch.fnmatch(out, pat) for pat in ignored), (
+            f"{out} would be tracked by git")

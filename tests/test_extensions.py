@@ -2634,6 +2634,38 @@ def test_curation_pipeline_planted_stages(spark):
     assert all(r.split in ("train", "val", "test") for r in by_id.values())
 
 
+def test_sliding_window_negative_epoch_floor(spark, tmp_path):
+    """Pre-1970 negative-epoch events land in their two covering
+    hopping windows (floor semantics): a click 100 s before the epoch
+    floors into the windows starting at -1800 s and -3600 s, not 0 and
+    -1800 s, which truncating division would assign."""
+    import datetime as dt
+
+    import pandas as pd
+
+    from aws_trusted_advisor_explorer_spark.session import load_tables
+
+    rows = [
+        (1, dt.datetime(1969, 12, 31, 23, 58, 20), 1, "click", 1.0, "{}"),
+        (2, dt.datetime(1970, 1, 1, 0, 10, 0), 1, "click", 2.0, "{}"),
+        (3, dt.datetime(1969, 12, 31, 22, 0, 0), 1, "view", 3.0, "{}"),
+    ]
+    pdf = pd.DataFrame(rows, columns=[
+        "event_id", "ts", "user_id", "event_type", "value", "props"])
+    pdf.astype({"ts": "datetime64[us]"}).to_parquet(
+        tmp_path / "events.parquet")
+
+    ns = spark.newSession()
+    ns.conf.set("spark.sql.session.timeZone", "UTC")
+    load_tables(ns, str(tmp_path), names=("events",))
+    got = {(r.event_type, r.win_start_sec, r.n_events, r.total_value)
+           for r in ns.sql(eventops.events_sliding_window(SPARK)).collect()}
+    # every event covers exactly 2 hopping windows: 3 events -> 6
+    assert got == {("click", -3600, 1, 1.0), ("click", -1800, 2, 3.0),
+                   ("click", 0, 1, 2.0), ("view", -9000, 1, 3.0),
+                   ("view", -7200, 1, 3.0)}
+
+
 def test_disorder_audit_planted_lateness(spark):
     """Planted out-of-order arrivals: event_id is arrival order; one
     event arrives 90s behind the high-water mark, one in order. The
@@ -3555,40 +3587,26 @@ def test_media_decode_meta_quarantines_null_and_damaged(spark):
     assert got[2] == (None, None, None, None)
 
 
-def test_tpch_money_modes(spark, ddb):
-    """The decimal(38,0)-micros money mode (the sf100+ overflow-safe
-    representation) must produce the same VALUES as the default int64
-    micros mode in both engines on q1 (wide aggregate report) and q17
-    (integer cross-multiplied predicate + money sum) — the documented
-    headroom swap is code, not a promise."""
-    from aws_trusted_advisor_explorer_spark.operators import tpch
+def test_tpch_money_sum_overflow_raises(spark):
+    """Money terms are int64 micros. Two planted lineitems of 5e12 each
+    are 5e18 micros per row, inside int64, but 1e19 together, past
+    INT64_MAX: q1's sums must raise ARITHMETIC_OVERFLOW (ANSI mode,
+    Spark's default) instead of wrapping. The planted table is a temp
+    view of a new session, so the shared session's lineitem is
+    untouched."""
+    from pyspark.errors import ArithmeticException
 
-    def norm(v):
-        if v is None or isinstance(v, str):
-            return v
-        return float(v)  # bigint / decimal / double meet as doubles
-
-    def run_all(builder):
-        out = {}
-        for mode in ("micros", "decimal"):
-            tpch.set_money_mode(mode)
-            try:
-                srows = [tuple(norm(v) for v in r)
-                         for r in spark.sql(builder(SPARK)).collect()]
-                drows = [tuple(norm(v) for v in r)
-                         for r in ddb.execute(builder(DUCK)).fetchall()]
-            finally:
-                tpch.set_money_mode("micros")
-            out[mode] = (sorted(srows), sorted(drows))
-        return out
-
-    for builder in (tpch.tpch_q1, tpch.tpch_q17):
-        res = run_all(builder)
-        s_micros, d_micros = res["micros"]
-        s_dec, d_dec = res["decimal"]
-        assert s_micros == d_micros  # cross-engine, int64 mode
-        assert s_dec == d_dec        # cross-engine, decimal mode
-        assert s_micros == s_dec     # mode-vs-mode value equality
+    ns = spark.newSession()
+    assert ns.conf.get("spark.sql.ansi.enabled") == "true"
+    price = 5e12
+    assert 2 * round(price * 1_000_000) > 2**63 - 1
+    row = (f"('A', 'F', cast(1 as double), cast({price!r} as double), "
+           "cast(0 as double), cast(0 as double), timestamp '1998-01-01')")
+    ns.sql(f"SELECT * FROM VALUES {row}, {row} AS t(l_returnflag, "
+           "l_linestatus, l_quantity, l_extendedprice, l_discount, l_tax, "
+           "l_shipdate)").createOrReplaceTempView("lineitem")
+    with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+        ns.sql(tpch.tpch_q1(SPARK)).collect()
 
 
 def test_lsh_hot_band_star_candidates_and_honest_recall():
@@ -4616,6 +4634,27 @@ def test_pit_features_matches_python_replay(spark, ddb):
     assert n_checked == len(got) > 0
 
 
+def test_pit_features_half_cent_rounding_and_null_value(spark):
+    """A click value on an exact half cent (0.125) rounds HALF-UP to
+    0.13 through the decimal(18,2) cast, a NULL-valued click counts but
+    adds 0 cents, and a NULL-valued purchase keeps label_value NULL."""
+    ns = spark.newSession()
+    base = 10_000_000_000_000
+    rows = [(1, base, "click", "cast(0.125 as double)"),
+            (2, base + 60_000_000, "click", "cast(NULL as double)"),
+            (3, base + 120_000_000, "purchase", "cast(NULL as double)")]
+    vals = ", ".join(
+        f"({i}, 1, timestamp_micros({us}), '{t}', {v}, '{{}}')"
+        for i, us, t, v in rows)
+    ns.sql(f"SELECT * FROM VALUES {vals} AS "
+           "t(event_id, user_id, ts, event_type, value, props)"
+           ).createOrReplaceTempView("events")
+    [r] = ns.sql(eventops.events_pit_features(SPARK)).collect()
+    assert r.n_clicks_1d == 2
+    assert r.click_value_1d == 0.13
+    assert r.label_value is None
+
+
 def test_pit_features_frame_boundaries(spark):
     """Planted fixture pins the three frame edges: an event at the
     purchase's exact microsecond is EXCLUDED (leakage guard), one at
@@ -4893,6 +4932,31 @@ def test_training_labels_horizon_boundaries(spark):
     assert got[2] == (1, h)
     assert got[3] == (1, 1)      # sees 4 (1us later, within horizon)
     assert got[4] == (0, None)
+
+
+def test_training_labels_open_horizon_and_null_anchor(spark):
+    """Every purchase gets a label row, including the last one, whose
+    horizon is still open at the end of the data (0 forward purchases,
+    NULL time-to-next), and a NULL-valued anchor passes label_value
+    through as NULL."""
+    ns = spark.newSession()
+    day = 86_400_000_000
+    base = 10_000_000_000_000
+    rows = [(1, 0, "purchase", "10.0"), (2, 5, "purchase", "NULL"),
+            (3, 40, "purchase", "30.0"), (4, 80, "purchase", "40.0"),
+            (5, 81, "click", "1.0")]
+    vals = ", ".join(
+        f"({i}, 7, timestamp_micros({base + d * day}), '{t}', "
+        f"cast({v} as double), '')" for i, d, t, v in rows)
+    ns.sql(f"SELECT * FROM VALUES {vals} AS "
+           "t(event_id, user_id, ts, event_type, value, props)"
+           ).createOrReplaceTempView("events")
+    got = {r.purchase_id: (r.label_value, int(r.n_purchases_30d_fwd),
+                           None if r.time_to_next_us is None
+                           else int(r.time_to_next_us))
+           for r in ns.sql(eventops.events_training_labels(SPARK)).collect()}
+    assert got == {1: (10.0, 1, 5 * day), 2: (None, 0, None),
+                   3: (30.0, 0, None), 4: (40.0, 0, None)}
 
 
 def test_heaps_vocab_growth_matches_python_replay(spark, ddb):

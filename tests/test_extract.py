@@ -149,15 +149,6 @@ def test_mask_pii_p9(spark):
     assert row["n"] == "Ali-MASKED-ple"
 
 
-def test_work_list_p11(spark):
-    from aws_trusted_advisor_explorer_spark.operators.extract import work_list
-
-    types = spark.createDataFrame([(t,) for t in registry.TAG_RESOURCE_TYPES],
-                                  ["ResourceType"])
-    regions = ta_api.regions_df(spark)
-    assert work_list(types, regions).count() == 6 * 8
-
-
 def test_refresh_wait_clamp_matches_reference(spark):
     """P12 (verify-ta-check-status-lambda.py:78-84): wait =
     round(millis/1000) with Python banker's rounding; waits > 3600s

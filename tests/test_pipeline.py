@@ -141,7 +141,6 @@ def test_s6_fetch_to_ec2_view_end_to_end(spark, tmp_path):
     source, and transient transport failures are retried."""
     from pyspark.sql import functions as F
 
-    from aws_trusted_advisor_explorer_spark.operators import extract as X
     from aws_trusted_advisor_explorer_spark.plans import views
     from aws_trusted_advisor_explorer_spark.sources import ta_api, tag_api
 
@@ -153,7 +152,8 @@ def test_s6_fetch_to_ec2_view_end_to_end(spark, tmp_path):
     identity = spark.createDataFrame(
         [(run_date, run_dt) + acct],
         ["Date", "DateTime", "AccountId", "AccountName", "AccountEmail"])
-    work = X.work_list(types_df, regions).crossJoin(identity).repartition(1)
+    work = (types_df.crossJoin(regions).crossJoin(identity)
+            .repartition(1))
 
     def arn(region, iid):
         return f"arn:aws:ec2:{region}:610000000001:instance/{iid}"

@@ -19,10 +19,6 @@ What is checked per plan:
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from tests.conftest import SF_DIR
 
 # BroadcastNestedLoopJoin with a small-by-construction broadcast side:

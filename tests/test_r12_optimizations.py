@@ -6,11 +6,7 @@ regression names the optimization that broke)."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from aws_trusted_advisor_explorer_spark.session import drop_planes
 from tests.conftest import SF_DIR

@@ -12,22 +12,23 @@ from aws_trusted_advisor_explorer_spark.operators import sketchops
 from tests.conftest import assert_matches_oracle, canonicalize
 
 
+def _py_mix(u: int) -> int:
+    """Python reference of sketchops._mix (the arithmetic spec)."""
+    P, K = 1_000_000_007, sketchops.MIX_MULT
+    x0 = u % P
+    x1 = x0 ^ (x0 >> 13)
+    x2 = (x1 * K) % P
+    return x2 ^ (x2 >> 11)
+
+
 def test_mix_hash_matches_python_reference(spark):
     """The SQL xorshift-multiply mix must equal the arithmetic spec —
     pins the hash layout both engines (and any future port) share."""
-    P, K = 1_000_000_007, sketchops.MIX_MULT
-
-    def mix(u: int) -> int:
-        x0 = u % P
-        x1 = x0 ^ (x0 >> 13)
-        x2 = (x1 * K) % P
-        return x2 ^ (x2 >> 11)
-
     rows = spark.sql(
         "SELECT id, " + sketchops._mix(SPARK, "id") + " AS hv "
         "FROM (SELECT explode(sequence(0, 99)) AS id)").collect()
     for r in rows:
-        assert r.hv == mix(r.id), (r.id, r.hv, mix(r.id))
+        assert r.hv == _py_mix(r.id), (r.id, r.hv, _py_mix(r.id))
 
 
 def test_hll_distinct_parity_and_accuracy(spark, ddb):
@@ -54,6 +55,46 @@ def test_hll_merge_is_lossless(spark, ddb):
     assert (pdf["n_disagree"] == 0).all()
     assert (pdf["z_partial_direct"] == pdf["z_partial_merged"]).all()
     assert (pdf["n_registers"] > 0).all()
+
+
+def test_hll_registers_match_python_replay_on_any_split(spark):
+    """The register table is a plain max over per-row ranks: per
+    (event_type, bucket), rho equals a python replay of the max
+    leading-one rank, and max-merging the registers of two halves of
+    the rows (an arbitrary split, not day slices) gives the same table
+    — registers fold in incrementally without loss."""
+    m = sketchops.HLL_M
+
+    def rank(hv: int) -> int:
+        w = hv // m
+        if w == 0:
+            return sketchops.HLL_RHO_MAX
+        return sketchops.HLL_W + 1 - w.bit_length()
+
+    want: dict = {}
+    for r in spark.sql("SELECT event_type, user_id FROM events "
+                       "WHERE user_id IS NOT NULL").collect():
+        hv = _py_mix(r.user_id)
+        k = (r.event_type, hv % m)
+        want[k] = max(want.get(k, 0), rank(hv))
+    assert want
+
+    def registers(where: str) -> dict:
+        sql = f"""WITH e AS (
+  SELECT event_type, user_id, {sketchops._mix(SPARK, 'user_id')} AS hv
+  FROM events WHERE user_id IS NOT NULL{where}
+),
+reg AS ({sketchops._hll_registers(SPARK, 'event_type', 'e')})
+SELECT event_type, bucket, rho FROM reg"""
+        return {(r.event_type, r.bucket): r.rho
+                for r in spark.sql(sql).collect()}
+
+    assert registers("") == want
+    merged: dict = {}
+    for half in (0, 1):
+        for k, rho in registers(f" AND event_id % 2 = {half}").items():
+            merged[k] = max(merged.get(k, 0), rho)
+    assert merged == want
 
 
 def test_cms_never_undercounts(spark, ddb):
