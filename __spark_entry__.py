@@ -23,12 +23,18 @@ including the parked tail — is verified by the identical comparator in
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, "/root/repo")
+# the checkout this file sits in comes first; the fixed path above
+# serves an entry file copied away from its checkout
+_HERE = os.path.dirname(os.path.abspath(__file__))
+if os.path.isdir(os.path.join(_HERE, "aws_trusted_advisor_explorer_spark")):
+    sys.path.insert(0, _HERE)
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -47,50 +53,28 @@ _VIEW_KEYS = {
 }
 
 
-# session id -> (weakref to session, sf_dir, level); catalog views are
-# global per session, so registration is skipped only when the SAME
-# sf_dir is already in place. The weakref guards against CPython id
-# reuse after a stopped session is GC'd (a recycled id must not skip
-# registration for a brand-new session).
-_PREPARED: dict[int, tuple[object, str, str]] = {}
-
-
-def _prepared_state(spark: SparkSession):
-    state = _PREPARED.get(id(spark))
-    if state is not None and state[0]() is not spark:
-        return None
-    return state
-
-
-def _set_prepared(spark: SparkSession, sf_dir: str, level: str) -> None:
-    import weakref
-
-    for sid in [sid for sid, st in _PREPARED.items() if st[0]() is None]:
-        del _PREPARED[sid]
-    _PREPARED[id(spark)] = (weakref.ref(spark), sf_dir, level)
-
-
 def _prepare(spark: SparkSession, sf_dir: str) -> None:
     from aws_trusted_advisor_explorer_spark.plans import fixtures
     from aws_trusted_advisor_explorer_spark.session import tune_session
 
-    state = _prepared_state(spark)
-    if state is not None and state[1:] == (sf_dir, "raw"):
+    # catalog views are global per session, so registration is skipped
+    # only when the SAME sf_dir is already in place on this session
+    if getattr(spark, "_entry_prepared", None) == (sf_dir, "raw"):
         return
     tune_session(spark)
-    fixtures.register_raw_tables(spark, sf_dir)
-    _set_prepared(spark, sf_dir, "raw")  # includes load_tables
+    fixtures.register_raw_tables(spark, sf_dir)  # includes load_tables
+    spark._entry_prepared = (sf_dir, "raw")
 
 
 def _prepare_ext(spark: SparkSession, sf_dir: str) -> None:
     from aws_trusted_advisor_explorer_spark.session import load_tables, tune_session
 
-    state = _prepared_state(spark)
-    if state is not None and state[1] == sf_dir:  # raw implies ext tables
+    state = getattr(spark, "_entry_prepared", None)
+    if state is not None and state[0] == sf_dir:  # raw implies ext tables
         return
     tune_session(spark)
     load_tables(spark, sf_dir)
-    _set_prepared(spark, sf_dir, "ext")
+    spark._entry_prepared = (sf_dir, "ext")
 
 
 def _ext_builders() -> dict:
@@ -106,597 +90,36 @@ def _ext_builders() -> dict:
     return out
 
 
-def _ext_query(build):
+def _df(fn, *reads, keyed: bool = False, **args):
+    """The driver callable of one ``queries()`` entry: ``_prepare_ext``,
+    then every declared plane ensured under ``key=sf_dir`` in
+    declaration order, then ``fn(spark, **args)``. ``reads`` are planes
+    the callable reads by view name; an argument whose value is an
+    ``ensure_*`` function receives that plane's value, any other
+    argument passes as given. A ``keyed`` callable also takes
+    ``sf_dir`` as its second argument. ``run.planes`` lists the
+    declared planes (the key's edges of the plane graph)."""
+    planes = reads + tuple(v for v in args.values() if callable(v))
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        _prepare_ext(spark, sf_dir)
+        for ensure in reads:
+            ensure(spark, key=sf_dir)
+        kw = {name: v(spark, key=sf_dir) if callable(v) else v
+              for name, v in args.items()}
+        return fn(spark, sf_dir, **kw) if keyed else fn(spark, **kw)
+
+    run.planes = planes
+    return run
+
+
+def _sql(build, *reads, **args):
+    """A :func:`_df` entry for a dual-dialect SQL builder: runs
+    ``spark.sql(build(SPARK, **args))``."""
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
 
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _prepare_ext(spark, sf_dir)
-        return spark.sql(build(SPARK))
-
-    return run
-
-
-def _media_udf_query(fn_name: str):
-    """mapInPandas media paths (byte stats / feature extract / frame
-    sample): Spark runs the Arrow-batched UDF, the oracle recomputes
-    the same values from SQL char codes."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from aws_trusted_advisor_explorer_spark.operators import multimodal
-
-        _prepare_ext(spark, sf_dir)
-        return getattr(multimodal, fn_name)(spark)
-
-    return run
-
-
-def _knn_ivf_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from aws_trusted_advisor_explorer_spark.operators import similarity
-
-    _prepare_ext(spark, sf_dir)
-    return similarity.knn_ivf_df(spark, sf_dir)
-
-
-def _knn_ivf_multiprobe_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from aws_trusted_advisor_explorer_spark.operators import similarity
-
-    _prepare_ext(spark, sf_dir)
-    return similarity.knn_ivf_multiprobe_df(spark, sf_dir)
-
-
-def _knn_filtered_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Filtered ANN runs over the two-level (bucket, label) IVF layout
-    (partition-pruned probe on both the coarse cell and the metadata
-    predicate); the composite-equi-join SQL form is the oracle."""
-    from aws_trusted_advisor_explorer_spark.operators import similarity
-
-    _prepare_ext(spark, sf_dir)
-    return similarity.knn_filtered_df(spark, sf_dir)
-
-
-def _bpe_train_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE training runs the iterative twin (one dictionary-sized
-    top-pair job per round); the unrolled SQL stays as the oracle."""
-    from aws_trusted_advisor_explorer_spark.operators import textops
-
-    _prepare_ext(spark, sf_dir)
-    return textops.text_bpe_merge_train_df(
-        spark, base=textops.ensure_bpe_dict_view(spark, key=sf_dir))
-
-
-def _bpe_tokenize_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE apply: train iteratively, inline the learned merges as plan
-    literals, one codegen projection over documents. The
-    train-in-query SQL (Spark-impractical under CTE inlining — the
-    training chain would re-evaluate per pair reference) is
-    oracle-only, like the recursive multiprobe oracle."""
-    from aws_trusted_advisor_explorer_spark.operators import textops
-
-    _prepare_ext(spark, sf_dir)
-    dict_view = textops.ensure_bpe_dict_view(spark, key=sf_dir)
-    return textops.text_bpe_tokenize_count_df(
-        spark, merges=textops.ensure_bpe_merges(
-            spark, key=sf_dir, base=dict_view))
-
-
-def _bpe_fertility_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from aws_trusted_advisor_explorer_spark.operators import textops
-
-    _prepare_ext(spark, sf_dir)
-    dict_view = textops.ensure_bpe_dict_view(spark, key=sf_dir)
-    merges = textops.ensure_bpe_merges(spark, key=sf_dir, base=dict_view)
-    return textops.text_bpe_fertility_by_lang_df(
-        spark, priced_view=textops.ensure_bpe_priced_view(
-            spark, key=sf_dir, merges=merges))
-
-
-def _pack_bins_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token packing runs the distributed two-phase cumsum twin (no
-    global single-partition window); its oracle is the SQL window form."""
-    from aws_trusted_advisor_explorer_spark.operators import corpusops
-
-    _prepare_ext(spark, sf_dir)
-    return corpusops.docs_pack_bins_df(spark)
-
-
-def _kmv_overlap_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The KMV source-overlap matrix materializes its ~5x-referenced
-    distinct (source, hv) relation once per run (lazy localCheckpoint
-    inside the query — AS MATERIALIZED is DuckDB-only, so Spark CTE
-    inlining re-ran the DISTINCT shuffle per reference)."""
-    from aws_trusted_advisor_explorer_spark.operators import dedup, sketchops
-
-    _prepare_ext(spark, sf_dir)
-    base = dedup.ensure_shingle_view(spark, key=sf_dir)
-    return sketchops.docs_kmv_source_overlap_df(spark, base)
-
-
-def _release_manifest_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Release capstone: the composed detect→drop→decontaminate→split→
-    pack→shard manifest (corpusops.docs_release_manifest_df) off the
-    session MinHash-pair / contamination / dochash planes; the
-    self-contained recursive-CTE composition is the DuckDB oracle."""
-    from aws_trusted_advisor_explorer_spark.operators import corpusops
-
-    _prepare_ext(spark, sf_dir)
-    return corpusops.docs_release_manifest_df(spark, key=sf_dir)
-
-
-def _release_refresh_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental release refresh: the docs_agg_refresh stored+delta
-    algebra applied to the manifest (delta packs off the stored split
-    totals, checksums merge by xor, matches_recompute audits against
-    the full recompute)."""
-    from aws_trusted_advisor_explorer_spark.operators import corpusops
-
-    _prepare_ext(spark, sf_dir)
-    return corpusops.docs_release_refresh_df(spark, key=sf_dir)
-
-
-def _eventops_df_query(fn_name: str):
-    """Event-plane DF twins: retention/funnel materialize their
-    multiply-referenced intermediate once per run instead of
-    re-evaluating it per CTE reference under Spark inlining. The SQL
-    forms stay the oracles."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from aws_trusted_advisor_explorer_spark.operators import eventops
-
-        _prepare_ext(spark, sf_dir)
-        return getattr(eventops, fn_name)(spark)
-
-    return run
-
-
-def _pack_efficiency_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Packing QA rolls up the distributed two-phase cumsum twin (the
-    SQL form embeds the global cumsum window — oracle only)."""
-    from aws_trusted_advisor_explorer_spark.operators import corpusops
-
-    _prepare_ext(spark, sf_dir)
-    return corpusops.docs_pack_efficiency_df(spark)
-
-
-def _cutoff_calibration_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gate calibration runs the two-phase distributed exact-rank twin
-    (no single-partition global row_number over the corpus); its
-    oracle is the SQL window form."""
-    from aws_trusted_advisor_explorer_spark.operators import textops
-
-    _prepare_ext(spark, sf_dir)
-    return textops.docs_quality_cutoff_calibration_df(spark)
-
-
-def _dsir_importance_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance runs the kernel-twin (hashed features from the
-    exact Arrow char fold; counts/guard/weights/rollup stay SQL); the
-    self-contained SQL form is the oracle."""
-    from aws_trusted_advisor_explorer_spark.operators import textops
-
-    _prepare_ext(spark, sf_dir)
-    return textops.docs_dsir_importance_df(spark)
-
-
-def _ccnet_buckets_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet tercile bucketing runs the distributed twin (compacted
-    per-(lang, score) CDF + broadcast tercile map — no per-doc window
-    partition per language); its oracle is the SQL window form."""
-    from aws_trusted_advisor_explorer_spark.operators import textops
-
-    _prepare_ext(spark, sf_dir)
-    return textops.docs_ccnet_buckets_df(spark)
-
-
-def _dedup_embedding_cosine_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster-blocked embedding dedup over the once-per-session
-    materialized KMeans index (round-3 verdict item 3: the learned
-    cell is the default block key; the label-blocked form is the
-    pytest oracle only)."""
-    from aws_trusted_advisor_explorer_spark.operators import dedup
-
-    _prepare_ext(spark, sf_dir)
-    return dedup.dedup_embedding_cosine_df(spark, key=sf_dir)
-
-
-def _phash_backed_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The perceptual-hash band self-join reads the per-session
-    materialized (doc_id, ph) signature relation — in production the
-    stored per-asset hash metadata — instead of re-running the
-    gradient pipeline once per join side under CTE inlining."""
-    from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-    from aws_trusted_advisor_explorer_spark.operators import multimodal
-
-    _prepare_ext(spark, sf_dir)
-    return spark.sql(multimodal.media_phash_dedup(
-        SPARK, base=multimodal.ensure_phash_view(spark, key=sf_dir)))
-
-
-def _caption_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Paired-modality relation off the session phash plane; the
-    inline gradient pipeline is the DuckDB oracle."""
-    from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-    from aws_trusted_advisor_explorer_spark.operators import multimodal
-
-    _prepare_ext(spark, sf_dir)
-    return spark.sql(multimodal.media_caption_pairs(
-        SPARK, base=multimodal.ensure_phash_view(spark, key=sf_dir)))
-
-
-def _pairs_near_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LAION-style pair-level dedup: media side off the session phash
-    plane, caption side off the session MinHash pair plane; the
-    oracle inlines both pipelines self-contained."""
-    from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-    from aws_trusted_advisor_explorer_spark.operators import dedup, multimodal
-
-    _prepare_ext(spark, sf_dir)
-    pv = dedup.ensure_minhash_pairs_view(spark, key=sf_dir)
-    return spark.sql(multimodal.pairs_near_dedup(
-        SPARK, base=multimodal.ensure_phash_view(spark, key=sf_dir),
-        pairs_view=pv))
-
-
-def _pairs_release_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The paired-modality release capstone: pair universe ∩ pair-level
-    near-dup keepers ∩ caption curation verdicts, packed into fixed-
-    count shards via the two-phase range-partition cumsum; the oracle
-    composes the same rails self-contained with a per-split window."""
-    from aws_trusted_advisor_explorer_spark.operators import multimodal
-
-    _prepare_ext(spark, sf_dir)
-    return multimodal.pairs_release_manifest_df(spark, key=sf_dir)
-
-
-def _pairs_release_refresh_query(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    """Incremental pair-release refresh: the stored+delta manifest
-    algebra at the pair level (count-rank base per split, xor-merged
-    per-modality checksums, in-row recompute audit)."""
-    from aws_trusted_advisor_explorer_spark.operators import multimodal
-
-    _prepare_ext(spark, sf_dir)
-    return multimodal.pairs_release_refresh_df(spark, key=sf_dir)
-
-
-def _prefix_backed_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The prefix-filtered exact join reads its two multiply-referenced
-    relations (rarest-first prefixes, doc-level shingle sets) from the
-    session-materialized prefix plane (dedup.ensure_prefix_views) —
-    each would otherwise re-evaluate per join side under inlining."""
-    from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-    from aws_trusted_advisor_explorer_spark.operators import dedup
-
-    _prepare_ext(spark, sf_dir)
-    base = dedup.ensure_shingle_view(spark, key=sf_dir)
-    dedup.ensure_prefix_views(spark, key=sf_dir)
-    return spark.sql(dedup.dedup_prefix_join(SPARK, base=base))
-
-
-def _pairs_backed_query(builder_name: str):
-    """Pair-graph consumers read the per-session materialized
-    MinHash-LSH pair relation (dedup.ensure_minhash_pairs_view)
-    instead of re-running the band-join pipeline — consumers that
-    reference the pair CTE twice would otherwise re-evaluate it per
-    reference under Spark inlining."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-        from aws_trusted_advisor_explorer_spark.operators import dedup
-
-        _prepare_ext(spark, sf_dir)
-        # ensure the shingle plane for THIS dataset explicitly: on a
-        # pairs-view cache hit the plane build (which ensures it) does
-        # not run, and another dataset's interleaved queries may have
-        # re-pointed the shingle views since (truth arms read them)
-        base = dedup.ensure_shingle_view(spark, key=sf_dir)
-        pv = dedup.ensure_minhash_pairs_view(spark, key=sf_dir)
-        return spark.sql(getattr(dedup, builder_name)(
-            SPARK, base=base, pairs_view=pv))
-
-    return run
-
-
-def _pairs_df_query(fn_name: str):
-    """Factory for the iterative DataFrame twins (pagerank, connected
-    components, the drop-list and its rollup) that consume ONLY the
-    per-session materialized pair relation — one shape, four
-    consumers, so the ensure discipline lives in one place (unlike the
-    SQL-builder analog _pairs_backed_query, these twins take no
-    shingle `base`, so no shingle re-point is needed here)."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from aws_trusted_advisor_explorer_spark.operators import dedup
-
-        _prepare_ext(spark, sf_dir)
-        return getattr(dedup, fn_name)(
-            spark,
-            pairs_view=dedup.ensure_minhash_pairs_view(spark, key=sf_dir))
-
-    return run
-
-
-def _dochash_backed_query(builder_name: str, module: str = "dedup"):
-    """Content-hash queries (bloom prefilter, KMV sketches) read the
-    per-session materialized poly-hash plane instead of re-running the
-    interpreted char-fold hash per CTE reference
-    (dedup.ensure_dochash_view)."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import importlib
-
-        from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-        from aws_trusted_advisor_explorer_spark.operators import dedup
-
-        mod = importlib.import_module(
-            f"aws_trusted_advisor_explorer_spark.operators.{module}")
-        _prepare_ext(spark, sf_dir)
-        base = dedup.ensure_dochash_view(spark, key=sf_dir)
-        return spark.sql(getattr(mod, builder_name)(SPARK, base=base))
-
-    return run
-
-
-def _shingle_backed_query(builder_name: str, module: str = "dedup"):
-    """Shingle-based queries read the per-session materialized
-    shingle-hash view instead of re-running the explode+hash pipeline
-    per CTE reference (see dedup.ensure_shingle_view)."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import importlib
-
-        from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-        from aws_trusted_advisor_explorer_spark.operators import dedup
-
-        _prepare_ext(spark, sf_dir)
-        base = dedup.ensure_shingle_view(spark, key=sf_dir)
-        mod = importlib.import_module(
-            f"aws_trusted_advisor_explorer_spark.operators.{module}")
-        return spark.sql(getattr(mod, builder_name)(SPARK, base=base))
-
-    return run
-
-
-def _cluster_backed_query(builder_name: str):
-    """Cluster/PQ queries read the once-per-session materialized index
-    views (clusterops.ensure_cluster_views) instead of re-running the
-    unrolled training CTE chain per query; the oracle keeps the
-    self-contained inline form."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-        from aws_trusted_advisor_explorer_spark.operators import clusterops as C
-
-        _prepare_ext(spark, sf_dir)
-        C.ensure_cluster_views(spark, key=sf_dir)
-        build = C.BUILDERS[builder_name]
-        if builder_name == "pq_codes":
-            sql = build(SPARK, members=C.PQ_MEMBERS_VIEW)
-        elif builder_name in ("knn_ivfpq_adc", "pq_recall_report"):
-            sql = build(SPARK, asg=C.ASG_VIEW, members=C.PQ_MEMBERS_VIEW,
-                        cents=C.PQ_CENTS_VIEW)
-        else:
-            sql = build(SPARK, asg=C.ASG_VIEW)
-        return spark.sql(sql)
-
-    return run
-
-
-def _band_tuning_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The band-tuning report materializes the exact truth pair set
-    once and runs each band config's LSH pipeline exactly once off the
-    session shingle plane (the self-contained SQL form re-references
-    truth per config under Spark CTE inlining — oracle-only); since
-    r13 the truth arm reads the session pair-aggregate plane
-    (dedup.ensure_ngram_common_view) shared with the jaccard /
-    containment / LSH-recall queries."""
-    from aws_trusted_advisor_explorer_spark.operators import dedup
-
-    _prepare_ext(spark, sf_dir)
-    base = dedup.ensure_shingle_view(spark, key=sf_dir)
-    cv = dedup.ensure_ngram_common_view(spark, key=sf_dir)
-    sv = dedup.ensure_minhash_sigs_view(spark, key=sf_dir)
-    return dedup.dedup_band_tuning_df(spark, base, common_view=cv,
-                                      mh_view=sv)
-
-
-def _ngram_common_backed_query(builder_name: str):
-    """The exact shared-shingle pair reports (jaccard, containment)
-    read the session pair-aggregate plane
-    (dedup.ensure_ngram_common_view) instead of each re-running the
-    DF-capped self-join + aggregate."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-        from aws_trusted_advisor_explorer_spark.operators import dedup
-
-        _prepare_ext(spark, sf_dir)
-        cv = dedup.ensure_ngram_common_view(spark, key=sf_dir)
-        return spark.sql(getattr(dedup, builder_name)(
-            SPARK, base=dedup.SHINGLE_VIEW, common_view=cv))
-
-    return run
-
-
-def _minhash_lsh_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MinHash-LSH query reads the session signature plane
-    (dedup.ensure_minhash_sigs_view — banding-independent, shared with
-    the pairs plane, the band-tuning ladder, and the estimator)."""
-    from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-    from aws_trusted_advisor_explorer_spark.operators import dedup
-
-    _prepare_ext(spark, sf_dir)
-    base = dedup.ensure_shingle_view(spark, key=sf_dir)
-    sv = dedup.ensure_minhash_sigs_view(spark, key=sf_dir)
-    return spark.sql(dedup.dedup_minhash_lsh(SPARK, base=base, mh_view=sv))
-
-
-def _minhash_estimate_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The estimator audit reads both session planes: the verified
-    pair graph and the signature relation."""
-    from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-    from aws_trusted_advisor_explorer_spark.operators import dedup
-
-    _prepare_ext(spark, sf_dir)
-    base = dedup.ensure_shingle_view(spark, key=sf_dir)
-    pv = dedup.ensure_minhash_pairs_view(spark, key=sf_dir)
-    sv = dedup.ensure_minhash_sigs_view(spark, key=sf_dir)
-    return spark.sql(dedup.dedup_minhash_estimate(
-        SPARK, base=base, pairs_view=pv, mh_view=sv))
-
-
-def _lsh_recall_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH recall audits the materialized pair graph against the
-    session pair-aggregate truth plane (both arms plane scans since
-    r13)."""
-    from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-    from aws_trusted_advisor_explorer_spark.operators import dedup
-
-    _prepare_ext(spark, sf_dir)
-    base = dedup.ensure_shingle_view(spark, key=sf_dir)
-    pv = dedup.ensure_minhash_pairs_view(spark, key=sf_dir)
-    cv = dedup.ensure_ngram_common_view(spark, key=sf_dir)
-    return spark.sql(dedup.dedup_lsh_recall(
-        SPARK, base=base, pairs_view=pv, common_view=cv))
-
-
-def _winnow_overlap_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The winnow-overlap self-join materializes its DF-capped
-    fingerprint relation once per run (lazy localCheckpoint inside the
-    query) — the SQL form's two self-join references re-ran the whole
-    winnow window pass per side under Spark CTE inlining."""
-    from aws_trusted_advisor_explorer_spark.operators import dedup
-
-    _prepare_ext(spark, sf_dir)
-    base = dedup.ensure_span_views(spark, key=sf_dir)
-    return dedup.dedup_winnow_overlap_df(spark, base)
-
-
-def _span_backed_query(builder_name: str):
-    """Span queries read the per-session materialized positional
-    token/gram plane (dedup.ensure_span_views) instead of re-running
-    the tokenize+char-fold prefix per query."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-        from aws_trusted_advisor_explorer_spark.operators import dedup
-
-        _prepare_ext(spark, sf_dir)
-        base = dedup.ensure_span_views(spark, key=sf_dir)
-        return spark.sql(getattr(dedup, builder_name)(SPARK, base=base))
-
-    return run
-
-
-def _token_backed_query(builder_name: str):
-    """Token-relation queries (tfidf, commonness) read the per-session
-    positional token plane (dedup.ensure_token_view) instead of
-    re-running tokenize+explode per CTE reference."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-        from aws_trusted_advisor_explorer_spark.operators import dedup, textops
-
-        _prepare_ext(spark, sf_dir)
-        base = dedup.ensure_token_view(spark, key=sf_dir)
-        return spark.sql(getattr(textops, builder_name)(SPARK, base=base))
-
-    return run
-
-
-def _contam_backed_query(builder_name: str):
-    """Contamination queries read the per-session materialized
-    contaminated-hits plane (corpusops.ensure_contam_view): the report
-    scans it, the shipping anti-join probes it — the eval-shingle
-    build + probe join runs once per (session, dataset) instead of
-    once per query (and twice inside the anti-join's subquery)."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-        from aws_trusted_advisor_explorer_spark.operators import corpusops
-
-        _prepare_ext(spark, sf_dir)
-        base = corpusops.ensure_contam_view(spark, key=sf_dir)
-        return spark.sql(getattr(corpusops, builder_name)(SPARK, base=base))
-
-    return run
-
-
-def _block_backed_query(builder_name: str):
-    """Block queries read the per-session materialized fixed-width
-    segment relation (corpusops.ensure_block_view) instead of
-    re-evaluating the tokenize+explode+hash prefix per CTE reference."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-        from aws_trusted_advisor_explorer_spark.operators import corpusops
-
-        _prepare_ext(spark, sf_dir)
-        base = corpusops.ensure_block_view(spark, key=sf_dir)
-        return spark.sql(getattr(corpusops, builder_name)(SPARK, base=base))
-
-    return run
-
-
-def _cluster_df_query(fn_name: str):
-    """Cluster-backed Arrow-kernel twins (semdedup pair join): same
-    materialized assignment views, vectorized cosine kernel."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from aws_trusted_advisor_explorer_spark.operators import clusterops as C
-
-        _prepare_ext(spark, sf_dir)
-        C.ensure_cluster_views(spark, key=sf_dir)
-        pairs = C.ensure_semdedup_pairs(spark, key=sf_dir)
-        if fn_name == "semdedup_pairs_df":
-            return pairs
-        if fn_name == "semdedup_prune_report_df":
-            return C.semdedup_prune_report_df(spark, pairs=pairs)
-        raise ValueError(f"unknown cluster DF query: {fn_name!r}")
-
-    return run
-
-
-def _similarity_df_query(fn_name: str):
-    """knn queries run the Arrow-vectorized DataFrame twins (same
-    doubles as the SQL fold — functions/vectorized.py)."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from aws_trusted_advisor_explorer_spark.operators import similarity
-
-        _prepare_ext(spark, sf_dir)
-        return getattr(similarity, fn_name)(spark)
-
-    return run
-
-
-def _emb_gram_backed_query(fn_name: str):
-    """Gram-consuming twins (covariance report, power iteration) read
-    the session-materialized aggregated Gram relation
-    (similarity.ensure_emb_gram_view) instead of each re-running the
-    corpus-scale partial kernel + aggregate."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from aws_trusted_advisor_explorer_spark.operators import similarity
-
-        _prepare_ext(spark, sf_dir)
-        base = similarity.ensure_emb_gram_view(spark, key=sf_dir)
-        return getattr(similarity, fn_name)(spark, base=base)
-
-    return run
-
-
-def _pca_prefix_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The trained-truncation gate reads the rotation from the
-    session-materialized PCA direction plane (similarity.
-    ensure_pca_dirs — the numpy kernel twin over the Gram, bit-equal
-    to the oracle's unrolled deflated-squaring chain); the projection
-    and both exact ranking arms are the dual-dialect SQL."""
-    from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-    from aws_trusted_advisor_explorer_spark.operators import similarity
-
-    _prepare_ext(spark, sf_dir)
-    view = similarity.ensure_pca_dirs(spark, key=sf_dir)
-    return spark.sql(similarity.knn_pca_prefix_recall(SPARK, dirs=view))
+    return _df(lambda spark, **kw: spark.sql(build(SPARK, **kw)),
+               *reads, **args)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -892,119 +315,162 @@ _PARKED_TAIL = (
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    from aws_trusted_advisor_explorer_spark.operators import (
+        clusterops as C, corpusops, dedup, eventops, multimodal, similarity,
+        sketchops, textops,
+    )
     from aws_trusted_advisor_explorer_spark.plans import views
+
+    # short names for the session planes (ensure_* functions) keys read
+    shingle, span = dedup.ensure_shingle_view, dedup.ensure_span_views
+    pairs = dedup.ensure_minhash_pairs_view
+    sigs = dedup.ensure_minhash_sigs_view
+    common, token = dedup.ensure_ngram_common_view, dedup.ensure_token_view
+    dochash, phash = dedup.ensure_dochash_view, multimodal.ensure_phash_view
+    block, contam = corpusops.ensure_block_view, corpusops.ensure_contam_view
+    cluster, gram = C.ensure_cluster_views, similarity.ensure_emb_gram_view
+    sem_pairs = C.ensure_semdedup_pairs
 
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for name, key in _VIEW_KEYS.items():
         q[key] = _view_query(name, with_tags=None)
         if views.VIEWS[name].join_key is not None:
             q[f"{key}_no_tags"] = _view_query(name, with_tags=False)
-    # audited-first ops: absent from CORRECTNESS_r01 purely because they
-    # sat at positions 50-52; run them right after the views
-    q["knn_ivf"] = _knn_ivf_query
-    q["knn_ivf_multiprobe"] = _knn_ivf_multiprobe_query
-    q["dedup_clusters"] = _pairs_df_query("dedup_clusters_df")
-    for key, build in _ext_builders().items():
-        q[key] = _ext_query(build)
-    q["media_byte_stats"] = _media_udf_query("media_byte_stats_df")
-    q["media_feature_extract"] = _media_udf_query("media_feature_extract_df")
-    q["media_frame_sample"] = _media_udf_query("media_frame_sample_df")
-    q["dedup_minhash_lsh"] = _minhash_lsh_query
-    q["dedup_simhash"] = _shingle_backed_query("dedup_simhash")
-    for key in ("dedup_ngram_jaccard", "dedup_containment"):
-        q[key] = _ngram_common_backed_query(key)
-    q["dedup_prefix_join"] = _prefix_backed_query
-    q["dedup_band_tuning"] = _band_tuning_query
-    for key in ("dedup_incremental", "docs_dedup_rate_by_source",
-                "docs_cross_split_contamination",
-                "docs_cross_lingual_pairs"):
-        q[key] = _pairs_backed_query(key)
-    q["dedup_lsh_recall"] = _lsh_recall_query
-    q["dedup_minhash_estimate"] = _minhash_estimate_query
-    for key in ("docs_block_dedup", "docs_boilerplate_topk"):
-        q[key] = _block_backed_query(key)
-    for key in ("docs_contamination", "docs_decontaminated"):
-        q[key] = _contam_backed_query(key)
-    q["dedup_bloom_prefilter"] = _dochash_backed_query("dedup_bloom_prefilter")
-    q["docs_kmv_distinct_union"] = _dochash_backed_query(
-        "docs_kmv_distinct_union", "sketchops")
-    q["docs_kmv_source_overlap"] = _kmv_overlap_query
-    q["media_phash_dedup"] = _phash_backed_query
-    q["media_caption_pairs"] = _caption_pairs_query
-    q["pairs_near_dedup"] = _pairs_near_dedup_query
-    q["pairs_release_manifest"] = _pairs_release_query
-    q["pairs_release_refresh"] = _pairs_release_refresh_query
-    from aws_trusted_advisor_explorer_spark.operators import clusterops as _C
-    for key in (*_C.ASG_BACKED, "pq_codes", "knn_ivfpq_adc",
-                "pq_recall_report"):
-        q[key] = _cluster_backed_query(key)
-    # the semdedup pair join runs the Arrow kernel twin (bit-matched to
-    # the SQL fold; ~5x at sf0.1's 250k candidate pairs)
-    q["semdedup_pairs"] = _cluster_df_query("semdedup_pairs_df")
-    q["semdedup_prune_report"] = _cluster_df_query("semdedup_prune_report_df")
-    q["dedup_graph_pagerank"] = _pairs_df_query("dedup_graph_pagerank_df")
-    q["docs_near_dedup_apply"] = _pairs_df_query("docs_near_dedup_apply_df")
-    q["docs_dedup_savings"] = _pairs_df_query("docs_dedup_savings_df")
-    q["dedup_span_exact"] = _span_backed_query("dedup_span_exact")
-    q["docs_span_coverage"] = _span_backed_query("docs_span_coverage")
-    q["docs_span_scrub"] = _span_backed_query("docs_span_scrub")
-    q["docs_winnow_fingerprints"] = _span_backed_query(
-        "docs_winnow_fingerprints")
-    q["dedup_winnow_overlap"] = _winnow_overlap_query
-    for key in ("text_tfidf_topk", "text_commonness_score",
-                "docs_bm25_topk", "docs_boolean_search",
-                "text_heaps_vocab_growth", "text_zipf_profile"):
-        q[key] = _token_backed_query(key)
-    q["text_fingerprint"] = _shingle_backed_query("text_fingerprint", "textops")
-    q["docs_hybrid_search_rrf"] = _shingle_backed_query(
-        "docs_hybrid_search_rrf", "similarity")
-    q["text_repetition"] = _shingle_backed_query("text_repetition", "textops")
-    q["docs_ngram_novelty"] = _shingle_backed_query(
-        "docs_ngram_novelty", "textops")
-    q["dedup_embedding_cosine"] = _dedup_embedding_cosine_query
-    q["knn_bruteforce"] = _similarity_df_query("knn_bruteforce_df")
-    q["knn_lsh"] = _similarity_df_query("knn_lsh_df")
-    # the Gram matrix runs the Arrow/numpy partial-accumulation twin
-    # (same integers as the SQL explode form, which stays the oracle);
-    # since r13 the aggregated Gram is a session plane shared with the
-    # power-iteration twin and the PCA direction plane (one corpus
-    # aggregate per dataset instead of three)
-    q["embeddings_covariance"] = _emb_gram_backed_query(
-        "embeddings_covariance_df")
-    # the drift audit reuses the covariance twin's partial-Gram kernel
-    # per parity side (same integers as the SQL fold, ~4.8x measured on
-    # the identical shape); the SQL split-half form stays the oracle
-    q["embeddings_drift_audit"] = _similarity_df_query(
-        "embeddings_drift_audit_df")
-    # the serving report materializes the truth top-k once (the SQL
-    # form's five bf references re-evaluate under Spark CTE inlining;
-    # DuckDB materializes them and keeps the self-contained oracle)
-    q["knn_serving_report"] = _similarity_df_query("knn_serving_report_df")
-    # power iteration runs the Arrow-kernel twin over the dim²-row
-    # Gram relation (one task after the corpus aggregate); the
-    # unrolled MATERIALIZED-hinted chain is the DuckDB oracle (not in
-    # BUILDERS — Spark CTE inlining would expand it exponentially, the
-    # BPE-trainer rule)
-    q["embeddings_power_iteration"] = _emb_gram_backed_query(
-        "embeddings_power_iteration_df")
-    # trained truncation: the PCA direction plane is the numpy kernel
-    # twin (deflated squaring over the dim²-row Gram); the unrolled
-    # MATERIALIZED-hinted chain is the DuckDB oracle (same rule as
-    # power iteration)
-    q["knn_pca_prefix"] = _pca_prefix_query
-    q["knn_filtered"] = _knn_filtered_query
-    q["events_retention"] = _eventops_df_query("events_retention_df")
-    q["events_funnel"] = _eventops_df_query("events_funnel_df")
-    q["docs_release_manifest"] = _release_manifest_query
-    q["docs_release_refresh"] = _release_refresh_query
-    q["docs_pack_bins"] = _pack_bins_query
-    q["docs_pack_efficiency"] = _pack_efficiency_query
-    q["docs_quality_cutoff_calibration"] = _cutoff_calibration_query
-    q["docs_ccnet_buckets"] = _ccnet_buckets_query
-    q["docs_dsir_importance"] = _dsir_importance_query
-    q["text_bpe_merge_train"] = _bpe_train_query
-    q["text_bpe_tokenize_count"] = _bpe_tokenize_query
-    q["text_bpe_fertility_by_lang"] = _bpe_fertility_query
+    # a key that overrides a BUILDERS entry keeps that entry's position
+    q |= {
+        # audited-first ops: absent from CORRECTNESS_r01 purely because
+        # they sat at positions 50-52; run them right after the views
+        "knn_ivf": _df(similarity.knn_ivf_df, keyed=True),
+        "knn_ivf_multiprobe": _df(similarity.knn_ivf_multiprobe_df,
+                                  keyed=True),
+        "dedup_clusters": _df(dedup.dedup_clusters_df, pairs_view=pairs),
+        **{key: _sql(build) for key, build in _ext_builders().items()},
+        # Arrow-batched media UDFs: each oracle recomputes their values
+        # from SQL char codes
+        "media_byte_stats": _df(multimodal.media_byte_stats_df),
+        "media_feature_extract": _df(multimodal.media_feature_extract_df),
+        "media_frame_sample": _df(multimodal.media_frame_sample_df),
+        "dedup_minhash_lsh": _sql(dedup.dedup_minhash_lsh, base=shingle,
+                                  mh_view=sigs),
+        "dedup_simhash": _sql(dedup.dedup_simhash, base=shingle),
+        "dedup_ngram_jaccard": _sql(dedup.dedup_ngram_jaccard,
+                                    common_view=common),
+        "dedup_containment": _sql(dedup.dedup_containment, common_view=common),
+        "dedup_prefix_join": _sql(dedup.dedup_prefix_join,
+                                  dedup.ensure_prefix_views, base=shingle),
+        "dedup_band_tuning": _df(dedup.dedup_band_tuning_df, base=shingle,
+                                 common_view=common, mh_view=sigs),
+        "dedup_incremental": _sql(dedup.dedup_incremental, base=shingle,
+                                  pairs_view=pairs),
+        "docs_dedup_rate_by_source": _sql(dedup.docs_dedup_rate_by_source,
+                                          base=shingle, pairs_view=pairs),
+        "docs_cross_split_contamination": _sql(
+            dedup.docs_cross_split_contamination, base=shingle,
+            pairs_view=pairs),
+        "docs_cross_lingual_pairs": _sql(dedup.docs_cross_lingual_pairs,
+                                         base=shingle, pairs_view=pairs),
+        "dedup_lsh_recall": _sql(dedup.dedup_lsh_recall, base=shingle,
+                                 pairs_view=pairs, common_view=common),
+        "dedup_minhash_estimate": _sql(dedup.dedup_minhash_estimate,
+                                       base=shingle, pairs_view=pairs,
+                                       mh_view=sigs),
+        "docs_block_dedup": _sql(corpusops.docs_block_dedup, base=block),
+        "docs_boilerplate_topk": _sql(corpusops.docs_boilerplate_topk,
+                                      base=block),
+        "docs_contamination": _sql(corpusops.docs_contamination, base=contam),
+        "docs_decontaminated": _sql(corpusops.docs_decontaminated,
+                                    base=contam),
+        "dedup_bloom_prefilter": _sql(dedup.dedup_bloom_prefilter,
+                                      base=dochash),
+        "docs_kmv_distinct_union": _sql(sketchops.docs_kmv_distinct_union,
+                                        base=dochash),
+        "docs_kmv_source_overlap": _df(sketchops.docs_kmv_source_overlap_df,
+                                       base=shingle),
+        "media_phash_dedup": _sql(multimodal.media_phash_dedup, base=phash),
+        "media_caption_pairs": _sql(multimodal.media_caption_pairs,
+                                    base=phash),
+        "pairs_near_dedup": _sql(multimodal.pairs_near_dedup,
+                                 pairs_view=pairs, base=phash),
+        "pairs_release_manifest": _df(
+            multimodal.pairs_release_manifest_df,
+            multimodal.ensure_pairs_release_rel_view, keyed=True),
+        "pairs_release_refresh": _df(
+            multimodal.pairs_release_refresh_df,
+            multimodal.ensure_pairs_release_rel_view, keyed=True),
+        "kmeans_assign": _sql(C.kmeans_assign, cluster, asg=C.ASG_VIEW),
+        "kmeans_report": _sql(C.kmeans_report, cluster, asg=C.ASG_VIEW),
+        "knn_ivf_kmeans": _sql(C.knn_ivf_kmeans, cluster, asg=C.ASG_VIEW),
+        "knn_index_upsert": _sql(C.knn_index_upsert, cluster, asg=C.ASG_VIEW),
+        "pq_codes": _sql(C.pq_codes, cluster, members=C.PQ_MEMBERS_VIEW),
+        "knn_ivfpq_adc": _sql(C.knn_ivfpq_adc, cluster, asg=C.ASG_VIEW,
+                              members=C.PQ_MEMBERS_VIEW,
+                              cents=C.PQ_CENTS_VIEW),
+        "pq_recall_report": _sql(C.pq_recall_report, cluster, asg=C.ASG_VIEW,
+                                 members=C.PQ_MEMBERS_VIEW,
+                                 cents=C.PQ_CENTS_VIEW),
+        "semdedup_pairs": _df(sem_pairs, cluster, keyed=True),
+        "semdedup_prune_report": _df(C.semdedup_prune_report_df, cluster,
+                                     pairs=sem_pairs),
+        "dedup_graph_pagerank": _df(dedup.dedup_graph_pagerank_df,
+                                    pairs_view=pairs),
+        "docs_near_dedup_apply": _df(dedup.docs_near_dedup_apply_df,
+                                     pairs_view=pairs),
+        "docs_dedup_savings": _df(dedup.docs_dedup_savings_df,
+                                  pairs_view=pairs),
+        "dedup_span_exact": _sql(dedup.dedup_span_exact, base=span),
+        "docs_span_coverage": _sql(dedup.docs_span_coverage, base=span),
+        "docs_span_scrub": _sql(dedup.docs_span_scrub, base=span),
+        "docs_winnow_fingerprints": _sql(dedup.docs_winnow_fingerprints,
+                                         base=span),
+        "dedup_winnow_overlap": _df(dedup.dedup_winnow_overlap_df, base=span),
+        "text_tfidf_topk": _sql(textops.text_tfidf_topk, base=token),
+        "text_commonness_score": _sql(textops.text_commonness_score,
+                                      base=token),
+        "docs_bm25_topk": _sql(textops.docs_bm25_topk, base=token),
+        "docs_boolean_search": _sql(textops.docs_boolean_search, base=token),
+        "text_heaps_vocab_growth": _sql(textops.text_heaps_vocab_growth,
+                                        base=token),
+        "text_zipf_profile": _sql(textops.text_zipf_profile, base=token),
+        "text_fingerprint": _sql(textops.text_fingerprint, base=shingle),
+        "docs_hybrid_search_rrf": _sql(similarity.docs_hybrid_search_rrf,
+                                       base=shingle),
+        "text_repetition": _sql(textops.text_repetition, base=shingle),
+        "docs_ngram_novelty": _sql(textops.docs_ngram_novelty, base=shingle),
+        "dedup_embedding_cosine": _df(dedup.dedup_embedding_cosine_df,
+                                      cluster, sem_pairs, keyed=True),
+        "knn_bruteforce": _df(similarity.knn_bruteforce_df),
+        "knn_lsh": _df(similarity.knn_lsh_df),
+        "embeddings_covariance": _df(similarity.embeddings_covariance_df,
+                                     base=gram),
+        "embeddings_drift_audit": _df(similarity.embeddings_drift_audit_df),
+        "knn_serving_report": _df(similarity.knn_serving_report_df),
+        "embeddings_power_iteration": _df(
+            similarity.embeddings_power_iteration_df, base=gram),
+        "knn_pca_prefix": _sql(similarity.knn_pca_prefix_recall,
+                               dirs=similarity.ensure_pca_dirs),
+        "knn_filtered": _df(similarity.knn_filtered_df, keyed=True),
+        "events_retention": _df(eventops.events_retention_df),
+        "events_funnel": _df(eventops.events_funnel_df),
+        "docs_release_manifest": _df(corpusops.docs_release_manifest_df,
+                                     corpusops.ensure_release_rel_view,
+                                     keyed=True),
+        "docs_release_refresh": _df(corpusops.docs_release_refresh_df,
+                                    corpusops.ensure_release_rel_view,
+                                    keyed=True),
+        "docs_pack_bins": _df(corpusops.docs_pack_bins_df),
+        "docs_pack_efficiency": _df(corpusops.docs_pack_efficiency_df),
+        "docs_quality_cutoff_calibration": _df(
+            textops.docs_quality_cutoff_calibration_df),
+        "docs_ccnet_buckets": _df(textops.docs_ccnet_buckets_df),
+        "docs_dsir_importance": _df(textops.docs_dsir_importance_df),
+        "text_bpe_merge_train": _df(textops.text_bpe_merge_train_df,
+                                    base=textops.ensure_bpe_dict_view),
+        "text_bpe_tokenize_count": _df(textops.text_bpe_tokenize_count_df,
+                                       merges=textops.ensure_bpe_merges),
+        "text_bpe_fertility_by_lang": _df(
+            textops.text_bpe_fertility_by_lang_df,
+            priced_view=textops.ensure_bpe_priced_view),
+    }
     ordered = {k: q[k] for k in q if k not in _PARKED_TAIL}
     for k in _PARKED_TAIL:
         ordered[k] = q[k]

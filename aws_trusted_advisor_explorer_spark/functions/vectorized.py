@@ -53,16 +53,6 @@ def pair_cosine(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(dot / (np.sqrt(na) * np.sqrt(nb)))
 
 
-@pandas_udf(DoubleType())
-def vec_norm(e: pd.Series) -> pd.Series:
-    """sqrt(fold of squares), same op order as the SQL ``_norm``."""
-    v = _mat(e)
-    acc = np.zeros(len(v))
-    for i in range(v.shape[1]):
-        acc += v[:, i] * v[:, i]
-    return pd.Series(np.sqrt(acc))
-
-
 def make_lsh_bucket(n_planes: int):
     """Sign-LSH bucket UDF: bit j set iff dot(v, plane_j) > 0, planes
     from the deterministic integer formula shared with the SQL side

@@ -22,13 +22,6 @@ def arn_to_resource_id(arn: Column) -> Column:
             .otherwise(F.lit("")))
 
 
-def arn_to_resource_id_sql(arn: str) -> str:
-    """DuckDB-dialect equivalent of :func:`arn_to_resource_id` (oracle)."""
-    return (f"CASE WHEN {arn} LIKE '%/%' THEN regexp_extract({arn}, '.*/(.*)$', 1) "
-            f"WHEN {arn} LIKE '%:%' THEN regexp_extract({arn}, '.*:(.*)$', 1) "
-            f"ELSE '' END")
-
-
 def pivot_tags(long_tags: DataFrame, customer_keys: list[str],
                order_col: str | None = None) -> DataFrame:
     """P8: long (ARN, key, value) rows → one row per resource with one

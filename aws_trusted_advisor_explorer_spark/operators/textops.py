@@ -1441,18 +1441,17 @@ BPE_PRICED_VIEW = "__bpe_priced_docs"
 
 
 @session_plane("bpe_priced_docs")
-def ensure_bpe_priced_view(spark, key: object = None,
-                           merges=None) -> str:
+def ensure_bpe_priced_view(spark, key: object = None) -> str:
     """Materialize the per-doc BPE pricing relation
     (text_bpe_tokenize_count_df's output) once per (session, dataset)
     — the fertility rollup consumes it the way a pipeline prices the
     corpus once and reports many times; the tokenize_count query
     itself still computes the apply (it IS the pricing operation).
-    ``merges`` must be the model ensure_bpe_merges trained for the
-    same ``key`` (deterministic per dataset, so the dataset key alone
-    identifies the plane)."""
-    materialize_plane_df(text_bpe_tokenize_count_df(spark, merges=merges),
-                         BPE_PRICED_VIEW)
+    Prices with the merge model trained for the same ``key``."""
+    materialize_plane_df(
+        text_bpe_tokenize_count_df(
+            spark, merges=ensure_bpe_merges(spark, key=key)),
+        BPE_PRICED_VIEW)
     return BPE_PRICED_VIEW
 
 
@@ -1711,15 +1710,16 @@ def text_bpe_merge_train_df(spark, base: str | None = None):
 # once, apply many times), so repeated apply calls must not re-run the
 # trainer
 @session_plane("bpe_merges")
-def ensure_bpe_merges(spark, key: object = None,
-                      base: str | None = None,
-                      ) -> list[list[tuple[str, str]]]:
+def ensure_bpe_merges(
+        spark, key: object = None) -> list[list[tuple[str, str]]]:
     """Train once per (session, dataset), return the ROUND-structured
     merge table [[(left, right), ...], ...] (rounds in order; pairs in
     in-round rank order; within a round symbols are pairwise disjoint,
-    so per-round simultaneous apply == flat sequential apply). A cold
-    train triggers the bpe_dict plane build inside this one, whose row
-    the timing frames net out of this one's."""
+    so per-round simultaneous apply == flat sequential apply). Trains
+    on the bpe_dict plane of the same ``key``; a cold dictionary build
+    runs inside this one, whose row the timing frames net out of this
+    one's."""
+    base = ensure_bpe_dict_view(spark, key=key)
     return [[(left, right) for left, right, _ in rnd]
             for rnd in _bpe_train_rounds(spark, base=base)]
 

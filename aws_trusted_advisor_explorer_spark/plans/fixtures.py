@@ -85,10 +85,6 @@ def _status(uid: str) -> str:
     return f"case when ({uid}) % 7 = 0 then 'error' else 'warning' end"
 
 
-_IDENT_PREFIX = ["date", "datetime", "checkname"]
-_IDENT_SUFFIX = ["accountid", "accountname", "accountemail"]
-
-
 def _prefix(uid: str, checkname: str) -> list[tuple[str, str]]:
     return [
         ("date", _run_date(uid)),

@@ -16,9 +16,6 @@ normalization (lowercase) the views rely on, e.g. header
 
 from __future__ import annotations
 
-IDENTITY_PREFIX = ["Date", "DateTime", "CheckName"]
-IDENTITY_SUFFIX = ["AccountId", "AccountName", "AccountEmail"]
-
 # template:1489,1496
 CATEGORY = "cost_optimizing"
 SUPPORTED_CHECKS = [
@@ -58,10 +55,6 @@ SCHEMAS: dict[str, list[str]] = {
     "hjLMh88uM8": "status,0,1,2,3".split(","),
 }
 
-SUMMARY_HEADER = ("CheckId,Status,ResourcesProcessed,ResourcesFlagged,ResourcesIgnored,"
-                  "ResourcesSuppressed,EstimatedMonthlySavings,EstimatedPercentMonthlySavings"
-                  ).split(",")
-
 # Tag extraction resource types (template:2283)
 TAG_RESOURCE_TYPES = [
     "rds:db", "ec2:instance", "ec2:volume",
@@ -73,11 +66,3 @@ def glue_normalize(name: str) -> str:
     """Glue-crawler header→column normalization (lowercase; the raw headers
     contain no other characters the crawler rewrites)."""
     return name.lower()
-
-
-def full_header(check_id: str) -> list[str]:
-    return IDENTITY_PREFIX + HEADERS[check_id] + IDENTITY_SUFFIX
-
-
-def full_summary_header() -> list[str]:
-    return IDENTITY_PREFIX + SUMMARY_HEADER + IDENTITY_SUFFIX

@@ -346,16 +346,16 @@ def _session_planes(spark: SparkSession) -> dict:
 
 
 def session_plane(label: str):
-    """Turn a plane build ``build(spark, key, **extra)`` into its
-    memoized ``ensure(spark, key=None, **extra)`` function.
+    """Turn a plane build ``build(spark, key)`` into its memoized
+    ``ensure(spark, key=None)`` function.
 
     ``key`` identifies the dataset (the sf_dir the query entry points
-    pass).
+    pass), the plane's only input: a build that reads another plane
+    ensures it under its own ``key``.
     An explicit key hits only a plane built under the same key;
     ``key=None`` ("whatever ``documents`` currently is", for
     single-fixture sessions) takes whatever plane the session already
-    holds. Extra build arguments pass through and are not part of the
-    key. A miss drops the old entry, then runs the build as a timed
+    holds. A miss drops the old entry, then runs the build as a timed
     plane build under ``label`` (:func:`timed_plane_build`); the
     entry is stored only when the build returns, so a build that
     raises leaves none and the next call retries. On a hit the
@@ -368,7 +368,7 @@ def session_plane(label: str):
 
     def wrap(build):
         @functools.wraps(build)
-        def ensure(spark, key=None, **extra):
+        def ensure(spark, key=None):
             planes = _session_planes(spark)
             entry = planes.get(label)
             if entry is not None and (key is None or entry[0] == key):
@@ -377,7 +377,7 @@ def session_plane(label: str):
             _PLANE_PINS.append([])
             try:
                 value = timed_plane_build(
-                    label, lambda: build(spark, key, **extra))
+                    label, lambda: build(spark, key))
             finally:
                 pins = _PLANE_PINS.pop()
             planes[label] = (key, value, pins)

@@ -12,14 +12,76 @@ import re
 
 import __spark_entry__ as ent
 
-# this file's own checkout (``tests.conftest`` may resolve to another
-# one: ``__spark_entry__`` puts the driver's checkout first on sys.path)
+# this file's own checkout
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_every_query_is_oracled_and_vice_versa():
     q, o = ent.queries(), ent.oracle_sql()
     assert set(q) == set(o)
+
+
+def _planes_called(fn, ensures, seen):
+    """The ensure functions ``fn`` calls, directly or through functions
+    of its own module."""
+    import inspect
+
+    seen.add(fn)
+    src, mod = inspect.getsource(fn), inspect.getmodule(fn)
+    out = {e for e in ensures if re.search(rf"\b{e.__name__}\(", src)}
+    for name in set(re.findall(r"\b(\w+)\(", src)):
+        f = getattr(mod, name, None)
+        if (inspect.isfunction(f) and f.__module__ == mod.__name__
+                and f not in ensures and f not in seen):
+            out |= _planes_called(f, ensures, seen)
+    return out
+
+
+def test_plane_table_is_the_plane_graph():
+    """queries() declares each key's session planes once: every plane
+    an entry declares is a registered ``ensure_*`` function, every
+    registered plane is read by some key or ensured inside another
+    plane's build, and every ensure takes only ``(spark, key=None)`` —
+    a plane's one input is its dataset key."""
+    import inspect
+
+    from aws_trusted_advisor_explorer_spark.session import SESSION_PLANES
+
+    declared = {e for run in ent.queries().values()
+                for e in getattr(run, "planes", ())}
+    ensures = set(SESSION_PLANES.values())
+    assert declared <= ensures
+    nested = set()
+    for ensure in ensures:
+        nested |= _planes_called(ensure.__wrapped__, ensures, set()) - {ensure}
+    unread = sorted(label for label, e in SESSION_PLANES.items()
+                    if e not in declared | nested)
+    assert not unread, f"planes no key or plane build reads: {unread}"
+    for label, ensure in SESSION_PLANES.items():
+        for fn in (ensure, ensure.__wrapped__):
+            params = inspect.signature(fn, follow_wrapped=False).parameters
+            assert list(params) == ["spark", "key"], (label, list(params))
+            assert params["key"].default is None, label
+
+
+def test_entry_imports_package_from_its_own_checkout(tmp_path):
+    """``__spark_entry__`` imported from a copy of the checkout resolves
+    the package inside that copy, ahead of its fixed fallback path."""
+    import shutil
+    import subprocess
+    import sys
+
+    pkg = "aws_trusted_advisor_explorer_spark"
+    copy = tmp_path / "checkout"
+    shutil.copytree(os.path.join(ROOT, pkg), copy / pkg,
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    shutil.copy2(os.path.join(ROOT, "__spark_entry__.py"), copy)
+    out = subprocess.run(
+        [sys.executable, "-c",
+         f"import __spark_entry__, {pkg} as p; print(p.__file__)"],
+        cwd=copy, stdout=subprocess.PIPE, text=True, check=True)
+    resolved = os.path.realpath(out.stdout.strip())
+    assert resolved.startswith(os.path.realpath(copy) + os.sep), resolved
 
 
 def test_parked_tail_is_exactly_the_tail():

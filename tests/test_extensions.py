@@ -2902,11 +2902,11 @@ def test_session_plane_registry_key_rule(spark):
         sess.session_plane("shingle")
     calls, fail = [], []
 
-    def build(s, key, n=3):
+    def build(s, key):
         calls.append(key)
         if fail:
             raise RuntimeError("planted build failure")
-        sess.materialize_plane_df(s.range(n), "__registry_test")
+        sess.materialize_plane_df(s.range(3), "__registry_test")
         return "__registry_test"
 
     ensure = sess.session_plane("registry_test")(build)
@@ -2915,9 +2915,8 @@ def test_session_plane_registry_key_rule(spark):
         assert ensure(ns, "a") == "__registry_test"
         assert ensure(ns, "a") == ensure(ns) == "__registry_test"
         assert calls == ["a"]  # the same key and None both hit
-        ensure(ns, "b", n=5)   # another key rebuilds; extras pass through
+        ensure(ns, "b")        # another key rebuilds
         assert calls == ["a", "b"]
-        assert ns.table("__registry_test").count() == 5
         other = spark.newSession()
         ensure(other)          # another session builds its own plane
         ensure(ns)
@@ -2938,6 +2937,39 @@ def test_session_plane_registry_key_rule(spark):
             sess.materialize_plane_df(ns.range(1), "__registry_test")
     finally:
         sess.SESSION_PLANES.pop("registry_test", None)
+
+
+def test_entry_keys_ensure_planes_under_their_own_key(spark, tmp_path):
+    """Every queries() entry ensures each plane it reads under its own
+    dataset key: the band-tuning key (shingle, pair-aggregate and
+    signature planes), then a shingle-plane key on a second dataset
+    (half the documents) that re-points the shingle views, then the
+    first key again returns its first rows. Band tuning reads the
+    shingle rows, so a shingle view left pointing at the second
+    dataset changes its hit counts."""
+    import os
+
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as ent
+    from tests.conftest import SF_DIR, canonicalize
+
+    half = tmp_path / "half"
+    half.mkdir()
+    for f in os.listdir(SF_DIR):
+        if f != "documents.parquet":
+            os.symlink(os.path.join(SF_DIR, f), half / f)
+    docs = pq.read_table(os.path.join(SF_DIR, "documents.parquet"))
+    pq.write_table(docs.slice(0, docs.num_rows // 2),
+                   half / "documents.parquet")
+    q = ent.queries()
+    ns = spark.newSession()
+    first = canonicalize(q["dedup_band_tuning"](ns, SF_DIR).toPandas())
+    assert len(first)
+    q["dedup_simhash"](ns, str(half)).collect()
+    again = canonicalize(q["dedup_band_tuning"](ns, SF_DIR).toPandas())
+    pd.testing.assert_frame_equal(first, again)
 
 
 def test_landing_cache_keyed_on_source_file(spark, tmp_path, monkeypatch):
