@@ -360,20 +360,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                                   dedup.ensure_prefix_views, base=shingle),
         "dedup_band_tuning": _df(dedup.dedup_band_tuning_df, base=shingle,
                                  common_view=common, mh_view=sigs),
-        "dedup_incremental": _sql(dedup.dedup_incremental, base=shingle,
-                                  pairs_view=pairs),
+        "dedup_incremental": _sql(dedup.dedup_incremental, pairs_view=pairs),
         "docs_dedup_rate_by_source": _sql(dedup.docs_dedup_rate_by_source,
-                                          base=shingle, pairs_view=pairs),
+                                          pairs_view=pairs),
         "docs_cross_split_contamination": _sql(
-            dedup.docs_cross_split_contamination, base=shingle,
-            pairs_view=pairs),
+            dedup.docs_cross_split_contamination, pairs_view=pairs),
         "docs_cross_lingual_pairs": _sql(dedup.docs_cross_lingual_pairs,
-                                         base=shingle, pairs_view=pairs),
-        "dedup_lsh_recall": _sql(dedup.dedup_lsh_recall, base=shingle,
-                                 pairs_view=pairs, common_view=common),
+                                         pairs_view=pairs),
+        "dedup_lsh_recall": _sql(dedup.dedup_lsh_recall, pairs_view=pairs,
+                                 common_view=common),
         "dedup_minhash_estimate": _sql(dedup.dedup_minhash_estimate,
-                                       base=shingle, pairs_view=pairs,
-                                       mh_view=sigs),
+                                       pairs_view=pairs, mh_view=sigs),
         "docs_block_dedup": _sql(corpusops.docs_block_dedup, base=block),
         "docs_boilerplate_topk": _sql(corpusops.docs_boilerplate_topk,
                                       base=block),

@@ -859,14 +859,13 @@ def _semdedup_cluster_pairs_pdf(pdf):
 SEM_PAIRS_VIEW = "__semdedup_pairs"
 
 
-@session_plane("semdedup_pairs")
+@session_plane("semdedup_pairs", deps=("cluster_index",))
 def ensure_semdedup_pairs(spark, key: object = None):
     """Materialize the semdedup pair relation once per (session,
     dataset): both the pair query and the prune report consume it, so
     the within-cluster pair join (the expensive stage) runs once —
     same build-once pattern as the cluster/PQ index views. Reads the
     assignment of the cluster index built for the same ``key``."""
-    ensure_cluster_views(spark, key=key)
     materialize_plane_df(semdedup_pairs_df(spark), SEM_PAIRS_VIEW)
     return spark.table(SEM_PAIRS_VIEW)
 

@@ -189,7 +189,7 @@ if CONTAM_NGRAM not in _GRAM_FOLD_KS:
 CONTAM_VIEW = "__contam_hits_plane"
 
 
-@session_plane("contam_hits_plane")
+@session_plane("contam_hits_plane", deps=("gram_fold",))
 def ensure_contam_view(spark, key: object = None) -> str:
     """Materialize the contaminated-hits relation (train_doc_id,
     n_shared_shingles, witness_eval_doc_id) once per (session,
@@ -217,7 +217,7 @@ def ensure_contam_view(spark, key: object = None) -> str:
         gram_fold_stream_df,
     )
 
-    kdf = gram_fold_stream_df(spark, key, CONTAM_NGRAM, with_pos=False)
+    kdf = gram_fold_stream_df(spark, CONTAM_NGRAM, with_pos=False)
     kdf.createOrReplaceTempView("__contam_gram_hv")
     materialize_plane_df(spark.sql(f"""WITH ev AS (
   SELECT hv, min(doc_id) AS witness FROM __contam_gram_hv
@@ -1306,7 +1306,8 @@ def _release_rel_df(spark, key: object = None,
 RELEASE_REL_VIEW = "__release_rel_ranged"
 
 
-@session_plane("release_rel_ranged")
+@session_plane("release_rel_ranged",
+               deps=("minhash_pairs", "contam_hits_plane", "doc_content_hv"))
 def ensure_release_rel_view(spark, key: object = None) -> str:
     """Materialize the RANGED released-doc relation (the
     :func:`_release_rel_df` rail composition range-partitioned by
@@ -1585,26 +1586,48 @@ FROM merged m FULL OUTER JOIN full_rc f
   ON f.split = m.split AND f.shard_id = m.shard_id"""
 
 
-def docs_release_refresh_df(spark, key: object = None,
-                            full_recompute: bool = False):
+def _split_audit_df(m, ranged, agg):
+    """The merged manifest ``m`` (one row per split and shard) with
+    ``matches_recompute``: whether its split's rows roll up to the
+    manifest aggregate ``agg`` taken per split straight over the ranged
+    rail, with no packing and no id cut (nothing shared with the
+    stored/delta arms that built ``m``). Counters add, ``*_xor``
+    checksums xor, ``first_*``/``last_*`` ids take min/max. A wrong
+    counter in any shard flags every row of its split, and a split on
+    one side only is flagged too."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    rail = agg(ranged.withColumn("shard_id", F.lit(0)), with_path=False)
+    cols = [c for c in rail.columns if c not in ("split", "shard_id")]
+
+    def roll(c):
+        return (F.bit_xor(c) if c.endswith("_xor") else
+                F.min(c) if c.startswith("first_") else
+                F.max(c) if c.startswith("last_") else F.sum(c))
+
+    w = Window.partitionBy("split")
+    ok = reduce(lambda a, b: a & b, [
+        roll(c).over(w).cast("bigint").eqNullSafe(F.col(f"rail_{c}"))
+        for c in cols])
+    rail = rail.select("split", *[F.col(c).alias(f"rail_{c}") for c in cols])
+    return (m.join(rail, "split", "full_outer")
+            .select(*m.columns, ok.alias("matches_recompute")))
+
+
+def docs_release_refresh_df(spark, key: object = None):
     """The registered Spark form of :func:`docs_release_refresh_oracle`
     — same stored+delta algebra over the DataFrame rails: the stored
     and delta slices each pack with the two-phase range-partition
     cumsum (:func:`_split_pack_df`; the delta's cumsum starts at the
     stored split totals, so the snapshot rows are never re-read for
-    packing), counters merge additively, checksums by xor.
-
-    The ``matches_recompute`` audit arm (r13, r12 verdict item 7):
-    count/sum/bit_xor/min/max are all mergeable, so the recompute
-    combines the ALREADY-COMPUTED stored and delta aggregates instead
-    of packing the full relation a third time — the full pack is
-    provably identical under the operator's append-only precondition
-    (the id cut splits each split's doc_id order into a prefix and a
-    suffix, so delta priors started at the stored split totals equal
-    the full pack's priors row-for-row; the DuckDB oracle keeps the
-    independent full pack, and ``full_recompute=True`` keeps the old
-    arm for the equality pin
-    test_release_refresh_merged_audit_matches_full_recompute)."""
+    packing), counters merge additively, checksums by xor. The
+    ``matches_recompute`` audit checks each split of the merged
+    manifest against a plain aggregate of the ranged rail
+    (:func:`_split_audit_df`); the DuckDB oracle keeps the full pack
+    per shard."""
     from pyspark.sql import functions as F
 
     # ONE range partitioning (+ pid) serves all pack arms (r12), and
@@ -1618,16 +1641,13 @@ def docs_release_refresh_df(spark, key: object = None,
     rel2 = ranged.crossJoin(F.broadcast(cut))
     srel = rel2.filter("doc_id <= cut").drop("cut")
     drel = rel2.filter("doc_id > cut").drop("cut")
-    # lazy checkpoints: both the merged manifest and the audit arm
-    # read each aggregate, and the pack-window subtrees would
-    # otherwise re-run per reference (shard-count-sized relations)
     sman = _manifest_agg_df(_split_pack_df(srel, pre_ranged=True),
-                            with_path=False).localCheckpoint(eager=False)
+                            with_path=False)
     sbase = srel.groupBy("split").agg(
         F.sum("n_toks").cast("bigint").alias("base"))
     dman = _manifest_agg_df(
         _split_pack_df(drel, base_offsets=sbase, pre_ranged=True),
-        with_path=False).localCheckpoint(eager=False)
+        with_path=False)
     m = (sman.alias("s").join(
         dman.alias("dl"),
         (F.expr("dl.split = s.split")
@@ -1635,6 +1655,9 @@ def docs_release_refresh_df(spark, key: object = None,
         .selectExpr(
             "coalesce(s.split, dl.split) AS split",
             "coalesce(s.shard_id, dl.shard_id) AS shard_id",
+            "format_string('release/%s/shard-%05d.tar', "
+            "coalesce(s.split, dl.split), "
+            "coalesce(s.shard_id, dl.shard_id)) AS path",
             "coalesce(s.n_docs, 0) + coalesce(dl.n_docs, 0) AS n_docs",
             "coalesce(s.n_tokens, 0) + coalesce(dl.n_tokens, 0)"
             " AS n_tokens",
@@ -1652,54 +1675,7 @@ def docs_release_refresh_df(spark, key: object = None,
             " AS last_doc_id",
             "coalesce(s.n_docs, 0) AS n_docs_stored",
             "coalesce(dl.n_docs, 0) AS n_docs_delta"))
-    if full_recompute:
-        full = _manifest_agg_df(_split_pack_df(ranged, pre_ranged=True),
-                                with_path=False)
-    else:
-        # the merged-aggregate recompute: the same six audit columns
-        # assembled from the stored+delta aggregates by the merge
-        # algebra (additive counters, xor checksums, min/max ranges)
-        full = (sman.alias("s").join(
-            dman.alias("dl"),
-            (F.expr("dl.split = s.split")
-             & F.expr("dl.shard_id = s.shard_id")), "full_outer")
-            .selectExpr(
-                "coalesce(s.split, dl.split) AS split",
-                "coalesce(s.shard_id, dl.shard_id) AS shard_id",
-                "coalesce(s.n_docs, 0) + coalesce(dl.n_docs, 0)"
-                " AS n_docs",
-                "coalesce(s.n_tokens, 0) + coalesce(dl.n_tokens, 0)"
-                " AS n_tokens",
-                "coalesce(s.n_bytes, 0) + coalesce(dl.n_bytes, 0)"
-                " AS n_bytes",
-                "coalesce(s.checksum_xor, 0)"
-                " ^ coalesce(dl.checksum_xor, 0) AS checksum_xor",
-                "CASE WHEN s.first_doc_id IS NULL THEN dl.first_doc_id"
-                " WHEN dl.first_doc_id IS NULL THEN s.first_doc_id"
-                " ELSE least(s.first_doc_id, dl.first_doc_id) END"
-                " AS first_doc_id",
-                "CASE WHEN s.last_doc_id IS NULL THEN dl.last_doc_id"
-                " WHEN dl.last_doc_id IS NULL THEN s.last_doc_id"
-                " ELSE greatest(s.last_doc_id, dl.last_doc_id) END"
-                " AS last_doc_id"))
-    eq = " AND ".join(
-        f"m.{c} <=> f.{c}"
-        for c in ("n_docs", "n_tokens", "n_bytes", "checksum_xor",
-                  "first_doc_id", "last_doc_id"))
-    return (m.alias("m").join(
-        full.alias("f"),
-        (F.expr("f.split = m.split")
-         & F.expr("f.shard_id = m.shard_id")), "full_outer")
-        .selectExpr(
-            "coalesce(m.split, f.split) AS split",
-            "coalesce(m.shard_id, f.shard_id) AS shard_id",
-            "format_string('release/%s/shard-%05d.tar', "
-            "coalesce(m.split, f.split), "
-            "coalesce(m.shard_id, f.shard_id)) AS path",
-            "m.n_docs", "m.n_tokens", "m.n_bytes", "m.checksum_xor",
-            "m.first_doc_id", "m.last_doc_id",
-            "m.n_docs_stored", "m.n_docs_delta",
-            f"({eq}) AS matches_recompute"))
+    return _split_audit_df(m, ranged, _manifest_agg_df)
 
 
 def docs_release_write_shards(spark, out_dir: str, key: object = None):

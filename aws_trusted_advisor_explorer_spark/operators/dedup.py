@@ -375,16 +375,15 @@ def ensure_gram_fold_view(spark, key: object = None) -> str:
     return GRAM_FOLD_VIEW
 
 
-def gram_fold_stream_df(spark, key: object, k: int, with_pos: bool):
-    """The one accessor the per-plane builds use: ensure the fused
-    fold plane (same ``key`` discipline as the caller) and return its
-    width-``k`` stream slice — (doc_id, pos, hv) or (doc_id, hv)."""
-    ensure_gram_fold_view(spark, key)
+def gram_fold_stream_df(spark, k: int, with_pos: bool):
+    """The one accessor the per-plane builds use (each declares the
+    ``gram_fold`` dep): the fused fold plane's width-``k`` stream slice
+    — (doc_id, pos, hv) or (doc_id, hv)."""
     cols = ["doc_id", "pos", "hv"] if with_pos else ["doc_id", "hv"]
     return spark.table(GRAM_FOLD_VIEW).where(f"stream = {k}").select(*cols)
 
 
-@session_plane("shingle")
+@session_plane("shingle", deps=("gram_fold",))
 def ensure_shingle_view(spark, key: object = None) -> str:
     """Materialize the shingle-hash relation as a localCheckpoint-backed
     temp view, once per (session, dataset). ``key`` identifies the
@@ -402,7 +401,7 @@ def ensure_shingle_view(spark, key: object = None) -> str:
     # r13 the rows come from the FUSED fold plane's stream-3 slice
     # (ensure_gram_fold_view — one tokenize+fold pass shared with
     # the span/contamination planes instead of three)
-    kdf = gram_fold_stream_df(spark, key, 3, with_pos=False)
+    kdf = gram_fold_stream_df(spark, 3, with_pos=False)
     materialize_plane_df(kdf, SHINGLE_VIEW)
     # the deduplicated per-doc shingle set with its count rides along —
     # MinHash / exact-Jaccard would otherwise re-run the DISTINCT +
@@ -624,7 +623,7 @@ def _minhash_mins_sql(n_perm: int) -> str:
 MINHASH_SIGS_VIEW = "__minhash_sigs"
 
 
-@session_plane("minhash_sigs")
+@session_plane("minhash_sigs", deps=("shingle",))
 def ensure_minhash_sigs_view(spark, key: object = None) -> str:
     """Materialize the {N_PERM}-perm MinHash signature relation
     (doc_id, m0..m{N_PERM - 1}) once per (session, dataset) — r13,
@@ -786,7 +785,7 @@ common AS (
 )"""
 
 
-@session_plane("ngram_common")
+@session_plane("ngram_common", deps=("shingle",))
 def ensure_ngram_common_view(spark, key: object = None) -> str:
     """Materialize the shared-shingle pair aggregate ``common(ia, ib,
     n_common, na, nb)`` once per (session, dataset) — r13, guide §2.4:
@@ -868,7 +867,7 @@ PREFIX_VIEW = "__doc_shingle_prefix"
 SETS_VIEW = "__doc_shingle_sets"
 
 
-@session_plane("prefix")
+@session_plane("prefix", deps=("shingle",))
 def ensure_prefix_views(spark, key: object = None) -> tuple[str, str]:
     """Materialize the prefix-join inputs once per (session, dataset):
     the rarest-first per-doc prefix relation (both sides of the
@@ -877,7 +876,6 @@ def ensure_prefix_views(spark, key: object = None) -> tuple[str, str]:
     dimension the verify stage intersects against (read once per
     candidate side). Layered on the shingle plane like the capped
     ride-along."""
-    ensure_shingle_view(spark, key=key)
     pl = (f"n - ((n * {PREFIX_T_NUM} + {PREFIX_T_DEN} - 1) "
           f"div {PREFIX_T_DEN}) + 1")
     # r (the rank within the doc's FULL rarest-first ordering) rides
@@ -1201,7 +1199,7 @@ def ensure_token_view(spark, key: object = None) -> str:
     return TOKEN_POS_VIEW
 
 
-@session_plane("span")
+@session_plane("span", deps=("token", "gram_fold"))
 def ensure_span_views(spark, key: object = None) -> str:
     """Materialize the POSITIONAL gram plane once per (session,
     dataset): ``__doc_span_gram`` (doc_id, pos, hv — the {SPAN_GRAM}-
@@ -1210,7 +1208,6 @@ def ensure_span_views(spark, key: object = None) -> str:
     expensive interpreted prefix shared by dedup_span_exact and
     docs_span_scrub; building it once is the same build-once-index
     step as ensure_shingle_view."""
-    ensure_token_view(spark, key)
     # kernel twin of _span_gram_cte (r12): same rows, exact
     # modular arithmetic, no interpreted char fold — the SQL
     # template stays the oracle/test reference, and the kernel is
@@ -1218,7 +1215,7 @@ def ensure_span_views(spark, key: object = None) -> str:
     # since r13 the rows come from the fused fold plane's
     # stream-{SPAN_GRAM} slice (one tokenize+fold pass shared with
     # the shingle/contamination planes)
-    kdf = gram_fold_stream_df(spark, key, SPAN_GRAM, with_pos=True)
+    kdf = gram_fold_stream_df(spark, SPAN_GRAM, with_pos=True)
     materialize_plane_df(kdf, SPAN_GRAM_VIEW)
     return SPAN_GRAM_VIEW
 
@@ -1314,7 +1311,7 @@ def ensure_dochash_view(spark, key: object = None) -> str:
 MINHASH_PAIRS_VIEW = "__minhash_pairs"
 
 
-@session_plane("minhash_pairs")
+@session_plane("minhash_pairs", deps=("shingle", "minhash_sigs"))
 def ensure_minhash_pairs_view(spark, key: object = None) -> str:
     """Materialize the MinHash-LSH near-dup pair graph (doc_a, doc_b,
     jaccard) once per (session, dataset) — the shared input of

@@ -14,8 +14,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from aws_trusted_advisor_explorer_spark import registry
 
 
-def flagged_resources_table(results: DataFrame, check_id: str,
-                            glue_names: bool = True) -> DataFrame:
+def flagged_resources_table(results: DataFrame, check_id: str) -> DataFrame:
     """P1-P4: flagged resources of one check → the raw detail table.
 
     - P1 status filter: keep ``status ∈ {warning, error}``
@@ -59,14 +58,12 @@ def flagged_resources_table(results: DataFrame, check_id: str,
         cols.append(cell.alias(header))
     cols += [F.col("AccountId"), F.col("AccountName"), F.col("AccountEmail")]
     out = r.select(*cols)
-    if glue_names:
-        # one normalization pass over every column (incl. the identity
-        # prefix/suffix), mirroring the crawler's header handling
-        out = out.toDF(*[registry.glue_normalize(c) for c in out.columns])
-    return out
+    # one normalization pass over every column (incl. the identity
+    # prefix/suffix), mirroring the crawler's header handling
+    return out.toDF(*[registry.glue_normalize(c) for c in out.columns])
 
 
-def summary_table(results: DataFrame, glue_names: bool = True) -> DataFrame:
+def summary_table(results: DataFrame) -> DataFrame:
     """P5+P6: per-(check, account, run) snapshot fact — NOT an aggregate;
     the counters land verbatim from the API (extract-ta-data-lambda.py:133-149).
     Missing ``costOptimizing`` → savings default to 0 (:139-147)."""
@@ -87,9 +84,7 @@ def summary_table(results: DataFrame, glue_names: bool = True) -> DataFrame:
         F.col("AccountId"), F.col("AccountName"), F.col("AccountEmail"),
     ]
     out = results.select(*cols)
-    if glue_names:
-        out = out.toDF(*[registry.glue_normalize(c) for c in out.columns])
-    return out
+    return out.toDF(*[registry.glue_normalize(c) for c in out.columns])
 
 
 # P9 mask pattern — shared with operators/masking.py's SQL-dialect path

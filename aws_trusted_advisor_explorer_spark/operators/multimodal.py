@@ -35,6 +35,8 @@ from pyspark.sql.types import (
 )
 
 from aws_trusted_advisor_explorer_spark.functions.dual import Dialect
+# registers the dedup planes the pair-release plane declares as deps
+from aws_trusted_advisor_explorer_spark.operators import dedup
 from aws_trusted_advisor_explorer_spark.session import (
     materialize_plane_df, session_plane,
 )
@@ -882,23 +884,21 @@ FROM merged m FULL OUTER JOIN full_rc f
   ON f.split = m.split AND f.shard_id = m.shard_id"""
 
 
-def pairs_release_refresh_df(spark, key: object = None,
-                             full_recompute: bool = False):
+def pairs_release_refresh_df(spark, key: object = None):
     """The registered Spark form of :func:`pairs_release_refresh` —
     stored and delta slices each rank with the two-phase count cumsum
     (:func:`_pairs_count_rank_df`; the delta's rank starts at the
     stored per-split pair count, so the snapshot rows are never
     re-read for packing), counters merge additively, both modality
-    checksums by xor. The ``matches_recompute`` audit arm merges the
-    already-computed stored+delta aggregates instead of ranking the
-    full relation a third time (r13, r12 verdict item 7 — same
-    append-only identity as corpusops.docs_release_refresh_df; the
-    DuckDB oracle keeps the independent full pack and
-    ``full_recompute=True`` keeps the old arm for the equality pin)."""
+    checksums by xor. The ``matches_recompute`` audit checks each
+    split against a plain aggregate of the ranged rail
+    (corpusops._split_audit_df, as in
+    corpusops.docs_release_refresh_df); the DuckDB oracle keeps the
+    full pack per shard."""
     from pyspark.sql import functions as F
 
     from aws_trusted_advisor_explorer_spark.operators.corpusops import (
-        RELEASE_REFRESH_DEN, RELEASE_REFRESH_NUM,
+        RELEASE_REFRESH_DEN, RELEASE_REFRESH_NUM, _split_audit_df,
     )
 
     # one shared (split, pair_id) range layout for all rank arms (the
@@ -912,16 +912,13 @@ def pairs_release_refresh_df(spark, key: object = None,
     rel2 = ranged.crossJoin(F.broadcast(cut))
     srel = rel2.filter("pair_id <= cut").drop("cut")
     drel = rel2.filter("pair_id > cut").drop("cut")
-    # lazy checkpoints: the merged manifest and the audit arm each
-    # read both aggregates (shard-count-sized relations)
     sman = _pairs_manifest_agg_df(
-        _pairs_count_rank_df(srel, pre_ranged=True),
-        with_path=False).localCheckpoint(eager=False)
+        _pairs_count_rank_df(srel, pre_ranged=True), with_path=False)
     sbase = srel.groupBy("split").agg(
         F.count(F.lit(1)).cast("bigint").alias("base"))
     dman = _pairs_manifest_agg_df(
         _pairs_count_rank_df(drel, base_counts=sbase, pre_ranged=True),
-        with_path=False).localCheckpoint(eager=False)
+        with_path=False)
     m = (sman.alias("s").join(
         dman.alias("dl"),
         (F.expr("dl.split = s.split")
@@ -929,6 +926,9 @@ def pairs_release_refresh_df(spark, key: object = None,
         .selectExpr(
             "coalesce(s.split, dl.split) AS split",
             "coalesce(s.shard_id, dl.shard_id) AS shard_id",
+            "format_string('release-pairs/%s/shard-%05d.tar', "
+            "coalesce(s.split, dl.split), "
+            "coalesce(s.shard_id, dl.shard_id)) AS path",
             "coalesce(s.n_pairs, 0) + coalesce(dl.n_pairs, 0)"
             " AS n_pairs",
             "coalesce(s.n_caption_tokens, 0) "
@@ -951,62 +951,7 @@ def pairs_release_refresh_df(spark, key: object = None,
             " AS last_pair_id",
             "coalesce(s.n_pairs, 0) AS n_pairs_stored",
             "coalesce(dl.n_pairs, 0) AS n_pairs_delta"))
-    if full_recompute:
-        full = _pairs_manifest_agg_df(
-            _pairs_count_rank_df(ranged, pre_ranged=True),
-            with_path=False)
-    else:
-        # merged-aggregate recompute: the seven audit columns from the
-        # stored+delta aggregates via the merge algebra
-        full = (sman.alias("s").join(
-            dman.alias("dl"),
-            (F.expr("dl.split = s.split")
-             & F.expr("dl.shard_id = s.shard_id")), "full_outer")
-            .selectExpr(
-                "coalesce(s.split, dl.split) AS split",
-                "coalesce(s.shard_id, dl.shard_id) AS shard_id",
-                "coalesce(s.n_pairs, 0) + coalesce(dl.n_pairs, 0)"
-                " AS n_pairs",
-                "coalesce(s.n_caption_tokens, 0) "
-                "+ coalesce(dl.n_caption_tokens, 0)"
-                " AS n_caption_tokens",
-                "coalesce(s.n_caption_bytes, 0) "
-                "+ coalesce(dl.n_caption_bytes, 0) AS n_caption_bytes",
-                "coalesce(s.caption_checksum_xor, 0) "
-                "^ coalesce(dl.caption_checksum_xor, 0)"
-                " AS caption_checksum_xor",
-                "coalesce(s.media_checksum_xor, 0) "
-                "^ coalesce(dl.media_checksum_xor, 0)"
-                " AS media_checksum_xor",
-                "CASE WHEN s.first_pair_id IS NULL"
-                " THEN dl.first_pair_id"
-                " WHEN dl.first_pair_id IS NULL THEN s.first_pair_id"
-                " ELSE least(s.first_pair_id, dl.first_pair_id) END"
-                " AS first_pair_id",
-                "CASE WHEN s.last_pair_id IS NULL THEN dl.last_pair_id"
-                " WHEN dl.last_pair_id IS NULL THEN s.last_pair_id"
-                " ELSE greatest(s.last_pair_id, dl.last_pair_id) END"
-                " AS last_pair_id"))
-    eq = " AND ".join(
-        f"m.{c} <=> f.{c}"
-        for c in ("n_pairs", "n_caption_tokens", "n_caption_bytes",
-                  "caption_checksum_xor", "media_checksum_xor",
-                  "first_pair_id", "last_pair_id"))
-    return (m.alias("m").join(
-        full.alias("f"),
-        (F.expr("f.split = m.split")
-         & F.expr("f.shard_id = m.shard_id")), "full_outer")
-        .selectExpr(
-            "coalesce(m.split, f.split) AS split",
-            "coalesce(m.shard_id, f.shard_id) AS shard_id",
-            "format_string('release-pairs/%s/shard-%05d.tar', "
-            "coalesce(m.split, f.split), "
-            "coalesce(m.shard_id, f.shard_id)) AS path",
-            "m.n_pairs", "m.n_caption_tokens", "m.n_caption_bytes",
-            "m.caption_checksum_xor", "m.media_checksum_xor",
-            "m.first_pair_id", "m.last_pair_id",
-            "m.n_pairs_stored", "m.n_pairs_delta",
-            f"({eq}) AS matches_recompute"))
+    return _split_audit_df(m, ranged, _pairs_manifest_agg_df)
 
 
 def _pairs_release_rel_df(spark, key: object = None,
@@ -1020,7 +965,6 @@ def _pairs_release_rel_df(spark, key: object = None,
     from pyspark.sql import functions as F
 
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-    from aws_trusted_advisor_explorer_spark.operators import dedup
     from aws_trusted_advisor_explorer_spark.operators.corpusops import (
         docs_curation_pipeline,
     )
@@ -1130,7 +1074,8 @@ def _pairs_manifest_agg_df(a, with_path: bool = True):
 PAIRS_RELEASE_REL_VIEW = "__pairs_release_rel_ranged"
 
 
-@session_plane("pairs_release_rel_ranged")
+@session_plane("pairs_release_rel_ranged",
+               deps=("media_phash_sig", "minhash_pairs", "doc_content_hv"))
 def ensure_pairs_release_rel_view(spark, key: object = None) -> str:
     """Materialize the RANGED pair-release rail (the
     :func:`_pairs_release_rel_df` composition range-partitioned by

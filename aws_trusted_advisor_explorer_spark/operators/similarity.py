@@ -1701,7 +1701,7 @@ def pca_dirs_df(spark, base: str | None = None):
 PCA_DIRS_VIEW = "__emb_pca_dirs"
 
 
-@session_plane("emb_pca_dirs")
+@session_plane("emb_pca_dirs", deps=("emb_gram",))
 def ensure_pca_dirs(spark, key: object = None) -> str:
     """Materialize the trained PCA direction table once per (session,
     dataset) — the train-once / serve-many rotation every PCA-prefix

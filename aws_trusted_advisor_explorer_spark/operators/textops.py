@@ -1437,24 +1437,6 @@ FROM tc JOIN documents dd ON dd.doc_id = tc.doc_id
 GROUP BY dd.lang"""
 
 
-BPE_PRICED_VIEW = "__bpe_priced_docs"
-
-
-@session_plane("bpe_priced_docs")
-def ensure_bpe_priced_view(spark, key: object = None) -> str:
-    """Materialize the per-doc BPE pricing relation
-    (text_bpe_tokenize_count_df's output) once per (session, dataset)
-    — the fertility rollup consumes it the way a pipeline prices the
-    corpus once and reports many times; the tokenize_count query
-    itself still computes the apply (it IS the pricing operation).
-    Prices with the merge model trained for the same ``key``."""
-    materialize_plane_df(
-        text_bpe_tokenize_count_df(
-            spark, merges=ensure_bpe_merges(spark, key=key)),
-        BPE_PRICED_VIEW)
-    return BPE_PRICED_VIEW
-
-
 def text_bpe_fertility_by_lang_df(spark,
                                   merges: list[list[tuple[str, str]]] | None = None,
                                   priced_view: str | None = None):
@@ -1709,19 +1691,36 @@ def text_bpe_merge_train_df(spark, base: str | None = None):
 # list, not a view: apply is a separate operator from training (train
 # once, apply many times), so repeated apply calls must not re-run the
 # trainer
-@session_plane("bpe_merges")
+@session_plane("bpe_merges", deps=("bpe_dict",))
 def ensure_bpe_merges(
         spark, key: object = None) -> list[list[tuple[str, str]]]:
     """Train once per (session, dataset), return the ROUND-structured
     merge table [[(left, right), ...], ...] (rounds in order; pairs in
     in-round rank order; within a round symbols are pairwise disjoint,
     so per-round simultaneous apply == flat sequential apply). Trains
-    on the bpe_dict plane of the same ``key``; a cold dictionary build
-    runs inside this one, whose row the timing frames net out of this
-    one's."""
+    on the bpe_dict plane of the same ``key``, its declared dep, which
+    a cold call builds (as its own timing row) before this one."""
     base = ensure_bpe_dict_view(spark, key=key)
     return [[(left, right) for left, right, _ in rnd]
             for rnd in _bpe_train_rounds(spark, base=base)]
+
+
+BPE_PRICED_VIEW = "__bpe_priced_docs"
+
+
+@session_plane("bpe_priced_docs", deps=("bpe_merges",))
+def ensure_bpe_priced_view(spark, key: object = None) -> str:
+    """Materialize the per-doc BPE pricing relation
+    (text_bpe_tokenize_count_df's output) once per (session, dataset)
+    — the fertility rollup consumes it the way a pipeline prices the
+    corpus once and reports many times; the tokenize_count query
+    itself still computes the apply (it IS the pricing operation).
+    Prices with the merge model trained for the same ``key``."""
+    materialize_plane_df(
+        text_bpe_tokenize_count_df(
+            spark, merges=ensure_bpe_merges(spark, key=key)),
+        BPE_PRICED_VIEW)
+    return BPE_PRICED_VIEW
 
 
 def bpe_apply_python(tok: str, flat_merges: list[tuple[str, str]]) -> int:

@@ -265,56 +265,22 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
             if pa.types.is_timestamp(f.type) and f.type.unit == "ns"]
 
 
-# (label, seconds) per session-plane build, appended by
-# timed_plane_build and drained by bench.py (since r10:
+# (label, seconds) per session-plane build, appended by each
+# @session_plane build and drained by bench.py (since r10:
 # first-consumer keys absorbed their family's plane build, so per-key
 # bench numbers measured the plane lottery, not the query — bench.py
 # now subtracts drained build seconds from the triggering query's
 # elapsed and reports them as their own "plane:<label>" rows). Callers
 # never need to touch this; every @session_plane build is captured, and
-# the fixture landings record through record_plane().
+# the fixture landings record through record_plane(). Plane builds
+# never nest (a build's deps are ensured before its timer starts), so
+# each row prices only its own build and the rows sum to the total.
 PLANE_TIMINGS: list[tuple[str, float]] = []
-
-# Per-active-build accumulators of NESTED plane-build seconds (plane
-# builds call each other: prefix -> shingle, minhash_pairs -> shingle,
-# bpe_merges -> bpe_dict). Without this, a cold inner build was priced
-# twice — once as its own row and once inside the outer build's
-# elapsed — so plane rows + query rows overstated the pass total, and
-# bench.py's per-query "elapsed - drained" subtraction clamped to 0
-# (r11 advice finding). Each frame collects the seconds of EVERY row
-# recorded while it is active — charged to all open frames, not just
-# the innermost, because an outer build's wall contains the grandchild
-# builds too and the child's own row is already net of them; each
-# build then subtracts its frame, so every row prices ONLY its own
-# work and the rows sum to the true total.
-_PLANE_BUILD_FRAMES: list[float] = []
 
 
 def record_plane(label: str, seconds: float) -> None:
-    """Record one session-plane build for bench attribution. Inside
-    enclosing timed builds (see :data:`_PLANE_BUILD_FRAMES`) the row's
-    seconds are also charged to every open frame so each encloser nets
-    them out of its own row."""
+    """Record one session-plane build for bench attribution."""
     PLANE_TIMINGS.append((label, seconds))
-    for i in range(len(_PLANE_BUILD_FRAMES)):
-        _PLANE_BUILD_FRAMES[i] += seconds
-
-
-def timed_plane_build(label: str, fn):
-    """Run ``fn()`` as a timed plane build and record a ``(label,
-    seconds)`` row NET of any nested plane builds recorded while it ran
-    (each nested row already priced itself). Returns ``fn()``'s
-    result. The timing discipline of every @session_plane build."""
-    import time
-
-    t0 = time.perf_counter()
-    _PLANE_BUILD_FRAMES.append(0.0)
-    try:
-        out = fn()
-    finally:
-        inner = _PLANE_BUILD_FRAMES.pop()
-    record_plane(label, max(time.perf_counter() - t0 - inner, 0.0))
-    return out
 
 
 def drain_plane_timings() -> list[tuple[str, float]]:
@@ -330,9 +296,9 @@ def drain_plane_timings() -> list[tuple[str, float]]:
 # @session_plane as the operator modules import
 SESSION_PLANES: dict[str, object] = {}
 
-# DataFrames pinned by the plane builds now running, innermost last
-# (plane builds nest like the timing frames above)
-_PLANE_PINS: list[list] = []
+# the one plane build now running: (label, its deps, the DataFrames it
+# pins), or None
+_BUILDING: tuple[str, tuple[str, ...], list] | None = None
 
 
 def _session_planes(spark: SparkSession) -> dict:
@@ -345,44 +311,68 @@ def _session_planes(spark: SparkSession) -> dict:
     return planes
 
 
-def session_plane(label: str):
+def session_plane(label: str, deps: tuple[str, ...] = ()):
     """Turn a plane build ``build(spark, key)`` into its memoized
     ``ensure(spark, key=None)`` function.
 
     ``key`` identifies the dataset (the sf_dir the query entry points
-    pass), the plane's only input: a build that reads another plane
-    ensures it under its own ``key``.
-    An explicit key hits only a plane built under the same key;
-    ``key=None`` ("whatever ``documents`` currently is", for
-    single-fixture sessions) takes whatever plane the session already
-    holds. A miss drops the old entry, then runs the build as a timed
-    plane build under ``label`` (:func:`timed_plane_build`); the
-    entry is stored only when the build returns, so a build that
-    raises leaves none and the next call retries. On a hit the
-    build's return value is returned again. Labels are unique: they
+    pass), the plane's only input. An explicit key hits only a plane
+    built under the same key; ``key=None`` ("whatever ``documents``
+    currently is", for single-fixture sessions) takes whatever plane
+    the session already holds. On a hit the build's return value is
+    returned again, and nothing else runs.
+
+    ``deps`` are the labels of the planes the build reads, each
+    registered before this one (so the plane graph is acyclic). A miss
+    drops the old entry, ensures each dep under the same ``key`` in
+    declared order, and only then runs the build, timed as one
+    ``(label, seconds)`` row of :data:`PLANE_TIMINGS`. Inside the build
+    an ensure of a declared dep is a hit, and an ensure of any other
+    plane raises, so one plane build never runs inside another. The
+    entry is stored only when the build returns, so a build that raises
+    leaves none and the next call retries. Labels are unique: they
     name the plane's timing rows and its :func:`drop_planes` handle."""
     import functools
+    import time
 
     if label in SESSION_PLANES:
         raise ValueError(f"session plane {label!r} is already registered")
+    unknown = [d for d in deps if d not in SESSION_PLANES]
+    if unknown:
+        raise ValueError(f"session plane {label!r} depends on "
+                         f"unregistered planes {unknown}")
+    dep_ensures = [SESSION_PLANES[d] for d in deps]
 
     def wrap(build):
         @functools.wraps(build)
         def ensure(spark, key=None):
+            global _BUILDING
+            if _BUILDING is not None and label not in _BUILDING[1]:
+                raise RuntimeError(
+                    f"plane build {_BUILDING[0]!r} ensured {label!r}, "
+                    f"which is not among its deps {_BUILDING[1]}")
             planes = _session_planes(spark)
             entry = planes.get(label)
             if entry is not None and (key is None or entry[0] == key):
                 return entry[1]
+            if _BUILDING is not None:
+                raise RuntimeError(
+                    f"plane {label!r} would build inside {_BUILDING[0]!r}")
             planes.pop(label, None)
-            _PLANE_PINS.append([])
+            for dep in dep_ensures:
+                dep(spark, key)
+            pins: list = []
+            _BUILDING = (label, deps, pins)
+            t0 = time.perf_counter()
             try:
-                value = timed_plane_build(
-                    label, lambda: build(spark, key))
+                value = build(spark, key)
             finally:
-                pins = _PLANE_PINS.pop()
+                _BUILDING = None
+            record_plane(label, time.perf_counter() - t0)
             planes[label] = (key, value, pins)
             return value
 
+        ensure.deps = deps
         SESSION_PLANES[label] = ensure
         return ensure
 
@@ -405,11 +395,11 @@ def materialize_plane_df(df, view_name: str):
     (``localCheckpoint(eager=True)``: executor-local blocks, lineage
     cut), register it under ``view_name`` and pin it in the plane's
     entry; returns the checkpointed DataFrame."""
-    if not _PLANE_PINS:
+    if _BUILDING is None:
         raise RuntimeError(
             f"materialize_plane_df({view_name!r}) outside a @session_plane "
             f"build: the view would have no plane entry to pin it")
     df = df.localCheckpoint(eager=True)
     df.createOrReplaceTempView(view_name)
-    _PLANE_PINS[-1].append(df)
+    _BUILDING[2].append(df)
     return df

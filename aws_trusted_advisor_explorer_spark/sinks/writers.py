@@ -1,4 +1,4 @@
-"""Partitioned table writers (SURVEY.md §2.2 K1-K5).
+"""Partitioned table writers (SURVEY.md §2.2 K1-K4).
 
 The reference writes CSV to ``<layer>/<table>/<yyyy>/<m>/<d>/``
 (extract-ta-data-lambda.py:110-114, extract-tag-data-lambda.py:141) and
@@ -113,17 +113,6 @@ def write_bucketed_table(df: DataFrame, name: str, bucket_cols: list[str],
     if path:
         w = w.option("path", path)
     w.saveAsTable(name)
-
-
-def quarantine_errors(spark: SparkSession, errors: list[tuple[str, str]],
-                      path: str) -> None:
-    """K5: error-log side channel (refresh-ta-check-lambda.py:54-63 writes
-    AssumeRole failures to Logs/AssumeRoleFailure/<y>/<m>/<d>/). Modeled as
-    a quarantine DataFrame write."""
-    if not errors:
-        return
-    df = spark.createDataFrame(errors, ["key", "error"])
-    df.write.mode("overwrite").json(path)
 
 
 def compact_table(spark: SparkSession, path: str,

@@ -21,47 +21,70 @@ def test_every_query_is_oracled_and_vice_versa():
     assert set(q) == set(o)
 
 
-def _planes_called(fn, ensures, seen):
-    """The ensure functions ``fn`` calls, directly or through functions
-    of its own module."""
-    import inspect
-
-    seen.add(fn)
-    src, mod = inspect.getsource(fn), inspect.getmodule(fn)
-    out = {e for e in ensures if re.search(rf"\b{e.__name__}\(", src)}
-    for name in set(re.findall(r"\b(\w+)\(", src)):
-        f = getattr(mod, name, None)
-        if (inspect.isfunction(f) and f.__module__ == mod.__name__
-                and f not in ensures and f not in seen):
-            out |= _planes_called(f, ensures, seen)
-    return out
-
-
 def test_plane_table_is_the_plane_graph():
-    """queries() declares each key's session planes once: every plane
-    an entry declares is a registered ``ensure_*`` function, every
-    registered plane is read by some key or ensured inside another
-    plane's build, and every ensure takes only ``(spark, key=None)`` —
-    a plane's one input is its dataset key."""
+    """queries() declares each key's session planes once, and each
+    plane declares the planes its build reads as ``deps``: every plane
+    an entry declares is a registered ``ensure_*`` function, every dep
+    is a registered plane, the dep graph is acyclic, every registered
+    plane is read by some key or some plane's build, and every ensure
+    takes only ``(spark, key=None)`` — a plane's one input is its
+    dataset key."""
     import inspect
 
     from aws_trusted_advisor_explorer_spark.session import SESSION_PLANES
 
     declared = {e for run in ent.queries().values()
                 for e in getattr(run, "planes", ())}
-    ensures = set(SESSION_PLANES.values())
-    assert declared <= ensures
-    nested = set()
-    for ensure in ensures:
-        nested |= _planes_called(ensure.__wrapped__, ensures, set()) - {ensure}
-    unread = sorted(label for label, e in SESSION_PLANES.items()
-                    if e not in declared | nested)
+    assert declared <= set(SESSION_PLANES.values())
+    deps = {label: e.deps for label, e in SESSION_PLANES.items()}
+    assert {d for ds in deps.values() for d in ds} <= set(deps)
+    done: set[str] = set()
+    while len(done) < len(deps):
+        ready = {lb for lb, ds in deps.items()
+                 if lb not in done and set(ds) <= done}
+        assert ready, f"dep cycle among {sorted(set(deps) - done)}"
+        done |= ready
+    read = ({lb for lb, e in SESSION_PLANES.items() if e in declared}
+            | {d for ds in deps.values() for d in ds})
+    unread = sorted(set(deps) - read)
     assert not unread, f"planes no key or plane build reads: {unread}"
     for label, ensure in SESSION_PLANES.items():
         for fn in (ensure, ensure.__wrapped__):
             params = inspect.signature(fn, follow_wrapped=False).parameters
             assert list(params) == ["spark", "key"], (label, list(params))
             assert params["key"].default is None, label
+
+
+def test_sql_entries_read_every_declared_plane_argument():
+    """Every plane argument a ``_sql`` entry declares shows up in the
+    SQL its builder renders, so no key ensures a plane it never reads.
+    Each plane argument is rendered as a sentinel view name. The
+    shingle plane's consumers refuse any name but its own, so its
+    argument is rendered as that name and must show up as one of the
+    ``__doc_shingle*`` views: the plane's own, its ride-alongs, or the
+    prefix plane's views layered on it."""
+    import inspect
+
+    from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
+    from aws_trusted_advisor_explorer_spark.operators import dedup
+
+    unread = []
+    for key, run in ent.queries().items():
+        # a _sql entry: _df's run over _sql's lambda that renders build
+        env = inspect.getclosurevars(run).nonlocals
+        if not getattr(env.get("fn"), "__qualname__", "").startswith("_sql."):
+            continue
+        build = inspect.getclosurevars(env["fn"]).nonlocals["build"]
+        args = env["args"]
+        views = {name: dedup.SHINGLE_VIEW if v is dedup.ensure_shingle_view
+                 else f"__sentinel_{name}"
+                 for name, v in args.items() if callable(v)}
+        sql = build(SPARK, **(args | views))
+        for name, view in views.items():
+            stem = "__doc_shingle" if view == dedup.SHINGLE_VIEW else view
+            if not re.search(rf"\b{stem}", sql):
+                unread.append(f"{key}: {name}")
+    assert not unread, f"declared plane arguments the SQL never reads: {unread}"
 
 
 def test_entry_imports_package_from_its_own_checkout(tmp_path):

@@ -2894,7 +2894,10 @@ def test_session_plane_registry_key_rule(spark):
     explicit key hits only its own plane and key=None takes whatever
     plane the session holds; another key rebuilds; every session builds
     its own; a build that raises leaves no entry, so the next call
-    retries; and every plane registers under its timing label."""
+    retries; and every plane registers under its timing label. A
+    plane's declared deps build before it, each as its own row; an
+    undeclared ensure inside a build raises and leaves no entry; and a
+    hit never re-ensures a dep."""
     from aws_trusted_advisor_explorer_spark import session as sess
 
     assert set(sess.SESSION_PLANES) == PLANE_LABELS
@@ -2935,8 +2938,44 @@ def test_session_plane_registry_key_rule(spark):
             sess.drop_planes(ns, "no_such_plane")
         with pytest.raises(RuntimeError, match="outside"):
             sess.materialize_plane_df(ns.range(1), "__registry_test")
+
+        with pytest.raises(ValueError, match="unregistered"):
+            sess.session_plane("registry_top", deps=("no_such_plane",))
+        order = []
+
+        def dep_build(s, key):
+            order.append(("dep", key))
+            sess.materialize_plane_df(s.range(2), "__registry_dep")
+            return "__registry_dep"
+
+        def top_build(s, key):
+            order.append(("top", key))
+            assert dep(s, key) == "__registry_dep"  # a declared dep hits
+            return "__registry_top"
+
+        dep = sess.session_plane("registry_dep")(dep_build)
+        top = sess.session_plane(
+            "registry_top", deps=("registry_dep",))(top_build)
+        bad = sess.session_plane("registry_bad")(
+            lambda s, key: dep(s, key))
+        ds = spark.newSession()
+        sess.drain_plane_timings()
+        assert top(ds, "a") == "__registry_top"
+        assert order == [("dep", "a"), ("top", "a")]
+        assert [lb for lb, _ in sess.drain_plane_timings()] == [
+            "registry_dep", "registry_top"]
+        dep(ds, "b")          # another dataset re-points the dep
+        top(ds, "a")          # a hit: the dep is not re-ensured
+        assert order == [("dep", "a"), ("top", "a"), ("dep", "b")]
+        assert ds._session_planes["registry_dep"][0] == "b"
+        with pytest.raises(RuntimeError, match="not among its deps"):
+            bad(ds, "a")
+        assert "registry_bad" not in ds._session_planes
+        assert ds._session_planes["registry_dep"][0] == "b"
     finally:
-        sess.SESSION_PLANES.pop("registry_test", None)
+        for label in ("registry_test", "registry_dep", "registry_top",
+                      "registry_bad"):
+            sess.SESSION_PLANES.pop(label, None)
 
 
 def test_entry_keys_ensure_planes_under_their_own_key(spark, tmp_path):
@@ -3009,44 +3048,38 @@ def test_landing_cache_keyed_on_source_file(spark, tmp_path, monkeypatch):
     assert land(2600, "new") == ({"new"}, 2600)
 
 
-def test_plane_timing_nested_builds_not_double_counted():
-    """r11 advice (medium): plane builds nest (prefix→shingle,
-    minhash_pairs→shingle, bpe_merges→bpe_dict), and a cold inner
-    build used to be priced twice — once as its own row and once
-    inside the outer build's elapsed — so bench.py's plane rows +
-    query rows overstated the pass total. timed_plane_build must
-    record each row NET of nested rows so the rows telescope to the
-    true wall: outer_row ≈ outer_own_work, not outer_own_work +
-    inner. Three levels deep to pin that rows are charged to EVERY
-    open frame (the outer wall contains the grandchild's work too,
-    and the child's row is already net of it)."""
+def test_plane_timing_dep_builds_priced_once():
+    """A cold plane build ensures its declared deps before its own
+    timer starts, so the dep's row prices the dep and the dependent's
+    row only its own work: no build runs inside another, and no build
+    is counted twice in bench.py's plane rows."""
     import time
+    import types
 
     from aws_trusted_advisor_explorer_spark import session as sess
 
-    sess.drain_plane_timings()
+    def dep_build(s, key):
+        time.sleep(0.40)
+        return "d"
 
-    def grandchild():
-        time.sleep(0.30)
-        return "g"
-
-    def child():
-        out = sess.timed_plane_build("g", grandchild)
-        time.sleep(0.15)
-        return out + "c"
-
-    def outer():
-        out = sess.timed_plane_build("c", child)
+    def top_build(s, key):
         time.sleep(0.05)
-        return out + "o"
+        return dep(s, key) + "t"
 
-    assert sess.timed_plane_build("o", outer) == "gco"
-    rows = dict(sess.drain_plane_timings())
-    assert set(rows) == {"g", "c", "o"}
-    assert 0.28 <= rows["g"] <= 0.42, rows
-    # child's row excludes the grandchild's 0.30s; outer's excludes both
-    assert 0.13 <= rows["c"] <= 0.27, rows
-    assert 0.03 <= rows["o"] <= 0.17, rows
+    try:
+        dep = sess.session_plane("timing_dep")(dep_build)
+        top = sess.session_plane("timing_top", deps=("timing_dep",))(
+            top_build)
+        sess.drain_plane_timings()
+        assert top(types.SimpleNamespace()) == "dt"
+        rows = sess.drain_plane_timings()
+    finally:
+        sess.SESSION_PLANES.pop("timing_dep", None)
+        sess.SESSION_PLANES.pop("timing_top", None)
+    assert [lb for lb, _ in rows] == ["timing_dep", "timing_top"]
+    secs = dict(rows)
+    assert secs["timing_dep"] >= 0.40, rows
+    assert 0.05 <= secs["timing_top"] < 0.35, rows
 
 
 def test_disorder_sharded_empty_shard_gap_and_multishard_jump(spark):

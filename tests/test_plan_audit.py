@@ -536,9 +536,9 @@ def test_r12_operator_plan_shapes(spark):
       range-partitioned checkpoint plane (Scan ExistingRDD), offsets
       return via broadcast, every window partitioned.
     * docs_release_refresh: the id-cut is a scalar broadcast (one
-      BNLJ), the stored/delta/audit packings all ride partitioned
-      windows, and stored-side totals reach the delta packing via
-      broadcast — never a global single-partition sort.
+      BNLJ), the stored/delta packings and the per-split audit all
+      ride partitioned windows, and stored-side totals reach the delta
+      packing via broadcast — never a global single-partition sort.
     """
     import __spark_entry__ as entrymod
 
@@ -561,26 +561,15 @@ def test_r12_operator_plan_shapes(spark):
     assert "BroadcastExchange" in plan
     assert not _unpartitioned_windows(df)
 
-    # r13: the stored/delta pack aggregates ride lazy checkpoints
-    # (both the merged manifest and the merged-aggregate audit arm
-    # read each), so the packing subtrees — including the broadcast
-    # that carries stored totals into the delta pack — no longer
-    # appear in the final query plan; the visible plan is checkpoint
-    # scans + the two merge joins. The broadcast claim is asserted on
-    # the retained full-recompute arm, whose plan still inlines a
-    # packing (the id-cut BNLJ broadcast + window pack).
+    # the stored/delta packs are inlined (the audit reads the ranged
+    # rail, not the pack aggregates), so the refresh plan shows the
+    # ranged-rail checkpoint scan, the id-cut broadcast and the window
+    # packs
     df, plan = shape("docs_release_refresh")
     assert "Scan ExistingRDD" in plan, plan[:2000]
+    assert "BroadcastExchange" in plan or \
+        "BroadcastNestedLoopJoin" in plan, plan[:2000]
     assert not _unpartitioned_windows(df)
-    from aws_trusted_advisor_explorer_spark.operators import (
-        corpusops as _corpusops,
-    )
-
-    fdf = _corpusops.docs_release_refresh_df(spark, full_recompute=True)
-    fplan = fdf._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastExchange" in fplan or \
-        "BroadcastNestedLoopJoin" in fplan, fplan[:2000]
-    assert not _unpartitioned_windows(fdf)
 
 
 def test_training_examples_fused_plan_shape(spark):

@@ -237,23 +237,6 @@ def test_emb_gram_plane_backed_forms_match_standalone(spark):
         assert _rows(new) == _rows(old), name
 
 
-def test_release_refresh_merged_audit_matches_full_recompute(spark):
-    """The r13 merged-aggregate audit arm (stored+delta combined by
-    the count/sum/xor/min/max merge algebra) must leave both refresh
-    reports row-identical to the full-recompute audit arm it
-    replaced."""
-    from aws_trusted_advisor_explorer_spark.operators import (
-        corpusops, multimodal,
-    )
-
-    for name, fn in (("docs", corpusops.docs_release_refresh_df),
-                     ("pairs", multimodal.pairs_release_refresh_df)):
-        new = fn(spark, key=SF_DIR)
-        old = fn(spark, key=SF_DIR, full_recompute=True)
-        assert new.schema.simpleString() == old.schema.simpleString(), name
-        assert _rows(new) == _rows(old), name
-
-
 def test_release_rel_plane_backed_forms_match_fresh_rail(spark):
     """The r13 ranged-rail planes (ensure_release_rel_view /
     ensure_pairs_release_rel_view): the plane-backed manifest and

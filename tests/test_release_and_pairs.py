@@ -285,6 +285,34 @@ def test_pairs_release_refresh_equals_full_recompute(spark):
             assert touched.min() >= stored.max()
 
 
+def test_release_refresh_audit_flags_a_wrong_shard_counter(spark):
+    """The refresh audit checks the merged manifest against the ranged
+    rail itself: one shard counter planted off by one flags every row
+    of its split false and leaves the other splits true, for both the
+    doc and the pair refresh."""
+    from pyspark.sql import functions as F
+
+    for refresh, ensure, agg, counter in (
+            (CO.docs_release_refresh_df, CO.ensure_release_rel_view,
+             CO._manifest_agg_df, "n_tokens"),
+            (M.pairs_release_refresh_df, M.ensure_pairs_release_rel_view,
+             M._pairs_manifest_agg_df, "n_pairs")):
+        m = refresh(spark).drop("matches_recompute")
+        bad = m.orderBy("split", "shard_id").first()
+        hit = ((F.col("split") == bad.split)
+               & (F.col("shard_id") == bad.shard_id))
+        planted = m.withColumn(
+            counter, F.when(hit, F.col(counter) + 1)
+            .otherwise(F.col(counter)))
+        out = CO._split_audit_df(planted, spark.table(ensure(spark)),
+                                 agg).toPandas()
+        assert len(out) == m.count()
+        flags = out.groupby("split")["matches_recompute"]
+        assert len(flags) > 1, counter
+        assert not flags.any()[bad.split], counter
+        assert flags.all().drop(bad.split).all(), counter
+
+
 def test_pairs_release_shards_roundtrip(spark, tmp_path):
     """Write the pair shards, re-read every tar, and reconcile BOTH
     modalities against the manifest: member pairing (one .txt + one
