@@ -416,7 +416,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                                   pairs_view=pairs),
         "dedup_span_exact": _sql(dedup.dedup_span_exact, base=span),
         "docs_span_coverage": _sql(dedup.docs_span_coverage, base=span),
-        "docs_span_scrub": _sql(dedup.docs_span_scrub, base=span),
+        "docs_span_scrub": _sql(dedup.docs_span_scrub, token, base=span),
         "docs_winnow_fingerprints": _sql(dedup.docs_winnow_fingerprints,
                                          base=span),
         "dedup_winnow_overlap": _df(dedup.dedup_winnow_overlap_df, base=span),

@@ -1199,15 +1199,16 @@ def ensure_token_view(spark, key: object = None) -> str:
     return TOKEN_POS_VIEW
 
 
-@session_plane("span", deps=("token", "gram_fold"))
+@session_plane("span", deps=("gram_fold",))
 def ensure_span_views(spark, key: object = None) -> str:
     """Materialize the POSITIONAL gram plane once per (session,
     dataset): ``__doc_span_gram`` (doc_id, pos, hv — the {SPAN_GRAM}-
-    gram combinator over per-token hashes), plus the token plane it
-    layers on (ensure_token_view). The char-fold token hashing is the
-    expensive interpreted prefix shared by dedup_span_exact and
-    docs_span_scrub; building it once is the same build-once-index
-    step as ensure_shingle_view."""
+    gram combinator over per-token hashes). It reads only the gram-fold
+    plane; docs_span_scrub, the one span consumer that also reads the
+    token plane, declares that plane itself. The char-fold token
+    hashing is the expensive interpreted prefix shared by
+    dedup_span_exact and docs_span_scrub; building it once is the same
+    build-once-index step as ensure_shingle_view."""
     # kernel twin of _span_gram_cte (r12): same rows, exact
     # modular arithmetic, no interpreted char fold — the SQL
     # template stays the oracle/test reference, and the kernel is

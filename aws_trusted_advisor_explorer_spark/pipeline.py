@@ -1,21 +1,26 @@
 """End-to-end batch pipeline — the four Step Functions state machines
-collapsed into sequential driver code (SURVEY.md §3).
+collapsed into driver code (SURVEY.md §3).
 
 Reference flow (monthly cron): accounts → per-account check list →
 per-(account,check) extract → raw CSV partitions → crawler → views.
-Spark flow: the Map-state fan-outs become DataFrame task parallelism;
-the crawler disappears (the writer registers tables); views are
-``createOrReplaceTempView`` right after write. The TA refresh polling
-loop (refresh/verify lambdas + Wait states) is control-plane-only and
-stays a driver-side loop in a live deployment; it has no data-plane
+Spark flow: the per-account Map-state fan-out becomes DataFrame task
+parallelism, and the per-check fan-out becomes a driver thread pool
+that submits each table's write and read-back jobs at once; the
+crawler disappears (the writer registers tables); views are
+``createOrReplaceTempView`` once every table has landed. The TA refresh
+polling loop (refresh/verify lambdas + Wait states) is control-plane-only
+and stays a driver-side loop in a live deployment; it has no data-plane
 analog here.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 from aws_trusted_advisor_explorer_spark import registry
 from aws_trusted_advisor_explorer_spark.operators import extract as X
@@ -29,16 +34,20 @@ def run_ingest(spark: SparkSession, check_result_docs, out_dir: str,
     """Entry point A (scheduled TA ingestion): API-shaped docs → raw layer.
 
     Returns the written raw tables re-read from disk and registered in
-    the catalog under their reference names (check_<id>, summary).
-    """
+    the catalog under their reference names (check_<id>, summary), in
+    registry order. Each table is built, written and read back as one
+    unit; the units run at once from a driver pool with one thread per
+    table, so their small jobs overlap instead of queueing behind each
+    other (the reference's Map-state fan-out). The paths are disjoint,
+    so the lake does not depend on the interleaving."""
     results = ta_api.check_results_df(spark, check_result_docs)
     results.cache()  # reused once per check + once for summary
-    out: dict[str, DataFrame] = {}
 
     # ONE batched probe for "which checks have any flagged resource"
     # (extract-ta-data:187-189 writes no file for empty checks) instead
     # of a limit(1).count() job per check id. The collect is per-check
-    # METADATA (a few counter rows), not data.
+    # METADATA (a few counter rows), not data. It also fills the cache
+    # before the pool's units read it.
     nonempty = {
         r["check_id"]
         for r in (results
@@ -47,27 +56,30 @@ def run_ingest(spark: SparkSession, check_result_docs, out_dir: str,
                   .filter(F.col("fr.status").isin("warning", "error"))
                   .groupBy("check_id").count().collect())
     }
+    # a check without Header_/Schema_ config is skipped
+    # (extract-ta-data:197-224), as is one with no flagged resources
+    builds = {f"check_{c.lower()}": functools.partial(X.flagged_resources_table, results, c)
+              for c in registry.SUPPORTED_CHECKS + registry.EXTRACT_ONLY_CHECKS
+              if c in registry.SCHEMAS and c in nonempty}
+    builds["summary"] = functools.partial(X.summary_table, results)
 
-    for check_id in registry.SUPPORTED_CHECKS + registry.EXTRACT_ONLY_CHECKS:
-        try:
-            detail = X.flagged_resources_table(results, check_id)
-        except KeyError:
-            continue  # missing Header_/Schema_ config → skip check
-        if check_id not in nonempty:
-            continue  # no flagged resources → no file (extract-ta-data:187-189)
-        path = os.path.join(out_dir, f"check_{check_id.lower()}")
-        writers.write_raw_table(detail, path, fmt=fmt)
-        df = writers.read_raw_table(spark, path, fmt=fmt)
-        df.createOrReplaceTempView(f"check_{check_id.lower()}")
-        out[f"check_{check_id.lower()}"] = df
+    def land(name: str) -> DataFrame:
+        return writers.land_raw_table(spark, builds[name](),
+                                      os.path.join(out_dir, name), fmt=fmt)
 
-    summary = X.summary_table(results)
-    path = os.path.join(out_dir, "summary")
-    writers.write_raw_table(summary, path, fmt=fmt)
-    df = writers.read_raw_table(spark, path, fmt=fmt)
-    df.createOrReplaceTempView("summary")
-    out["summary"] = df
-    results.unpersist()
+    # the session form copies the caller's job group and tags into each
+    # pool thread, so the units' jobs stay attributable and cancellable.
+    # With pinned threads off (PYSPARK_PIN_THREAD=false) it returns the
+    # session itself: there are no per-thread properties to copy then
+    wrap = inheritable_thread_target(spark)
+    target = land if wrap is spark else wrap(land)
+    try:
+        with ThreadPoolExecutor(max_workers=len(builds)) as pool:
+            out = dict(zip(builds, pool.map(target, builds)))
+    finally:
+        results.unpersist()
+    for name, df in out.items():
+        df.createOrReplaceTempView(name)
     return out
 
 
@@ -86,9 +98,7 @@ def run_tag_ingest(spark: SparkSession, long_tags: DataFrame,
     # dataset saw columns no view could resolve (review finding — the
     # two entry points modeled the crawler inconsistently)
     wide = wide.toDF(*[c.lower() for c in wide.columns])
-    path = os.path.join(out_dir, "tags")
-    writers.write_raw_table(wide, path, fmt=fmt)
-    df = writers.read_raw_table(spark, path, fmt=fmt)
+    df = writers.land_raw_table(spark, wide, os.path.join(out_dir, "tags"), fmt=fmt)
     df.createOrReplaceTempView("tags")
     return df
 

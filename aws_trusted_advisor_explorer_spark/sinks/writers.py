@@ -17,6 +17,7 @@ a reversible rename policy applied on write and undone on read.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructField, StructType
 
 _SAFE = [(" ", "_sp_"), ("/", "_sl_"), ("-", "_dash_")]
 
@@ -42,9 +43,11 @@ def with_run_partitions(df: DataFrame, date_col: str = "datetime") -> DataFrame:
 
 
 def write_raw_table(df: DataFrame, path: str, fmt: str = "parquet",
-                    partitioned: bool = True, mode: str = "overwrite") -> None:
+                    partitioned: bool = True, mode: str = "overwrite") -> StructType:
     """K1+K3: land a raw table date-partitioned. Empty input writes no data
-    files (the reference's len(rows)>1 guard is native here).
+    files (the reference's len(rows)>1 guard is native here). Returns the
+    schema of the frame written (renamed columns and partition columns
+    included).
 
     ``mode="append"`` is the month-over-month accumulation path (the
     reference's monthly cron lands a NEW date prefix each run and never
@@ -66,6 +69,7 @@ def write_raw_table(df: DataFrame, path: str, fmt: str = "parquet",
         w.csv(path)
     else:
         raise ValueError(f"unsupported format {fmt}")
+    return out.schema
 
 
 def read_raw_table(spark: SparkSession, path: str, fmt: str = "parquet",
@@ -91,9 +95,27 @@ def read_raw_table(spark: SparkSession, path: str, fmt: str = "parquet",
         df = spark.read.option("mergeSchema", merge_schema).orc(path)
     else:
         df = spark.read.option("header", True).csv(path)
+    return _raw_columns(df, keep_partitions)
+
+
+def _raw_columns(df: DataFrame, keep_partitions: bool = False) -> DataFrame:
     if not keep_partitions:
         df = df.drop("year", "month", "day")
     return df.toDF(*[parquet_unsafe(c) for c in df.columns])
+
+
+def land_raw_table(spark: SparkSession, df: DataFrame, path: str,
+                   fmt: str = "parquet") -> DataFrame:
+    """Write ``df`` with :func:`write_raw_table` and read it back as
+    :func:`read_raw_table` does. Parquet and ORC are read with the
+    schema just written (every field nullable, as a file read makes
+    it), so no footer-inference job runs; CSV keeps the header read,
+    since an explicit schema would change its all-string column types."""
+    written = write_raw_table(df, path, fmt=fmt)
+    if fmt == "csv":
+        return read_raw_table(spark, path, fmt=fmt)
+    schema = StructType([StructField(f.name, f.dataType) for f in written])
+    return _raw_columns(spark.read.schema(schema).format(fmt).load(path))
 
 
 def write_bucketed_table(df: DataFrame, name: str, bucket_cols: list[str],

@@ -87,13 +87,17 @@ def test_schema_evolution_across_months(spark, tmp_path):
 
 def test_orc_round_trip(spark, tmp_path):
     """ORC is the second columnar interchange format (same safe-rename
-    and partition layout policy as parquet)."""
+    and partition layout policy as parquet). Its read-back with the
+    written schema equals the inferring read."""
     df = spark.table("documents").limit(40).select(
         "doc_id",
         F.lit("2025-06-01 09:00:00").alias("datetime"),
         F.col("text").alias("doc text"))
-    writers.write_raw_table(df, str(tmp_path / "t_orc"), fmt="orc")
+    landed = writers.land_raw_table(spark, df, str(tmp_path / "t_orc"), fmt="orc")
     back = writers.read_raw_table(spark, str(tmp_path / "t_orc"), fmt="orc")
+    assert ([(f.name, f.dataType) for f in landed.schema]
+            == [(f.name, f.dataType) for f in back.schema])
+    assert sorted(map(tuple, landed.collect())) == sorted(map(tuple, back.collect()))
     assert set(back.columns) == {"doc_id", "datetime", "doc text"}
     assert back.count() == 40
     assert ({r.doc_id for r in back.collect()} ==

@@ -87,6 +87,26 @@ def test_sql_entries_read_every_declared_plane_argument():
     assert not unread, f"declared plane arguments the SQL never reads: {unread}"
 
 
+def test_driver_threads_inherit_the_job_group():
+    """Every package module that starts driver threads (a
+    ``ThreadPoolExecutor`` or ``threading.Thread``) wraps their targets
+    in ``inheritable_thread_target``. A bare pool thread runs its jobs
+    outside the caller's job group, so a traced key would miss them
+    and a group cancel would not reach them."""
+    pkg = os.path.join(ROOT, "aws_trusted_advisor_explorer_spark")
+    starts = re.compile(r"\bThreadPoolExecutor\(|\bThread\(")
+    bare = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        with open(path) as f:
+            src = f.read()
+        # at least one wrapped target per pool or thread the module makes
+        if len(starts.findall(src)) > src.count("inheritable_thread_target("):
+            bare.append(os.path.relpath(path, ROOT))
+    assert not bare, f"driver threads without inheritable_thread_target: {bare}"
+    with open(os.path.join(pkg, "pipeline.py")) as f:
+        assert starts.search(f.read()), "the scan no longer sees the ingest pool"
+
+
 def test_entry_imports_package_from_its_own_checkout(tmp_path):
     """``__spark_entry__`` imported from a copy of the checkout resolves
     the package inside that copy, ahead of its fixed fallback path."""

@@ -2410,11 +2410,32 @@ def test_span_view_backed_matches_inline(spark):
     self-contained forms of the span report and scrub produce
     identical rows."""
     base = dedup.ensure_span_views(spark)
+    dedup.ensure_token_view(spark)  # the scrub's backed form reads it
     for builder in (dedup.dedup_span_exact, dedup.docs_span_scrub):
         inline = {tuple(r) for r in spark.sql(builder(SPARK)).collect()}
         backed = {tuple(r)
                   for r in spark.sql(builder(SPARK, base=base)).collect()}
         assert inline == backed, builder.__name__
+
+
+def test_span_plane_builds_without_the_token_plane(spark):
+    """The span build reads only the gram-fold plane: under a fresh key
+    it builds gram_fold and span and no token plane. docs_span_scrub,
+    the span consumer that reads the token plane by name, declares the
+    token plane itself, so its key still ensures it."""
+    import __spark_entry__ as ent
+
+    from aws_trusted_advisor_explorer_spark import session as sess
+    from tests.conftest import SF_DIR
+
+    sess.drain_plane_timings()
+    dedup.ensure_span_views(spark, key="span-deps-test")
+    assert [lb for lb, _ in sess.drain_plane_timings()] == ["gram_fold", "span"]
+    run = ent.queries()["docs_span_scrub"]
+    assert dedup.ensure_token_view in run.planes
+    sess.drop_planes(spark, "token")
+    run(spark, SF_DIR)
+    assert "token" in [lb for lb, _ in sess.drain_plane_timings()]
 
 
 def test_nb_quality_weights_match_pandas_replay(spark):

@@ -4,8 +4,11 @@ matches DuckDB over the same written files."""
 
 from __future__ import annotations
 
+import pytest
+
 from aws_trusted_advisor_explorer_spark import pipeline, registry
 from aws_trusted_advisor_explorer_spark.operators import tags as TG
+from aws_trusted_advisor_explorer_spark.sinks import writers
 from tests.conftest import assert_matches_oracle
 
 
@@ -64,7 +67,7 @@ def test_ingest_to_views(spark, ddb, tmp_path):
     assert_matches_oracle(vdf, ddb, oracle)
 
 
-def test_tag_pivot_pipeline(spark, tmp_path):
+def _long_tags(spark):
     rows = [
         ("08-01-2025", "2025-08-01 09:00:00", "610000000001", "Account 1",
          "a1@example.com", "us-east-1", "ec2:instance",
@@ -82,9 +85,12 @@ def test_tag_pivot_pipeline(spark, tmp_path):
     cols = ["Date", "DateTime", "AccountId", "AccountName", "AccountEmail",
             "RegionName", "ResourceType", "ResourceArn", "key", "value"]
     long_tags = spark.createDataFrame(rows, cols)
-    long_tags = long_tags.withColumn(
+    return long_tags.withColumn(
         "ResourceId", TG.arn_to_resource_id(long_tags["ResourceArn"]))
 
+
+def test_tag_pivot_pipeline(spark, tmp_path):
+    long_tags = _long_tags(spark)
     wide = pipeline.run_tag_ingest(spark, long_tags, ["env", "costcenter"],
                                    str(tmp_path / "lake"))
     got = {r["resourceid"]: r for r in wide.collect()}
@@ -206,3 +212,72 @@ def test_s6_fetch_to_ec2_view_end_to_end(spark, tmp_path):
     assert rows["i-0003"]["costcenter"] == "cc-9"
     # retry really happened: first two transport calls raised
     assert transport.fail_first == 2
+
+
+def _two_check_docs():
+    """Docs of two checks (EIP, EC2) over two runs: three tables."""
+    meta = [["us-east-1a", f"i-000{i}", f"web-{i}", "t3.large", "$1,234.50"]
+            + [f"{d}.0%" for d in range(1, 15)] + ["2.3%", "4.52%", "14"]
+            for i in range(1, 4)]
+    return ([_eip_doc(i, "2025-08-01 09:00:00") for i in range(1, 3)]
+            + [_eip_doc(3, "2025-07-01 09:00:00"),
+               _ec2_doc("08-01-2025", "2025-08-01 09:00:00", meta)])
+
+
+def test_ingest_read_back_matches_the_inferred_schema(spark, tmp_path):
+    """Every table run_ingest and run_tag_ingest return, read back with
+    the schema just written, has the column names and types the
+    footer-inferring read of the same path finds."""
+    lake = tmp_path / "lake"
+    out = pipeline.run_ingest(spark, _two_check_docs(), str(lake))
+    assert list(out) == ["check_qch7dwoux1", "check_z4aubrnsmz", "summary"]
+    out["tags"] = pipeline.run_tag_ingest(spark, _long_tags(spark),
+                                          ["env", "costcenter"], str(lake))
+    for name, df in out.items():
+        inferred = writers.read_raw_table(spark, str(lake / name))
+        assert ([(f.name, f.dataType) for f in df.schema]
+                == [(f.name, f.dataType) for f in inferred.schema]), name
+
+
+def test_ingest_jobs_keep_the_callers_job_group(spark, tmp_path):
+    """The pooled table units run their jobs under the caller's job
+    group: the group holds at least one job per written table, and the
+    call starts no job outside it (so a traced key's counts and a
+    group cancel reach every unit)."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    ungrouped = set(st.getJobIdsForGroup(None))
+    sc.setJobGroup("ingest-group-test", "run_ingest")
+    try:
+        out = pipeline.run_ingest(spark, _two_check_docs(), str(tmp_path / "lake"))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(st.getJobIdsForGroup("ingest-group-test")) >= len(out) == 3
+    assert set(st.getJobIdsForGroup(None)) <= ungrouped
+
+
+def test_ingest_raises_a_failed_table_write(spark, tmp_path, monkeypatch):
+    """A unit that fails in the pool fails run_ingest with its own
+    error, and no table of that run is registered."""
+    real = writers.write_raw_table
+
+    def write(df, path, **kw):
+        if path.endswith("check_qch7dwoux1"):
+            raise RuntimeError("planted write failure")
+        return real(df, path, **kw)
+
+    monkeypatch.setattr(writers, "write_raw_table", write)
+    spark.catalog.dropTempView("check_qch7dwoux1")
+    with pytest.raises(RuntimeError, match="planted write failure"):
+        pipeline.run_ingest(spark, _two_check_docs(), str(tmp_path / "lake"))
+    assert not spark.catalog.tableExists("check_qch7dwoux1")
+
+
+def test_ingest_runs_with_pinned_threads_off(spark, tmp_path, monkeypatch):
+    """With pinned threads off, PySpark's ``inheritable_thread_target``
+    returns the session it was given instead of a wrapper; run_ingest
+    then runs its units unwrapped rather than calling the session."""
+    monkeypatch.setattr(pipeline, "inheritable_thread_target", lambda f: f)
+    out = pipeline.run_ingest(spark, _two_check_docs(), str(tmp_path / "lake"))
+    assert list(out) == ["check_qch7dwoux1", "check_z4aubrnsmz", "summary"]
+    assert out["check_z4aubrnsmz"].count() == 9
