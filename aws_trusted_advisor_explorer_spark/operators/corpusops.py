@@ -777,7 +777,8 @@ def docs_embedding_integrity(d: Dialect) -> str:
     Scale posture: two FULL-relation counts plus one equi-join count —
     at 100 TB this is the same two-sided audit as a reconciliation
     query; the join shuffles on the shared id once (or is co-located
-    if both tables are bucketed on id — sinks/writers.py)."""
+    if a deployment buckets both tables on id with Spark's
+    ``bucketBy``)."""
     return """WITH m AS (
   SELECT d.doc_id AS did, e.vec_id AS vid
   FROM documents d FULL OUTER JOIN embeddings e ON e.vec_id = d.doc_id
@@ -1081,8 +1082,8 @@ def docs_merge_cdc(d: Dialect) -> str:
     full-outer join can never fan out.
 
     Scale posture (100 TB): ONE equi-join on doc_id — with the
-    snapshot bucketed/partitioned by id (sinks/writers.
-    write_bucketed_table) the merge is shuffle-free on the big side,
+    snapshot bucketed by id (Spark's ``bucketBy``, where a deployment
+    needs it) the merge is shuffle-free on the big side,
     and a daily-sized change feed broadcasts; this is exactly how
     merge-on-read engines schedule MERGE. No text ever shuffles on
     the snapshot side beyond its own co-located bucket files."""
@@ -1259,10 +1260,9 @@ SELECT split, shard_id,
 FROM sh GROUP BY split, shard_id"""
 
 
-def _release_rel_df(spark, key: object = None,
-                    with_text: bool = False):
+def _release_rel_df(spark, key: object = None):
     """The UNPACKED released-doc relation (doc_id, split, n_toks,
-    n_bytes, h [, text]) — every gate rail composed, before shard
+    n_bytes, h) — every gate rail composed, before shard
     assignment (:func:`_split_pack_df` adds prior/shard_id; the
     incremental refresh packs stored and delta slices separately):
 
@@ -1274,9 +1274,8 @@ def _release_rel_df(spark, key: object = None,
       contamination plane (broadcast anti-join);
     - content hash from the session dochash plane (no re-fold).
 
-    Scale posture (100 TB): every join is id-keyed and skinny (text
-    rides along only for the shard writer, and never shuffles wider
-    than its own range partition)."""
+    Scale posture (100 TB): every join is id-keyed and skinny (no
+    text column rides along)."""
     from pyspark.sql import functions as F
 
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
@@ -1291,13 +1290,10 @@ def _release_rel_df(spark, key: object = None,
         SPARK, base=ensure_contam_view(spark, key=key))).select("doc_id")
     hv = (spark.table(dedup.ensure_dochash_view(spark, key=key))
           .select("doc_id", F.col("hv").alias("h")))
-    cols = ["doc_id",
-            f"cast({SPARK.arr_len(SPARK.tokens('text'))} as bigint)"
-            " AS n_toks",
-            "cast(octet_length(text) as bigint) AS n_bytes"]
-    if with_text:
-        cols.append("text")
-    tok = spark.table("documents").selectExpr(*cols)
+    tok = spark.table("documents").selectExpr(
+        "doc_id",
+        f"cast({SPARK.arr_len(SPARK.tokens('text'))} as bigint) AS n_toks",
+        "cast(octet_length(text) as bigint) AS n_bytes")
     rel = (pipe.join(nd, "doc_id").join(ship, "doc_id")
            .join(tok, "doc_id").join(hv, "doc_id"))
     return rel
@@ -1318,9 +1314,7 @@ def ensure_release_rel_view(spark, key: object = None) -> str:
     run. Both consumers pack filtered slices of this one pid-monotone
     layout (`pre_ranged=True` — the r12 shared-layout rule: priors
     depend only on pid monotonicity within each split, which the
-    frozen column preserves under any materialization). The
-    text-carrying writer path keeps its own composition (text never
-    enters the plane)."""
+    frozen column preserves under any materialization)."""
     from pyspark.sql import functions as F
 
     from aws_trusted_advisor_explorer_spark.session import (
@@ -1332,21 +1326,6 @@ def ensure_release_rel_view(spark, key: object = None) -> str:
         rel.repartitionByRange(range_partitions_for(rel), "split", "doc_id")
         .withColumn("pid", F.spark_partition_id()), RELEASE_REL_VIEW)
     return RELEASE_REL_VIEW
-
-
-def _release_assignments_df(spark, key: object = None,
-                            with_text: bool = False):
-    """Doc-level release ASSIGNMENT relation (doc_id, split, shard_id,
-    n_toks, n_bytes, h [, text]) behind both the manifest aggregate
-    and the shard writer: the rail composition
-    (:func:`_release_rel_df`) packed per split
-    (:func:`_split_pack_df`). The text-free form reads the session
-    ranged-rail plane (r13)."""
-    if not with_text:
-        ranged = spark.table(ensure_release_rel_view(spark, key=key))
-        return _split_pack_df(ranged, pre_ranged=True)
-    return _split_pack_df(_release_rel_df(spark, key=key,
-                                          with_text=with_text))
 
 
 def _split_pack_df(rel, base_offsets=None, pre_ranged: bool = False):
@@ -1432,8 +1411,10 @@ def docs_release_manifest_df(spark, key: object = None):
     shard) with the shard path, exact doc/token/byte counts, the
     order-independent bit_xor content checksum, and the id range.
     ONE map-side-combining aggregate over the doc-level assignment
-    relation."""
-    return _manifest_agg_df(_release_assignments_df(spark, key=key))
+    relation: the session ranged rail packed per split
+    (:func:`_split_pack_df`)."""
+    ranged = spark.table(ensure_release_rel_view(spark, key=key))
+    return _manifest_agg_df(_split_pack_df(ranged, pre_ranged=True))
 
 
 # the synthetic "nightly batch": released docs above the 90th
@@ -1676,63 +1657,6 @@ def docs_release_refresh_df(spark, key: object = None):
             "coalesce(s.n_docs, 0) AS n_docs_stored",
             "coalesce(dl.n_docs, 0) AS n_docs_delta"))
     return _split_audit_df(m, ranged, _manifest_agg_df)
-
-
-def docs_release_write_shards(spark, out_dir: str, key: object = None):
-    """Materialize the release as WebDataset text shards — one tar per
-    manifest row (``release/<split>/shard-<id>.tar``, members
-    ``<doc_id>.txt`` in id order, mtime pinned to 0 for byte-stable
-    output), written via ``applyInPandas`` over (split, shard_id)
-    groups so shard production parallelism == task parallelism and no
-    payload passes through the driver (the sinks/shards.py staging
-    rule: attempt-unique temp name + atomic rename). Returns the
-    written rows for reconciliation against the manifest.
-
-    Posture note (the sink-family rule): ``out_dir`` must be a path
-    every executor can reach — local mode or a shared filesystem
-    (NFS/FUSE-mounted object store). On a multi-node cluster with
-    node-local disks the tars would land per-executor; the production
-    swap is the same writer with ``out_dir`` on the shared store, or
-    a cloud-native tar upload inside ``write_group``."""
-    import io
-    import os
-    import tarfile
-    import uuid
-
-    import pandas as pd
-
-    out_schema = ("split string, shard_id long, path string, "
-                  "n_docs long, n_bytes long")
-
-    def write_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        split = pdf["split"].iloc[0]
-        sid = int(pdf["shard_id"].iloc[0])
-        rel_path = f"release/{split}/shard-{sid:05d}.tar"
-        full = os.path.join(out_dir, rel_path)
-        os.makedirs(os.path.dirname(full), exist_ok=True)
-        pdf = pdf.sort_values("doc_id")
-        # attempt-unique temp name: pid alone is only process-unique,
-        # and Spark reuses worker processes across task attempts — a
-        # retried attempt in the same worker would collide with its
-        # own zombie file (r11 advice)
-        tmp = f"{full}.inprogress-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        n_bytes = 0
-        with tarfile.open(tmp, "w") as tf:
-            for did, txt in zip(pdf["doc_id"], pdf["text"]):
-                data = ("" if txt is None else txt).encode("utf-8")
-                info = tarfile.TarInfo(name=f"{int(did):012d}.txt")
-                info.size = len(data)
-                info.mtime = 0
-                tf.addfile(info, io.BytesIO(data))
-                n_bytes += len(data)
-        os.replace(tmp, full)
-        return pd.DataFrame([{"split": split, "shard_id": sid,
-                              "path": rel_path, "n_docs": len(pdf),
-                              "n_bytes": n_bytes}])
-
-    a = _release_assignments_df(spark, key=key, with_text=True)
-    return (a.groupBy("split", "shard_id")
-            .applyInPandas(write_group, out_schema))
 
 
 BUILDERS = {

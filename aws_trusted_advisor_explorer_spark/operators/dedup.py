@@ -135,9 +135,11 @@ def make_gram_hv_kernel(k: int, with_pos: bool = True):
     combined over each k-token window with the SQL's exact rule
     ``h -> (h*SHINGLE_MULT + ht) mod P`` from HASH_INIT. Docs with
     fewer than k tokens emit nothing (the SQL's empty-array guard).
-    Instantiated for the span plane (k=SPAN_GRAM, with pos) and the
-    contamination plane (k=CONTAM_NGRAM, hv only); bit-equality pinned
-    by test_span_kernel_matches_sql / test_contam_plane_matches_sql."""
+    The fused gram-fold plane computes these streams; this
+    per-width form is the reference its streams are pinned against
+    (test_gram_fold_kernel_matches_per_plane_kernels), and it is
+    pinned to the SQL by test_span_kernel_matches_sql /
+    test_contam_plane_matches_sql."""
     if k < 2:
         # the window-start slice tok_doc[:-(k-1)] is the EMPTY slice at
         # k == 1 (r12 advice) — every window would be silently dropped
@@ -562,29 +564,6 @@ def _pair_array_verify_df(spark, pairs, base: str):
             .select("ia", "ib", "jaccard"))
 
 
-def dedup_minhash_lsh_df(spark, base: str):
-    """Array-verify form of :func:`dedup_minhash_lsh`: identical
-    candidate SQL (``cand_only=True``), exact-Jaccard verify via
-    :func:`_pair_array_verify_df`. Rows identical to the SQL form
-    (same integer counts, same single division) — pinned by
-    test_minhash_lsh_df_matches_sql. NOT wired as the default: at the
-    default banding the candidate set is small enough that the SQL
-    verify join adds only ~0.2 s (cand_only 0.58 s vs full 0.78 s at
-    sf0.1) while this form's arrays aggregate + joins cost about the
-    same — measured a wash (guide §1.3: stop when within a small
-    factor). The win case is a LARGE pair set (band tuning's 134 k
-    union: 1.6 s -> 0.3 s), which is where the helper is wired."""
-    from pyspark.sql import functions as F
-
-    from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-
-    cands = spark.sql(dedup_minhash_lsh(SPARK, base, cand_only=True))
-    return (_pair_array_verify_df(spark, cands, base)
-            .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-            .select(F.col("ia").alias("doc_a"),
-                    F.col("ib").alias("doc_b"), "jaccard"))
-
-
 def dedup_exact_groups(d: Dialect) -> str:
     """Exact duplicate groups, keyed on the 128-bit content hash so the
     exchange carries a 32-char key instead of full document text (at
@@ -649,8 +628,7 @@ def dedup_minhash_lsh(d: Dialect, base: str | None = None,
                       n_perm: int = N_PERM,
                       n_bands: int = N_BANDS,
                       with_cand_count: bool = False,
-                      mh_view: str | None = None,
-                      cand_only: bool = False) -> str:
+                      mh_view: str | None = None) -> str:
     """MinHash(``n_perm`` perms) -> ``n_bands``-band LSH candidate
     join -> exact Jaccard verify on candidates only. Output:
     (doc_a, doc_b, jaccard).
@@ -687,12 +665,8 @@ def dedup_minhash_lsh(d: Dialect, base: str | None = None,
     signature relation from a pre-materialized view instead of
     re-aggregating it — the band-tuning twin computes signatures ONCE
     for its whole config ladder (bandings differ, signatures don't).
-    ``cand_only=True`` stops the pipeline at the candidate relation
-    (``SELECT ia, ib FROM cand``, no Jaccard verify) — the band-tuning
-    twin verifies the UNION of the ladder's candidate sets once
-    instead of once per config (r12 optimization). Defaults leave the
-    SQL byte-identical to the committed form every pairs-plane
-    consumer hashes against.
+    Defaults leave the SQL byte-identical to the committed form every
+    pairs-plane consumer hashes against.
     """
     if n_perm % n_bands != 0:
         raise ValueError(
@@ -721,7 +695,7 @@ def dedup_minhash_lsh(d: Dialect, base: str | None = None,
         cc_out = ""
     mh_body = (f"SELECT * FROM {mh_view}" if mh_view is not None
                else f"SELECT doc_id,\n    {mins}\n  FROM sh GROUP BY doc_id")
-    prefix = f"""{_shingle_cte(d, base)},
+    return f"""{_shingle_cte(d, base)},
 mh AS (
   {mh_body}
 ),
@@ -744,11 +718,7 @@ cand AS (
     JOIN bs ON bs.band_sig = x.band_sig AND bs.bn > {BAND_CAP}
     WHERE x.doc_id <> bs.hub
   ) u
-){cand_tail}"""
-    if cand_only:
-        cols = "ia, ib, n_cand" if with_cand_count else "ia, ib"
-        return f"{prefix}\nSELECT {cols} FROM {cand_src}"
-    return f"""{prefix},
+){cand_tail},
 common AS (
   SELECT c.ia, c.ib, count(*) AS n_common, max(a.n) AS na, max(b.n) AS nb{cc_common}
   FROM {cand_src} c
@@ -1069,10 +1039,6 @@ FROM k GROUP BY norm_key HAVING count(*) > 1"""
 
 SPAN_GRAM = 8          # token width of the positional gram window
 SPAN_DF_CAP = 1000     # drop grams duplicated across more docs than this
-
-# the span plane's kernel instance (make_gram_hv_kernel is defined
-# above SPAN_GRAM's constant block, so the instance binds here)
-_span_gram_kernel = make_gram_hv_kernel(SPAN_GRAM)
 
 if SPAN_GRAM not in GRAM_FOLD_COMBI_KS:
     # the span plane reads its grams from the fused fold plane's

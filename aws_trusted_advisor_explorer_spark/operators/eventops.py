@@ -214,34 +214,6 @@ FROM e
 GROUP BY {sets}"""
 
 
-def events_value_quantiles_approx_df(spark):
-    """The 100 TB form of events_value_quantiles: mergeable sketches
-    (approx_percentile / HLL approx_count_distinct) — one pass, no
-    per-key sort, constant memory. Not oracle-gated (sketch internals
-    are engine-specific); tests bound its error against the exact
-    rank-selection query instead."""
-    from pyspark.sql import functions as F
-
-    return (spark.table("events")
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"),
-                 F.approx_count_distinct("user_id").alias("n_users_approx"),
-                 F.percentile_approx("value", 0.5).alias("p50_value"),
-                 F.percentile_approx("value", 0.95).alias("p95_value")))
-
-
-def events_heavy_hitters_df(spark, support: float = 0.01):
-    """Heavy-hitters sketch (DataFrame.freqItems — the Karp/
-    Papadimitriou/Shimizu one-pass frequent-items algorithm): every
-    user with frequency > support is GUARANTEED present (no false
-    negatives; false positives possible — the standard sketch trade).
-    Completes the mergeable-sketch family next to the quantile
-    (percentile_approx) and distinct-count (HLL) twins; the exact
-    oracle is events_key_skew_audit's top-N. One pass, constant
-    memory ~1/support counters per partition, merged tree-wise."""
-    return spark.table("events").freqItems(["user_id"], support)
-
-
 def events_daily_active(d: Dialect) -> str:
     """Daily active users (exact COUNT DISTINCT) + event volume per
     day — the base engagement series every event pipeline publishes.
@@ -249,27 +221,13 @@ def events_daily_active(d: Dialect) -> str:
     Scale posture (100 TB): Spark expands count(DISTINCT user_id) into
     a two-stage aggregate (partial distinct on (day, user), then the
     count) — map-side combine on both stages, one shuffle keyed on
-    day+user then day. For the sketch form that merges across
-    days/streams, see events_daily_active_approx_df (HLL)."""
+    day+user then day. Where per-day counts must merge across
+    streams, Spark's ``approx_count_distinct`` (HLL) is the sketch
+    form."""
     return """SELECT date_trunc('day', ts) AS day,
   cast(count(DISTINCT user_id) as bigint) AS dau,
   cast(count(*) as bigint) AS n_events
 FROM events GROUP BY date_trunc('day', ts)"""
-
-
-def events_daily_active_approx_df(spark):
-    """HLL twin of events_daily_active: approx_count_distinct is a
-    mergeable sketch — constant memory per day regardless of user
-    cardinality, and partial sketches merge across executors without
-    a distinct shuffle. Not
-    oracle-gated (sketch internals are engine-specific); tests bound
-    its error against the exact query."""
-    from pyspark.sql import functions as F
-
-    return (spark.table("events")
-            .groupBy(F.date_trunc("day", "ts").alias("day"))
-            .agg(F.approx_count_distinct("user_id").alias("dau_approx"),
-                 F.count(F.lit(1)).alias("n_events")))
 
 
 def events_props_json(d: Dialect) -> str:

@@ -11,13 +11,8 @@ keeps every stat oracle-checkable). Two paths:
   batches of (doc_id, payload) -> numpy byte statistics. This is the
   real plumbing a decode/resize/frame-sample stage runs on; the DuckDB
   oracle recomputes the same stats from the character codes, proving
-  the UDF path end-to-end.
-- decode_image / decode_audio / sample_video_frames — REAL decoders
-  with tiered dependencies (round 3): PIL/soundfile/av when importable,
-  else pure-stdlib header parses (PNG/GIF/BMP, RIFF/WAV); only video
-  keeps a NotImplementedError branch without a library (no stdlib
-  demuxer). Damaged assets raise ValueError and the mapInPandas stage
-  quarantines them as null-meta rows instead of failing the task.
+  the UDF path end-to-end. A deployment with real media swaps a
+  library decoder (PIL, soundfile, PyAV) into the same stage.
 
 Scale posture: payloads stay in executors (never collected); at 100 TB
 the media table is read via ``spark.read.format("binaryFile")`` or
@@ -31,7 +26,7 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
-    BinaryType, DoubleType, LongType, StringType, StructField, StructType,
+    DoubleType, LongType, StructField, StructType,
 )
 
 from aws_trusted_advisor_explorer_spark.functions.dual import Dialect
@@ -43,13 +38,6 @@ from aws_trusted_advisor_explorer_spark.session import (
 
 MEDIA_TYPE_CASE = ("CASE doc_id % 3 WHEN 0 THEN 'image' "
                    "WHEN 1 THEN 'audio' ELSE 'video' END")
-
-MEDIA_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("payload", BinaryType()),
-    StructField("media_type", StringType()),
-    StructField("checksum", StringType()),
-])
 
 BYTE_STATS_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -136,185 +124,6 @@ def media_byte_stats_oracle(d: Dialect) -> str:
   CASE WHEN length(text) = 0 THEN cast(0 as bigint)
        ELSE cast({d.arr_max(codes)} as bigint) END AS byte_max
 FROM documents WHERE text IS NOT NULL"""
-
-
-# --- decoders ---------------------------------------------------------------
-# Real decode paths with tiered dependencies: full decode via
-# PIL/soundfile/av WHEN IMPORTABLE (optional, absent in this container
-# — the live-library tests pytest.importorskip), else a pure-stdlib
-# header/container parse for the formats that allow it (PNG/GIF/BMP
-# headers, RIFF/WAV via the ``wave`` module). Only video has no stdlib
-# demuxer, so its no-library branch stays an explicit
-# NotImplementedError.
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}  # color type -> channels
-
-
-def decode_image(payload: bytes) -> dict:
-    """Image metadata decode -> {format, width, height, channels}.
-
-    Uses PIL when importable (full decode, any format); otherwise
-    parses the header directly for PNG / GIF / BMP — the pure-Python
-    header sniff an inventory pipeline runs when it only needs
-    dimensions (no pixel decode, no dependency). Unknown formats
-    without PIL raise ValueError."""
-    import struct
-
-    try:
-        from PIL import Image  # optional dependency
-    except ImportError:
-        Image = None
-    if Image is not None:
-        import io
-
-        # normalize PIL's damage signals (UnidentifiedImageError and
-        # truncated-read OSErrors) to the module's ValueError contract
-        # — otherwise one damaged asset escapes the ValueError-only
-        # quarantine and fails the whole mapInPandas task
-        try:
-            with Image.open(io.BytesIO(payload)) as im:
-                return {"format": (im.format or "?").lower(),
-                        "width": im.width, "height": im.height,
-                        "channels": len(im.getbands())}
-        except OSError as exc:
-            raise ValueError(f"undecodable image: {exc}") from exc
-    # a recognized signature with a truncated header must still raise
-    # the contract's ValueError, not a low-level struct.error/IndexError
-    # that kills the whole mapInPandas task on one damaged asset
-    try:
-        if payload[:8] == _PNG_SIG and payload[12:16] == b"IHDR":
-            w, h = struct.unpack(">II", payload[16:24])
-            color_type = payload[25]
-            return {"format": "png", "width": w, "height": h,
-                    "channels": _PNG_CHANNELS.get(color_type, 0)}
-        if payload[:6] in (b"GIF87a", b"GIF89a"):
-            w, h = struct.unpack("<HH", payload[6:10])
-            return {"format": "gif", "width": w, "height": h,
-                    "channels": 3}
-        if payload[:2] == b"BM":
-            w, h = struct.unpack("<ii", payload[18:26])
-            return {"format": "bmp", "width": w, "height": abs(h),
-                    "channels": 3}
-    except (struct.error, IndexError) as exc:
-        raise ValueError(f"truncated image header: {exc}") from exc
-    raise ValueError(
-        "unrecognized image container (stdlib header parse covers "
-        "PNG/GIF/BMP; install PIL for full-format decode)")
-
-
-def decode_audio(payload: bytes) -> dict:
-    """Audio metadata decode -> {format, n_channels, sample_rate,
-    n_frames}. Uses soundfile when importable (any libsndfile format);
-    otherwise the stdlib ``wave`` module decodes RIFF/WAV — a real
-    parse, not a stub. Damage is normalized to the module's ValueError
-    contract on BOTH tiers (soundfile raises LibsndfileError, a
-    RuntimeError; wave raises wave.Error/EOFError — neither is a
-    ValueError subclass, so an unnormalized raise would escape the
-    quarantine and fail the task on one truncated asset)."""
-    import io
-    import struct
-
-    try:
-        import soundfile  # optional dependency
-    except ImportError:
-        soundfile = None
-    if soundfile is not None:
-        try:
-            info = soundfile.info(io.BytesIO(payload))
-        except RuntimeError as exc:  # LibsndfileError
-            raise ValueError(f"undecodable audio: {exc}") from exc
-        return {"format": info.format.lower(),
-                "n_channels": info.channels,
-                "sample_rate": int(info.samplerate),
-                "n_frames": int(info.frames)}
-    import wave
-
-    try:
-        with wave.open(io.BytesIO(payload)) as w:
-            return {"format": "wav", "n_channels": w.getnchannels(),
-                    "sample_rate": w.getframerate(),
-                    "n_frames": w.getnframes()}
-    except (wave.Error, EOFError, struct.error) as exc:
-        raise ValueError(f"undecodable audio: {exc}") from exc
-
-
-def sample_video_frames(payload: bytes, every_n: int = 30) -> list:
-    """Video frame sampling via PyAV when importable (demux, decode
-    every ``every_n``-th frame to RGB ndarrays). There is no stdlib
-    video demuxer, so without the library this raises — the
-    deterministic byte-stride twin (_frame_batches /
-    media_frame_sample_df) remains the tested oracle of the Spark-side
-    1-to-many plumbing."""
-    try:
-        import av  # optional dependency
-    except ImportError as e:
-        raise NotImplementedError(
-            "video frame sampling requires PyAV, not present in this "
-            "environment; media_frame_sample_df is the deterministic "
-            "twin of the same Spark plumbing") from e
-    import io
-
-    frames = []
-    with av.open(io.BytesIO(payload)) as container:
-        for i, frame in enumerate(container.decode(video=0)):
-            if i % every_n == 0:
-                frames.append(frame.to_ndarray(format="rgb24"))
-    return frames
-
-
-DECODE_META_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("format", StringType()),
-    StructField("width", LongType()),
-    StructField("height", LongType()),
-    StructField("channels", LongType()),
-])
-
-
-def _decode_meta_batches(batches: "Iterator") -> "Iterator":
-    import pandas as pd
-
-    for pdf in batches:
-        rows = []
-        for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-            # quarantine damaged assets instead of failing the task:
-            # a truncated/unrecognized payload yields a null-meta row.
-            # Only ValueError is data damage (decoders normalize their
-            # low-level errors to it, and the explicit None guard below
-            # covers the one TypeError source); anything else is a
-            # decoder code bug and must surface as a task failure, not
-            # a silent null-meta row. Deliberate narrowing (ADVICE r5
-            # reviewed): bytes(p) CAN raise TypeError on a non-bytes
-            # payload, but the column is BinaryType so Arrow only
-            # delivers bytes/None — a non-bytes value here means the
-            # schema contract was broken upstream, which is a bug to
-            # surface, not an asset to quarantine.
-            try:
-                if p is None:
-                    raise ValueError("null payload")
-                meta = decode_image(bytes(p))
-            except ValueError:
-                rows.append((int(doc_id), None, None, None, None))
-                continue
-            rows.append((int(doc_id), meta["format"], meta["width"],
-                         meta["height"], meta["channels"]))
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "format", "width", "height",
-                           "channels"])
-
-
-def media_decode_meta_df(media: DataFrame) -> DataFrame:
-    """The REAL decode stage: header-parse every image payload to
-    (format, width, height, channels) via Arrow-batched mapInPandas —
-    payloads never shuffle, constant memory per task. Runs on actual
-    image-bytes tables (the pytest fixture generates real PNGs); the
-    corpus media table's text-byte payloads are not images, so this
-    stage is not a queries() entry — the deterministic fake-decode
-    twins (media_byte_stats/media_feature_extract/media_frame_sample)
-    carry the oracle coverage."""
-    return media.select("doc_id", "payload").mapInPandas(
-        _decode_meta_batches, DECODE_META_SCHEMA)
 
 
 def media_dedup_exact(d: Dialect) -> str:
@@ -455,9 +264,7 @@ PHASH_VARIANT_OFFSET = 1_000_000
 
 
 # the planted noisy-twin payload: two 1-byte splices (length-
-# preserving) — the ONE definition shared by the phash signature
-# plane and the pair-release shard writer, which must reproduce the
-# twin's media payload byte-for-byte
+# preserving)
 PHASH_TWIN_SPLICE = ("substr(text, 1, 9) || '#' || substr(text, 11, 6) "
                      "|| '%' || substr(text, 18)")
 
@@ -954,11 +761,9 @@ def pairs_release_refresh_df(spark, key: object = None):
     return _split_audit_df(m, ranged, _pairs_manifest_agg_df)
 
 
-def _pairs_release_rel_df(spark, key: object = None,
-                          with_payload: bool = False):
+def _pairs_release_rel_df(spark, key: object = None):
     """The UNRANKED surviving pair relation (pair_id, media_id,
-    caption_id, media_phash, split, n_toks, n_bytes, h [, caption
-    text]) — the DataFrame twin of :func:`_pairs_release_core`'s
+    caption_id, media_phash, split, n_toks, n_bytes, h) — the DataFrame twin of :func:`_pairs_release_core`'s
     ``rel``, off the session phash / MinHash-pair planes. The
     manifest ranks it whole; the refresh ranks its stored/delta
     slices separately."""
@@ -977,13 +782,10 @@ def _pairs_release_rel_df(spark, key: object = None,
              .select(F.col("pair_b").alias("pair_id")).distinct())
     pipe = (spark.sql(docs_curation_pipeline(SPARK))
             .filter("keep = 1").select("doc_id", "split"))
-    cols = ["doc_id",
-            f"cast({SPARK.arr_len(SPARK.tokens('text'))} as bigint)"
-            " AS n_toks",
-            "cast(octet_length(text) as bigint) AS n_bytes"]
-    if with_payload:
-        cols.append("text")
-    ctok = spark.table("documents").selectExpr(*cols)
+    ctok = spark.table("documents").selectExpr(
+        "doc_id",
+        f"cast({SPARK.arr_len(SPARK.tokens('text'))} as bigint) AS n_toks",
+        "cast(octet_length(text) as bigint) AS n_bytes")
     # caption content hash from the session dochash plane (the
     # _release_rel_df rule — r12: the inline poly_hash('text') re-ran
     # the interpreted char fold over the corpus per pair-release query)
@@ -1097,88 +899,14 @@ def ensure_pairs_release_rel_view(spark, key: object = None) -> str:
     return PAIRS_RELEASE_REL_VIEW
 
 
-def _pairs_release_assignments_df(spark, key: object = None,
-                                  with_payload: bool = False):
-    """Pair-level release ASSIGNMENT relation behind the pair manifest
-    and the pair shard writer: the rail composition
-    (:func:`_pairs_release_rel_df`) count-ranked per split
-    (:func:`_pairs_count_rank_df`). The payload-free form reads the
-    session ranged-rail plane (r13)."""
-    if not with_payload:
-        ranged = spark.table(
-            ensure_pairs_release_rel_view(spark, key=key))
-        return _pairs_count_rank_df(ranged, pre_ranged=True)
-    return _pairs_count_rank_df(_pairs_release_rel_df(
-        spark, key=key, with_payload=with_payload))
-
-
 def pairs_release_manifest_df(spark, key: object = None):
     """The pair-release manifest as a DataFrame (the registered Spark
     form of :func:`pairs_release_manifest`): one map-side-combining
-    aggregate over the pair assignment relation."""
+    aggregate over the pair assignment relation, which is the session
+    ranged rail count-ranked per split (:func:`_pairs_count_rank_df`)."""
+    ranged = spark.table(ensure_pairs_release_rel_view(spark, key=key))
     return _pairs_manifest_agg_df(
-        _pairs_release_assignments_df(spark, key=key))
-
-
-def pairs_release_write_shards(spark, out_dir: str, key: object = None):
-    """Materialize the pair release as WebDataset shards — one tar per
-    manifest row (``release-pairs/<split>/shard-<id>.tar``), two
-    members per pair in WebDataset convention (same basename, one
-    extension per modality): ``<pair_id>.txt`` (caption) and
-    ``<pair_id>.media`` (the media payload — the stored asset bytes;
-    for planted twins the length-preserving splice
-    :data:`PHASH_TWIN_SPLICE` reproduces the noisy payload exactly).
-    Members in pair-id order, mtime pinned to 0, attempt-unique temp
-    + atomic rename; no payload passes through the driver.
-
-    Posture note (the sink-family rule): ``out_dir`` must be
-    executor-reachable — local mode or a shared filesystem; on
-    node-local disks the production swap is a cloud-native upload
-    inside the group writer."""
-    import io
-    import os
-    import tarfile
-    import uuid
-
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    out_schema = ("split string, shard_id long, path string, "
-                  "n_pairs long, n_caption_bytes long")
-
-    def write_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        split = pdf["split"].iloc[0]
-        sid = int(pdf["shard_id"].iloc[0])
-        rel_path = f"release-pairs/{split}/shard-{sid:05d}.tar"
-        full = os.path.join(out_dir, rel_path)
-        os.makedirs(os.path.dirname(full), exist_ok=True)
-        pdf = pdf.sort_values("pair_id")
-        tmp = f"{full}.inprogress-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        n_cap_bytes = 0
-        with tarfile.open(tmp, "w") as tf:
-            for pid_, cap, med in zip(pdf["pair_id"], pdf["text"],
-                                      pdf["payload"]):
-                for ext, txt in ((".txt", cap), (".media", med)):
-                    data = ("" if txt is None else txt).encode("utf-8")
-                    info = tarfile.TarInfo(name=f"{int(pid_):012d}{ext}")
-                    info.size = len(data)
-                    info.mtime = 0
-                    tf.addfile(info, io.BytesIO(data))
-                    if ext == ".txt":
-                        n_cap_bytes += len(data)
-        os.replace(tmp, full)
-        return pd.DataFrame([{"split": split, "shard_id": sid,
-                              "path": rel_path, "n_pairs": len(pdf),
-                              "n_caption_bytes": n_cap_bytes}])
-
-    a = _pairs_release_assignments_df(spark, key=key, with_payload=True)
-    payload = F.expr(
-        f"CASE WHEN media_id >= {PHASH_VARIANT_OFFSET} "
-        f"THEN {PHASH_TWIN_SPLICE} ELSE text END")
-    return (a.withColumn("payload", payload)
-            .groupBy("split", "shard_id")
-            .applyInPandas(write_group, out_schema))
+        _pairs_count_rank_df(ranged, pre_ranged=True))
 
 
 def media_phash_dedup(d: Dialect, base: str | None = None) -> str:

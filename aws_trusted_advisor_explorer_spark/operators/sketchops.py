@@ -203,14 +203,15 @@ FROM cmp GROUP BY event_type"""
 
 # --- count-min sketch ----------------------------------------------------
 CMS_W = 512            # counters per hash row
-CMS_D = 4              # hash rows
+# one hash row per salt pair
 CMS_SALTS = ((131, 7), (1009, 101), (9176, 911), (30011, 3301))
 # heavy hitter = CMS estimate >= HEAVY_NUM/HEAVY_DEN of the stream
 HEAVY_NUM, HEAVY_DEN = 1, 125
 
 
 def _cms_codes(d: Dialect, hv: str) -> str:
-    """Array of the {CMS_D} flattened sketch coordinates for one key:
+    """Array of the flattened sketch coordinates for one key, one per
+    hash row:
     ``code_i = i * {CMS_W} + ((hv * a_i + b_i) % P) % {CMS_W}`` — a
     single-integer encoding so build and probe explode ONE bigint array
     (a UNION ALL branch per hash row would re-evaluate the source CTE
@@ -222,15 +223,16 @@ def _cms_codes(d: Dialect, hv: str) -> str:
 
 
 def events_cms_heavy_hitters(d: Dialect) -> str:
-    """Heavy-hitter users via a {CMS_D}x{CMS_W} count-min sketch, with
-    exact counts as the acceptance gate: users whose CMS estimate is at
-    least {HEAVY_NUM}/{HEAVY_DEN} of the whole stream, with the
-    guaranteed-non-negative overcount (CMS never undercounts — min of
-    {CMS_D} upper-bound counters) next to each estimate.
+    """Heavy-hitter users via a count-min sketch of {CMS_W}-counter rows
+    (one per CMS_SALTS pair), with exact counts as the acceptance
+    gate: users whose CMS estimate is at least {HEAVY_NUM}/{HEAVY_DEN}
+    of the whole stream, with the guaranteed-non-negative overcount
+    (CMS never undercounts — min of one upper-bound counter per row)
+    next to each estimate.
 
     Scale posture (100 TB): the sketch build is one map-side-combining
-    aggregate whose output is FIXED at {CMS_D}x{CMS_W} = {CMS_D * CMS_W}
-    counters regardless of stream size or user cardinality — the whole
+    aggregate whose output is FIXED at {CMS_W} counters per hash row
+    regardless of stream size or user cardinality — the whole
     point vs the exact per-user groupBy, which this query also runs as
     its ground truth (at real scale the probe side is a small candidate
     list, not every user; the relative threshold needs only the stream

@@ -1071,7 +1071,6 @@ def docs_quality_cutoff_calibration_df(spark):
 BPE_ROUNDS = 8       # selection rounds (= driver round-trips, DF twin)
 BPE_ROUND_K = 8      # max merges selected per round (disjoint symbols)
 BPE_CAND_POOL = 24   # ranked candidate pool examined per round
-BPE_MERGES = BPE_ROUNDS * BPE_ROUND_K   # total merge budget (64)
 # The training dict is VOCAB-bounded (distinct tokens), not corpus-
 # bounded, so the per-round pair aggregate coalesces to this many
 # tasks — 1 is right up to ~1M-symbol dictionaries (the practical BPE
@@ -1191,8 +1190,9 @@ def _bpe_apply_expr(d: Dialect, syms_expr: str,
     disjoint-symbol set applies simultaneously — equal to sequential
     rank order, see :func:`_bpe_sel_fold`) on ``syms_expr``, with each
     round's input, pair set, and kept-array let-bound so they evaluate
-    once. One chained bind per ROUND, not per merge — {BPE_MERGES}
-    merges cost {BPE_ROUNDS} expression layers."""
+    once. One chained bind per ROUND, not per merge — up to
+    {BPE_ROUNDS}x{BPE_ROUND_K} merges cost {BPE_ROUNDS} expression
+    layers."""
     cur = syms_expr
     for pairs in round_sets:
         kept, rebuilt = _bpe_merge_set_exprs(d, "mp")
@@ -1243,8 +1243,8 @@ def text_bpe_merge_train(d: Dialect, base: str | None = None) -> str:
     whole set simultaneously in every word, repeat. Output: the
     learned merge table (global rank = (round, in-round selection
     order), pair, merged symbol, weighted count at round start) — the
-    artifact a BPE tokenizer ships, up to {BPE_MERGES} merges from
-    {BPE_ROUNDS} passes.
+    artifact a BPE tokenizer ships, up to {BPE_ROUND_K} merges from
+    each of {BPE_ROUNDS} passes.
 
     Classic BPE trains on the word-frequency dictionary, not the raw
     corpus; here the dictionary is capped at the top {BPE_WORD_CAP}

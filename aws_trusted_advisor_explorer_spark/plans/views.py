@@ -198,24 +198,24 @@ VIEWS: dict[str, ViewSpec] = _specs()
 
 
 def view_df(spark: SparkSession, name: str, with_tags: bool | None = None,
-            boundary_double: bool = True, broadcast_tags: bool = False) -> DataFrame:
+            boundary_double: bool = True) -> DataFrame:
     """Build the view as a DataFrame plan over the registered raw tables.
 
     ``with_tags=None`` resolves like the reference: join iff the view has
     a join key and the ``tags`` table exists in the catalog
     (create-athena-views-lambda.py:57-72,91-93).
 
-    Scale posture: by default AQE picks the physical join — broadcast
+    Scale posture: AQE picks the physical join — broadcast
     hash when the tags dimension fits the session's 64MB threshold
     (session.tune_session; the sf0.1 tags table is ~11MB -> broadcast,
     measured 2-5x over sort-merge), sort-merge with skew handling when
-    the dimension outgrows it. ``broadcast_tags=True`` forces the hint
-    for deployments that know the dimension is small.
+    the dimension outgrows it.
     """
     spec = VIEWS[name]
     fact = spark.table(f"`{spec.fact}`")
     if with_tags is None:
-        with_tags = spec.join_key is not None and _table_exists(spark, "tags")
+        with_tags = (spec.join_key is not None
+                     and spark.catalog.tableExists("tags"))
     join = with_tags and spec.join_key is not None
 
     # df[name] does exact-name lookup (no parsing), so spaces/'-'/'/' in the
@@ -226,8 +226,6 @@ def view_df(spark: SparkSession, name: str, with_tags: bool | None = None,
 
     if join:
         tags = spark.table("tags")
-        if broadcast_tags:
-            tags = F.broadcast(tags)
         cond = (fact[f"`{spec.join_key}`"] == tags["resourceid"]) & (
             fact["datetime"] == tags["datetime"])
         out = fact.join(tags, cond, "left").select(
@@ -265,25 +263,21 @@ def view_oracle_sql(name: str, with_tags: bool | None = None) -> str:
             f'SELECT "{spec.fact}".*,\n  {computed}{tag_cols}\n{frm}')
 
 
-def register_views(spark: SparkSession, with_tags: bool | None = None,
-                   skip_missing: bool = True) -> list[str]:
+def register_views(spark: SparkSession,
+                   with_tags: bool | None = None) -> list[str]:
     """Publish every view into the session catalog (the reference's K4
     Athena-DDL sink becomes createOrReplaceTempView). Views whose fact
     table was never ingested are skipped (the reference's crawler would
-    not have created the table either)."""
+    not have created the table either). Existence is a catalog lookup,
+    and ``with_tags=None`` is resolved once for all views, so each fact
+    is analysed once, by its view."""
+    if with_tags is None:
+        with_tags = spark.catalog.tableExists("tags")
     published = []
     for name, spec in VIEWS.items():
-        if skip_missing and not _table_exists(spark, f"`{spec.fact}`"):
+        if not spark.catalog.tableExists(spec.fact):
             continue
         view_df(spark, name, with_tags=with_tags, boundary_double=False) \
             .createOrReplaceTempView(name)
         published.append(name)
     return published
-
-
-def _table_exists(spark: SparkSession, name: str) -> bool:
-    try:
-        spark.table(name)
-        return True
-    except Exception:
-        return False

@@ -381,3 +381,135 @@ def test_verify_entry_output_keyed_on_exact_scale():
         assert out not in committed, (sf_dir, ansi, out)
         assert any(fnmatch.fnmatch(out, pat) for pat in ignored), (
             f"{out} would be tracked by git")
+
+
+# Top-level package names that no entry point reaches, each with the
+# reason it stays. A new package name needs a non-test caller or a
+# line here.
+KEEP = {
+    # test references: the plain forms live code is checked against
+    "_shingle_hash_kernel": "Arrow shingle kernel the fused gram-fold "
+                            "kernel's streams are pinned against",
+    "make_gram_hv_kernel": "per-width gram kernel the fused gram-fold "
+                           "kernel's streams are pinned against",
+    "dedup_embedding_cosine_label_blocked": "label-blocked oracle the "
+                                            "cluster-blocked cosine "
+                                            "dedup is measured against",
+    "_bpe_train_rounds_jobs": "job-loop BPE trainer the one-job kernel "
+                              "trainer must match",
+    # test hooks and fakes
+    "drop_planes": "tests rebuild a cached session plane",
+    "FixtureTransport": "offline tag-API transport for the fetch tests",
+    "ASG_BACKED": "keys whose plane-backed SQL a test compares with "
+                  "the inline form",
+    # reference parity: the reference's control-plane sources, masks
+    # and constants, checked against its behaviour
+    "CHECK_CATALOG_SCHEMA": "reference check-catalog source (S2)",
+    "filter_supported_checks": "reference check-catalog filter (S2)",
+    "ACCOUNT_SCHEMA": "reference Organizations source (S3)",
+    "active_accounts": "reference Organizations filter (S3)",
+    "accounts_from_csv": "reference accounts CSV override (S4)",
+    "regions_df": "reference region dimension (S5)",
+    "refresh_wait_seconds": "reference check-refresh wait",
+    "mask_account_id": "reference log masking of account ids",
+    "mask_name_email": "reference log masking of names and emails",
+    "arn_to_resource_id": "reference tag ARN to resource id rule",
+    "CATEGORY": "reference check category",
+    # skew handling for a deployment whose join key is skewed
+    "salted_join": "salted skew join, equal to the plain join (tested)",
+    "SALT_COL": "salt column of salted_join",
+}
+
+
+def _package_graph():
+    """(defs, roots) of the package: ``defs`` maps each top-level name a
+    package module defines to its defining nodes; ``roots`` holds the
+    code anyone runs — the entry, bench, perfbench and script modules
+    whole, each package module's import-time statements and decorators,
+    and a reference to every ``@session_plane`` build."""
+    import ast
+
+    def module(path):
+        with open(path, encoding="utf-8") as f:
+            return ast.parse(f.read())
+
+    defs: dict[str, list] = {}
+    roots: list = []
+    for p in glob.glob(os.path.join(ROOT, "aws_trusted_advisor_explorer_spark",
+                                    "**", "*.py"), recursive=True):
+        for st in module(p).body:
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef,
+                               ast.ClassDef)):
+                defs.setdefault(st.name, []).append(st)
+                roots.extend(st.decorator_list)
+                if "session_plane" in _mentioned(st.decorator_list):
+                    roots.append(ast.Name(id=st.name))
+            elif (isinstance(st, (ast.Assign, ast.AnnAssign))
+                  and all(isinstance(t, (ast.Name, ast.Tuple))
+                          for t in _targets(st))):
+                for t in _targets(st):
+                    for n in ast.walk(t):
+                        if isinstance(n, ast.Name):
+                            defs.setdefault(n.id, []).append(st)
+            elif not (isinstance(st, ast.Expr)
+                      and isinstance(st.value, ast.Constant)):
+                roots.append(st)
+    for p in ([os.path.join(ROOT, "__spark_entry__.py"),
+               os.path.join(ROOT, "bench.py")]
+              + glob.glob(os.path.join(ROOT, "perfbench", "*.py"))
+              + glob.glob(os.path.join(ROOT, "scripts", "*.py"))):
+        roots.append(module(p))
+    return defs, roots
+
+
+def _targets(assign):
+    return assign.targets if hasattr(assign, "targets") else [assign.target]
+
+
+def _mentioned(nodes):
+    """Every name, attribute, imported name and identifier-shaped string
+    literal in ``nodes`` (a string covers getattr-style dispatch)."""
+    import ast
+
+    out = set()
+    for node in nodes:
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+            elif isinstance(n, ast.alias):
+                out.add(n.name.rsplit(".", 1)[-1])
+            elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
+                  and n.value.isidentifier()):
+                out.add(n.value)
+    return out
+
+
+def _reached(defs, roots, extra=()):
+    seen: set[str] = set()
+    todo = _mentioned(roots) | set(extra)
+    while todo:
+        name = todo.pop()
+        if name not in seen:
+            seen.add(name)
+            todo |= _mentioned(defs.get(name, ())) - seen
+    return seen
+
+
+def test_every_package_name_has_a_caller():
+    """Every top-level package name is reached from the code anyone
+    runs (see ``_package_graph``) or is listed in KEEP with its reason,
+    so code only tests call cannot regrow unnoticed. A name is reached
+    when reached code mentions it; matching by name alone errs toward
+    reaching. KEEP names count as roots, and each must still be defined
+    and be unreached without its entry, so the table cannot go stale."""
+    defs, roots = _package_graph()
+    names = {n for n in defs if not (n.startswith("__") and n.endswith("__"))}
+    unreached = sorted(names - _reached(defs, roots, KEEP))
+    assert not unreached, (
+        f"package names no entry point reaches (delete them, or add a "
+        f"KEEP reason): {unreached}")
+    live = _reached(defs, roots)
+    stale = sorted(n for n in KEEP if n not in defs or n in live)
+    assert not stale, f"KEEP entries defined nowhere or reached: {stale}"

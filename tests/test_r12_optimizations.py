@@ -85,8 +85,8 @@ def test_shingle_kernel_edge_docs(spark):
 
 
 def test_span_kernel_matches_sql(spark):
-    """The r12 span-gram kernel (_span_gram_kernel: per-token fold +
-    SHINGLE_MULT window combine) must emit exactly the rows of the
+    """The r12 span-gram kernel (make_gram_hv_kernel(SPAN_GRAM):
+    per-token fold + SHINGLE_MULT window combine) must emit exactly the rows of the
     _span_gram_cte SQL chain — same multiset of (doc_id, pos, hv)."""
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
     from aws_trusted_advisor_explorer_spark.operators import dedup
@@ -118,7 +118,7 @@ def test_span_kernel_edge_docs(spark):
         Row(doc_id=6, text="Mixed CASE tokens " * k),
     ]
     df = spark.createDataFrame(docs, schema="doc_id long, text string")
-    kern = df.mapInPandas(dedup._span_gram_kernel,
+    kern = df.mapInPandas(dedup.make_gram_hv_kernel(dedup.SPAN_GRAM),
                           schema="doc_id long, pos int, hv long")
     df.createOrReplaceTempView("__edge_docs_span")
     sql = (f"WITH {dedup._span_gram_cte(SPARK, None)}\n"
@@ -138,22 +138,6 @@ def test_contam_plane_matches_sql(spark):
     corpusops.ensure_contam_view(spark, key=SF_DIR)
     new = spark.table(corpusops.CONTAM_VIEW)
     old = spark.sql(corpusops.docs_contamination(SPARK))
-    assert new.schema.simpleString() == old.schema.simpleString()
-    assert _rows(new) == _rows(old)
-
-
-def test_minhash_lsh_df_matches_sql(spark):
-    """The array-intersect verify (_pair_array_verify_df, wired into
-    the band-tuning report) must reproduce the SQL verify join's rows
-    exactly — same candidate SQL, same integer counts, same single
-    division, so the jaccard doubles are bit-identical."""
-    from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-    from aws_trusted_advisor_explorer_spark.operators import dedup
-
-    drop_planes(spark, "shingle")
-    base = dedup.ensure_shingle_view(spark, key=SF_DIR)
-    new = dedup.dedup_minhash_lsh_df(spark, base)
-    old = spark.sql(dedup.dedup_minhash_lsh(SPARK, base))
     assert new.schema.simpleString() == old.schema.simpleString()
     assert _rows(new) == _rows(old)
 

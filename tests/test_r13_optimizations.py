@@ -64,7 +64,7 @@ def test_gram_fold_kernel_matches_per_plane_kernels(spark):
     assert _rows(s5) == _rows(old5)
     s8 = fused.where(f"stream = {dedup.SPAN_GRAM}").select(
         "doc_id", "pos", "hv")
-    old8 = df.mapInPandas(dedup._span_gram_kernel,
+    old8 = df.mapInPandas(dedup.make_gram_hv_kernel(dedup.SPAN_GRAM),
                           schema="doc_id long, pos int, hv long")
     assert _rows(s8) == _rows(old8)
     # stream 4 == DISTINCT of stream 3 with the per-doc distinct count
@@ -89,7 +89,7 @@ def test_gram_fold_corpus_slices_match_per_plane_kernels(spark):
                             schema="doc_id long, hv long")
     assert _rows(fused.where("stream = 3").select("doc_id", "hv")) \
         == _rows(old3)
-    old8 = docs.mapInPandas(dedup._span_gram_kernel,
+    old8 = docs.mapInPandas(dedup.make_gram_hv_kernel(dedup.SPAN_GRAM),
                             schema="doc_id long, pos int, hv long")
     assert _rows(fused.where(f"stream = {dedup.SPAN_GRAM}")
                  .select("doc_id", "pos", "hv")) == _rows(old8)

@@ -3,9 +3,6 @@ capstone (detect→drop→decontaminate→split→pack→shard→manifest), and
 the LAION-style paired-modality curation (media_caption_pairs +
 pairs_near_dedup)."""
 
-import os
-import tarfile
-
 import pandas as pd
 import pytest
 
@@ -101,33 +98,6 @@ def test_release_manifest_reconciles_with_rails(spark):
         assert (g["first_doc_id"].iloc[1:].values
                 > g["last_doc_id"].iloc[:-1].values).all()
 
-
-def test_release_shards_roundtrip(spark, tmp_path):
-    """Write the WebDataset shards, re-read every tar, and reconcile
-    member counts / byte totals / id ranges against the manifest —
-    the capstone's sink round-trip."""
-    out = str(tmp_path)
-    written = CO.docs_release_write_shards(spark, out).toPandas()
-    man = CO.docs_release_manifest_df(spark).toPandas()
-    w = written.set_index(["split", "shard_id"]).sort_index()
-    m = man.set_index(["split", "shard_id"]).sort_index()
-    assert list(w.index) == list(m.index)
-    assert (w["path"] == m["path"]).all()
-    assert (w["n_docs"] == m["n_docs"]).all()
-    assert (w["n_bytes"] == m["n_bytes"]).all()
-    for (_, _), row in m.iterrows():
-        full = os.path.join(out, row["path"])
-        with tarfile.open(full) as tf:
-            members = tf.getmembers()
-            ids = [int(mm.name.split(".")[0]) for mm in members]
-            assert len(members) == row["n_docs"]
-            assert sum(mm.size for mm in members) == row["n_bytes"]
-            assert min(ids) == row["first_doc_id"]
-            assert max(ids) == row["last_doc_id"]
-            assert ids == sorted(ids)  # id-ordered members
-
-
-# --- paired modality ---------------------------------------------------------
 
 def test_caption_pairs_matches_oracle(spark, ddb):
     view = M.ensure_phash_view(spark)
@@ -311,55 +281,6 @@ def test_release_refresh_audit_flags_a_wrong_shard_counter(spark):
         assert len(flags) > 1, counter
         assert not flags.any()[bad.split], counter
         assert flags.all().drop(bad.split).all(), counter
-
-
-def test_pairs_release_shards_roundtrip(spark, tmp_path):
-    """Write the pair shards, re-read every tar, and reconcile BOTH
-    modalities against the manifest: member pairing (one .txt + one
-    .media per pair id), caption byte totals, pair-id ranges, and
-    both order-independent checksums recomputed from the tar bytes
-    (caption poly-hash xor; media perceptual-hash xor via the dHash
-    replay over the payload actually written)."""
-    from tests.test_extensions import _py_poly_hash
-
-    out = str(tmp_path)
-    written = M.pairs_release_write_shards(spark, out).toPandas()
-    man = M.pairs_release_manifest_df(spark).toPandas()
-    w = written.set_index(["split", "shard_id"]).sort_index()
-    m = man.set_index(["split", "shard_id"]).sort_index()
-    assert list(w.index) == list(m.index)
-    assert (w["path"] == m["path"]).all()
-    assert (w["n_pairs"] == m["n_pairs"]).all()
-    assert (w["n_caption_bytes"] == m["n_caption_bytes"]).all()
-
-    def phash_replay(payload: str) -> int:
-        n = len(payload)
-        ph = 0
-        for k in range(M.PHASH_BITS):
-            a = payload[(k * (n - 1)) // M.PHASH_BITS]
-            b = payload[((k + 1) * (n - 1)) // M.PHASH_BITS]
-            if ord(a) < ord(b):
-                ph |= 1 << k
-        return ph
-
-    for (_, _), row in m.iterrows():
-        full = os.path.join(out, row["path"])
-        with tarfile.open(full) as tf:
-            members = {mm.name: tf.extractfile(mm).read().decode("utf-8")
-                       for mm in tf.getmembers()}
-        ids = sorted({int(name.split(".")[0]) for name in members})
-        assert len(ids) == row["n_pairs"]
-        assert min(ids) == row["first_pair_id"]
-        assert max(ids) == row["last_pair_id"]
-        cap_xor = 0
-        med_xor = 0
-        for pid_ in ids:
-            cap = members[f"{pid_:012d}.txt"]
-            med = members[f"{pid_:012d}.media"]
-            cap_xor ^= _py_poly_hash(cap)
-            med_xor ^= phash_replay(med)
-        assert cap_xor == row["caption_checksum_xor"]
-        assert med_xor == row["media_checksum_xor"]
 
 
 def test_phash_plane_guards_variant_offset(spark):

@@ -43,3 +43,27 @@ def test_view_registration(spark):
     views.register_views(spark)
     for name in views.VIEWS:
         assert spark.table(name).count() > 0
+
+
+def test_register_views_publishes_exactly_the_ingested_facts(spark):
+    """register_views looks each fact up in the catalog and resolves the
+    tags join once per call. In a fresh session holding two facts and no
+    ``tags`` table it publishes exactly their two views, without tag
+    columns; once ``tags`` is registered, the view with a join key
+    carries the tag columns and the one without stays untagged."""
+    ns = spark.newSession()
+    raw = fixtures.register_raw_tables(ns, SF_DIR)
+    facts = {"check_qch7dwoux1", "summary"}
+    for name in set(raw) - facts:
+        ns.catalog.dropTempView(name)
+    tagged, untagged = "LowUtilizationAmazonEC2Instances_view", "summary_view"
+
+    assert views.register_views(ns) == [tagged, untagged]
+    for name in (tagged, untagged):
+        assert not set(views.TAG_KEYS) & set(ns.table(name).columns), name
+
+    raw["tags"].createOrReplaceTempView("tags")
+    assert views.register_views(ns) == [tagged, untagged]
+    assert set(views.TAG_KEYS) <= set(ns.table(tagged).columns)
+    assert not set(views.TAG_KEYS) & set(ns.table(untagged).columns)
+    assert ns.table(tagged).count() == raw["check_qch7dwoux1"].count()
