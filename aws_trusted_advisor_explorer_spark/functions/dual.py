@@ -299,7 +299,20 @@ class Dialect:
             return f"last_value({expr}) IGNORE NULLS OVER ({over})"
         return f"last_value({expr} IGNORE NULLS) OVER ({over})"
 
+    def ident(self, name: str) -> str:
+        """Quoted identifier (names may hold spaces, '-' and '/')."""
+        if self.name == "spark":
+            return "`" + name.replace("`", "``") + "`"
+        return '"' + name.replace('"', '""') + '"'
+
     # --- time primitives --------------------------------------------------
+    def ts_ymd_hms(self, s: str) -> str:
+        """Presto ``date_parse(s, '%Y-%m-%d %T')`` as a zone-less
+        timestamp (Spark TIMESTAMP_NTZ, DuckDB's naive TIMESTAMP)."""
+        if self.name == "spark":
+            return f"to_timestamp_ntz({s}, 'yyyy-MM-dd HH:mm:ss')"
+        return f"strptime({s}, '%Y-%m-%d %H:%M:%S')"
+
     def epoch_us(self, ts: str) -> str:
         if self.name == "spark":
             return f"unix_micros(cast({ts} as timestamp))"

@@ -491,8 +491,7 @@ def events_key_skew_audit(d: Dialect) -> str:
     factor (max key count x key cardinality / total rows — 1.0 means
     perfectly uniform). This is the audit you run BEFORE shuffling
     100 TB on a key: a key with share >> 1/n_keys is the one AQE's
-    skew-join will split, or that salted_join (functions/skew.py)
-    must handle.
+    skew-join will split, or that a deployment salts by hand.
 
     Scale posture: one map-side-combining aggregate on the key, then a
     TakeOrdered top-N over the (small) per-key relation and a

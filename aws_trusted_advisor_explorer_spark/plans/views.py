@@ -1,10 +1,37 @@
-"""The reference's 10 Athena views as Spark DataFrame plans + DuckDB oracles.
+"""The reference's 10 Athena views, each defined once as SQL text
+rendered for Spark (the published view) and DuckDB (its oracle).
 
 Each view is ``SELECT fact.*, <typed computed cols> [, tag cols] FROM
 fact [LEFT JOIN tags ON (join_key = resourceid AND datetime = datetime)]``
 — a typed projection with an optional as-of-run snapshot join
 (/root/reference/source/create-athena-views-lambda.py:84-160). No
-GROUP BY / windows / sorts exist in the reference view layer.
+GROUP BY / windows / sorts exist in the reference view layer. A
+:class:`ViewSpec` is data: the fact, the join key, and per computed
+column an alias plus a renderer ``(Dialect, column_ref) -> str``;
+:func:`view_sql` renders the whole statement from it.
+
+The renderers reproduce the Presto scalar semantics (SURVEY.md §2.5) in
+SQL both engines accept; only the identifier quoting and the timestamp
+parse differ by dialect (``Dialect.ident``, ``Dialect.ts_ymd_hms``):
+
+| ref | Presto construct                      | renderer                   |
+|-----|---------------------------------------|----------------------------|
+| F1  | date_parse(s, '%Y-%m-%d %T')          | _dt, _iso_ts               |
+| F2  | substr(s, pos[, len])                 | substr (same 1-based)      |
+| F3  | replace(s, search) 2-arg = delete     | replace(s, search, '')     |
+| F4  | rtrim(s)                              | rtrim                      |
+| F5  | CAST(x AS decimal(p,s))               | _money, _money_rds, _pct   |
+| F8  | replace(CAST(x AS varchar),'0','1')   | _zero_guard                |
+
+CAST policy: Presto CAST throws on malformed input, and so does the
+Spark these views run under — ANSI mode is ON by default in Spark 4
+and this repo's session never disables it (``cast('$bad' as
+decimal(10,2))`` raises CAST_INVALID_INPUT). That throw-on-malformed
+behavior is the FAITHFUL reproduction of the reference's Athena
+semantics, not a divergence: a dirty cell fails the view query in both
+systems. A deployment preferring land-NULL-and-continue would swap
+these casts for ``try_cast`` — a deliberate loosening vs the
+reference, so it is not the default.
 
 Physical plan at scale: the fixture derivation is narrow, so each view
 compiles to a single whole-stage-codegen parquet scan; the tags
@@ -26,180 +53,159 @@ the internal computation stays decimal, faithful to the reference).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Callable
+from dataclasses import dataclass
+from typing import Callable, NamedTuple
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-from pyspark.sql.types import DecimalType
+from pyspark.sql import DataFrame, SparkSession
 
-from aws_trusted_advisor_explorer_spark.functions import presto_compat as pc
+from aws_trusted_advisor_explorer_spark.functions.dual import DUCK, SPARK, Dialect
 from aws_trusted_advisor_explorer_spark.plans import fixtures
 
 TAG_KEYS = ("env", "costcenter")  # InterestedTagKeys fixture configuration
 
-# DuckDB-dialect snippets mirroring functions/presto_compat.py
-_D_DT = "strptime(substr(\"{t}\".\"datetime\", 1, 19), '%Y-%m-%d %H:%M:%S')"
+# (dialect, column_ref) -> SQL expression; column_ref maps a raw fact
+# column name to its quoted, qualified reference
+Render = Callable[[Dialect, Callable[[str], str]], str]
 
 
-def _d_money(t: str, col: str, p: int = 18, s: int = 2) -> str:
-    return (f'CAST(CAST(rtrim(replace(substr("{t}"."{col}", 2), \'$\', \'\')) '
-            f"AS decimal({p},{s})) AS double)")
+class Computed(NamedTuple):
+    alias: str
+    render: Render
+    decimal: bool = False  # DECIMAL result: DOUBLE at the query boundary
 
 
-def _d_money_rds(t: str, col: str) -> str:
-    return (f'CAST(CAST(rtrim(replace(replace("{t}"."{col}", \'$\', \'\'), \'"\', \'\')) '
-            f"AS decimal(10,2)) AS double)")
-
-
-def _d_pct(t: str, col: str, n: int) -> str:
-    return f'CAST(CAST(substr("{t}"."{col}", 1, {n}) AS decimal(10,4)) AS double)'
-
-
-@dataclass
+@dataclass(frozen=True)
 class ViewSpec:
     name: str
     fact: str
     join_key: str | None  # fact column equi-joined to tags.resourceid
-    executed: bool = True  # False: defined but not registered by the reference
-    # (alias, spark builder fact_df -> Column, duckdb SQL expr)
-    computed: list[tuple[str, Callable[[DataFrame], Column], str]] = field(default_factory=list)
+    computed: tuple[Computed, ...]
 
 
-def _dt(alias: str, fact: str):
-    return (alias, lambda f: pc.date_parse_ymd_hms(f["datetime"]), _D_DT.format(t=fact))
+def _dt(alias: str = "date_time") -> Computed:
+    """F1: ``date_parse(substr(datetime, 1, 19), '%Y-%m-%d %T')``."""
+    return Computed(alias, lambda d, ref: d.ts_ymd_hms(f"substr({ref('datetime')}, 1, 19)"))
 
 
-def _money(alias: str, fact: str, col: str, p: int = 18, s: int = 2):
-    return (alias,
-            lambda f: pc.money_to_decimal(f[col], p, s),
-            _d_money(fact, col, p, s))
+def _money(alias: str, col: str, p: int = 18, s: int = 2) -> Computed:
+    """``'$123.45  '`` → decimal (create-athena-views-lambda.py:90): the
+    substr(2) drops the leading '$', the 2-arg replace catches any
+    further '$'."""
+    return Computed(alias, lambda d, ref: (
+        f"CAST(rtrim(replace(substr({ref(col)}, 2), '$', '')) AS decimal({p},{s}))"), True)
 
 
-def _specs() -> dict[str, ViewSpec]:
-    v: dict[str, ViewSpec] = {}
-
-    fact = "check_qch7dwoux1"
-    v["LowUtilizationAmazonEC2Instances_view"] = ViewSpec(
-        "LowUtilizationAmazonEC2Instances_view", fact, "instance id",
-        computed=[
-            _dt("date_time", fact),
-            ("average_cpu_utilization_14_days",
-             lambda f: pc.pct_substr_decimal(f["14-day average cpu utilization"], 3),
-             _d_pct(fact, "14-day average cpu utilization", 3)),
-            # alias literally contains '/' and a space (create-athena-views:89)
-            ("average_network_i/o_utilization_14 days",
-             lambda f: pc.pct_substr_decimal(f["14-day average network i/o"], 4),
-             _d_pct(fact, "14-day average network i/o", 4)),
-            _money("estimated_monthly_savings", fact, "estimated monthly savings"),
-        ])
-
-    fact = "check_davu99dc4c"
-    v["UnderutilizedAmazonEBSVolumes_view"] = ViewSpec(
-        "UnderutilizedAmazonEBSVolumes_view", fact, "volume id",
-        computed=[
-            _dt("date_time", fact),
-            _money("Monthly_Storage_Cost", fact, "monthly storage cost"),
-        ])
-
-    fact = "check_hjlmh88um8"
-    v["IdleLoadBalancers_view"] = ViewSpec(
-        "IdleLoadBalancers_view", fact, "load balancer name",
-        computed=[
-            _dt("date_time", fact),
-            _money("estimated_monthly_savings", fact, "estimated monthly savings"),
-        ])
-
-    fact = "check_ti39halfu8"
-    v["AmazonRDSIdleDBInstances_view"] = ViewSpec(
-        "AmazonRDSIdleDBInstances_view", fact, "db instance name",
-        computed=[
-            _dt("date_time", fact),
-            # double 2-arg replace: '$' then '"'; no substr (create-athena-views:116)
-            ("estimated_monthly_savings",
-             lambda f: pc.money_to_decimal(
-                 f["estimated monthly savings on demand"], 10, 2,
-                 substr_first=False, strip_quote=True),
-             _d_money_rds(fact, "estimated monthly savings on demand")),
-        ])
-
-    fact = "check_g31sq1e9u"
-    v["UnderutilizedAmazonRedshiftClusters_view"] = ViewSpec(
-        "UnderutilizedAmazonRedshiftClusters_view", fact, "cluster",
-        computed=[_dt("date_time", fact)])
-
-    fact = "check_1e93e4c0b5"
-    v["EC2ReservedInstanceLeaseExpiration_view"] = ViewSpec(
-        "EC2ReservedInstanceLeaseExpiration_view", fact, None,  # no tag join
-        computed=[
-            _dt("date_time", fact),
-            _money("current_monthly_cost", fact, "current monthly cost"),
-            _money("estimated_monthly_savings", fact, "estimated monthly savings"),
-            ("expiration_date",
-             lambda f: pc.iso_expiration_to_timestamp(f["expiration date"]),
-             "strptime(substr(replace(\"expiration date\", 'T', ' '), 1, 19), "
-             "'%Y-%m-%d %H:%M:%S')"),
-        ])
-
-    fact = "check_51fc20e7i2"
-    v["Route53LatencyResourceRecordSets_view"] = ViewSpec(
-        "Route53LatencyResourceRecordSets_view", fact, "hosted zone name",
-        computed=[_dt("date_time", fact)])
-
-    fact = "summary"
-    _guard_d = ('CAST(CAST(replace(CAST("resourcesprocessed" AS string), \'0\', \'1\') '
-                "AS decimal(10,2)) AS double)")
-
-    def _n(col: str) -> str:
-        return f'CAST(CAST("{col}" AS decimal(10,2)) AS double)'
-
-    v["summary_view"] = ViewSpec(
-        "summary_view", fact, None,
-        computed=[
-            _dt("date_time", fact),
-            # zero-guard quirk F8: every '0' digit → '1' (0→1, 10→11, 200→211)
-            ("optimizationPercent",
-             lambda f: (F.lit(1.0)
-                        - f["resourcesflagged"].cast(DecimalType(10, 2)).cast("double")
-                        / pc.zero_guard_decimal(f["resourcesprocessed"]).cast("double")
-                        ) * F.lit(100.0),
-             f"(1 - ({_n('resourcesflagged')} / {_guard_d})) * 100"),
-            ("trueoptimizationPercent",
-             lambda f: (F.lit(1.0)
-                        - (f["resourcesflagged"].cast(DecimalType(10, 2)).cast("double")
-                           - (f["resourcesignored"].cast(DecimalType(10, 2)).cast("double")
-                              + f["resourcessuppressed"].cast(DecimalType(10, 2)).cast("double")))
-                        / pc.zero_guard_decimal(f["resourcesprocessed"]).cast("double")
-                        ) * F.lit(100.0),
-             f"(1 - (({_n('resourcesflagged')} - ({_n('resourcesignored')} + "
-             f"{_n('resourcessuppressed')})) / {_guard_d})) * 100"),
-        ])
-
-    fact = "check_z4aubrnsmz"
-    v["UnassociatedElasticIPAddresses_view"] = ViewSpec(
-        "UnassociatedElasticIPAddresses_view", fact, None,
-        computed=[_dt("date_time", fact)])
-
-    fact = "check_cx3c2r1chu"
-    v["EC2ReservedInstancesOptimization_view"] = ViewSpec(
-        "EC2ReservedInstancesOptimization_view", fact, None, executed=False,
-        computed=[
-            _dt("date_time", fact),
-            _money("estimated_savings_with_recommendation_monthly", fact,
-                   "estimated savings with recommendation monthly"),
-            _money("upfront_cost_of_ris", fact, "upfront cost of ris"),
-            _money("estimated_cost_of_ris_monthly", fact, "estimated cost of ris monthly"),
-            _money("estimated_on-demand_cost_post_recommended_ri_purchase_monthly", fact,
-                   "estimated on-demand cost post recommended ri purchase monthly"),
-        ])
-    return v
+def _money_rds(alias: str, col: str) -> Computed:
+    """RDS form (:116): double 2-arg replace, '$' then '"'; no substr."""
+    return Computed(alias, lambda d, ref: (
+        f"CAST(rtrim(replace(replace({ref(col)}, '$', ''), '\"', '')) AS decimal(10,2))"), True)
 
 
-VIEWS: dict[str, ViewSpec] = _specs()
+def _pct(alias: str, col: str, n: int) -> Computed:
+    """Positional truncation of percent-ish strings ('2.3%  Low' → 2.3),
+    create-athena-views:88-89."""
+    return Computed(alias, lambda d, ref: (
+        f"CAST(substr({ref(col)}, 1, {n}) AS decimal(10,4))"), True)
+
+
+def _iso_ts(alias: str, col: str) -> Computed:
+    """ISO-8601 expiration date: 'T' → ' ', then F1 (create-athena-views:133)."""
+    return Computed(alias, lambda d, ref: d.ts_ymd_hms(
+        f"substr(replace({ref(col)}, 'T', ' '), 1, 19)"))
+
+
+def _zero_guard(col: str) -> Render:
+    """The summary_view divide-by-zero guard quirk, reproduced bit-for-bit:
+    ``CAST(replace(CAST(x AS varchar), '0', '1') AS decimal(10,2))``
+    (create-athena-views-lambda.py:147-148) replaces EVERY '0' digit, so
+    0→1, 10→11, 100→111, 200→211. Mathematically wrong but required for
+    oracle parity with the reference."""
+    return lambda d, ref: f"CAST(replace({d.str_cast(ref(col))}, '0', '1') AS decimal(10,2))"
+
+
+def _summary_pct(alias: str, ignored: bool) -> Computed:
+    """``(1 - (flagged [- (ignored + suppressed)]) / guard(processed)) * 100``
+    in DOUBLE over decimal(10,2) counts (create-athena-views:147-148)."""
+    def render(d: Dialect, ref: Callable[[str], str]) -> str:
+        def n(col):
+            return f"CAST(CAST({ref(col)} AS decimal(10,2)) AS double)"
+        num = n("resourcesflagged")
+        if ignored:
+            num = f"({num} - ({n('resourcesignored')} + {n('resourcessuppressed')}))"
+        guard = _zero_guard("resourcesprocessed")(d, ref)
+        return f"(1 - ({num} / CAST({guard} AS double))) * 100"
+    return Computed(alias, render)
+
+
+VIEWS: dict[str, ViewSpec] = {v.name: v for v in (
+    ViewSpec("LowUtilizationAmazonEC2Instances_view", "check_qch7dwoux1", "instance id", (
+        _dt(),
+        _pct("average_cpu_utilization_14_days", "14-day average cpu utilization", 3),
+        # alias literally contains '/' and a space (create-athena-views:89)
+        _pct("average_network_i/o_utilization_14 days", "14-day average network i/o", 4),
+        _money("estimated_monthly_savings", "estimated monthly savings"))),
+    ViewSpec("UnderutilizedAmazonEBSVolumes_view", "check_davu99dc4c", "volume id", (
+        _dt(),
+        _money("Monthly_Storage_Cost", "monthly storage cost"))),
+    ViewSpec("IdleLoadBalancers_view", "check_hjlmh88um8", "load balancer name", (
+        _dt(),
+        _money("estimated_monthly_savings", "estimated monthly savings"))),
+    ViewSpec("AmazonRDSIdleDBInstances_view", "check_ti39halfu8", "db instance name", (
+        _dt(),
+        _money_rds("estimated_monthly_savings", "estimated monthly savings on demand"))),
+    ViewSpec("UnderutilizedAmazonRedshiftClusters_view", "check_g31sq1e9u", "cluster",
+             (_dt(),)),
+    ViewSpec("EC2ReservedInstanceLeaseExpiration_view", "check_1e93e4c0b5", None, (
+        _dt(),
+        _money("current_monthly_cost", "current monthly cost"),
+        _money("estimated_monthly_savings", "estimated monthly savings"),
+        _iso_ts("expiration_date", "expiration date"))),
+    ViewSpec("Route53LatencyResourceRecordSets_view", "check_51fc20e7i2", "hosted zone name",
+             (_dt(),)),
+    ViewSpec("summary_view", "summary", None, (
+        _dt(),
+        _summary_pct("optimizationPercent", ignored=False),
+        _summary_pct("trueoptimizationPercent", ignored=True))),
+    ViewSpec("UnassociatedElasticIPAddresses_view", "check_z4aubrnsmz", None, (_dt(),)),
+    # defined by the reference but absent from its executed list (:153-162)
+    ViewSpec("EC2ReservedInstancesOptimization_view", "check_cx3c2r1chu", None, (
+        _dt(),
+        _money("estimated_savings_with_recommendation_monthly",
+               "estimated savings with recommendation monthly"),
+        _money("upfront_cost_of_ris", "upfront cost of ris"),
+        _money("estimated_cost_of_ris_monthly", "estimated cost of ris monthly"),
+        _money("estimated_on-demand_cost_post_recommended_ri_purchase_monthly",
+               "estimated on-demand cost post recommended ri purchase monthly"))),
+)}
+
+
+def view_sql(d: Dialect, name: str, with_tags: bool, boundary_double: bool) -> str:
+    """The view's ``SELECT`` in dialect ``d``; the tags join only when
+    ``with_tags`` and the view has a join key. ``boundary_double`` casts
+    the decimal computed columns to DOUBLE (the oracle boundary)."""
+    spec = VIEWS[name]
+    fact, tags = d.ident(spec.fact), d.ident("tags")
+
+    def ref(col: str) -> str:
+        return f"{fact}.{d.ident(col)}"
+
+    cols = [f"{fact}.*"]
+    for c in spec.computed:
+        expr = c.render(d, ref)
+        if boundary_double and c.decimal:
+            expr = f"CAST({expr} AS double)"
+        cols.append(f"{expr} AS {d.ident(c.alias)}")
+    frm = f"FROM {fact}"
+    if with_tags and spec.join_key is not None:
+        cols += [f"{tags}.{d.ident(k)}" for k in TAG_KEYS]
+        frm += (f" LEFT JOIN {tags} ON ({ref(spec.join_key)} = {tags}.{d.ident('resourceid')}"
+                f" AND {ref('datetime')} = {tags}.{d.ident('datetime')})")
+    return "SELECT " + ",\n  ".join(cols) + "\n" + frm
 
 
 def view_df(spark: SparkSession, name: str, with_tags: bool | None = None,
             boundary_double: bool = True) -> DataFrame:
-    """Build the view as a DataFrame plan over the registered raw tables.
+    """The view as a DataFrame over the registered raw tables.
 
     ``with_tags=None`` resolves like the reference: join iff the view has
     a join key and the ``tags`` table exists in the catalog
@@ -211,56 +217,20 @@ def view_df(spark: SparkSession, name: str, with_tags: bool | None = None,
     measured 2-5x over sort-merge), sort-merge with skew handling when
     the dimension outgrows it.
     """
-    spec = VIEWS[name]
-    fact = spark.table(f"`{spec.fact}`")
     if with_tags is None:
-        with_tags = (spec.join_key is not None
+        with_tags = (VIEWS[name].join_key is not None
                      and spark.catalog.tableExists("tags"))
-    join = with_tags and spec.join_key is not None
-
-    # df[name] does exact-name lookup (no parsing), so spaces/'-'/'/' in the
-    # Glue-normalized raw column names are safe without backticks
-    sel: list[Column] = [fact[c] for c in fact.columns]
-    for alias, fn, _ in spec.computed:
-        sel.append(fn(fact).alias(alias))
-
-    if join:
-        tags = spark.table("tags")
-        cond = (fact[f"`{spec.join_key}`"] == tags["resourceid"]) & (
-            fact["datetime"] == tags["datetime"])
-        out = fact.join(tags, cond, "left").select(
-            *sel, *[tags[k] for k in TAG_KEYS])
-    else:
-        out = fact.select(*sel)
-
-    if boundary_double:
-        out = out.select(*[
-            out[f.name].cast("double").alias(f.name)
-            if isinstance(f.dataType, DecimalType) else out[f.name]
-            for f in out.schema.fields
-        ])
-    return out
+    return spark.sql(view_sql(SPARK, name, with_tags, boundary_double))
 
 
 def view_oracle_sql(name: str, with_tags: bool | None = None) -> str:
-    """Equivalent DuckDB SQL (fixture CTEs + the view body), decimal→double."""
+    """Equivalent DuckDB SQL (fixture CTEs + the view body), decimal→double.
+    ``with_tags=None`` joins whenever the view has a join key (the
+    fixtures always hold ``tags``)."""
     spec = VIEWS[name]
-    if with_tags is None:
-        with_tags = spec.join_key is not None
-    join = with_tags and spec.join_key is not None
-
-    tables = [spec.fact] + (["tags"] if join else [])
-    ctes = fixtures.duckdb_ctes(tables)
-    computed = ",\n  ".join(f'{dsql} AS "{alias}"' for alias, _, dsql in spec.computed)
-    tag_cols = "".join(f', "tags"."{k}"' for k in TAG_KEYS) if join else ""
-    if join:
-        frm = (f'FROM "{spec.fact}" LEFT JOIN "tags" ON '
-               f'("{spec.fact}"."{spec.join_key}" = "tags"."resourceid" '
-               f'AND "{spec.fact}"."datetime" = "tags"."datetime")')
-    else:
-        frm = f'FROM "{spec.fact}"'
-    return (f"WITH {ctes}\n"
-            f'SELECT "{spec.fact}".*,\n  {computed}{tag_cols}\n{frm}')
+    join = (with_tags is not False) and spec.join_key is not None
+    ctes = fixtures.duckdb_ctes([spec.fact] + (["tags"] if join else []))
+    return f"WITH {ctes}\n" + view_sql(DUCK, name, join, boundary_double=True)
 
 
 def register_views(spark: SparkSession,
@@ -269,15 +239,16 @@ def register_views(spark: SparkSession,
     Athena-DDL sink becomes createOrReplaceTempView). Views whose fact
     table was never ingested are skipped (the reference's crawler would
     not have created the table either). Existence is a catalog lookup,
-    and ``with_tags=None`` is resolved once for all views, so each fact
-    is analysed once, by its view."""
+    and ``with_tags=None`` is resolved once for all views. Each view is
+    published as a Dataset (analysed once, here), so a later
+    re-registration of its fact does not change it."""
     if with_tags is None:
         with_tags = spark.catalog.tableExists("tags")
     published = []
     for name, spec in VIEWS.items():
         if not spark.catalog.tableExists(spec.fact):
             continue
-        view_df(spark, name, with_tags=with_tags, boundary_double=False) \
+        spark.sql(view_sql(SPARK, name, with_tags, boundary_double=False)) \
             .createOrReplaceTempView(name)
         published.append(name)
     return published

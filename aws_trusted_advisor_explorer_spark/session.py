@@ -10,6 +10,7 @@ the DuckDB oracle.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -296,9 +297,13 @@ def drain_plane_timings() -> list[tuple[str, float]]:
 # @session_plane as the operator modules import
 SESSION_PLANES: dict[str, object] = {}
 
-# the one plane build now running: (label, its deps, the DataFrames it
-# pins), or None
-_BUILDING: tuple[str, tuple[str, ...], list] | None = None
+# per driver thread, the plane build it is running: ``current`` is
+# (label, its deps, the DataFrames it pins), or None
+_BUILDING = threading.local()
+
+
+def _building() -> tuple[str, tuple[str, ...], list] | None:
+    return getattr(_BUILDING, "current", None)
 
 
 def _session_planes(spark: SparkSession) -> dict:
@@ -331,7 +336,12 @@ def session_plane(label: str, deps: tuple[str, ...] = ()):
     plane raises, so one plane build never runs inside another. The
     entry is stored only when the build returns, so a build that raises
     leaves none and the next call retries. Labels are unique: they
-    name the plane's timing rows and its :func:`drop_planes` handle."""
+    name the plane's timing rows and its :func:`drop_planes` handle.
+
+    The running build is tracked per driver thread, so two threads may
+    build unrelated planes at once, each timed as its own row. Two
+    threads that miss the same plane of one session at once may both
+    build it; the last to finish keeps its entry."""
     import functools
     import time
 
@@ -346,28 +356,28 @@ def session_plane(label: str, deps: tuple[str, ...] = ()):
     def wrap(build):
         @functools.wraps(build)
         def ensure(spark, key=None):
-            global _BUILDING
-            if _BUILDING is not None and label not in _BUILDING[1]:
+            building = _building()
+            if building is not None and label not in building[1]:
                 raise RuntimeError(
-                    f"plane build {_BUILDING[0]!r} ensured {label!r}, "
-                    f"which is not among its deps {_BUILDING[1]}")
+                    f"plane build {building[0]!r} ensured {label!r}, "
+                    f"which is not among its deps {building[1]}")
             planes = _session_planes(spark)
             entry = planes.get(label)
             if entry is not None and (key is None or entry[0] == key):
                 return entry[1]
-            if _BUILDING is not None:
+            if building is not None:
                 raise RuntimeError(
-                    f"plane {label!r} would build inside {_BUILDING[0]!r}")
+                    f"plane {label!r} would build inside {building[0]!r}")
             planes.pop(label, None)
             for dep in dep_ensures:
                 dep(spark, key)
             pins: list = []
-            _BUILDING = (label, deps, pins)
+            _BUILDING.current = (label, deps, pins)
             t0 = time.perf_counter()
             try:
                 value = build(spark, key)
             finally:
-                _BUILDING = None
+                _BUILDING.current = None
             record_plane(label, time.perf_counter() - t0)
             planes[label] = (key, value, pins)
             return value
@@ -395,11 +405,12 @@ def materialize_plane_df(df, view_name: str):
     (``localCheckpoint(eager=True)``: executor-local blocks, lineage
     cut), register it under ``view_name`` and pin it in the plane's
     entry; returns the checkpointed DataFrame."""
-    if _BUILDING is None:
+    building = _building()
+    if building is None:
         raise RuntimeError(
             f"materialize_plane_df({view_name!r}) outside a @session_plane "
             f"build: the view would have no plane entry to pin it")
     df = df.localCheckpoint(eager=True)
     df.createOrReplaceTempView(view_name)
-    _BUILDING[2].append(df)
+    building[2].append(df)
     return df

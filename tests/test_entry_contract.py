@@ -107,6 +107,51 @@ def test_driver_threads_inherit_the_job_group():
         assert starts.search(f.read()), "the scan no longer sees the ingest pool"
 
 
+def test_two_threads_build_unrelated_planes_at_once():
+    """The running plane build is tracked per driver thread: two threads
+    that each ensure an unrelated plane on their own session, with both
+    builds running at once (each waits for the other inside its build),
+    both get their values, and both builds are timed as rows."""
+    import threading
+    import time
+    import types
+
+    from aws_trusted_advisor_explorer_spark import session as sess
+
+    both_running = threading.Barrier(2, timeout=5)
+
+    def build(s, key):
+        both_running.wait()
+        time.sleep(0.3)
+        return s.name
+
+    labels = ("probe_a", "probe_b")
+    got, errors = {}, []
+
+    def run(ensure, label):
+        try:
+            got[label] = ensure(types.SimpleNamespace(name=label))
+        except Exception as e:  # noqa: BLE001 - reported by the assert
+            errors.append(e)
+
+    try:
+        ensures = {lb: sess.session_plane(lb)(build) for lb in labels}
+        sess.drain_plane_timings()
+        threads = [threading.Thread(target=run, args=(ensures[lb], lb))
+                   for lb in labels]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        rows = sess.drain_plane_timings()
+    finally:
+        for lb in labels:
+            sess.SESSION_PLANES.pop(lb, None)
+    assert not errors, errors
+    assert got == {lb: lb for lb in labels}
+    assert sorted(lb for lb, _ in rows) == list(labels)
+
+
 def test_entry_imports_package_from_its_own_checkout(tmp_path):
     """``__spark_entry__`` imported from a copy of the checkout resolves
     the package inside that copy, ahead of its fixed fallback path."""
@@ -415,9 +460,6 @@ KEEP = {
     "mask_name_email": "reference log masking of names and emails",
     "arn_to_resource_id": "reference tag ARN to resource id rule",
     "CATEGORY": "reference check category",
-    # skew handling for a deployment whose join key is skewed
-    "salted_join": "salted skew join, equal to the plain join (tested)",
-    "SALT_COL": "salt column of salted_join",
 }
 
 

@@ -1,20 +1,21 @@
-"""Property-based tests (hypothesis) for the Presto-compat scalar shims
-and the cross-engine hash primitives: arbitrary generated inputs must
-produce identical results in Spark and DuckDB, not just the fixture
-corpus (SURVEY.md §5.2 strategy; the §2.5 function matrix incl. the F8
-zero-guard quirk)."""
+"""Property-based tests (hypothesis) for the view layer's Presto-semantics
+renderers and the cross-engine hash primitives: arbitrary generated
+inputs must produce identical results in Spark and DuckDB, not just the
+fixture corpus (SURVEY.md §5.2 strategy; the §2.5 function matrix incl.
+the F8 zero-guard quirk)."""
 
 from __future__ import annotations
+
+import datetime as dt
+from decimal import Decimal
 
 import duckdb
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from pyspark.sql import functions as F
-
-from aws_trusted_advisor_explorer_spark.functions import presto_compat as pc
 from aws_trusted_advisor_explorer_spark.functions.dual import DUCK, SPARK
+from aws_trusted_advisor_explorer_spark.plans import views
 
 SETTINGS = dict(max_examples=20, deadline=None,
                 suppress_health_check=[HealthCheck.function_scoped_fixture])
@@ -34,16 +35,21 @@ def _duck(sql: str):
     return _CON.sql(sql).fetchone()[0]
 
 
+def _render_both(spark, render, value: str):
+    """``render`` applied to the string literal ``value`` (every column
+    the renderer reads is that literal), evaluated in Spark and in
+    DuckDB."""
+    assert "'" not in value and "\\" not in value
+    lit = f"'{value}'"
+    sp = spark.sql(f"SELECT {render(SPARK, lambda _: lit)} AS v").collect()[0].v
+    return sp, _duck(f"SELECT {render(DUCK, lambda _: lit)} AS v")
+
+
 @given(money_st)
 @settings(**SETTINGS)
 def test_money_parse_matches_duckdb(spark, s):
-    spark_val = (spark.range(1)
-                 .select(pc.money_to_decimal(F.lit(s)).cast("double").alias("v"))
-                 .collect()[0].v)
-    duck_val = _duck(
-        "SELECT CAST(CAST(rtrim(replace(substr(?, 2), '$', '')) AS decimal(18,2)) AS double)"
-        .replace("?", f"'{s}'"))
-    assert spark_val == duck_val
+    sp, du = _render_both(spark, views._money("v", "x").render, s)
+    assert sp == du == Decimal(s.strip()[1:])
 
 
 @given(st.integers(0, 10**7))
@@ -56,14 +62,45 @@ def test_zero_guard_quirk_matches_duckdb(spark, n):
     value that overflows decimal(10,2), which BOTH engines reject
     (Spark ANSI and DuckDB error alike) — faithful to the reference's
     quirk, but outside the value-comparable domain."""
-    spark_val = (spark.range(1)
-                 .select(pc.zero_guard_decimal(F.lit(str(n))).cast("double").alias("v"))
-                 .collect()[0].v)
-    duck_val = _duck(
-        f"SELECT CAST(CAST(replace(CAST('{n}' AS string), '0', '1') "
-        f"AS decimal(10,2)) AS double)")
-    assert spark_val == duck_val
-    assert spark_val == float(str(n).replace("0", "1"))
+    sp, du = _render_both(spark, views._zero_guard("x"), str(n))
+    assert sp == du == Decimal(str(n).replace("0", "1"))
+
+
+# (renderer, inputs, expected value) for the view columns the fixture
+# oracle alone covered: the RDS double 2-arg replace, the positional
+# percent substr and the ISO-8601 expiration parse
+_pct_st = st.builds(
+    lambda whole, frac, tail: f"{whole}.{frac:02d}%{tail}",
+    st.integers(0, 9), st.integers(0, 99),
+    st.sampled_from(["", "  Low", " ", "%"]))
+_iso_st = st.builds(
+    lambda t, tail: t.strftime("%Y-%m-%dT%H:%M:%S") + tail,
+    st.datetimes(dt.datetime(1971, 1, 1), dt.datetime(2099, 12, 31)),
+    st.sampled_from(["", "Z", ".000Z", "+00:00"]))
+RENDER_CASES = {
+    "money_rds": (views._money_rds("v", "x").render,
+                  st.builds(lambda q, dollars, cents, trail:
+                            f'{q}${dollars}.{cents:02d}{q}' + " " * trail,
+                            st.sampled_from(["", '"']), st.integers(0, 10**6),
+                            st.integers(0, 99), st.integers(0, 2)),
+                  lambda s: Decimal(s.strip().strip('"')[1:])),
+    "pct_3": (views._pct("v", "x", 3).render, _pct_st, lambda s: Decimal(s[:3])),
+    "pct_4": (views._pct("v", "x", 4).render, _pct_st, lambda s: Decimal(s[:4])),
+    "iso_expiration": (views._iso_ts("v", "x").render, _iso_st,
+                       lambda s: dt.datetime.fromisoformat(s[:19])),
+}
+
+
+@pytest.mark.parametrize("case", sorted(RENDER_CASES))
+@given(data=st.data())
+@settings(**SETTINGS)
+def test_view_renderer_matches_duckdb(spark, case, data):
+    """Each view renderer gives the same value in Spark and DuckDB, and
+    the value the reference's Presto expression means."""
+    render, inputs, expect = RENDER_CASES[case]
+    s = data.draw(inputs)
+    sp, du = _render_both(spark, render, s)
+    assert sp == du == expect(s)
 
 
 @given(texts_st)
@@ -101,10 +138,11 @@ def test_dot_fold_bit_identical(spark, xs):
 
 
 def test_presto_two_arg_replace_deletes(spark):
-    row = (spark.range(1)
-           .select(pc.presto_replace(F.lit("$1,234$"), "$").alias("v"))
-           .collect()[0])
-    assert row.v == "1,234"
+    """Presto's 2-arg replace deletes every match ('$' anywhere, and '"'
+    in the RDS form), in both engines."""
+    for render, s, want in ((views._money("v", "x").render, "$$12$34.5$ ", "1234.50"),
+                            (views._money_rds("v", "x").render, '"$12$34.5"', "1234.50")):
+        assert _render_both(spark, render, s) == (Decimal(want), Decimal(want))
 
 
 @given(texts_st, st.integers(2, 5))

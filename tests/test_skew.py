@@ -1,35 +1,10 @@
-"""Salted join must be result-identical to the plain join on a skewed
-key distribution (functions/skew.py)."""
+"""Skew fixture for the MinHash LSH band join: a hot band bucket stays
+bounded by its size, agrees with the DuckDB oracle, and AQE's skew join
+is on to split its shuffle partition at scale."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
-from aws_trusted_advisor_explorer_spark.functions.skew import salted_join
 from tests.conftest import canonicalize
-
-
-@pytest.mark.parametrize("how", ["inner", "left"])
-def test_salted_join_equals_plain_join(spark, how):
-    # heavily skewed: ~90% of events share one synthetic hot key
-    big = spark.table("events").select(
-        F.when(F.col("event_id") % 10 < 9, F.lit(0))
-        .otherwise(F.col("event_id") % 100).alias("k"),
-        "event_id", "value")
-    small = spark.range(0, 50).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("dim_val"))
-
-    plain = canonicalize(big.join(small, ["k"], how).toPandas())
-    salted = canonicalize(salted_join(big, small, ["k"], how=how).toPandas())
-    assert list(plain.columns) == list(salted.columns)
-    assert plain.equals(salted)
-
-
-def test_salted_join_rejects_unsupported_how(spark):
-    df = spark.range(1)
-    with pytest.raises(ValueError):
-        salted_join(df, df, ["id"], how="full")
 
 
 def test_minhash_lsh_hot_band_fixture(spark):

@@ -29,14 +29,18 @@ def test_view_no_tags(spark, ddb, name):
     assert_matches_oracle(df, ddb, views.view_oracle_sql(name, with_tags=False))
 
 
-def test_zero_guard_values(spark):
-    """F8: resourcesprocessed 0→1, 10→11, 100→111, 200→211."""
-    from aws_trusted_advisor_explorer_spark.functions.presto_compat import zero_guard_decimal
-    from pyspark.sql import functions as F
+def test_zero_guard_values(spark, ddb):
+    """F8: resourcesprocessed 0→1, 10→11, 100→111, 200→211, in both
+    engines."""
+    from aws_trusted_advisor_explorer_spark.functions.dual import DUCK, SPARK
 
-    df = spark.createDataFrame([("0",), ("10",), ("100",), ("200",)], ["x"])
-    got = [r[0] for r in df.select(zero_guard_decimal(F.col("x")).alias("g")).collect()]
-    assert [str(v) for v in got] == ["1.00", "11.00", "111.00", "211.00"]
+    guard = views._zero_guard("x")
+    for d, run in ((SPARK, lambda q: spark.sql(q).collect()),
+                   (DUCK, lambda q: ddb.sql(q).fetchall())):
+        got = [r[0] for r in run(
+            f"SELECT {guard(d, lambda _: 'x')} AS g "
+            f"FROM (VALUES ('0'), ('10'), ('100'), ('200')) AS t(x)")]
+        assert [str(v) for v in got] == ["1.00", "11.00", "111.00", "211.00"], d.name
 
 
 def test_view_registration(spark):
@@ -67,3 +71,24 @@ def test_register_views_publishes_exactly_the_ingested_facts(spark):
     assert set(views.TAG_KEYS) <= set(ns.table(tagged).columns)
     assert not set(views.TAG_KEYS) & set(ns.table(untagged).columns)
     assert ns.table(tagged).count() == raw["check_qch7dwoux1"].count()
+
+
+def test_register_views_builds_no_column_trees(spark, monkeypatch):
+    """Publishing renders each view as SQL text: a catalog lookup, one
+    ``spark.sql`` and one temp-view registration per view, with no
+    Column tree built through py4j column by column. Bound: at most 10
+    py4j commands per published view."""
+    from py4j.java_gateway import GatewayClient
+
+    calls = []
+    send = GatewayClient.send_command
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    published = views.register_views(spark)
+    monkeypatch.undo()
+    assert len(published) == len(views.VIEWS)
+    assert len(calls) <= 10 * len(published), len(calls)
