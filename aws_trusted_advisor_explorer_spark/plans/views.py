@@ -248,7 +248,7 @@ def register_views(spark: SparkSession,
     for name, spec in VIEWS.items():
         if not spark.catalog.tableExists(spec.fact):
             continue
-        spark.sql(view_sql(SPARK, name, with_tags, boundary_double=False)) \
+        view_df(spark, name, with_tags=with_tags, boundary_double=False) \
             .createOrReplaceTempView(name)
         published.append(name)
     return published

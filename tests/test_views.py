@@ -77,14 +77,20 @@ def test_register_views_builds_no_column_trees(spark, monkeypatch):
     """Publishing renders each view as SQL text: a catalog lookup, one
     ``spark.sql`` and one temp-view registration per view, with no
     Column tree built through py4j column by column. Bound: at most 10
-    py4j commands per published view."""
+    py4j commands per published view. Only this thread's commands count:
+    py4j's finalizer thread sends the deletes of objects freed earlier,
+    once a second, whenever it wakes."""
+    import threading
+
     from py4j.java_gateway import GatewayClient
 
     calls = []
     send = GatewayClient.send_command
+    caller = threading.current_thread()
 
     def counting(self, *args, **kwargs):
-        calls.append(1)
+        if threading.current_thread() is caller:
+            calls.append(1)
         return send(self, *args, **kwargs)
 
     monkeypatch.setattr(GatewayClient, "send_command", counting)
