@@ -92,14 +92,14 @@ class Dialect:
     def chars(self, c: str) -> str:
         return f"split({c}, '')" if self.name == "spark" else f"string_split({c}, '')"
 
-    def arr_join(self, a: str, sep: str = " ") -> str:
-        """Join array elements into one string. DuckDB's
+    def arr_join(self, a: str) -> str:
+        """Join array elements into one space-separated string. DuckDB's
         array_to_string returns NULL for an EMPTY array where Spark's
         concat_ws returns '' — coalesce aligns the zero-token edge
         (all-non-alnum documents) across engines."""
         if self.name == "spark":
-            return f"concat_ws('{sep}', {a})"
-        return f"coalesce(array_to_string({a}, '{sep}'), '')"
+            return f"concat_ws(' ', {a})"
+        return f"coalesce(array_to_string({a}, ' '), '')"
 
     def poly_hash(self, s: str) -> str:
         """Deterministic string hash: fold (acc*31 + ascii(ch)) % P over chars."""

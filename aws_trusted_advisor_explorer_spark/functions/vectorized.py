@@ -82,19 +82,18 @@ def make_lsh_bucket(n_planes: int):
     return lsh_bucket
 
 
-def make_broadcast_model_udf(bc, kernel, ret: str = "long"):
-    """Arrow-batched scalar UDF over one input column (string token,
-    hash array, probe array, ...), closing
+def make_broadcast_model_udf(bc, kernel):
+    """Arrow-batched bigint scalar UDF over one input column, closing
     over a SparkContext BROADCAST variable ``bc`` holding a frozen
-    model (BPE merge list, eval-hash set, token weights, ...) and a
-    pure-Python ``kernel(token, model) -> value``. This is the
+    model (the BPE merge list) and a pure-Python
+    ``kernel(token, model) -> int``. This is the
     real-cluster mechanics for models too large to ride the plan as
     literals: the model ships to each executor ONCE via the broadcast
     machinery, not once per task closure and never inside the plan
     string. Defined here (not at the call site) so the pd.Series type
     hints resolve against this module's globals."""
 
-    @pandas_udf(ret)
+    @pandas_udf("long")
     def apply_model(tok: pd.Series) -> pd.Series:
         model = bc.value
         return tok.map(lambda t: kernel(t, model))

@@ -870,16 +870,14 @@ def ensure_semdedup_pairs(spark, key: object = None):
     return spark.table(SEM_PAIRS_VIEW)
 
 
-def semdedup_prune_report_df(spark, pairs=None):
-    """DF twin of :func:`semdedup_prune_report` built on
-    :func:`semdedup_pairs_df` (same drop rule: a vector is dropped iff
-    it is the HIGHER id of any above-threshold pair). Pass ``pairs``
-    (e.g. the materialized SEM_PAIRS_VIEW) to reuse an already-built
-    pair relation."""
+def semdedup_prune_report_df(spark, pairs):
+    """DF twin of :func:`semdedup_prune_report` over ``pairs``, the
+    materialized pair plane (:func:`ensure_semdedup_pairs`); same drop
+    rule: a vector is dropped iff it is the HIGHER id of any
+    above-threshold pair."""
     from pyspark.sql import functions as F
 
-    pr = pairs if pairs is not None else semdedup_pairs_df(spark)
-    drops = (pr.select(F.col("vec_b").alias("vec_id")).distinct()
+    drops = (pairs.select(F.col("vec_b").alias("vec_id")).distinct()
              .withColumn("dropped", F.lit(1)))
     asg = spark.table(ASG_VIEW).select("vec_id", "cluster_id")
     base = (asg.join(drops, "vec_id", "left")

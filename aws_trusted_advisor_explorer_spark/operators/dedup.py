@@ -775,8 +775,7 @@ def ensure_ngram_common_view(spark, key: object = None) -> str:
     return NGRAM_COMMON_VIEW
 
 
-def dedup_ngram_jaccard(d: Dialect, base: str | None = None,
-                        common_view: str | None = None) -> str:
+def dedup_ngram_jaccard(d: Dialect, common_view: str | None = None) -> str:
     """Exact n-gram Jaccard near-dup pairs via the shared-shingle join
     (ground truth for the MinHash variant; shuffle-heavy at 100 TB —
     see module doc). Guarded against hot-shingle candidate explosion:
@@ -786,7 +785,7 @@ def dedup_ngram_jaccard(d: Dialect, base: str | None = None,
     surviving shingles in BOTH dialects. With ``common_view`` (the
     session pair-aggregate plane) the report is a plane scan + the
     same ratio filter."""
-    return f"""{_ngram_common_cte(d, base, common_view)}
+    return f"""{_ngram_common_cte(d, None, common_view)}
 SELECT ia AS doc_a, ib AS doc_b,
   cast(n_common as double) / (na + nb - n_common) AS jaccard
 FROM common
@@ -796,8 +795,7 @@ WHERE cast(n_common as double) / (na + nb - n_common) >= {JACCARD_THRESHOLD}"""
 CONTAIN_THRESHOLD = 0.8  # min |A∩B| / min(|A|,|B|) to report a pair
 
 
-def dedup_containment(d: Dialect, base: str | None = None,
-                      common_view: str | None = None) -> str:
+def dedup_containment(d: Dialect, common_view: str | None = None) -> str:
     """Asymmetric shingle containment: pairs where the SMALLER document's
     shingle set is mostly inside the larger one's —
     ``containment = |S_A ∩ S_B| / min(|S_A|, |S_B|)``. Catches
@@ -812,7 +810,7 @@ def dedup_containment(d: Dialect, base: str | None = None,
     the two queries share the materialized shingle view at scale —
     and, since r13, the materialized pair aggregate itself
     (``common_view`` — :func:`ensure_ngram_common_view`)."""
-    return f"""{_ngram_common_cte(d, base, common_view)}
+    return f"""{_ngram_common_cte(d, None, common_view)}
 SELECT ia AS doc_a, ib AS doc_b,
   cast(n_common as bigint) AS n_common,
   cast(n_common as double) / na AS contain_a_in_b,
@@ -1303,14 +1301,13 @@ def ensure_minhash_pairs_view(spark, key: object = None) -> str:
     return MINHASH_PAIRS_VIEW
 
 
-def _pairs_cte(d: Dialect, base: str | None,
-               pairs_view: str | None) -> str:
+def _pairs_cte(d: Dialect, pairs_view: str | None) -> str:
     """The MinHash pair relation body: the materialized pairs view
     (Spark session plane) when given, else the inline self-contained
     pipeline (DuckDB oracle, standalone tests)."""
     if pairs_view is not None:
         return f"SELECT doc_a, doc_b, jaccard FROM {pairs_view}"
-    return dedup_minhash_lsh(d, base)
+    return dedup_minhash_lsh(d)
 
 
 def dedup_bloom_prefilter(d: Dialect, base: str | None = None) -> str:
@@ -1401,8 +1398,7 @@ LEFT JOIN (SELECT DISTINCT ckey FROM ck
 INCREMENTAL_BATCH_SOURCE = "src0"  # the "incoming crawl" slice in tests
 
 
-def dedup_incremental(d: Dialect, base: str | None = None,
-                      pairs_view: str | None = None) -> str:
+def dedup_incremental(d: Dialect, pairs_view: str | None = None) -> str:
     """Incremental (batch-vs-corpus) dedup: each document of the
     incoming batch (``source = '{INCREMENTAL_BATCH_SOURCE}'``) gets a
     verdict against the EXISTING corpus (every other source) —
@@ -1420,7 +1416,7 @@ def dedup_incremental(d: Dialect, base: str | None = None,
     join/verdict shape is identical. Near-dup candidates reuse
     :func:`dedup_minhash_lsh` (band join + Jaccard verify + hot-band
     star guard) so the two operators share one signature pipeline."""
-    pairs = _pairs_cte(d, base, pairs_view)
+    pairs = _pairs_cte(d, pairs_view)
     return f"""WITH mh_pairs AS (
 {pairs}
 ),
@@ -1514,7 +1510,7 @@ cand AS (
 SELECT ia AS doc_a, ib AS doc_b, hamming FROM cand"""
 
 
-def dedup_embedding_cosine(d: Dialect, asg: str | None = None) -> str:
+def dedup_embedding_cosine(d: Dialect) -> str:
     """Embedding-cosine near-dup pairs, blocked by the LEARNED KMeans
     cell (clusterops.kmeans_assign) — the block key that exists at
     100 TB, where no metadata label does and the blocks must track the
@@ -1534,7 +1530,7 @@ def dedup_embedding_cosine(d: Dialect, asg: str | None = None) -> str:
     )
 
     cos = d.dot("a.embedding", "b.embedding")
-    return f"""WITH {_member_cte(d, asg)},
+    return f"""WITH {_member_cte(d)},
 p AS (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
     {cos} / (a.nrm * b.nrm) AS cosine
@@ -1593,8 +1589,7 @@ def dedup_embedding_cosine_df(spark, key: object = None):
             .select("vec_a", "vec_b", "cosine"))
 
 
-def dedup_clusters_df(spark, base: str | None = None,
-                      pairs_view: str | None = None):
+def dedup_clusters_df(spark, pairs_view: str):
     """Near-dup CLUSTER assignment: connected components over the
     MinHash pair graph, as iterative min-label propagation on
     DataFrames (the Spark-native CC algorithm — each round is one
@@ -1606,8 +1601,8 @@ def dedup_clusters_df(spark, base: str | None = None,
     Cost discipline for the loop (matters at 1000-executor scale just
     as much as on local[32], where per-job scheduling overhead
     dominates this graph):
-    - the pair graph is localCheckpointed ONCE, so no round replays
-      the MinHash pipeline;
+    - the pair graph is read from the materialized pairs plane
+      (``pairs_view``), so no round replays the MinHash pipeline;
     - round 0 is folded into initialization (label = min(id,
       min neighbor)) — one aggregation instead of a full round;
     - each round runs exactly ONE job: the changed-count action
@@ -1620,12 +1615,7 @@ def dedup_clusters_df(spark, base: str | None = None,
     side iterates instead."""
     from pyspark.sql import functions as F
 
-    from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-
-    pairs = (spark.table(pairs_view).select("doc_a", "doc_b")
-             if pairs_view is not None else
-             spark.sql(dedup_minhash_lsh(SPARK, base))
-             .select("doc_a", "doc_b").localCheckpoint(eager=True))
+    pairs = spark.table(pairs_view).select("doc_a", "doc_b")
     edges = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"),
                      F.col("doc_a").alias("doc_b")))
@@ -1739,8 +1729,7 @@ SELECT dd.doc_id, cl.cluster_id,
 FROM documents dd LEFT JOIN cl ON cl.doc_id = dd.doc_id"""
 
 
-def docs_near_dedup_apply_df(spark, base: str | None = None,
-                             pairs_view: str | None = None):
+def docs_near_dedup_apply_df(spark, pairs_view: str):
     """The near-dup dedup ACTION (the step that produces the actual
     drop list): MinHash pair graph → connected components
     (dedup_clusters_df's iterative min-label propagation) → keep the
@@ -1756,7 +1745,7 @@ def docs_near_dedup_apply_df(spark, base: str | None = None,
     closure + the same rule."""
     from pyspark.sql import functions as F
 
-    clusters = dedup_clusters_df(spark, base=base, pairs_view=pairs_view)
+    clusters = dedup_clusters_df(spark, pairs_view)
     docs = spark.sql("SELECT doc_id FROM documents")
     return (docs.join(F.broadcast(clusters), "doc_id", "left")
             .selectExpr(
@@ -1792,8 +1781,7 @@ SELECT
 FROM t"""
 
 
-def docs_dedup_savings_df(spark, base: str | None = None,
-                          pairs_view: str | None = None):
+def docs_dedup_savings_df(spark, pairs_view: str):
     """The dedup business case in one row: how many documents and
     exact tokens the near-dup drop list removes — the number a
     curation run reports before committing the deletion. Composes the
@@ -1804,8 +1792,7 @@ def docs_dedup_savings_df(spark, base: str | None = None,
 
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK as d
 
-    verdicts = docs_near_dedup_apply_df(spark, base=base,
-                                        pairs_view=pairs_view)
+    verdicts = docs_near_dedup_apply_df(spark, pairs_view)
     toks = spark.sql(
         f"SELECT doc_id, cast({d.arr_len(d.tokens('text'))} as bigint) "
         f"AS n_toks FROM documents")
@@ -1826,7 +1813,7 @@ def docs_dedup_savings_df(spark, base: str | None = None,
         .alias("token_savings_pct"))
 
 
-def docs_dedup_rate_by_source(d: Dialect, base: str | None = None,
+def docs_dedup_rate_by_source(d: Dialect,
                               pairs_view: str | None = None) -> str:
     """Per-source near-dup rate report: for each ``source``, the doc
     count, how many docs appear in at least one MinHash near-dup pair,
@@ -1838,7 +1825,7 @@ def docs_dedup_rate_by_source(d: Dialect, base: str | None = None,
     small aggregation over documents keyed by doc_id — the pair set is
     tiny relative to the corpus, so the extra join is dimension-sized.
     """
-    pairs = _pairs_cte(d, base, pairs_view)
+    pairs = _pairs_cte(d, pairs_view)
     return f"""WITH mh_pairs AS (
 {pairs}
 ),
@@ -1860,8 +1847,7 @@ PR_SCALE = 1_000_000_000       # rank fixed-point scale
 PR_DAMP_NUM, PR_DAMP_DEN = 85, 100   # damping 0.85 as an exact rational
 
 
-def dedup_graph_pagerank(d: Dialect, base: str | None = None,
-                         pairs_view: str | None = None) -> str:
+def dedup_graph_pagerank(d: Dialect, pairs_view: str | None = None) -> str:
     """PageRank over the near-dup graph (MinHash pairs as undirected
     edges): high-rank nodes are the HUBS of duplication — boilerplate
     templates and mirror centers that pairwise lists bury. The corpus-
@@ -1883,7 +1869,7 @@ def dedup_graph_pagerank(d: Dialect, base: str | None = None,
     the unrolled form keeps the whole plan one Catalyst job and gives
     the DuckDB oracle the identical template."""
     pairs = (f"SELECT doc_a, doc_b FROM {pairs_view}" if pairs_view
-             else dedup_minhash_lsh(d, base))
+             else dedup_minhash_lsh(d))
     base_rank = d.idiv(
         f"cast({PR_SCALE} as bigint) * ({PR_DAMP_DEN} - {PR_DAMP_NUM})",
         str(PR_DAMP_DEN))
@@ -1914,30 +1900,21 @@ SELECT r.node AS doc_id, r.rank AS rank_scaled, g.d AS degree
 FROM r{PAGERANK_ITERS} r JOIN deg g ON g.src = r.node"""
 
 
-def dedup_graph_pagerank_df(spark, pairs_view: str | None = None):
-    """Spark-side PageRank entry: iterate over a MATERIALIZED pair
-    relation — Spark inlines CTEs, so the SQL form would re-run the
-    whole minhash pipeline for every reference to the edge list (2
-    directions x {PAGERANK_ITERS} iterations). With no ``pairs_view``
-    the session pair-graph plane (ensure_minhash_pairs_view — PageRank
-    is one of its named consumers) is built/reused. The persisted-
-    edge-list-then-iterate split is exactly how a cluster runs it; the
-    self-contained SQL stays as the DuckDB oracle (values identical —
-    pytest)."""
+def dedup_graph_pagerank_df(spark, pairs_view: str):
+    """Spark-side PageRank entry: iterate over the MATERIALIZED pair
+    relation ``pairs_view`` (the session pair-graph plane,
+    ensure_minhash_pairs_view) — Spark inlines CTEs, so the SQL form
+    would re-run the whole minhash pipeline for every reference to the
+    edge list (2 directions x {PAGERANK_ITERS} iterations). The
+    persisted-edge-list-then-iterate split is exactly how a cluster
+    runs it; the self-contained SQL stays as the DuckDB oracle (values
+    identical — pytest)."""
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK as SD
 
-    if pairs_view is None:
-        # reuse the session pair-graph plane (PageRank is one of its
-        # named consumers) instead of re-running the MinHash pipeline
-        # into an unmanaged checkpoint per call
-        pairs_view = ensure_minhash_pairs_view(spark)
     return spark.sql(dedup_graph_pagerank(SD, pairs_view=pairs_view))
 
 
-def dedup_lsh_recall(d: Dialect, base: str | None = None,
-                     pairs_view: str | None = None,
-                     n_perm: int = N_PERM,
-                     n_bands: int = N_BANDS,
+def dedup_lsh_recall(d: Dialect, pairs_view: str | None = None,
                      common_view: str | None = None) -> str:
     """MinHash-LSH acceptance gate: recall/precision of the banded LSH
     pair set vs the exact shared-shingle Jaccard join at the same
@@ -1957,26 +1934,11 @@ def dedup_lsh_recall(d: Dialect, base: str | None = None,
     relative to the corpus — near-dup pairs, not the cross product),
     so the outer join and the final one-row aggregate are negligible
     next to the candidate generation they audit; on the Spark side the
-    truth arm reuses the session-materialized shingle plane and the
-    LSH arm reads the materialized pair graph (``pairs_view``).
-
-    ``pairs_view`` and non-default ``n_perm``/``n_bands`` are mutually
-    exclusive (ValueError): the materialized graph was built at the
-    default banding, so honoring both would silently audit the wrong
-    configuration. Non-default fidelities regenerate the LSH arm
-    inline.
+    truth arm reads the materialized pair aggregate (``common_view``)
+    and the LSH arm the materialized pair graph (``pairs_view``).
     """
-    if pairs_view is not None and (n_perm, n_bands) != (N_PERM, N_BANDS):
-        raise ValueError(
-            "pairs_view holds a materialized pair graph built at the "
-            f"default ({N_PERM} perms, {N_BANDS} bands) configuration; "
-            "pass EITHER pairs_view OR non-default n_perm/n_bands, not "
-            "both (the view cannot represent the requested banding)")
-    truth = dedup_ngram_jaccard(d, base, common_view=common_view)
-    lsh = (_pairs_cte(d, base, pairs_view)
-           if (n_perm, n_bands) == (N_PERM, N_BANDS)
-           else dedup_minhash_lsh(d, base, n_perm=n_perm,
-                                  n_bands=n_bands))
+    truth = dedup_ngram_jaccard(d, common_view=common_view)
+    lsh = _pairs_cte(d, pairs_view)
     return f"""WITH truth AS (
 {truth}
 ),
@@ -2019,7 +1981,7 @@ def _band_tuning_summary_sql(b: int, lsh_rel: str, truth_rel: str) -> str:
     ON t.doc_a = l.doc_a AND t.doc_b = l.doc_b"""
 
 
-def dedup_band_tuning(d: Dialect, base: str | None = None) -> str:
+def dedup_band_tuning(d: Dialect) -> str:
     """The dedup plane's measured RUNG-TUNING table (the
     knn_serving_report counterpart; SCALE.md's rung-selection table
     holds the analytic S-curve — this measures it on THIS corpus):
@@ -2046,11 +2008,11 @@ def dedup_band_tuning(d: Dialect, base: str | None = None) -> str:
     self-contained SQL references truth once per config, which DuckDB
     MATERIALIZED-hints and Spark CTE inlining would re-evaluate
     (docs_kmv_source_overlap rule), so it is the oracle."""
-    truth = dedup_ngram_jaccard(d, base)
+    truth = dedup_ngram_jaccard(d)
     ctes = [f"truth {d.cte_as()} (\n{truth}\n)"]
     summaries = []
     for b in BAND_LADDER:
-        lsh = dedup_minhash_lsh(d, base, n_perm=N_PERM, n_bands=b,
+        lsh = dedup_minhash_lsh(d, n_perm=N_PERM, n_bands=b,
                                 with_cand_count=True)
         ctes.append(f"l{b} AS (\n{lsh}\n)")
         summaries.append(f"  {_band_tuning_summary_sql(b, f'l{b}', 'truth')}")
@@ -2070,14 +2032,13 @@ SELECT s.n_bands, s.rows_per_band, s.n_candidates, s.n_pairs, s.n_hits,
 FROM s CROSS JOIN tn"""
 
 
-def dedup_band_tuning_df(spark, base: str,
-                         common_view: str | None = None,
-                         mh_view: str | None = None):
+def dedup_band_tuning_df(spark, base: str, common_view: str, mh_view: str):
     """Registered Spark form of :func:`dedup_band_tuning`: the exact
-    truth pair set materializes ONCE (lazy localCheckpoint — the
-    oracle's per-config truth references re-evaluate under Spark CTE
-    inlining), each band config runs its CANDIDATE generation exactly
-    once off the shared signature view, the exact-Jaccard verify join
+    truth pair set is a scan of the pair-aggregate plane
+    (``common_view``; the oracle's per-config truth references
+    re-evaluate under Spark CTE inlining), each band config runs its
+    CANDIDATE generation exactly once off the signature plane
+    (``mh_view``), the exact-Jaccard verify join
     (the expensive shingle-level stage) runs ONCE over the UNION of
     the ladder's candidate sets instead of once per config (r12
     optimization, guide §2.4 — a pair's verification is config-
@@ -2093,27 +2054,13 @@ def dedup_band_tuning_df(spark, base: str,
 
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
 
-    # with common_view (the session pair-aggregate plane, r13) the
-    # truth arm is a plane scan + ratio filter — the per-run lazy
-    # checkpoint only guards the self-contained fallback
+    # the truth arm is a plane scan + ratio filter
     truth = spark.sql(dedup_ngram_jaccard(
-        SPARK, base, common_view=common_view)).select("doc_a", "doc_b")
-    if common_view is None:
-        truth = truth.localCheckpoint(eager=False)
+        SPARK, common_view=common_view)).select("doc_a", "doc_b")
     t_hit = truth.withColumn("hit", F.lit(1))
-    # the signature relation is banding-independent: compute the
-    # N_PERM minima ONCE and let every config read the materialized
-    # view (4x the signature groupBy otherwise — measured 6.5 s -> ~3 s
-    # at sf0.1). With ``mh_view`` (the session sigs plane, r13) the
-    # ladder reads the already-materialized signatures instead of a
-    # per-run checkpoint.
-    if mh_view is None:
-        mh_view = "__band_tuning_mh"
-        mh = spark.sql(
-            f"{_shingle_cte(SPARK, base)}\n"
-            f"SELECT doc_id,\n    {_minhash_mins_sql(N_PERM)}\n"
-            f"FROM sh GROUP BY doc_id").localCheckpoint(eager=False)
-        mh.createOrReplaceTempView(mh_view)
+    # the signature relation is banding-independent: every config
+    # reads the one materialized sigs plane (4x the signature groupBy
+    # otherwise — measured 6.5 s -> ~3 s at sf0.1)
     # ONE band explode / bucket-stats / candidate self-join for the
     # whole ladder: every config's band signatures carry a config
     # prefix (so buckets never merge across configs and BAND_CAP stays
@@ -2202,8 +2149,7 @@ SELECT DISTINCT cfg AS n_bands, ia, ib FROM (
 MH_EST_SCALE = 1_000_000  # estimator audit reports integer ppm
 
 
-def dedup_minhash_estimate(d: Dialect, base: str | None = None,
-                           pairs_view: str | None = None,
+def dedup_minhash_estimate(d: Dialect, pairs_view: str | None = None,
                            mh_view: str | None = None) -> str:
     """MinHash ESTIMATOR-error audit (the signature-level complement
     of :func:`dedup_lsh_recall`'s pair-level gate): for every verified
@@ -2230,12 +2176,12 @@ def dedup_minhash_estimate(d: Dialect, base: str | None = None,
     match_sum = " + ".join(
         f"(CASE WHEN a.m{j} = b.m{j} THEN 1 ELSE 0 END)"
         for j in range(N_PERM))
-    pairs = _pairs_cte(d, base, pairs_view)
+    pairs = _pairs_cte(d, pairs_view)
     est_ppm = d.idiv(f"({MH_EST_SCALE} * n_match)", str(N_PERM))
     # with mh_view (the session sigs plane, r13) the signature arm is
     # a plane scan instead of re-running the groupBy per query
     mh_body = (f"SELECT * FROM {mh_view}" if mh_view is not None
-               else f"""{_shingle_cte(d, base)}
+               else f"""{_shingle_cte(d)}
   SELECT doc_id,
     {mins}
   FROM sh GROUP BY doc_id""")
@@ -2261,7 +2207,7 @@ SELECT doc_a, doc_b, n_match,
 FROM est"""
 
 
-def docs_cross_split_contamination(d: Dialect, base: str | None = None,
+def docs_cross_split_contamination(d: Dialect,
                                    pairs_view: str | None = None) -> str:
     """Train/test LEAKAGE audit: MinHash near-dup pairs whose endpoints
     land in different splits of ``docs_split_assign`` — the check a
@@ -2284,7 +2230,7 @@ def docs_cross_split_contamination(d: Dialect, base: str | None = None,
         docs_split_assign,
     )
 
-    pairs = _pairs_cte(d, base, pairs_view)
+    pairs = _pairs_cte(d, pairs_view)
     return f"""WITH pairs AS (
 {pairs}
 ),
@@ -2301,8 +2247,7 @@ JOIN sp sb ON sb.doc_id = p.doc_b
 GROUP BY least(sa.split, sb.split), greatest(sa.split, sb.split)"""
 
 
-def docs_cross_lingual_pairs(d: Dialect, base: str | None = None,
-                             pairs_view: str | None = None) -> str:
+def docs_cross_lingual_pairs(d: Dialect, pairs_view: str | None = None) -> str:
     """Cross-LINGUAL near-dup mining: MinHash pairs rolled up by the
     language pair of their endpoints (canonical least/greatest order)
     with a cross-language flag — same-content different-lang pairs are
@@ -2312,7 +2257,7 @@ def docs_cross_lingual_pairs(d: Dialect, base: str | None = None,
 
     Scale posture: pair-graph-sized join onto two zero-shuffle lang
     projections; ≤ lang² output rows."""
-    pairs = _pairs_cte(d, base, pairs_view)
+    pairs = _pairs_cte(d, pairs_view)
     return f"""WITH pairs AS (
 {pairs}
 )
@@ -2408,8 +2353,7 @@ SELECT doc_id,
 FROM fp GROUP BY doc_id"""
 
 
-def dedup_winnow_overlap(d: Dialect, base: str | None = None,
-                         fpc_view: str | None = None) -> str:
+def dedup_winnow_overlap(d: Dialect, fpc_view: str | None = None) -> str:
     """Substring-overlap CANDIDATE pairs via shared winnowing
     fingerprints — the sub-linear companion of
     :func:`dedup_span_exact`: where the span operator localizes every
@@ -2446,7 +2390,7 @@ def dedup_winnow_overlap(d: Dialect, base: str | None = None,
   SELECT doc_id, hv, nfp FROM {fpc_view}
 )"""
     else:
-        head = f"""WITH {_winnow_fp_cte(d, base)},
+        head = f"""WITH {_winnow_fp_cte(d)},
 fpd {ca} (SELECT DISTINCT doc_id, hv FROM fp),
 keep AS (SELECT hv FROM fpd GROUP BY hv
          HAVING count(*) <= {WINNOW_DF_CAP}),

@@ -85,21 +85,3 @@ def summary_table(results: DataFrame) -> DataFrame:
     ]
     out = results.select(*cols)
     return out.toDF(*[registry.glue_normalize(c) for c in out.columns])
-
-
-# P9 mask pattern — shared with operators/masking.py's SQL-dialect path
-ACCOUNT_ID_MASK_PATTERN = r"\d(\d)\d{6}(\d{4})"
-
-
-def mask_account_id(col: Column) -> Column:
-    """P9: 12-digit account-id masking — keep the 2nd digit + 'XXXXXXX' +
-    last 4 (extract-ta-data-lambda.py:29-54: ``match.group()[1] +
-    'XXXXXXX' + match.group()[-4:]``; log-plane only in the reference)."""
-    return F.regexp_replace(col, ACCOUNT_ID_MASK_PATTERN, r"$1XXXXXXX$2")
-
-
-def mask_name_email(col: Column) -> Column:
-    """P9 names/emails: first 3 + '-MASKED-' + last 3
-    (extract-tag-data-lambda.py:40-45)."""
-    return F.concat(F.substring(col, 1, 3), F.lit("-MASKED-"),
-                    F.substring(col, -3, 3))

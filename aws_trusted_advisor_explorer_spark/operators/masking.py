@@ -14,16 +14,18 @@ syntax differs (Spark ``$1`` vs DuckDB ``\\1``) — dialect-split."""
 from __future__ import annotations
 
 from aws_trusted_advisor_explorer_spark.functions.dual import Dialect
-from aws_trusted_advisor_explorer_spark.operators.extract import (
-    ACCOUNT_ID_MASK_PATTERN as _ID_PATTERN,
-)
+
+# 12-digit account id: the 2nd digit and the last 4 survive the mask
+ACCOUNT_ID_MASK_PATTERN = r"\d(\d)\d{6}(\d{4})"
 
 
 def _mask_id(d: Dialect, col: str) -> str:
-    # pattern escaping is Dialect.re_pat's (one copy of the rule);
-    # only the backreference syntax stays dialect-split here
+    """Reference semantics ``match.group()[1] + 'XXXXXXX' +
+    match.group()[-4:]`` (extract-ta-data-lambda.py:29-54). Pattern
+    escaping is Dialect.re_pat's (one copy of the rule); only the
+    backreference syntax stays dialect-split here."""
     rep = "$1XXXXXXX$2" if d.name == "spark" else "\\1XXXXXXX\\2"
-    return d.re_replace(col, _ID_PATTERN, rep)
+    return d.re_replace(col, ACCOUNT_ID_MASK_PATTERN, rep)
 
 
 def _mask_text(col: str) -> str:

@@ -410,8 +410,7 @@ FROM s JOIN documents dd
 
 
 def pairs_near_dedup(d: Dialect, base: str | None = None,
-                     pairs_view: str | None = None,
-                     shingle_base: str | None = None) -> str:
+                     pairs_view: str | None = None) -> str:
     """PAIR-level near-dedup — the LAION-style rule: two (media,
     caption) pairs are duplicates only when BOTH modalities agree —
     the media sides share a phash band and verify hamming <=
@@ -450,7 +449,7 @@ pair AS (
 ),
 {_phash_band_cands(d, rel="pair", idc="media_id")},
 tp AS (
-{_pairs_cte(d, shingle_base, pairs_view)}
+{_pairs_cte(d, pairs_view)}
 )
 SELECT c.ia AS pair_a, c.ib AS pair_b, c.hamming AS media_hamming,
   cast(CASE WHEN pa.caption_id = pb.caption_id THEN 1 ELSE 0 END
@@ -470,9 +469,7 @@ PAIRS_PER_SHARD = 32   # samples per WebDataset pair shard (LAION-style
                        # count packing, vs the doc capstone's token budget)
 
 
-def pairs_release_manifest(d: Dialect, base: str | None = None,
-                           pairs_view: str | None = None,
-                           shingle_base: str | None = None) -> str:
+def pairs_release_manifest(d: Dialect) -> str:
     """The PAIRED-MODALITY release capstone (r11 verdict task 3) — the
     LAION/DataComp handoff artifact: compose the pair universe
     (:func:`media_caption_pairs`), the pair-level near-dup drop rule
@@ -500,7 +497,7 @@ def pairs_release_manifest(d: Dialect, base: str | None = None,
     composition mirrors the LAION-5B release recipe (pair dedup +
     caption filtering + fixed-count shards + per-shard metadata)."""
     lp = (f"lpad(cast(shard_id as {'string' if d.name == 'spark' else 'varchar'}), 5, '0')")
-    return f"""WITH {_pairs_release_core(d, base, pairs_view, shingle_base)},
+    return f"""WITH {_pairs_release_core(d)},
 r AS (
   SELECT pair_id, media_phash, split, n_toks, n_bytes, h,
     row_number() OVER (PARTITION BY split ORDER BY pair_id) AS rk
@@ -517,9 +514,7 @@ SELECT split, shard_id,
 FROM sh GROUP BY split, shard_id"""
 
 
-def _pairs_release_core(d: Dialect, base: str | None,
-                        pairs_view: str | None,
-                        shingle_base: str | None) -> str:
+def _pairs_release_core(d: Dialect) -> str:
     """The shared CTE core of the pair-release family, ending at
     ``rel(pair_id, media_phash, split, n_toks, n_bytes, h)`` — the
     surviving pair relation (pair universe ∩ pair-near-dedup keepers
@@ -530,9 +525,8 @@ def _pairs_release_core(d: Dialect, base: str | None,
         docs_curation_pipeline,
     )
 
-    mcp = media_caption_pairs(d, base=base)
-    pnd = pairs_near_dedup(d, base=base, pairs_view=pairs_view,
-                           shingle_base=shingle_base)
+    mcp = media_caption_pairs(d)
+    pnd = pairs_near_dedup(d)
     n_toks = d.arr_len(d.tokens("text"))
     nbytes = ("octet_length(text)" if d.name == "spark"
               else "strlen(text)")
@@ -577,9 +571,7 @@ def _pairs_manifest_agg_sql() -> str:
   cast(max(pair_id) as bigint) AS last_pair_id"""
 
 
-def pairs_release_refresh(d: Dialect, base: str | None = None,
-                          pairs_view: str | None = None,
-                          shingle_base: str | None = None) -> str:
+def pairs_release_refresh(d: Dialect) -> str:
     """Incremental REFRESH of the pair-release manifest — the
     `docs_release_refresh` stored+delta algebra at the PAIR level,
     closing the IVM symmetry (both release capstones now have a
@@ -625,7 +617,7 @@ def pairs_release_refresh(d: Dialect, base: str | None = None,
         FROM {src}) r0
 ) s0 GROUP BY split, shard_id"""
 
-    return f"""WITH {_pairs_release_core(d, base, pairs_view, shingle_base)},
+    return f"""WITH {_pairs_release_core(d)},
 cutr AS (SELECT {cut} AS cut FROM documents),
 srel AS (SELECT rel.* FROM rel CROSS JOIN cutr WHERE pair_id <= cut),
 drel0 AS (SELECT rel.* FROM rel CROSS JOIN cutr WHERE pair_id > cut),

@@ -466,8 +466,7 @@ FROM (
 ) q2"""
 
 
-def docs_kmv_source_overlap(d: Dialect, base: str | None = None,
-                            esrc_view: str | None = None) -> str:
+def docs_kmv_source_overlap(d: Dialect, esrc_view: str | None = None) -> str:
     """Source-pair resemblance audit via KMV/theta sketch
     INTERSECTION (Beyer et al. 2007's KMV set operations — the
     companion of docs_kmv_distinct_union's union/merge proof): for
@@ -495,9 +494,9 @@ def docs_kmv_source_overlap(d: Dialect, base: str | None = None,
     sources-squared over {KMV_K}-row relations, independent of corpus
     size. The exact arm self-joins (source, hv) on hv — linear in the
     shingle vocabulary, quadratic only in the source count — and is
-    the small-scale oracle column, not the product path. On Spark
-    ``sh`` reads the session shingle plane; self-contained chain for
-    the DuckDB oracle.
+    the small-scale oracle column, not the product path. On Spark the
+    (source, hv) relation is built from the session shingle plane
+    (``esrc_view``); self-contained chain for the DuckDB oracle.
 
     ``esrc_view``: name of a PRE-MATERIALIZED distinct (source, hv)
     relation — the wired Spark path
@@ -523,7 +522,7 @@ def docs_kmv_source_overlap(d: Dialect, base: str | None = None,
   SELECT source, hv FROM {esrc_view}
 ),"""
     else:
-        head = f"""{_shingle_cte(d, base)},
+        head = f"""{_shingle_cte(d)},
 esrc {ca} (
   SELECT DISTINCT dd.source, s.hv
   FROM sh s JOIN documents dd ON dd.doc_id = s.doc_id

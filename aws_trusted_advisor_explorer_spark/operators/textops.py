@@ -1078,16 +1078,6 @@ BPE_CAND_POOL = 24   # ranked candidate pool examined per round
 # (the corpus-scale token count happens once, in ensure_bpe_dict_view)
 BPE_DICT_PARTITIONS = 1
 BPE_WORD_CAP = 256  # training dictionary = top words by corpus frequency
-# merges inlined as plan literals up to this count; larger models take
-# the broadcast-variable Arrow-UDF path. r13: 0 — the literal path's
-# per-invocation expression ANALYSIS cost dominates even for the tiny
-# 62-merge model (measured 1.37 s vs 0.78 s per tokenize_count run at
-# sf0.1, rows identical; the UDF's worker round-trip is vocab-dim-sized
-# and the two paths are pinned bit-equal by
-# test_bpe_apply_broadcast_path_matches_literal). The literal
-# expression builder stays: it renders the DuckDB oracle and the
-# parity pins.
-BPE_LITERAL_MAX = 0
 
 
 def _bpe_sel_fold(d: Dialect, cands: str) -> str:
@@ -1167,14 +1157,6 @@ def _bpe_merge_set_exprs(d: Dialect, pairs: str) -> tuple[str, str]:
     return kept, rebuilt
 
 
-def _round_set_exprs(d: Dialect,
-                     rounds: list[list[tuple[str, str]]]) -> list[str]:
-    """Per-round ``array<string>`` literals of 'L R' pair keys for the
-    literal-inlined apply path; empty rounds are dropped (no-op)."""
-    return [d.arr_lit([f"'{left} {right}'" for left, right in rnd])
-            for rnd in rounds if rnd]
-
-
 def _bind(d: Dialect, expr: str, var: str, body: str) -> str:
     """Let-binding via a single-element transform (the shingle_hvs
     trick): evaluate ``expr`` once, expose it to ``body`` as ``var``."""
@@ -1204,8 +1186,8 @@ def _bpe_apply_expr(d: Dialect, syms_expr: str,
 
 def _bpe_count_parts(d: Dialect, round_sets: list[str]) -> tuple[str, str]:
     """(n_token_chars, n_bpe_tokens) expressions over a token-array
-    column ``toks`` for per-round pair-set expressions (literal arrays
-    or column refs) for the apply query. Tokens map to bigint counts
+    column ``toks`` for per-round pair-set column refs for the apply
+    query. Tokens map to bigint counts
     BEFORE the fold: the
     DuckDB fold trick ([init] || list) needs accumulator type ==
     element type."""
@@ -1218,8 +1200,7 @@ def _bpe_count_parts(d: Dialect, round_sets: list[str]) -> tuple[str, str]:
     return n_chars, n_bpe
 
 
-def _bpe_dict_cte(d: Dialect, base: str | None,
-                  table: str = "documents") -> str:
+def _bpe_dict_cte(d: Dialect, base: str | None) -> str:
     """w0: the word-frequency training dictionary (top BPE_WORD_CAP by
     freq, deterministic (freq DESC, token) tiebreak), one symbol per
     char. With ``base`` (Spark side) the corpus-scale count is read
@@ -1227,7 +1208,7 @@ def _bpe_dict_cte(d: Dialect, base: str | None,
     ca = d.cte_as()
     if base is not None:
         return f"w0 {ca} (SELECT token, freq, syms FROM {base})"
-    return f"""tok {ca} (SELECT {d.explode(d.tokens('text'))} AS token FROM {table}),
+    return f"""tok {ca} (SELECT {d.explode(d.tokens('text'))} AS token FROM documents),
 wf {ca} (SELECT token, cast(count(*) as bigint) AS freq FROM tok GROUP BY token),
 wd {ca} (SELECT token, freq FROM wf ORDER BY freq DESC, token LIMIT {BPE_WORD_CAP}),
 w0 {ca} (SELECT token, freq, {d.chars('token')} AS syms FROM wd)"""
@@ -1266,12 +1247,12 @@ def text_bpe_merge_train(d: Dialect, base: str | None = None) -> str:
     return "WITH " + cte_body + "\n" + tail
 
 
-def _sel_pairs_expr(d: Dialect, sel: str = "sel") -> str:
-    """array<string> of 'L R' pair keys from a selected-entry array
-    ('L R cnt' strings)."""
+def _sel_pairs_expr(d: Dialect) -> str:
+    """array<string> of 'L R' pair keys from the selected-entry array
+    column ``sel`` ('L R cnt' strings)."""
     pl = d.elem(d.split("e", " "), "1")
     pr_ = d.elem(d.split("e", " "), "2")
-    return d.transform(sel, "e", f"{pl} || ' ' || {pr_}")
+    return d.transform("sel", "e", f"{pl} || ' ' || {pr_}")
 
 
 def _bpe_train_parts(d: Dialect, base: str | None) -> tuple[str, str]:
@@ -1343,49 +1324,39 @@ FROM (
     return ",\n".join(parts), tail
 
 
-def text_bpe_tokenize_count(d: Dialect, base: str | None = None,
-                            merges: list[list[tuple[str, str]]] | None = None,
-                            ) -> str:
+def text_bpe_tokenize_count(d: Dialect) -> str:
     """BPE tokenizer APPLY — the measurement that prices a corpus in
     tokens: per document, whitespace-token count, char count, and the
     BPE-symbol count after replaying the learned merge table (plus the
     chars-per-BPE-token compression ratio). Train → apply is the full
     tokenizer lifecycle; the merge table comes from
-    :func:`text_bpe_merge_train`; ``merges`` is round-structured
-    (list of rounds, each a disjoint-symbol pair list).
+    :func:`text_bpe_merge_train`.
 
-    With ``merges`` (the literal path) the learned rounds are inlined
-    as array literals and this is ONE whole-stage-codegen projection
-    over documents — zero shuffles, zero joins; the trained model
-    rides in the plan as frozen weights. The self-contained form (the
-    DuckDB oracle) trains in-query and CROSS JOINs the {BPE_ROUNDS}
-    1-row selected-set relations into the apply expression.
+    This self-contained form (the DuckDB oracle) trains in-query and
+    CROSS JOINs the {BPE_ROUNDS} 1-row selected-set relations into the
+    apply expression; the Spark form is
+    :func:`text_bpe_tokenize_count_df`, which applies the trained model
+    as a broadcast variable.
 
     Scale posture (100 TB): apply is embarrassingly parallel (pure
     projection); training cost is the dictionary count (see
     text_bpe_merge_train). Per-token apply work is O(len²) lambda
-    arithmetic on short alnum tokens — constant-bounded. Models past
-    BPE_LITERAL_MAX merges take the broadcast path
-    (:func:`text_bpe_tokenize_count_df`) instead of plan literals.
+    arithmetic on short alnum tokens — constant-bounded.
     """
-    if merges is not None:
-        round_sets = _round_set_exprs(d, merges)
-        head = f"WITH docs AS (SELECT doc_id, {d.tokens('text')} AS toks FROM documents)"
-    else:
-        round_sets = [f"mp{r}" for r in range(1, BPE_ROUNDS + 1)]
-        # reuse the training chain, then re-alias each round's 1-row
-        # selected-set relation for the cross join into the apply
-        # projection
-        train_body, _ = _bpe_train_parts(d, base)
-        pair_aliases = ",\n".join(
-            f"pp{r} AS (SELECT {_sel_pairs_expr(d)} AS mp{r} FROM sel{r})"
-            for r in range(1, BPE_ROUNDS + 1))
-        cross = " CROSS JOIN ".join(
-            f"pp{r}" for r in range(1, BPE_ROUNDS + 1))
-        pair_cols = ", ".join(f"mp{r}" for r in range(1, BPE_ROUNDS + 1))
-        head = (f"WITH {train_body},\n{pair_aliases},\n"
-                f"docs AS (SELECT doc_id, {d.tokens('text')} AS toks, "
-                f"{pair_cols} FROM documents CROSS JOIN {cross})")
+    round_sets = [f"mp{r}" for r in range(1, BPE_ROUNDS + 1)]
+    # reuse the training chain, then re-alias each round's 1-row
+    # selected-set relation for the cross join into the apply
+    # projection
+    train_body, _ = _bpe_train_parts(d, None)
+    pair_aliases = ",\n".join(
+        f"pp{r} AS (SELECT {_sel_pairs_expr(d)} AS mp{r} FROM sel{r})"
+        for r in range(1, BPE_ROUNDS + 1))
+    cross = " CROSS JOIN ".join(
+        f"pp{r}" for r in range(1, BPE_ROUNDS + 1))
+    pair_cols = ", ".join(f"mp{r}" for r in range(1, BPE_ROUNDS + 1))
+    head = (f"WITH {train_body},\n{pair_aliases},\n"
+            f"docs AS (SELECT doc_id, {d.tokens('text')} AS toks, "
+            f"{pair_cols} FROM documents CROSS JOIN {cross})")
     n_chars, n_bpe = _bpe_count_parts(d, round_sets)
     return f"""{head},
 counted AS (
@@ -1402,9 +1373,7 @@ SELECT doc_id, n_tokens, n_token_chars, n_bpe_tokens,
 FROM counted"""
 
 
-def text_bpe_fertility_by_lang(d: Dialect, base: str | None = None,
-                               merges: list[list[tuple[str, str]]] | None = None,
-                               ) -> str:
+def text_bpe_fertility_by_lang(d: Dialect) -> str:
     """Per-language tokenizer FERTILITY report — the acceptance gate a
     multilingual tokenizer ships with: fertility (BPE tokens per
     whitespace word) and chars-per-BPE-token per language, from the
@@ -1419,7 +1388,7 @@ def text_bpe_fertility_by_lang(d: Dialect, base: str | None = None,
     co-partitionable corpus relations, the output is lang-cardinality
     rows via one map-side-combining aggregate.
     """
-    tc = text_bpe_tokenize_count(d, base=base, merges=merges)
+    tc = text_bpe_tokenize_count(d)
     return f"""WITH tc AS (
 {tc}
 )
@@ -1437,18 +1406,14 @@ FROM tc JOIN documents dd ON dd.doc_id = tc.doc_id
 GROUP BY dd.lang"""
 
 
-def text_bpe_fertility_by_lang_df(spark,
-                                  merges: list[list[tuple[str, str]]] | None = None,
-                                  priced_view: str | None = None):
+def text_bpe_fertility_by_lang_df(spark, priced_view: str):
     """Spark twin: rollup of the distinct-word apply path (same exact
-    bigint sums and single divisions as the SQL form). With
-    ``priced_view`` the per-doc pricing comes from the
-    session-materialized relation instead of re-running the whole
-    apply pipeline."""
+    bigint sums and single divisions as the SQL form), reading the
+    per-doc pricing from the session-materialized relation
+    ``priced_view`` (:func:`ensure_bpe_priced_view`)."""
     from pyspark.sql import functions as F
 
-    tc = (spark.table(priced_view) if priced_view is not None
-          else text_bpe_tokenize_count_df(spark, merges=merges))
+    tc = spark.table(priced_view)
     docs = spark.sql("SELECT doc_id, lang FROM documents")
     return (tc.join(docs, "doc_id")
             .groupBy("lang")
@@ -1484,9 +1449,7 @@ def ensure_bpe_dict_view(spark, key: object = None) -> str:
     return BPE_DICT_VIEW
 
 
-def _bpe_train_rounds(spark, base: str | None = None,
-                      n_rounds: int | None = None,
-                      ) -> list[list[tuple[str, str, int]]]:
+def _bpe_train_rounds(spark, base: str) -> list[list[tuple[str, str, int]]]:
     """ONE-JOB kernel form of the batched BPE training loop (r12,
     guide §5 "the driver should do almost no data work" / §4.5): the
     job-loop form (:func:`_bpe_train_rounds_jobs`, kept as the pinned
@@ -1496,8 +1459,8 @@ def _bpe_train_rounds(spark, base: str | None = None,
     (~0.15-0.3 s/job locally, measured 1.4-1.7 s for 8 rounds of
     ~150 ms compute). This form runs the ENTIRE selection loop inside
     one single-partition ``mapInPandas`` over the same dictionary
-    plane: per-round pair counting (exact int64 sums of ``freq`` per
-    adjacent-pair occurrence), the (cnt DESC, pr ASC) top-pool
+    plane (``base``): per-round pair counting (exact int64 sums of
+    ``freq`` per adjacent-pair occurrence), the (cnt DESC, pr ASC) top-pool
     ranking (Python code-point string order == Spark's UTF8 byte
     order — UTF-8 preserves code-point order), the greedy
     disjoint-symbol selection, and the per-round simultaneous apply
@@ -1509,9 +1472,7 @@ def _bpe_train_rounds(spark, base: str | None = None,
     Identical output pinned by test_bpe_kernel_trainer_matches_jobs
     and the standing oracle tests of every consumer."""
     rounds_done: list[list[tuple[str, str, int]]] = []
-    base = base if base is not None else ensure_bpe_dict_view(spark)
-    total = n_rounds if n_rounds is not None else BPE_ROUNDS
-    pool, round_k = BPE_CAND_POOL, BPE_ROUND_K
+    total, pool, round_k = BPE_ROUNDS, BPE_CAND_POOL, BPE_ROUND_K
 
     def trainer(batches):
         import pandas as pd
@@ -1605,9 +1566,8 @@ def _bpe_train_rounds(spark, base: str | None = None,
     return rounds_done
 
 
-def _bpe_train_rounds_jobs(spark, base: str | None = None,
-                           n_rounds: int | None = None,
-                           ) -> list[list[tuple[str, str, int]]]:
+def _bpe_train_rounds_jobs(spark,
+                           base: str) -> list[list[tuple[str, str, int]]]:
     """Spark-native BATCHED BPE training loop: one dictionary-sized
     top-{BPE_CAND_POOL} pair job per ROUND (a single bounded collect —
     the batching that makes a 30k-merge vocab ~30k/{BPE_ROUND_K}
@@ -1632,13 +1592,12 @@ def _bpe_train_rounds_jobs(spark, base: str | None = None,
 
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK as d
 
-    base = base if base is not None else ensure_bpe_dict_view(spark)
     words = spark.table(base)
     n = d.arr_len("syms")
     pair_i = f"{d.elem('syms', 'i')} || ' ' || {d.elem('syms', 'i + 1')}"
     pairs_arr = d.transform(d.seq("1", f"{n} - 1"), "i", pair_i)
     rounds: list[list[tuple[str, str, int]]] = []
-    for _ in range(n_rounds if n_rounds is not None else BPE_ROUNDS):
+    for _ in range(BPE_ROUNDS):
         top = (words.coalesce(BPE_DICT_PARTITIONS)
                .where(F.expr(f"{n} >= 2"))
                .select("freq", F.explode(F.expr(pairs_arr)).alias("pr"))
@@ -1671,7 +1630,7 @@ def _bpe_train_rounds_jobs(spark, base: str | None = None,
     return rounds
 
 
-def text_bpe_merge_train_df(spark, base: str | None = None):
+def text_bpe_merge_train_df(spark, base: str):
     """Spark-native batched BPE training: the unrolled SQL re-evaluates
     the dictionary chain once per CTE reference under Catalyst
     inlining (~2x per round), so the cluster form iterates
@@ -1746,17 +1705,14 @@ def bpe_apply_python(tok: str, flat_merges: list[tuple[str, str]]) -> int:
     return len(syms)
 
 
-def text_bpe_tokenize_count_df(spark, base: str | None = None,
-                               merges: list[list[tuple[str, str]]] | None = None):
-    """Spark-native BPE apply: train iteratively (dictionary-sized
-    jobs; pass round-structured ``merges`` from
-    :func:`ensure_bpe_merges` to reuse a table already trained this
-    session), then price the corpus by applying the merge table to
-    each DISTINCT word once — higher-order-function lambdas are interpreted
-    (not whole-stage codegen), so running the greedy-apply expression
+def text_bpe_tokenize_count_df(spark, merges: list[list[tuple[str, str]]]):
+    """Spark-native BPE apply: price the corpus by applying the
+    round-structured merge table ``merges`` (the bpe_merges plane,
+    :func:`ensure_bpe_merges`) to each DISTINCT word once — applying
     per token OCCURRENCE costs ~vocab-expansion× more for identical
     results (measured 7.7x end-to-end at sf0.1 with the 62-merge
-    model, 1.23s dim-path vs 9.53s per-occurrence, full evaluation
+    model in its SQL-expression form, 1.23s dim-path vs 9.53s
+    per-occurrence, full evaluation
     forced via sum(n_bpe_tokens) — same figure quoted in SCALE.md
     §Tokenizer; Zipf makes it worse at scale).
     The vocab-sized (token, n_syms) dim then broadcast-joins back to
@@ -1765,13 +1721,14 @@ def text_bpe_tokenize_count_df(spark, base: str | None = None,
     by the left join (NULL ratio, zero counts — same as the oracle).
     The train-in-query SQL form is the DuckDB oracle.
 
-    Frozen-model mechanics: up to BPE_LITERAL_MAX total merges the
-    rounds are inlined as plan array literals (tiny model, widest
-    codegen). Past that — a real ~30k-merge vocab — the literal would
-    bloat the plan string, so the model ships as a SparkContext
+    Frozen-model mechanics: the model ships as a SparkContext
     BROADCAST variable consumed by an Arrow-batched pandas UDF over
-    the same distinct-word dim (``bpe_apply_python`` kernel, pinned
-    equal to the expression path by pytest). Unlike the membership-set
+    the distinct-word dim (``bpe_apply_python`` kernel, pinned equal
+    to the oracle's expression path by pytest) — inlined as plan
+    literals, even the small trained model cost more in per-run
+    expression analysis than the UDF's vocab-sized worker round-trip
+    (measured 1.37 s vs 0.78 s per run at sf0.1), and a real
+    ~30k-merge vocab would bloat the plan string. Unlike the membership-set
     models (eval shingles, Bloom words), which grow with the corpus and
     stay joins, the BPE model is VOCAB-bounded by construction — a merge
     table is at most the target vocabulary (~30k-100k pairs, ~1 MB),
@@ -1783,9 +1740,9 @@ def text_bpe_tokenize_count_df(spark, base: str | None = None,
 
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK as d
 
-    if merges is None:
-        merges = [[(left, right) for left, right, _ in rnd]
-                  for rnd in _bpe_train_rounds(spark, base=base)]
+    from aws_trusted_advisor_explorer_spark.functions.vectorized import (
+        make_broadcast_model_udf,
+    )
 
     docs = spark.sql(
         f"SELECT doc_id, {d.tokens('text')} AS toks FROM documents")
@@ -1796,21 +1753,11 @@ def text_bpe_tokenize_count_df(spark, base: str | None = None,
     # rows)
     toks = (docs.select("doc_id", F.explode("toks").alias("tok"))
             .localCheckpoint(eager=False))
-    dim = toks.select("tok").distinct()
-    if sum(len(rnd) for rnd in merges) <= BPE_LITERAL_MAX:
-        apply_ = _bpe_apply_expr(d, d.chars("tok"),
-                                 _round_set_exprs(d, merges))
-        dim = dim.withColumn(
-            "w_syms", F.expr(f"cast({d.arr_len(apply_)} as bigint)"))
-    else:
-        from aws_trusted_advisor_explorer_spark.functions.vectorized import (
-            make_broadcast_model_udf,
-        )
-
-        flat = [p for rnd in merges for p in rnd]
-        bc = spark.sparkContext.broadcast(flat)
-        dim = dim.withColumn(
-            "w_syms", make_broadcast_model_udf(bc, bpe_apply_python)("tok"))
+    flat = [p for rnd in merges for p in rnd]
+    bc = spark.sparkContext.broadcast(flat)
+    dim = (toks.select("tok").distinct()
+           .withColumn("w_syms",
+                       make_broadcast_model_udf(bc, bpe_apply_python)("tok")))
     dim = dim.withColumn("w_chars", F.expr("cast(length(tok) as bigint)"))
     per_doc = (toks.join(F.broadcast(dim), "tok")
                .groupBy("doc_id")

@@ -29,8 +29,8 @@ from aws_trusted_advisor_explorer_spark.sinks import writers
 from aws_trusted_advisor_explorer_spark.sources import ta_api
 
 
-def run_ingest(spark: SparkSession, check_result_docs, out_dir: str,
-               fmt: str = "parquet") -> dict[str, DataFrame]:
+def run_ingest(spark: SparkSession, check_result_docs,
+               out_dir: str) -> dict[str, DataFrame]:
     """Entry point A (scheduled TA ingestion): API-shaped docs → raw layer.
 
     Returns the written raw tables re-read from disk and registered in
@@ -65,7 +65,7 @@ def run_ingest(spark: SparkSession, check_result_docs, out_dir: str,
 
     def land(name: str) -> DataFrame:
         return writers.land_raw_table(spark, builds[name](),
-                                      os.path.join(out_dir, name), fmt=fmt)
+                                      os.path.join(out_dir, name))
 
     # the session form copies the caller's job group and tags into each
     # pool thread, so the units' jobs stay attributable and cancellable.
@@ -84,8 +84,7 @@ def run_ingest(spark: SparkSession, check_result_docs, out_dir: str,
 
 
 def run_tag_ingest(spark: SparkSession, long_tags: DataFrame,
-                   customer_keys: list[str], out_dir: str,
-                   fmt: str = "parquet") -> DataFrame:
+                   customer_keys: list[str], out_dir: str) -> DataFrame:
     """Entry point B (tag ingestion): long (resource, key, value) rows →
     pivoted tags dimension, written + registered. Ingest order is
     stamped before the shuffle so the pivot's last-write-wins matches
@@ -98,7 +97,7 @@ def run_tag_ingest(spark: SparkSession, long_tags: DataFrame,
     # dataset saw columns no view could resolve (review finding — the
     # two entry points modeled the crawler inconsistently)
     wide = wide.toDF(*[c.lower() for c in wide.columns])
-    df = writers.land_raw_table(spark, wide, os.path.join(out_dir, "tags"), fmt=fmt)
+    df = writers.land_raw_table(spark, wide, os.path.join(out_dir, "tags"))
     df.createOrReplaceTempView("tags")
     return df
 

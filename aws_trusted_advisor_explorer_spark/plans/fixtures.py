@@ -492,23 +492,18 @@ def to_spark_sql(sql: str) -> str:
     return converted.replace("\x00Q\x00", "'\"'")
 
 
-def register_raw_tables(spark: SparkSession, sf_dir: str,
-                        materialize: bool = True) -> dict[str, DataFrame]:
+def register_raw_tables(spark: SparkSession,
+                        sf_dir: str) -> dict[str, DataFrame]:
     """Register the fixture raw layer as temp views over the driver parquet.
 
-    ``materialize=True`` (default) lands each raw table as parquet once
-    per (fixture-SQL, sf_dir, source files' size and mtime) under a
-    content-keyed scratch dir and
-    registers scans over it — mirroring the reference, where the raw
+    Each raw table lands as parquet once per (fixture-SQL, sf_dir,
+    source files' size and mtime) under a content-keyed scratch dir,
+    and the views are scans over it — mirroring the reference, where the raw
     layer is *landed* CSV, not recomputed per query, and giving every
     downstream view a real columnar scan (pushdown + pruning) instead
     of re-running the string-building derivation. The derivation cost
     is paid once per scale factor; the cache key hashes the fixture SQL
     so edits invalidate it.
-
-    ``materialize=False`` keeps the derivation lazy (narrow scan +
-    project fused into the view by Catalyst) — used by the dialect
-    parity checks.
     """
     import hashlib
     import os
@@ -521,13 +516,6 @@ def register_raw_tables(spark: SparkSession, sf_dir: str,
     load_tables(spark, sf_dir)
     sqls = raw_table_sql()
     out = {}
-    if not materialize:
-        for name, sql in sqls.items():
-            df = spark.sql(to_spark_sql(sql))
-            df.createOrReplaceTempView(name)
-            out[name] = df
-        return out
-
     # layout v3: land as many files as the session has cores — a scan's
     # parallelism is bounded by file count (maxPartitionBytes never
     # splits a 5 MB file), so a 4-file landing caps a 32-core scan at 4

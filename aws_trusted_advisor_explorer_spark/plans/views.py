@@ -82,9 +82,11 @@ class ViewSpec:
     computed: tuple[Computed, ...]
 
 
-def _dt(alias: str = "date_time") -> Computed:
-    """F1: ``date_parse(substr(datetime, 1, 19), '%Y-%m-%d %T')``."""
-    return Computed(alias, lambda d, ref: d.ts_ymd_hms(f"substr({ref('datetime')}, 1, 19)"))
+def _dt() -> Computed:
+    """F1: ``date_parse(substr(datetime, 1, 19), '%Y-%m-%d %T')`` as
+    ``date_time``."""
+    return Computed("date_time", lambda d, ref: d.ts_ymd_hms(
+        f"substr({ref('datetime')}, 1, 19)"))
 
 
 def _money(alias: str, col: str, p: int = 18, s: int = 2) -> Computed:

@@ -300,6 +300,8 @@ SESSION_PLANES: dict[str, object] = {}
 # per driver thread, the plane build it is running: ``current`` is
 # (label, its deps, the DataFrames it pins), or None
 _BUILDING = threading.local()
+# guards the creation of the plane state held on each session
+_STATE_LOCK = threading.Lock()
 
 
 def _building() -> tuple[str, tuple[str, ...], list] | None:
@@ -310,10 +312,20 @@ def _session_planes(spark: SparkSession) -> dict:
     """The session's plane entries: label -> (key, value, pinned
     DataFrames). Held on the session object itself, so a plane lives
     exactly as long as the session whose temp views it registered."""
-    planes = getattr(spark, "_session_planes", None)
-    if planes is None:
-        planes = spark._session_planes = {}
-    return planes
+    with _STATE_LOCK:
+        if getattr(spark, "_session_planes", None) is None:
+            spark._session_planes = {}
+        return spark._session_planes
+
+
+def _build_lock(spark: SparkSession, label: str) -> threading.Lock:
+    """The lock a miss of plane ``label`` on this session builds under,
+    held on the session object beside its planes."""
+    with _STATE_LOCK:
+        if getattr(spark, "_session_plane_locks", None) is None:
+            spark._session_plane_locks = {}
+        return spark._session_plane_locks.setdefault(label,
+                                                      threading.Lock())
 
 
 def session_plane(label: str, deps: tuple[str, ...] = ()):
@@ -339,9 +351,13 @@ def session_plane(label: str, deps: tuple[str, ...] = ()):
     name the plane's timing rows and its :func:`drop_planes` handle.
 
     The running build is tracked per driver thread, so two threads may
-    build unrelated planes at once, each timed as its own row. Two
-    threads that miss the same plane of one session at once may both
-    build it; the last to finish keeps its entry."""
+    build unrelated planes at once, each timed as its own row. Every
+    ensure of a plane looks for its entry under a per-(session, label)
+    lock and builds while holding it, so two threads that miss the
+    same plane of one session build it once: the second waits and
+    takes the first's value. A build holds its own lock while it
+    ensures its deps, so locks are taken in dep order, which is
+    acyclic and cannot deadlock."""
     import functools
     import time
 
@@ -362,25 +378,26 @@ def session_plane(label: str, deps: tuple[str, ...] = ()):
                     f"plane build {building[0]!r} ensured {label!r}, "
                     f"which is not among its deps {building[1]}")
             planes = _session_planes(spark)
-            entry = planes.get(label)
-            if entry is not None and (key is None or entry[0] == key):
-                return entry[1]
-            if building is not None:
-                raise RuntimeError(
-                    f"plane {label!r} would build inside {building[0]!r}")
-            planes.pop(label, None)
-            for dep in dep_ensures:
-                dep(spark, key)
-            pins: list = []
-            _BUILDING.current = (label, deps, pins)
-            t0 = time.perf_counter()
-            try:
-                value = build(spark, key)
-            finally:
-                _BUILDING.current = None
-            record_plane(label, time.perf_counter() - t0)
-            planes[label] = (key, value, pins)
-            return value
+            with _build_lock(spark, label):
+                entry = planes.get(label)
+                if entry is not None and (key is None or entry[0] == key):
+                    return entry[1]
+                if building is not None:
+                    raise RuntimeError(f"plane {label!r} would build "
+                                       f"inside {building[0]!r}")
+                planes.pop(label, None)
+                for dep in dep_ensures:
+                    dep(spark, key)
+                pins: list = []
+                _BUILDING.current = (label, deps, pins)
+                t0 = time.perf_counter()
+                try:
+                    value = build(spark, key)
+                finally:
+                    _BUILDING.current = None
+                record_plane(label, time.perf_counter() - t0)
+                planes[label] = (key, value, pins)
+                return value
 
         ensure.deps = deps
         SESSION_PLANES[label] = ensure

@@ -34,16 +34,17 @@ def parquet_unsafe(name: str) -> str:
     return name
 
 
-def with_run_partitions(df: DataFrame, date_col: str = "datetime") -> DataFrame:
-    """Derive year/month/day partition columns from the run datetime string."""
+def with_run_partitions(df: DataFrame) -> DataFrame:
+    """Derive year/month/day partition columns from the run ``datetime``
+    string."""
     return (df
-            .withColumn("year", F.substring(date_col, 1, 4))
-            .withColumn("month", F.substring(date_col, 6, 2))
-            .withColumn("day", F.substring(date_col, 9, 2)))
+            .withColumn("year", F.substring("datetime", 1, 4))
+            .withColumn("month", F.substring("datetime", 6, 2))
+            .withColumn("day", F.substring("datetime", 9, 2)))
 
 
 def write_raw_table(df: DataFrame, path: str, fmt: str = "parquet",
-                    partitioned: bool = True, mode: str = "overwrite") -> StructType:
+                    mode: str = "overwrite") -> StructType:
     """K1+K3: land a raw table date-partitioned. Empty input writes no data
     files (the reference's len(rows)>1 guard is native here). Returns the
     schema of the frame written (renamed columns and partition columns
@@ -53,20 +54,16 @@ def write_raw_table(df: DataFrame, path: str, fmt: str = "parquet",
     reference's monthly cron lands a NEW date prefix each run and never
     rewrites old ones); each run's partition values are distinct, so
     append adds partitions without touching history."""
-    out = with_run_partitions(df) if partitioned else df
+    out = with_run_partitions(df)
     if fmt in ("parquet", "orc"):
         # one shared path: ORC field names share parquet's
         # no-special-chars restriction, so both get the safe rename
         out = out.toDF(*[parquet_safe(c) for c in out.columns])
-        w = out.write.mode(mode)
-        if partitioned:
-            w = w.partitionBy("year", "month", "day")
-        getattr(w, fmt)(path)
+        getattr(out.write.mode(mode).partitionBy("year", "month", "day"),
+                fmt)(path)
     elif fmt == "csv":
-        w = out.write.mode(mode).option("header", True)
-        if partitioned:
-            w = w.partitionBy("year", "month", "day")
-        w.csv(path)
+        (out.write.mode(mode).option("header", True)
+         .partitionBy("year", "month", "day").csv(path))
     else:
         raise ValueError(f"unsupported format {fmt}")
     return out.schema

@@ -48,9 +48,9 @@ _PAT_COLON = re.compile(r".*:(.*)$")
 
 
 def _resource_id(arn: str) -> str:
-    """P7 in the fetcher, matching the reference's Python exactly
-    (extract-tag-data-lambda.py:48-57) and the SQL twin
-    (operators/tags.arn_to_resource_id)."""
+    """P7: the text after the last '/', else after the last ':', else
+    '' — the reference's Python exactly (extract-tag-data-lambda.py:48-57,
+    patterns ``.*\\/(.*$)`` then ``.*\\:(.*$)``)."""
     m = _PAT_SLASH.match(arn) or _PAT_COLON.match(arn)
     return m.group(1) if m else ""
 

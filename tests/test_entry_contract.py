@@ -152,6 +152,59 @@ def test_two_threads_build_unrelated_planes_at_once():
     assert sorted(lb for lb, _ in rows) == list(labels)
 
 
+def test_threads_missing_one_plane_build_it_once():
+    """Eight threads (more than the cores here) that miss the same
+    plane of one session at once (all start their ensure together, and
+    the build takes 0.3 s) get one build: the others wait for it and
+    take its value, and one timing row is recorded."""
+    import sys
+    import threading
+    import time
+    import types
+
+    from aws_trusted_advisor_explorer_spark import session as sess
+
+    builds = []
+
+    def build(s, key):
+        builds.append(key)
+        time.sleep(0.3)
+        return object()
+
+    n = 8
+    session = types.SimpleNamespace()
+    start = threading.Barrier(n, timeout=5)
+    got, errors = [], []
+
+    def run(ensure):
+        try:
+            start.wait()
+            got.append(ensure(session))
+        except Exception as e:  # noqa: BLE001 - reported by the assert
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    try:
+        sys.setswitchinterval(1e-6)
+        ensure = sess.session_plane("probe_same")(build)
+        sess.drain_plane_timings()
+        threads = [threading.Thread(target=run, args=(ensure,))
+                   for _ in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=10)
+        rows = sess.drain_plane_timings()
+    finally:
+        sys.setswitchinterval(interval)
+        sess.SESSION_PLANES.pop("probe_same", None)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(builds) == 1, builds
+    assert len(got) == n and all(v is got[0] for v in got)
+    assert [lb for lb, _ in rows] == ["probe_same"]
+
+
 def test_entry_imports_package_from_its_own_checkout(tmp_path):
     """``__spark_entry__`` imported from a copy of the checkout resolves
     the package inside that copy, ahead of its fixed fallback path."""
@@ -456,11 +509,24 @@ KEEP = {
     "accounts_from_csv": "reference accounts CSV override (S4)",
     "regions_df": "reference region dimension (S5)",
     "refresh_wait_seconds": "reference check-refresh wait",
-    "mask_account_id": "reference log masking of account ids",
-    "mask_name_email": "reference log masking of names and emails",
-    "arn_to_resource_id": "reference tag ARN to resource id rule",
     "CATEGORY": "reference check category",
 }
+
+
+def _modules_anyone_runs():
+    """(in_package, parsed module) of every package module, then of the
+    entry, bench, perfbench and script modules."""
+    import ast
+
+    pkg = glob.glob(os.path.join(ROOT, "aws_trusted_advisor_explorer_spark",
+                                 "**", "*.py"), recursive=True)
+    rest = ([os.path.join(ROOT, "__spark_entry__.py"),
+             os.path.join(ROOT, "bench.py")]
+            + glob.glob(os.path.join(ROOT, "perfbench", "*.py"))
+            + glob.glob(os.path.join(ROOT, "scripts", "*.py")))
+    for p in pkg + rest:
+        with open(p, encoding="utf-8") as f:
+            yield p in pkg, ast.parse(f.read())
 
 
 def _package_graph():
@@ -471,15 +537,13 @@ def _package_graph():
     and a reference to every ``@session_plane`` build."""
     import ast
 
-    def module(path):
-        with open(path, encoding="utf-8") as f:
-            return ast.parse(f.read())
-
     defs: dict[str, list] = {}
     roots: list = []
-    for p in glob.glob(os.path.join(ROOT, "aws_trusted_advisor_explorer_spark",
-                                    "**", "*.py"), recursive=True):
-        for st in module(p).body:
+    for in_package, tree in _modules_anyone_runs():
+        if not in_package:
+            roots.append(tree)
+            continue
+        for st in tree.body:
             if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef,
                                ast.ClassDef)):
                 defs.setdefault(st.name, []).append(st)
@@ -496,11 +560,6 @@ def _package_graph():
             elif not (isinstance(st, ast.Expr)
                       and isinstance(st.value, ast.Constant)):
                 roots.append(st)
-    for p in ([os.path.join(ROOT, "__spark_entry__.py"),
-               os.path.join(ROOT, "bench.py")]
-              + glob.glob(os.path.join(ROOT, "perfbench", "*.py"))
-              + glob.glob(os.path.join(ROOT, "scripts", "*.py"))):
-        roots.append(module(p))
     return defs, roots
 
 
@@ -555,3 +614,122 @@ def test_every_package_name_has_a_caller():
     live = _reached(defs, roots)
     stale = sorted(n for n in KEEP if n not in defs or n in live)
     assert not stale, f"KEEP entries defined nowhere or reached: {stale}"
+
+
+# Defaulted package parameters that no non-test call sets, each with
+# the reason it stays: a test reference, a test fake or a deployment
+# setting. A new defaulted parameter needs a caller that sets it or a
+# line here.
+KEEP_PARAMS = {
+    # test references: the forms live code is checked against
+    ("make_gram_hv_kernel", "with_pos"): "hv-only gram stream the fused "
+                                         "kernel's stream is pinned to",
+    ("dedup_prefix_join", "position_filter"): "unfiltered prefix join the "
+                                              "position filter's pruning "
+                                              "is measured against",
+    ("semdedup_prune_report", "asg"): "plane-backed SQL report the DF twin "
+                                      "is pinned to",
+    ("text_bpe_merge_train", "base"): "both engines train on a planted "
+                                      "dictionary",
+    ("docs_column_profile", "table"): "profile of a planted-violation table",
+    ("docs_expectations_report", "table"): "expectations over a "
+                                           "planted-violation table",
+    # test fakes
+    ("FixtureTransport", "page_size"): "pagination of the offline transport",
+    ("FixtureTransport", "fail_first"): "transient failures for the retry "
+                                        "path",
+    # deployment settings
+    ("fetch_tags", "max_retries"): "tag-API retry policy",
+    ("fetch_tags", "backoff_s"): "tag-API retry backoff",
+    ("publish_views", "with_tags"): "a deployment without the tag ingest "
+                                    "publishes views without the tags join",
+    ("regions_df", "regions"): "the deployment's region list (S5)",
+    ("land_raw_table", "fmt"): "lake file format: ORC, or CSV as the "
+                               "reference's interchange format",
+    ("write_raw_table", "mode"): "append for month-over-month accumulation",
+    ("read_raw_table", "merge_schema"): "the crawler's schema-change policy "
+                                        "for an evolving table",
+}
+
+
+def _set_params():
+    """callee name -> (highest positional count, keyword names) over
+    every call in the code anyone runs, matched by name. A ``_df``,
+    ``_sql`` or ``functools.partial`` call also passes its keywords to
+    its first argument (and ``_df(..., keyed=True)`` the dataset key
+    as its second position). ``*args`` sets every position and
+    ``**kwargs`` every keyword."""
+    import ast
+
+    def name(f):
+        return getattr(f, "id", None) or getattr(f, "attr", None)
+
+    every = 10 ** 6
+    seen: dict[str, tuple[int, set]] = {}
+
+    def mark(callee, npos, kws):
+        pos, names = seen.get(callee, (0, set()))
+        seen[callee] = (max(pos, npos), names | kws)
+
+    for _, tree in _modules_anyone_runs():
+        for n in ast.walk(tree):
+            if not isinstance(n, ast.Call):
+                continue
+            star = any(isinstance(a, ast.Starred) for a in n.args)
+            kws = {k.arg if k.arg else "**" for k in n.keywords}
+            mark(name(n.func), every if star else len(n.args), kws)
+            if name(n.func) in ("_df", "_sql", "partial") and n.args:
+                keyed = any(k.arg == "keyed" and getattr(k.value, "value", 0)
+                            for k in n.keywords)
+                mark(name(n.args[0]), 2 if keyed else 1, kws - {"keyed"})
+    return seen
+
+
+def _never_set_params():
+    """(function, parameter) of every defaulted parameter of a package
+    function or method that no call in the code anyone runs sets. A
+    ``@session_plane`` build's ``key`` is set by its ensure wrapper."""
+    import ast
+
+    seen = _set_params()
+    out = set()
+    for in_package, tree in _modules_anyone_runs():
+        if not in_package:
+            continue
+        for st in tree.body:
+            fns = [(st, st.name, 0)] if isinstance(st, ast.FunctionDef) else [
+                (f, st.name if f.name == "__init__" else f.name, 1)
+                for f in getattr(st, "body", ())
+                if isinstance(st, ast.ClassDef)
+                and isinstance(f, ast.FunctionDef)]
+            for fn, callee, skip in fns:
+                if "session_plane" in _mentioned(fn.decorator_list):
+                    continue
+                a = fn.args
+                pos = [x.arg for x in a.posonlyargs + a.args][skip:]
+                dflt = pos[len(pos) - len(a.defaults):] if a.defaults else []
+                dflt += [k.arg for k, d in zip(a.kwonlyargs, a.kw_defaults)
+                         if d is not None]
+                npos, kws = seen.get(callee, (0, set()))
+                for p in dflt:
+                    if "**" in kws or p in kws or (
+                            p in pos and pos.index(p) < npos):
+                        continue
+                    out.add((callee, p))
+    return out
+
+
+def test_every_defaulted_parameter_is_set_somewhere():
+    """Every defaulted parameter of a package function is set, by name
+    or by position, at some call in the code anyone runs (see
+    ``_set_params``), or is listed in KEEP_PARAMS with its reason, so
+    a default that guards a branch no entry point takes cannot regrow
+    unnoticed. Each KEEP_PARAMS entry must still be a never-set
+    defaulted parameter, so the table cannot go stale."""
+    never = _never_set_params()
+    unset = sorted(never - set(KEEP_PARAMS))
+    assert not unset, (
+        f"defaulted parameters no entry point sets (delete them with the "
+        f"branch they guard, or add a KEEP_PARAMS reason): {unset}")
+    stale = sorted(set(KEEP_PARAMS) - never)
+    assert not stale, f"KEEP_PARAMS entries set by a caller or gone: {stale}"

@@ -335,18 +335,20 @@ def test_minhash_recall_dominance_at_high_fidelity(spark):
     assert all(abs(j - 13 / 23) < 1e-12 for j in truth["jaccard"])
 
     # deterministic recall ladder: same r, more bands => strictly more
+    true_pairs = set(zip(truth["doc_a"], truth["doc_b"]))
     expect = {(16, 4): 14, (128, 32): 38, (256, 64): 40,
               (128, 16): 5}  # r=8: precision knob, recall collapses
     for (n_perm, n_bands), n_hit in expect.items():
-        rec = con.execute(dedup.dedup_lsh_recall(
-            DUCK, n_perm=n_perm, n_bands=n_bands)).fetchall()[0]
-        assert (rec[0], rec[1], rec[2]) == (40, n_hit, n_hit), (
-            n_perm, n_bands, rec)
-        assert rec[4] == 1.0  # precision: every emitted pair is true
+        lsh = con.sql(dedup.dedup_minhash_lsh(
+            DUCK, n_perm=n_perm, n_bands=n_bands)).df()
+        got = set(zip(lsh["doc_a"], lsh["doc_b"]))
+        # precision: every emitted pair is true
+        assert (len(got), len(got & true_pairs)) == (n_hit, n_hit), (
+            n_perm, n_bands)
     assert expect[(16, 4)] < expect[(128, 32)] < expect[(256, 64)]
 
     # the Spark rendering of the non-default parameterization matches
-    # DuckDB pair-for-pair, and its recall gate row matches too
+    # DuckDB pair-for-pair
     s_pairs = canonicalize(
         ns.sql(dedup.dedup_minhash_lsh(SPARK, n_perm=128,
                                        n_bands=32)).toPandas())
@@ -354,16 +356,6 @@ def test_minhash_recall_dominance_at_high_fidelity(spark):
         con.sql(dedup.dedup_minhash_lsh(DUCK, n_perm=128,
                                         n_bands=32)).df())
     assert len(s_pairs) == 38 and s_pairs.equals(d_pairs)
-    [s_rec] = ns.sql(dedup.dedup_lsh_recall(SPARK, n_perm=128,
-                                            n_bands=32)).collect()
-    assert (s_rec.n_true_pairs, s_rec.n_lsh_pairs,
-            s_rec.n_hit_pairs) == (40, 38, 38)
-
-    # a materialized default-banding pair graph cannot audit a
-    # non-default banding: explicit error, not silent precedence
-    with pytest.raises(ValueError, match="pairs_view"):
-        dedup.dedup_lsh_recall(SPARK, pairs_view="__some_view",
-                               n_perm=128, n_bands=32)
 
 
 def test_cross_split_contamination_accounts_for_every_pair(spark):
@@ -388,7 +380,8 @@ def test_near_dedup_apply_verdicts(spark, ddb):
     """The drop list must hash-match the recursive-CTE oracle AND obey
     the semantics: every doc present exactly once, exactly one keeper
     per cluster (the min id), singletons all kept."""
-    df = dedup.docs_near_dedup_apply_df(spark)
+    df = dedup.docs_near_dedup_apply_df(
+        spark, dedup.ensure_minhash_pairs_view(spark))
     assert_matches_oracle(df, ddb, dedup.docs_near_dedup_apply_oracle(DUCK))
     rows = df.collect()
     n_docs = spark.sql("SELECT count(*) n FROM documents").collect()[0].n
@@ -526,10 +519,11 @@ def test_dedup_savings_matches_verdict_rollup(spark, ddb):
     rollup of the verdict relation joined to token counts."""
     import re as _re
 
-    df = dedup.docs_dedup_savings_df(spark)
+    pv = dedup.ensure_minhash_pairs_view(spark)
+    df = dedup.docs_dedup_savings_df(spark, pv)
     assert_matches_oracle(df, ddb, dedup.docs_dedup_savings_oracle(DUCK))
     verdicts = {r.doc_id: r.keep
-                for r in dedup.docs_near_dedup_apply_df(spark).collect()}
+                for r in dedup.docs_near_dedup_apply_df(spark, pv).collect()}
     toks = {r.doc_id: len(_re.findall(r"[a-z0-9]+", r.text.lower()))
             for r in spark.sql("SELECT doc_id, text FROM documents").collect()}
     [row] = df.collect()
@@ -812,8 +806,8 @@ def test_bpe_train_df_twin_matches_unrolled_sql(spark, ddb):
     IS the Spark form)."""
     sql_rows = sorted(tuple(r) for r in ddb.execute(
         textops.text_bpe_merge_train(DUCK)).fetchall())
-    df_rows = sorted(tuple(r) for r in
-                     textops.text_bpe_merge_train_df(spark).collect())
+    df_rows = sorted(tuple(r) for r in textops.text_bpe_merge_train_df(
+        spark, textops.ensure_bpe_dict_view(spark)).collect())
     assert sql_rows == df_rows
 
 
@@ -831,8 +825,8 @@ def test_bpe_train_matches_python_greedy_replay(spark):
     top = sorted(wf.items(), key=lambda kv: (-kv[1], kv[0]))
     words = [(list(tok), f) for tok, f in top[:textops.BPE_WORD_CAP]]
     expect = bpe_batched_replay(words)
-    got = sorted(tuple(r) for r in
-                 textops.text_bpe_merge_train_df(spark).collect())
+    got = sorted(tuple(r) for r in textops.text_bpe_merge_train_df(
+        spark, textops.ensure_bpe_dict_view(spark)).collect())
     assert got == sorted(expect)
     # the round-2 verdict gate: merge count must far exceed the round
     # count (the whole point of batching the trainer)
@@ -844,7 +838,8 @@ def test_bpe_train_rounds_are_disjoint_and_bounded(spark):
     DISJOINT symbols (the invariant that makes simultaneous in-round
     apply equal sequential rank-order apply), in <= BPE_ROUNDS
     rounds."""
-    rounds = textops._bpe_train_rounds(spark)
+    rounds = textops._bpe_train_rounds(spark,
+                                       textops.ensure_bpe_dict_view(spark))
     assert len(rounds) == textops.BPE_ROUNDS
     for rnd in rounds:
         assert len(rnd) <= textops.BPE_ROUND_K
@@ -896,27 +891,9 @@ def test_bpe_train_planted_run_parity_and_tiebreak(spark, ddb):
         spark, base="bpe_dict_planted").collect()) == expect
 
 
-def test_bpe_apply_broadcast_path_matches_literal(spark, monkeypatch):
-    """Frozen-model mechanics: the literal-inlined expression path
-    (forced via a high threshold — r13 made the broadcast UDF the
-    default) must be bit-identical to the broadcast path, whose plan
-    really runs the Arrow-batched UDF with the model NOT spliced in as
-    literals."""
-    monkeypatch.setattr(textops, "BPE_LITERAL_MAX", 10_000)
-    lit = {r.doc_id: tuple(r)[1:] for r in
-           textops.text_bpe_tokenize_count_df(spark).collect()}
-    monkeypatch.setattr(textops, "BPE_LITERAL_MAX", -1)
-    bdf = textops.text_bpe_tokenize_count_df(spark)
-    plan = bdf._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan
-    got = {r.doc_id: tuple(r)[1:] for r in bdf.collect()}
-    assert got == lit
-
-
 def test_bpe_apply_broadcast_path_large_synthetic_model(spark):
-    """A synthetic model far past BPE_LITERAL_MAX (the real-vocab
-    regime) must take the broadcast path untruncated and match a
-    pure-Python replay — plan-literal splicing would blow up here."""
+    """A synthetic 640-merge model (the real-vocab regime) must take
+    the broadcast path untruncated and match a pure-Python replay."""
     rng = __import__("random").Random(7)
     alphabet = "abcdefghijklmnopqrstuvwxyz0123456789"
     rounds, flat = [], []
@@ -931,7 +908,6 @@ def test_bpe_apply_broadcast_path_large_synthetic_model(spark):
             rnd.append((left, right))
         rounds.append(rnd)
         flat.extend(rnd)
-    assert len(flat) > textops.BPE_LITERAL_MAX
     bdf = textops.text_bpe_tokenize_count_df(spark, merges=rounds)
     assert "ArrowEvalPython" in (
         bdf._jdf.queryExecution().executedPlan().toString())
@@ -945,21 +921,25 @@ def test_bpe_apply_broadcast_path_large_synthetic_model(spark):
 
 
 def test_bpe_tokenize_count_df_matches_oracle(spark, ddb):
-    """The literal-inlined apply projection must hash-match the
-    train-in-query DuckDB oracle (this op is not in BUILDERS: the
-    self-contained Spark rendering is impractical under CTE inlining,
-    so the DF twin is the only Spark form)."""
+    """The broadcast-model apply must hash-match the train-in-query
+    DuckDB oracle, which applies the merges as SQL expressions (this op
+    is not in BUILDERS: the self-contained Spark rendering is
+    impractical under CTE inlining, so the DF twin is the only Spark
+    form)."""
     assert_matches_oracle(
-        textops.text_bpe_tokenize_count_df(spark), ddb,
+        textops.text_bpe_tokenize_count_df(
+            spark, textops.ensure_bpe_merges(spark)), ddb,
         textops.text_bpe_tokenize_count(DUCK))
 
 
 def test_bpe_fertility_by_lang_matches_oracle_and_rollup(spark, ddb):
     """Per-language fertility == the train-in-query oracle, and ==
     a direct pandas rollup of the per-doc apply output."""
-    df = textops.text_bpe_fertility_by_lang_df(spark)
+    df = textops.text_bpe_fertility_by_lang_df(
+        spark, textops.ensure_bpe_priced_view(spark))
     assert_matches_oracle(df, ddb, textops.text_bpe_fertility_by_lang(DUCK))
-    tc = {r.doc_id: r for r in textops.text_bpe_tokenize_count_df(spark).collect()}
+    tc = {r.doc_id: r for r in textops.text_bpe_tokenize_count_df(
+        spark, textops.ensure_bpe_merges(spark)).collect()}
     langs = {r.doc_id: r.lang for r in spark.sql(
         "SELECT doc_id, lang FROM documents").collect()}
     agg: dict[str, list[int]] = {}
@@ -982,7 +962,8 @@ def test_bpe_tokenize_count_matches_python_replay(spark):
     """Per-doc BPE token counts == a pure-Python replay of greedy
     merge application with the trained merge table."""
     merges = [(r.left_sym, r.right_sym) for r in sorted(
-        textops.text_bpe_merge_train_df(spark).collect(),
+        textops.text_bpe_merge_train_df(
+            spark, textops.ensure_bpe_dict_view(spark)).collect(),
         key=lambda r: r.merge_rank)]
 
     import re as _re
@@ -1003,7 +984,8 @@ def test_bpe_tokenize_count_matches_python_replay(spark):
         return len(syms)
 
     got = {r.doc_id: (r.n_tokens, r.n_token_chars, r.n_bpe_tokens)
-           for r in textops.text_bpe_tokenize_count_df(spark).collect()}
+           for r in textops.text_bpe_tokenize_count_df(
+               spark, textops.ensure_bpe_merges(spark)).collect()}
     for (doc_id, text) in spark.sql(
             "SELECT doc_id, text FROM documents").collect():
         toks = _re.findall(r"[a-z0-9]+", text.lower())
@@ -1130,13 +1112,18 @@ def test_fingerprint_view_backed_matches_inline(spark):
 
 
 def test_shingle_view_backed_dedup_matches_inline(spark):
-    """View-backed (materialized shingle hashes) and self-contained SQL
-    forms of each shingle dedup query produce identical pair sets."""
+    """View-backed (materialized shingle hashes, or the pair aggregate
+    built on them) and self-contained SQL forms of each shingle dedup
+    query produce identical pair sets."""
     base = dedup.ensure_shingle_view(spark)
-    for builder in (dedup.dedup_minhash_lsh, dedup.dedup_ngram_jaccard,
-                    dedup.dedup_simhash):
+    for builder, backing in (
+            (dedup.dedup_minhash_lsh, {"base": base}),
+            (dedup.dedup_ngram_jaccard,
+             {"common_view": dedup.ensure_ngram_common_view(spark)}),
+            (dedup.dedup_simhash, {"base": base})):
         inline = {tuple(r) for r in spark.sql(builder(SPARK)).collect()}
-        backed = {tuple(r) for r in spark.sql(builder(SPARK, base=base)).collect()}
+        backed = {tuple(r) for r in
+                  spark.sql(builder(SPARK, **backing)).collect()}
         assert inline == backed, builder.__name__
 
 
@@ -1164,9 +1151,9 @@ def test_knn_lsh_neighbors_share_bucket_semantics(spark):
 def test_dedup_clusters_match_recursive_closure(spark, ddb):
     """Iterative min-label propagation (Spark) == recursive-CTE
     transitive closure (DuckDB), plus structural invariants."""
-    assert_matches_oracle(
-        dedup.dedup_clusters_df(spark), ddb, dedup.dedup_clusters_oracle(DUCK))
-    rows = dedup.dedup_clusters_df(spark).collect()
+    df = dedup.dedup_clusters_df(spark, dedup.ensure_minhash_pairs_view(spark))
+    assert_matches_oracle(df, ddb, dedup.dedup_clusters_oracle(DUCK))
+    rows = df.collect()
     label = {r.doc_id: r.cluster_id for r in rows}
     assert all(c == min(d for d, c2 in label.items() if c2 == c)
                for c in set(label.values()))
@@ -1350,8 +1337,10 @@ def test_lsh_hot_band_cap_star_candidates(spark):
     assert set(ddf["doc_a"].astype(int)) == {1}  # hub = min doc_id
     assert set(ddf["doc_b"].astype(int)) == set(range(2, 41))
 
+    ns.sql(dedup.dedup_minhash_lsh(SPARK)).createOrReplaceTempView(
+        "star_pairs")
     clusters = {int(r.doc_id): int(r.cluster_id)
-                for r in dedup.dedup_clusters_df(ns).collect()}
+                for r in dedup.dedup_clusters_df(ns, "star_pairs").collect()}
     assert {clusters[i] for i in range(1, 41)} == {1}  # one component
 
 
@@ -2028,7 +2017,8 @@ def test_pagerank_df_path_equals_inline_sql(spark):
     self-contained SQL form row-for-row."""
     inline = {tuple(r) for r in
               spark.sql(dedup.dedup_graph_pagerank(SPARK)).collect()}
-    df = {tuple(r) for r in dedup.dedup_graph_pagerank_df(spark).collect()}
+    df = {tuple(r) for r in dedup.dedup_graph_pagerank_df(
+        spark, dedup.ensure_minhash_pairs_view(spark)).collect()}
     assert df == inline
 
 
@@ -2282,7 +2272,8 @@ def test_semdedup_df_twin_bit_matches_sql(spark):
                    clusterops.semdedup_prune_report(
                        SPARK, asg=clusterops.ASG_VIEW)).collect()}
     df_rep = {r.cluster_id: (r.n_vecs, r.n_dropped, r.n_kept)
-              for r in clusterops.semdedup_prune_report_df(spark).collect()}
+              for r in clusterops.semdedup_prune_report_df(
+                  spark, clusterops.ensure_semdedup_pairs(spark)).collect()}
     assert sql_rep == df_rep
 
 
@@ -3599,19 +3590,33 @@ def test_unicode_multibyte_parity_sanitize_chunk_bpe(spark):
         drows = sorted(tuple(r) for r in con.execute(d_sql).fetchall())
         return srows, drows
 
-    # BPE apply rides a fixed trained-model literal (the in-query
-    # trainer is DuckDB-only under Spark CTE inlining); multibyte
-    # exposure is in chars()/length() inside the greedy apply
-    rounds = [[("e", "r"), ("t", "h")], [("o", "n")]]
     for builder in (textops.text_unicode_sanitize,
                     corpusops.docs_chunking,
-                    lambda d: textops.text_bpe_tokenize_count(
-                        d, merges=rounds),
                     textops.text_token_stats):
         srows, drows = both(builder)
-        name = getattr(builder, "__name__", "bpe_apply")
-        assert srows == drows, (name, srows[:3], drows[:3])
+        assert srows == drows, (builder.__name__, srows[:3], drows[:3])
         assert srows  # non-degenerate
+
+    # BPE: the oracle trains and applies in-query (DuckDB-only under
+    # Spark CTE inlining); the Spark form trains with the kernel
+    # trainer on the same word dictionary and applies the merges with
+    # the broadcast kernel
+    ns = spark.newSession()
+    ns.createDataFrame(
+        docs, "doc_id long, lang string, text string, source string"
+    ).createOrReplaceTempView("documents")
+    ns.sql("WITH " + textops._bpe_dict_cte(SPARK, None)
+           + "\nSELECT token, freq, syms FROM w0"
+           ).createOrReplaceTempView("bpe_dict_unicode")
+    merges = [[(left, right) for left, right, _ in rnd] for rnd in
+              textops._bpe_train_rounds(ns, "bpe_dict_unicode")]
+    srows = sorted(tuple(r) for r in
+                   textops.text_bpe_tokenize_count_df(ns, merges).collect())
+    drows = sorted(tuple(r) for r in con.execute(
+        textops.text_bpe_tokenize_count(DUCK).replace(
+            "FROM documents", "FROM documents_unicode")).fetchall())
+    assert srows == drows, (srows[:3], drows[:3])
+    assert any(r[3] < r[2] for r in srows)  # some merge fires
 
     # spot semantics: zero-token docs survive chunking as one empty
     # chunk and BPE-price to NULL ratio, in both engines
@@ -5007,14 +5012,15 @@ def test_band_tuning_three_ways_and_gate_consistency(spark, ddb):
     visibly larger candidate bill than the default."""
     from tests.conftest import canonicalize
 
-    base = dedup.ensure_shingle_view(spark, key=None)
-    twin = canonicalize(
-        dedup.dedup_band_tuning_df(spark, base).toPandas())
+    df = dedup.dedup_band_tuning_df(
+        spark, dedup.ensure_shingle_view(spark),
+        dedup.ensure_ngram_common_view(spark),
+        dedup.ensure_minhash_sigs_view(spark))
+    twin = canonicalize(df.toPandas())
     ddf = canonicalize(ddb.sql(dedup.dedup_band_tuning(DUCK)).df())
     assert twin.equals(ddf)
 
-    rows = {r.n_bands: r for r in
-            dedup.dedup_band_tuning_df(spark, base).collect()}
+    rows = {r.n_bands: r for r in df.collect()}
     assert set(rows) == set(dedup.BAND_LADDER)
     gate = ddb.sql(dedup.dedup_lsh_recall(DUCK)).df().iloc[0]
     r4 = rows[dedup.N_BANDS]

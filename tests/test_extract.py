@@ -138,13 +138,14 @@ def test_accounts_csv_s4(spark, tmp_path):
 
 
 def test_mask_pii_p9(spark):
-    from pyspark.sql import functions as F
+    from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
+    from aws_trusted_advisor_explorer_spark.operators import masking
 
-    df = spark.createDataFrame([("log for 610000000001 ok", "Alice Example")],
-                               ["msg", "name"])
-    row = df.select(
-        X.mask_account_id(F.col("msg")).alias("m"),
-        X.mask_name_email(F.col("name")).alias("n")).collect()[0]
+    spark.createDataFrame([("log for 610000000001 ok", "Alice Example")],
+                          ["msg", "name"]).createOrReplaceTempView("p9_log")
+    row = spark.sql(
+        f"SELECT {masking._mask_id(SPARK, 'msg')} AS m, "
+        f"{masking._mask_text('name')} AS n FROM p9_log").collect()[0]
     assert row["m"] == "log for 1XXXXXXX0001 ok"
     assert row["n"] == "Ali-MASKED-ple"
 

@@ -7,8 +7,8 @@ from __future__ import annotations
 import pytest
 
 from aws_trusted_advisor_explorer_spark import pipeline, registry
-from aws_trusted_advisor_explorer_spark.operators import tags as TG
 from aws_trusted_advisor_explorer_spark.sinks import writers
+from aws_trusted_advisor_explorer_spark.sources import tag_api
 from tests.conftest import assert_matches_oracle
 
 
@@ -83,10 +83,10 @@ def _long_tags(spark):
          "arn:aws:rds:us-east-1:610000000001:db:mydb", "env", "staging"),
     ]
     cols = ["Date", "DateTime", "AccountId", "AccountName", "AccountEmail",
-            "RegionName", "ResourceType", "ResourceArn", "key", "value"]
-    long_tags = spark.createDataFrame(rows, cols)
-    return long_tags.withColumn(
-        "ResourceId", TG.arn_to_resource_id(long_tags["ResourceArn"]))
+            "RegionName", "ResourceType", "ResourceArn", "key", "value",
+            "ResourceId"]
+    return spark.createDataFrame(
+        [r + (tag_api._resource_id(r[7]),) for r in rows], cols)
 
 
 def test_tag_pivot_pipeline(spark, tmp_path):
@@ -102,9 +102,7 @@ def test_tag_pivot_pipeline(spark, tmp_path):
     assert got["mydb"]["costcenter"] is None
 
 
-def test_arn_extraction_p7(spark):
-    from pyspark.sql import functions as F
-
+def test_arn_extraction_p7():
     cases = [
         ("arn:aws:ec2:us-east-1:1:instance/i-abc", "i-abc"),
         ("arn:aws:rds:us-east-1:1:db:mydb", "mydb"),
@@ -112,10 +110,7 @@ def test_arn_extraction_p7(spark):
         ("trailing/slash/", ""),
         ("a:b/c:d", "c:d"),  # '/' pattern wins even if ':' comes later
     ]
-    df = spark.createDataFrame([(a,) for a, _ in cases], ["arn"])
-    got = [r["rid"] for r in
-           df.select(TG.arn_to_resource_id(F.col("arn")).alias("rid")).collect()]
-    assert got == [e for _, e in cases]
+    assert [tag_api._resource_id(a) for a, _ in cases] == [e for _, e in cases]
 
 
 def _ec2_doc(run_date: str, run_dt: str, instance_meta: list[list[str]]):
@@ -148,7 +143,7 @@ def test_s6_fetch_to_ec2_view_end_to_end(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from aws_trusted_advisor_explorer_spark.plans import views
-    from aws_trusted_advisor_explorer_spark.sources import ta_api, tag_api
+    from aws_trusted_advisor_explorer_spark.sources import ta_api
 
     acct = ("610000000001", "Account 1", "a1@example.com")
     run_date, run_dt = "08-01-2025", "2025-08-01 09:00:00"

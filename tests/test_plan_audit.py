@@ -135,6 +135,10 @@ BNLJ_ALLOWED = {
     #            report; every join downstream of the rungs is
     #            top-k-relation-sized
     "knn_serving_report",
+    # media_phash_sig (plane build) — the 1-row max(doc_id) offset
+    #            guard cross-joined onto both arms of the twin splice
+    #            (the docs_bm25_topk corpus-stats shape)
+    "media_phash_sig",
 }
 
 FORBIDDEN = ("CartesianProduct", "BatchEvalPython")
@@ -225,6 +229,50 @@ def test_no_scale_antipatterns_in_any_query_plan(spark):
             failures.append(f"{name}: unpartitioned WindowExec over a "
                             f"non-allowlisted relation")
     assert not failures, "\n".join(failures)
+
+
+def test_no_scale_antipatterns_in_any_plane_build(spark, monkeypatch):
+    """The query-plan audit above, applied to the DataFrame of every
+    session-plane build: each plane is rebuilt on a fresh session at
+    sf0.001, and every DataFrame a build hands to
+    ``materialize_plane_df`` is checked before it is checkpointed (a
+    key's plan sees only the checkpointed scan). Planes are
+    allowlisted by label in the same tables as keys."""
+    import sys
+
+    import __spark_entry__ as entrymod
+    from aws_trusted_advisor_explorer_spark import session as sess
+    from aws_trusted_advisor_explorer_spark.session import load_tables
+
+    entrymod.queries()  # imports every operator module: registers planes
+    real = sess.materialize_plane_df
+    failures, seen = [], set()
+
+    def audited(df, view_name):
+        label = sess._building()[0]
+        seen.add(label)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for node in FORBIDDEN:
+            if node in plan:
+                failures.append(f"{label} ({view_name}): {node}")
+        if "BroadcastNestedLoopJoin" in plan and label not in BNLJ_ALLOWED:
+            failures.append(f"{label} ({view_name}): unexpected "
+                            f"BroadcastNestedLoopJoin")
+        if label not in WINDOW_UNPART_ALLOWED and _unpartitioned_windows(df):
+            failures.append(f"{label} ({view_name}): unpartitioned "
+                            f"WindowExec over a non-allowlisted relation")
+        return real(df, view_name)
+
+    for mod in list(sys.modules.values()):
+        if getattr(mod, "materialize_plane_df", None) is real:
+            monkeypatch.setattr(mod, "materialize_plane_df", audited)
+    ns = spark.newSession()
+    load_tables(ns, SF_DIR)
+    for ensure in sess.SESSION_PLANES.values():
+        ensure(ns, key=SF_DIR)
+    assert not failures, "\n".join(failures)
+    # every plane but the merge list (a driver-side value) materializes
+    assert set(sess.SESSION_PLANES) - seen == {"bpe_merges"}
 
 
 def _formatted(spark, df) -> str:

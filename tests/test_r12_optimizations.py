@@ -150,9 +150,11 @@ def test_band_tuning_array_verify_matches_join_verify(spark):
     from aws_trusted_advisor_explorer_spark.operators import dedup
 
     drop_planes(spark, "shingle")
-    base = dedup.ensure_shingle_view(spark, key=SF_DIR)
-    new = dedup.dedup_band_tuning_df(spark, base)
-    old = spark.sql(dedup.dedup_band_tuning(SPARK, None))
+    new = dedup.dedup_band_tuning_df(
+        spark, dedup.ensure_shingle_view(spark, key=SF_DIR),
+        dedup.ensure_ngram_common_view(spark, key=SF_DIR),
+        dedup.ensure_minhash_sigs_view(spark, key=SF_DIR))
+    old = spark.sql(dedup.dedup_band_tuning(SPARK))
     assert new.schema.simpleString() == old.schema.simpleString()
     assert _rows(new) == _rows(old)
 
@@ -167,10 +169,6 @@ def test_bpe_kernel_trainer_matches_jobs(spark):
     new = textops._bpe_train_rounds(spark, base=base)
     old = textops._bpe_train_rounds_jobs(spark, base=base)
     assert new == old
-    # truncated training must match too (the n_rounds parameter)
-    assert (textops._bpe_train_rounds(spark, base=base, n_rounds=3)
-            == textops._bpe_train_rounds_jobs(spark, base=base,
-                                              n_rounds=3))
 
 
 def test_dsir_twin_matches_sql(spark):

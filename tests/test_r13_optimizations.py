@@ -164,7 +164,7 @@ def test_semdedup_blocked_pairs_match_unblocked():
 def test_ngram_common_plane_backed_forms_match_standalone(spark):
     """The r13 shared pair-aggregate plane (ensure_ngram_common_view):
     the plane-backed jaccard / containment / LSH-recall / band-tuning
-    forms must equal their standalone forms row-for-row."""
+    forms must equal their self-contained forms row-for-row."""
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
     from aws_trusted_advisor_explorer_spark.operators import dedup
 
@@ -172,20 +172,21 @@ def test_ngram_common_plane_backed_forms_match_standalone(spark):
     base = dedup.ensure_shingle_view(spark, key=SF_DIR)
     cv = dedup.ensure_ngram_common_view(spark, key=SF_DIR)
     pv = dedup.ensure_minhash_pairs_view(spark, key=SF_DIR)
+    sv = dedup.ensure_minhash_sigs_view(spark, key=SF_DIR)
     for name, new, old in [
         ("jaccard",
-         spark.sql(dedup.dedup_ngram_jaccard(SPARK, base, common_view=cv)),
-         spark.sql(dedup.dedup_ngram_jaccard(SPARK, base))),
+         spark.sql(dedup.dedup_ngram_jaccard(SPARK, common_view=cv)),
+         spark.sql(dedup.dedup_ngram_jaccard(SPARK))),
         ("containment",
-         spark.sql(dedup.dedup_containment(SPARK, base, common_view=cv)),
-         spark.sql(dedup.dedup_containment(SPARK, base))),
+         spark.sql(dedup.dedup_containment(SPARK, common_view=cv)),
+         spark.sql(dedup.dedup_containment(SPARK))),
         ("lsh_recall",
-         spark.sql(dedup.dedup_lsh_recall(SPARK, base, pairs_view=pv,
+         spark.sql(dedup.dedup_lsh_recall(SPARK, pairs_view=pv,
                                           common_view=cv)),
-         spark.sql(dedup.dedup_lsh_recall(SPARK, base, pairs_view=pv))),
+         spark.sql(dedup.dedup_lsh_recall(SPARK, pairs_view=pv))),
         ("band_tuning",
-         dedup.dedup_band_tuning_df(spark, base, common_view=cv),
-         dedup.dedup_band_tuning_df(spark, base)),
+         dedup.dedup_band_tuning_df(spark, base, cv, sv),
+         spark.sql(dedup.dedup_band_tuning(SPARK))),
     ]:
         assert new.schema.simpleString() == old.schema.simpleString(), name
         assert _rows(new) == _rows(old), name
@@ -193,8 +194,9 @@ def test_ngram_common_plane_backed_forms_match_standalone(spark):
 
 def test_minhash_sigs_plane_backed_forms_match_standalone(spark):
     """The r13 shared signature plane (ensure_minhash_sigs_view): the
-    sigs-backed LSH / estimator / band-tuning forms must equal their
-    standalone forms row-for-row."""
+    sigs-backed LSH / estimator forms must equal their standalone forms
+    row-for-row (the sigs-backed band-tuning report is checked against
+    its self-contained form with the pair-aggregate plane above)."""
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
     from aws_trusted_advisor_explorer_spark.operators import dedup
 
@@ -206,13 +208,9 @@ def test_minhash_sigs_plane_backed_forms_match_standalone(spark):
         ("lsh", spark.sql(dedup.dedup_minhash_lsh(SPARK, base, mh_view=sv)),
          spark.sql(dedup.dedup_minhash_lsh(SPARK, base))),
         ("estimate",
-         spark.sql(dedup.dedup_minhash_estimate(SPARK, base, pairs_view=pv,
+         spark.sql(dedup.dedup_minhash_estimate(SPARK, pairs_view=pv,
                                                 mh_view=sv)),
-         spark.sql(dedup.dedup_minhash_estimate(SPARK, base,
-                                                pairs_view=pv))),
-        ("band_tuning",
-         dedup.dedup_band_tuning_df(spark, base, mh_view=sv),
-         dedup.dedup_band_tuning_df(spark, base)),
+         spark.sql(dedup.dedup_minhash_estimate(SPARK, pairs_view=pv))),
     ]:
         assert new.schema.simpleString() == old.schema.simpleString(), name
         assert _rows(new) == _rows(old), name
