@@ -9,7 +9,7 @@ one ``explode`` + ``select`` that Catalyst pushes into a single stage.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from aws_trusted_advisor_explorer_spark import registry
 
@@ -34,13 +34,15 @@ def flagged_resources_table(results: DataFrame, check_id: str) -> DataFrame:
     schema = registry.SCHEMAS[check_id]
     headers = registry.HEADERS[check_id]
 
-    r = (results.filter(F.col("result.checkId") == check_id)
-         .select("Date", "DateTime", "CheckName",
-                 "AccountId", "AccountName", "AccountEmail",
-                 F.explode("result.flaggedResources").alias("fr"))
-         .filter(F.col("fr.status").isin("warning", "error")))
+    r = (results.where(f"result.checkId = '{check_id}'")
+         .selectExpr("Date", "DateTime", "CheckName",
+                     "AccountId", "AccountName", "AccountEmail",
+                     "explode(result.flaggedResources) AS fr")
+         .where("fr.status IN ('warning', 'error')"))
 
-    cols: list[Column] = [F.col("Date"), F.col("DateTime"), F.col("CheckName")]
+    # every cell is SQL text in one selectExpr: a Column tree per cell
+    # costs hundreds of py4j commands per check
+    cells = [(c, c) for c in ("Date", "DateTime", "CheckName")]
     for header, entry in zip(headers, schema):
         if entry.isdigit():
             # 1-based, NULL-on-out-of-range (try_element_at): real TA
@@ -50,38 +52,40 @@ def flagged_resources_table(results: DataFrame, check_id: str) -> DataFrame:
             # where the reference lambda's IndexError failed only that
             # one (account, check) extract. None metadata cells pass
             # through untouched.
-            cell = F.try_element_at("fr.metadata", F.lit(int(entry) + 1))
-            cell = F.when(cell.isNull(), cell).otherwise(
-                F.replace(cell, F.lit(","), F.lit("")))
+            cell = f"try_element_at(fr.metadata, {int(entry) + 1})"
+            cell = f"CASE WHEN {cell} IS NULL THEN {cell} ELSE replace({cell}, ',', '') END"
         else:
-            cell = F.col(f"fr.{entry}")
-        cols.append(cell.alias(header))
-    cols += [F.col("AccountId"), F.col("AccountName"), F.col("AccountEmail")]
-    out = r.select(*cols)
-    # one normalization pass over every column (incl. the identity
-    # prefix/suffix), mirroring the crawler's header handling
-    return out.toDF(*[registry.glue_normalize(c) for c in out.columns])
+            cell = f"fr.{entry}"
+        cells.append((cell, header))
+    cells += [(c, c) for c in ("AccountId", "AccountName", "AccountEmail")]
+    return _select_normalized(r, cells)
+
+
+def _select_normalized(df: DataFrame, cells: list[tuple[str, str]]) -> DataFrame:
+    """One ``selectExpr`` of the ``(SQL expression, header)`` cells,
+    each named by the crawler's header normalization, which covers the
+    identity prefix/suffix columns too."""
+    return df.selectExpr(*[f"{expr} AS `{registry.glue_normalize(header)}`"
+                           for expr, header in cells])
 
 
 def summary_table(results: DataFrame) -> DataFrame:
     """P5+P6: per-(check, account, run) snapshot fact — NOT an aggregate;
     the counters land verbatim from the API (extract-ta-data-lambda.py:133-149).
     Missing ``costOptimizing`` → savings default to 0 (:139-147)."""
-    cols = [
-        F.col("Date"), F.col("DateTime"), F.col("CheckName"),
-        F.col("result.checkId").alias("CheckId"),
-        F.col("result.status").alias("Status"),
-        F.col("result.resourcesSummary.resourcesProcessed").alias("ResourcesProcessed"),
-        F.col("result.resourcesSummary.resourcesFlagged").alias("ResourcesFlagged"),
-        F.col("result.resourcesSummary.resourcesIgnored").alias("ResourcesIgnored"),
-        F.col("result.resourcesSummary.resourcesSuppressed").alias("ResourcesSuppressed"),
-        F.coalesce(
-            F.col("result.categorySpecificSummary.costOptimizing.estimatedMonthlySavings"),
-            F.lit(0.0)).alias("EstimatedMonthlySavings"),
-        F.coalesce(
-            F.col("result.categorySpecificSummary.costOptimizing.estimatedPercentMonthlySavings"),
-            F.lit(0.0)).alias("EstimatedPercentMonthlySavings"),
-        F.col("AccountId"), F.col("AccountName"), F.col("AccountEmail"),
+    saving = "coalesce(result.categorySpecificSummary.costOptimizing.{}, 0.0D)"
+    cells = [
+        ("Date", "Date"), ("DateTime", "DateTime"), ("CheckName", "CheckName"),
+        ("result.checkId", "CheckId"),
+        ("result.status", "Status"),
+        ("result.resourcesSummary.resourcesProcessed", "ResourcesProcessed"),
+        ("result.resourcesSummary.resourcesFlagged", "ResourcesFlagged"),
+        ("result.resourcesSummary.resourcesIgnored", "ResourcesIgnored"),
+        ("result.resourcesSummary.resourcesSuppressed", "ResourcesSuppressed"),
+        (saving.format("estimatedMonthlySavings"), "EstimatedMonthlySavings"),
+        (saving.format("estimatedPercentMonthlySavings"),
+         "EstimatedPercentMonthlySavings"),
+        ("AccountId", "AccountId"), ("AccountName", "AccountName"),
+        ("AccountEmail", "AccountEmail"),
     ]
-    out = results.select(*cols)
-    return out.toDF(*[registry.glue_normalize(c) for c in out.columns])
+    return _select_normalized(results, cells)

@@ -373,10 +373,9 @@ def knn_filtered_df(spark, sf_dir: str):
          .select(F.col("vec_id").alias("query_id"), "label",
                  F.col("embedding").alias("q_emb"), "bucket"))
     c = (v.filter(F.col("vec_id") % QUERY_MOD != 0)
-         .select(F.col("vec_id").alias("neighbor_id"),
-                 F.col("label").alias("c_label"),
+         .select(F.col("vec_id").alias("neighbor_id"), "label",
                  F.col("embedding").alias("c_emb"), "bucket"))
-    scored = (q.join(c, (q.bucket == c.bucket) & (q.label == c.c_label))
+    scored = (q.join(c, ["bucket", "label"])
               .select("query_id", "label", "neighbor_id",
                       V.pair_cosine("q_emb", "c_emb").alias("cosine")))
     from pyspark.sql.window import Window

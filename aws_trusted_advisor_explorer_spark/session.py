@@ -27,6 +27,12 @@ def get_spark(app_name: str = "ta_explorer_spark", cpus: int | None = None) -> S
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # workers fork from the package's daemon, whose zip importers
+        # skip the per-task re-read of an unchanged pyspark.zip (see
+        # worker_daemon.py). Static conf, read when the context starts,
+        # so a session built elsewhere keeps the stock daemon.
+        .config("spark.python.daemon.module",
+                "aws_trusted_advisor_explorer_spark.worker_daemon")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # the generated-class cache defaults to 100 entries; a session
         # running the full driver query surface compiles several hundred
@@ -102,11 +108,14 @@ def range_partitions(spark: SparkSession) -> int:
 
 # target ESTIMATED input bytes per corpus->Arrow-kernel task (the
 # optimizer's column-pruned compressed-size estimate, which undercounts
-# raw text ~2x): the Python kernels (tokenize+fold, Gram partials,
-# cluster assignment) cost ~1 s/MB of input, so tasks far smaller than
-# a shuffle-partition sweet spot are right — measured at sf0.1 (594 KB
-# documents, ~0.25 MB estimated): 1 task 0.47 s, 8 tasks 0.27 s, 32
-# tasks 0.39 s for the fused gram fold
+# the parquet file ~2x and raw text ~6x): the Python kernels
+# (tokenize+fold, Gram partials, cluster assignment) cost ~1 s per MB
+# of parquet input, so tasks far smaller than a shuffle-partition sweet
+# spot are right. Measured for the fused gram fold at sf0.1 (594 KB
+# documents file, 1.49 MB of text, ~0.25 MB estimated), warm, local[4]
+# on 4 vCPU: 1 task 0.61 s, 8 tasks 0.48 s, 32 tasks 1.05 s (each
+# Python task also pays a fixed start-up cost, so past the slot count
+# more tasks cost more)
 KERNEL_TASK_BYTES = 32 * 1024
 
 

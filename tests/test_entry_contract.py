@@ -514,8 +514,9 @@ KEEP = {
 
 
 def _modules_anyone_runs():
-    """(in_package, parsed module) of every package module, then of the
-    entry, bench, perfbench and script modules."""
+    """(dotted module name, parsed module) of every package module, then
+    (None, parsed module) of the entry, bench, perfbench and script
+    modules."""
     import ast
 
     pkg = glob.glob(os.path.join(ROOT, "aws_trusted_advisor_explorer_spark",
@@ -525,8 +526,10 @@ def _modules_anyone_runs():
             + glob.glob(os.path.join(ROOT, "perfbench", "*.py"))
             + glob.glob(os.path.join(ROOT, "scripts", "*.py")))
     for p in pkg + rest:
+        module = (os.path.splitext(os.path.relpath(p, ROOT))[0]
+                  .replace(os.sep, ".") if p in pkg else None)
         with open(p, encoding="utf-8") as f:
-            yield p in pkg, ast.parse(f.read())
+            yield module, ast.parse(f.read())
 
 
 def _package_graph():
@@ -534,16 +537,24 @@ def _package_graph():
     package module defines to its defining nodes; ``roots`` holds the
     code anyone runs — the entry, bench, perfbench and script modules
     whole, each package module's import-time statements and decorators,
-    and a reference to every ``@session_plane`` build."""
+    and a reference to every ``@session_plane`` build. A package
+    module's ``if __name__ == "__main__"`` block is defined under the
+    module's dotted name: it runs when reached code names the module
+    (``python -m``, or a config value such as get_spark's
+    ``spark.python.daemon.module``)."""
     import ast
 
     defs: dict[str, list] = {}
     roots: list = []
-    for in_package, tree in _modules_anyone_runs():
-        if not in_package:
+    for module, tree in _modules_anyone_runs():
+        if module is None:
             roots.append(tree)
             continue
         for st in tree.body:
+            if (isinstance(st, ast.If) and isinstance(st.test, ast.Compare)
+                    and getattr(st.test.left, "id", None) == "__name__"):
+                defs.setdefault(module, []).append(st)
+                continue
             if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef,
                                ast.ClassDef)):
                 defs.setdefault(st.name, []).append(st)
@@ -568,8 +579,9 @@ def _targets(assign):
 
 
 def _mentioned(nodes):
-    """Every name, attribute, imported name and identifier-shaped string
-    literal in ``nodes`` (a string covers getattr-style dispatch)."""
+    """Every name, attribute, imported name and identifier-shaped or
+    dotted-identifier string literal in ``nodes`` (a string covers
+    getattr-style dispatch and a module named by its dotted name)."""
     import ast
 
     out = set()
@@ -582,7 +594,7 @@ def _mentioned(nodes):
             elif isinstance(n, ast.alias):
                 out.add(n.name.rsplit(".", 1)[-1])
             elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
-                  and n.value.isidentifier()):
+                  and all(p.isidentifier() for p in n.value.split("."))):
                 out.add(n.value)
     return out
 
@@ -693,8 +705,8 @@ def _never_set_params():
 
     seen = _set_params()
     out = set()
-    for in_package, tree in _modules_anyone_runs():
-        if not in_package:
+    for module, tree in _modules_anyone_runs():
+        if module is None:
             continue
         for st in tree.body:
             fns = [(st, st.name, 0)] if isinstance(st, ast.FunctionDef) else [

@@ -4756,6 +4756,36 @@ def test_knn_filtered_df_twin_equals_sql_form(spark, ddb):
     assert one < total
 
 
+def test_knn_filtered_df_join_compares_two_sides(spark, monkeypatch):
+    """The twin's candidate join names each key once per side. A join
+    condition written as ``q.bucket == c.bucket``, with ``q`` and ``c``
+    both projections of one DataFrame, compares one attribute with
+    itself before analysis (Spark warns "Constructing trivially true
+    equals predicate") and leans on the ambiguous-self-join rewrite to
+    pick the sides."""
+    import re
+
+    from pyspark.sql import Column
+
+    from tests.conftest import SF_DIR
+
+    conditions = []
+    DataFrame = type(spark.range(1))
+    join = DataFrame.join
+
+    def recording(self, other, on=None, *args, **kwargs):
+        conditions.append(on)
+        return join(self, other, on, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "join", recording)
+    similarity.knn_filtered_df(spark, SF_DIR)
+    monkeypatch.undo()
+    assert conditions
+    for on in conditions:
+        if isinstance(on, Column):
+            assert not re.search(r"=\((\w+), \1\)", str(on)), str(on)
+
+
 def test_training_labels_matches_python_replay(spark):
     """events_training_labels (r9): every forward-horizon label
     matches an independent python replay of the strictly-after window

@@ -95,6 +95,37 @@ def test_summary_p5_p6(spark):
     assert rows["Z4AUBRNSmz"]["resourcesprocessed"] == 120
 
 
+def test_ingest_tables_build_no_column_trees(spark, monkeypatch):
+    """Each check table and the summary are built from SQL expression
+    text in one ``selectExpr``, with no Column tree built through py4j
+    cell by cell. Bound: at most 50 py4j commands per table; Column
+    trees took about 670. Only this thread's commands count: py4j's
+    finalizer thread sends the deletes of objects freed earlier,
+    whenever it wakes."""
+    import threading
+
+    from py4j.java_gateway import GatewayClient
+
+    results = ta_api.check_results_df(spark, [_doc(flagged=EIP_FLAGGED)])
+    checks = [c for c in registry.SUPPORTED_CHECKS + registry.EXTRACT_ONLY_CHECKS
+              if c in registry.SCHEMAS]
+    calls = []
+    send = GatewayClient.send_command
+    caller = threading.current_thread()
+
+    def counting(self, *args, **kwargs):
+        if threading.current_thread() is caller:
+            calls.append(1)
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    tables = [X.flagged_resources_table(results, c) for c in checks]
+    tables.append(X.summary_table(results))
+    monkeypatch.undo()
+    assert len(tables) == len(checks) + 1
+    assert len(calls) <= 50 * len(tables), len(calls)
+
+
 def test_missing_registry_check_skipped(spark):
     results = ta_api.check_results_df(spark, [_doc(check_id="NotARealCheck")])
     with pytest.raises(KeyError):
