@@ -18,6 +18,8 @@ explorer) has no corpus plane; scope directed by BASELINE.json
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
+from typing import NamedTuple
 
 from aws_trusted_advisor_explorer_spark.functions.dual import Dialect
 from aws_trusted_advisor_explorer_spark.session import (
@@ -84,17 +86,17 @@ FROM c"""
 
 
 def docs_pack_bins_df(spark):
-    """Distributed twin of :func:`docs_pack_bins`: two-phase cumulative
-    sum. Phase 1 range-partitions by doc_id and takes per-partition
-    token totals (a handful of rows -> driver); phase 2 turns them into
-    prefix offsets and adds the within-partition running sum. No global
-    single-partition sort — the shuffle is a range repartition, and the
-    offsets table is tiny. Identical integers to the SQL window (long
-    addition is associative), verified by test."""
+    """Distributed twin of :func:`docs_pack_bins`: the running token
+    total as the two-phase prefix sum of :mod:`functions.ranged` (a
+    range shuffle by doc_id plus a partition-count-sized offsets
+    window; no global single-partition sort). Identical integers to
+    the SQL window (long addition is associative), verified by test."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
+    from aws_trusted_advisor_explorer_spark.functions.ranged import (
+        prefix_total, range_layout,
+    )
 
     # ONE tokenizer definition (Dialect.tokens) — a hardcoded copy
     # here would silently diverge from the SQL twin if the token
@@ -102,40 +104,15 @@ def docs_pack_bins_df(spark):
     t = spark.sql(
         f"SELECT doc_id, cast({SPARK.arr_len(SPARK.tokens('text'))} "
         f"as bigint) AS n_toks FROM documents")
-    # materialize once: the ranged relation feeds both the per-partition
-    # totals and the final join, and without the checkpoint the
-    # tokenize fold + range shuffle re-ran per consumer (no
-    # ReusedExchange under AQE); 2 longs + pid per row
-    from aws_trusted_advisor_explorer_spark.session import (
-        range_partitions_for,
-    )
-
-    ranged = (t.repartitionByRange(range_partitions_for(t), "doc_id")
-              .withColumn("pid", F.spark_partition_id())
-              .localCheckpoint(eager=False))
-    # phase 1: per-partition totals (rows = #partitions, driver-safe)
-    totals = ranged.groupBy("pid").agg(F.sum("n_toks").alias("part_sum"))
-    # unpartitioned window is BOUNDED: `totals` has one row per range
-    # partition (<= 32 here, O(partitions) on a cluster), so Spark's
-    # "No Partition Defined" WindowExec warning is accepted — moving a
-    # partition-count-sized relation to one task is the point of the
-    # two-phase cumsum
-    w_off = (Window.orderBy("pid")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offsets = totals.withColumn(
-        "offset", F.coalesce(F.sum("part_sum").over(w_off), F.lit(0))) \
-        .select("pid", "offset")
-    # phase 2: within-partition exclusive running sum + broadcast offset
-    w_in = (Window.partitionBy("pid").orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, -1))
-    packed = (ranged.join(F.broadcast(offsets), "pid")
-              .withColumn("prior",
-                          F.col("offset")
-                          + F.coalesce(F.sum("n_toks").over(w_in), F.lit(0)))
-              .select("doc_id", "n_toks",
-                      F.floor(F.col("prior") / PACK_BUDGET)
-                      .cast("bigint").alias("bin_id")))
-    return packed
+    # materialize once: the layout feeds both the per-partition totals
+    # and the final join, and without the checkpoint the tokenize fold
+    # + range shuffle re-ran per consumer (no ReusedExchange under
+    # AQE); 2 longs + pid per row
+    ranged = range_layout(t, "doc_id").localCheckpoint(eager=False)
+    return (prefix_total(ranged, ["doc_id"], F.col("n_toks"))
+            .select("doc_id", "n_toks",
+                    F.floor(F.col("prior") / PACK_BUDGET)
+                    .cast("bigint").alias("bin_id")))
 
 
 def text_vocab_topk(d: Dialect) -> str:
@@ -1263,7 +1240,7 @@ FROM sh GROUP BY split, shard_id"""
 def _release_rel_df(spark, key: object = None):
     """The UNPACKED released-doc relation (doc_id, split, n_toks,
     n_bytes, h) — every gate rail composed, before shard
-    assignment (:func:`_split_pack_df` adds prior/shard_id; the
+    assignment (:func:`_release_pack_df` adds prior/shard_id; the
     incremental refresh packs stored and delta slices separately):
 
     - pipeline verdicts (exact dedup + quality + domain cap + split)
@@ -1305,116 +1282,98 @@ RELEASE_REL_VIEW = "__release_rel_ranged"
 @session_plane("release_rel_ranged",
                deps=("minhash_pairs", "contam_hits_plane", "doc_content_hv"))
 def ensure_release_rel_view(spark, key: object = None) -> str:
-    """Materialize the RANGED released-doc relation (the
-    :func:`_release_rel_df` rail composition range-partitioned by
-    (split, doc_id) with its ``pid`` column frozen) once per (session,
-    dataset) — r13, guide §2.4: the release manifest and the
-    incremental refresh each re-composed the full rail (pipeline ∩
-    near-dedup ∩ decontamination ∩ token counts) and re-ranged it per
-    run. Both consumers pack filtered slices of this one pid-monotone
-    layout (`pre_ranged=True` — the r12 shared-layout rule: priors
-    depend only on pid monotonicity within each split, which the
-    frozen column preserves under any materialization)."""
-    from pyspark.sql import functions as F
-
-    from aws_trusted_advisor_explorer_spark.session import (
-        range_partitions_for,
+    """Materialize the released-doc rail (:func:`_release_rel_df`) as
+    a ``functions.ranged.range_layout`` by (split, doc_id) once per
+    (session, dataset): the release manifest and the incremental
+    refresh pack filtered slices of this one layout instead of each
+    re-composing and re-ranging the rail per run."""
+    from aws_trusted_advisor_explorer_spark.functions.ranged import (
+        range_layout,
     )
 
-    rel = _release_rel_df(spark, key=key)
     materialize_plane_df(
-        rel.repartitionByRange(range_partitions_for(rel), "split", "doc_id")
-        .withColumn("pid", F.spark_partition_id()), RELEASE_REL_VIEW)
+        range_layout(_release_rel_df(spark, key=key), "split", "doc_id"),
+        RELEASE_REL_VIEW)
     return RELEASE_REL_VIEW
 
 
-def _split_pack_df(rel, base_offsets=None, pre_ranged: bool = False):
-    """Per-split token packing via the two-phase exclusive cumsum
-    (docs_pack_bins_df pattern, PARTITIONed BY split): range-partition
-    by (split, doc_id), per-(split, pid) totals become prefix offsets
-    (a bounded partitions-per-split-sized window), broadcast back;
-    ``shard_id = floor(prior / {RELEASE_SHARD_TOKENS})``.
-    ``base_offsets`` (split, base) shifts every prior — the
-    incremental-refresh hook: a delta batch packs AFTER the stored
-    snapshot by starting its cumsum at the snapshot's per-split token
-    total, never rescanning the snapshot rows. ``pre_ranged=True``
-    skips the range exchange: ``rel`` already carries a ``pid`` column
-    from :func:`_ranged_rel_df` (r12 — the refresh's three pack arms
-    share ONE range partitioning; any layout where pid is monotone in
-    (split, doc_id) within each split yields identical priors, and a
-    filtered subset of such a layout still is one)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from aws_trusted_advisor_explorer_spark.session import (
-        range_partitions_for,
-    )
-
-    ranged = rel if pre_ranged else (
-        rel.repartitionByRange(range_partitions_for(rel),
-                               "split", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=False))
-    totals = (ranged.groupBy("split", "pid")
-              .agg(F.sum("n_toks").alias("part_sum")))
-    # bounded window: one row per (split, range partition) — the
-    # two-phase-cumsum allowlist justification
-    w_off = (Window.partitionBy("split").orderBy("pid")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offsets = (totals.withColumn(
-        "offset", F.coalesce(F.sum("part_sum").over(w_off), F.lit(0)))
-        .select("split", "pid", "offset"))
-    if base_offsets is not None:
-        offsets = (offsets.join(F.broadcast(base_offsets), "split",
-                                "left")
-                   .withColumn("offset", F.col("offset")
-                               + F.coalesce(F.col("base"), F.lit(0)))
-                   .select("split", "pid", "offset"))
-    w_in = (Window.partitionBy("split", "pid").orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, -1))
-    return (ranged.join(F.broadcast(offsets), ["split", "pid"])
-            .withColumn("prior",
-                        F.col("offset")
-                        + F.coalesce(F.sum("n_toks").over(w_in), F.lit(0)))
-            .withColumn("shard_id",
-                        F.floor(F.col("prior") / RELEASE_SHARD_TOKENS)
-                        .cast("bigint")))
-
-
-def _manifest_agg_df(a, with_path: bool = True):
+def _manifest_agg_df(a):
     """The manifest aggregate over a packed assignment relation: one
     map-side-combining groupBy — exact counts, the order-independent
     bit_xor content checksum, the id range."""
     from pyspark.sql import functions as F
 
-    out = (a.groupBy("split", "shard_id")
-           .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                F.sum("n_toks").cast("bigint").alias("n_tokens"),
-                F.sum("n_bytes").cast("bigint").alias("n_bytes"),
-                F.expr("cast(bit_xor(h) as bigint)")
-                .alias("checksum_xor"),
-                F.min("doc_id").cast("bigint").alias("first_doc_id"),
-                F.max("doc_id").cast("bigint").alias("last_doc_id")))
-    if not with_path:
-        return out
-    return out.select("split", "shard_id",
-                      F.format_string("release/%s/shard-%05d.tar",
-                                      F.col("split"), F.col("shard_id"))
-                      .alias("path"),
-                      "n_docs", "n_tokens", "n_bytes", "checksum_xor",
-                      "first_doc_id", "last_doc_id")
+    return (a.groupBy("split", "shard_id")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+                 F.sum("n_toks").cast("bigint").alias("n_tokens"),
+                 F.sum("n_bytes").cast("bigint").alias("n_bytes"),
+                 F.expr("cast(bit_xor(h) as bigint)")
+                 .alias("checksum_xor"),
+                 F.min("doc_id").cast("bigint").alias("first_doc_id"),
+                 F.max("doc_id").cast("bigint").alias("last_doc_id")))
+
+
+class ReleaseRail(NamedTuple):
+    """What the doc and the pair release differ in: the rail's id
+    column, the measure (SQL text) whose running total per split fills
+    shards of ``shard_size``, the manifest aggregate over a packed
+    relation (split, shard_id, then counters named by :func:`_roll`'s
+    rule, the first counting rows) and the shard path prefix."""
+    id_col: str
+    measure: str
+    shard_size: int
+    agg: Callable
+    prefix: str
+
+
+DOC_RELEASE = ReleaseRail("doc_id", "n_toks", RELEASE_SHARD_TOKENS,
+                          _manifest_agg_df, "release")
+
+
+def _release_pack_df(ranged, r: ReleaseRail, base=None):
+    """A slice of the ranged rail with ``shard_id``: the running total
+    of ``r.measure`` per split in id order (``functions.ranged.
+    prefix_total``, starting at ``base``'s per-split total), floored
+    to ``r.shard_size``."""
+    from pyspark.sql import functions as F
+
+    from aws_trusted_advisor_explorer_spark.functions.ranged import (
+        prefix_total,
+    )
+
+    return (prefix_total(ranged, [r.id_col], F.expr(r.measure),
+                         by=["split"], base=base)
+            .withColumn("shard_id",
+                        F.floor(F.col("prior") / r.shard_size)
+                        .cast("bigint")))
+
+
+def _with_path(m, prefix: str):
+    """``m`` (one row per split and shard) with the shard ``path``
+    after its key columns."""
+    from pyspark.sql import functions as F
+
+    keys = ("split", "shard_id")
+    return m.select(*keys,
+                    F.format_string(f"{prefix}/%s/shard-%05d.tar", *keys)
+                    .alias("path"),
+                    *[c for c in m.columns if c not in keys])
+
+
+def release_manifest_df(ranged, r: ReleaseRail):
+    """The manifest of the ranged rail ``ranged``: one aggregate over
+    the whole rail packed per split."""
+    return _with_path(r.agg(_release_pack_df(ranged, r)), r.prefix)
 
 
 def docs_release_manifest_df(spark, key: object = None):
     """The release manifest as a DataFrame (the registered Spark form
     of :func:`docs_release_manifest_oracle`): one row per (split,
     shard) with the shard path, exact doc/token/byte counts, the
-    order-independent bit_xor content checksum, and the id range.
-    ONE map-side-combining aggregate over the doc-level assignment
-    relation: the session ranged rail packed per split
-    (:func:`_split_pack_df`)."""
-    ranged = spark.table(ensure_release_rel_view(spark, key=key))
-    return _manifest_agg_df(_split_pack_df(ranged, pre_ranged=True))
+    order-independent bit_xor content checksum, and the id range,
+    over the session ranged rail."""
+    return release_manifest_df(
+        spark.table(ensure_release_rel_view(spark, key=key)), DOC_RELEASE)
 
 
 # the synthetic "nightly batch": released docs above the 90th
@@ -1461,7 +1420,6 @@ def docs_release_refresh_oracle(d: Dialect) -> str:
     n_toks = d.arr_len(d.tokens("text"))
     nbytes = ("octet_length(text)" if d.name == "spark"
               else "strlen(text)")
-    vc = "string" if d.name == "spark" else "varchar"
     cut = d.idiv(f"(max(doc_id) * {RELEASE_REFRESH_NUM})",
                  str(RELEASE_REFRESH_DEN))
     agg = f"""cast(count(*) as bigint) AS n_docs,
@@ -1558,7 +1516,7 @@ full_rc AS (
 SELECT coalesce(m.split, f.split) AS split,
   coalesce(m.shard_id, f.shard_id) AS shard_id,
   'release/' || coalesce(m.split, f.split) || '/shard-'
-    || lpad(cast(coalesce(m.shard_id, f.shard_id) as {vc}), 5, '0')
+    || lpad({d.str_cast('coalesce(m.shard_id, f.shard_id)')}, 5, '0')
     || '.tar' AS path,
   m.n_docs, m.n_tokens, m.n_bytes, m.checksum_xor,
   m.first_doc_id, m.last_doc_id, m.n_docs_stored, m.n_docs_delta,
@@ -1567,96 +1525,79 @@ FROM merged m FULL OUTER JOIN full_rc f
   ON f.split = m.split AND f.shard_id = m.shard_id"""
 
 
+def _roll(c: str):
+    """How column ``c`` of a manifest combines across rows, by its
+    name: ``*_xor`` checksums xor, ``first_*``/``last_*`` ids take
+    min/max, every other column (a counter) adds."""
+    from pyspark.sql import functions as F
+
+    return (F.bit_xor(c) if c.endswith("_xor") else
+            F.min(c) if c.startswith("first_") else
+            F.max(c) if c.startswith("last_") else F.sum(c))
+
+
 def _split_audit_df(m, ranged, agg):
     """The merged manifest ``m`` (one row per split and shard) with
-    ``matches_recompute``: whether its split's rows roll up to the
-    manifest aggregate ``agg`` taken per split straight over the ranged
-    rail, with no packing and no id cut (nothing shared with the
-    stored/delta arms that built ``m``). Counters add, ``*_xor``
-    checksums xor, ``first_*``/``last_*`` ids take min/max. A wrong
-    counter in any shard flags every row of its split, and a split on
-    one side only is flagged too."""
+    ``matches_recompute``: whether its split's rows roll up
+    (:func:`_roll`) to the manifest aggregate ``agg`` taken per split
+    straight over the ranged rail, with no packing and no id cut
+    (nothing shared with the stored/delta arms that built ``m``). A
+    wrong counter in any shard flags every row of its split, and a
+    split on one side only is flagged too."""
     from functools import reduce
 
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    rail = agg(ranged.withColumn("shard_id", F.lit(0)), with_path=False)
+    rail = agg(ranged.withColumn("shard_id", F.lit(0)))
     cols = [c for c in rail.columns if c not in ("split", "shard_id")]
-
-    def roll(c):
-        return (F.bit_xor(c) if c.endswith("_xor") else
-                F.min(c) if c.startswith("first_") else
-                F.max(c) if c.startswith("last_") else F.sum(c))
-
     w = Window.partitionBy("split")
     ok = reduce(lambda a, b: a & b, [
-        roll(c).over(w).cast("bigint").eqNullSafe(F.col(f"rail_{c}"))
+        _roll(c).over(w).cast("bigint").eqNullSafe(F.col(f"rail_{c}"))
         for c in cols])
     rail = rail.select("split", *[F.col(c).alias(f"rail_{c}") for c in cols])
     return (m.join(rail, "split", "full_outer")
             .select(*m.columns, ok.alias("matches_recompute")))
 
 
-def docs_release_refresh_df(spark, key: object = None):
-    """The registered Spark form of :func:`docs_release_refresh_oracle`
-    — same stored+delta algebra over the DataFrame rails: the stored
-    and delta slices each pack with the two-phase range-partition
-    cumsum (:func:`_split_pack_df`; the delta's cumsum starts at the
-    stored split totals, so the snapshot rows are never re-read for
-    packing), counters merge additively, checksums by xor. The
-    ``matches_recompute`` audit checks each split of the merged
-    manifest against a plain aggregate of the ranged rail
-    (:func:`_split_audit_df`); the DuckDB oracle keeps the full pack
-    per shard."""
+def release_refresh_df(ranged, r: ReleaseRail):
+    """The stored+delta refresh of the manifest of the ranged rail
+    ``ranged`` (the algebra of :func:`docs_release_refresh_oracle`):
+    the rail is cut at RELEASE_REFRESH_NUM/RELEASE_REFRESH_DEN of the
+    max doc id; the stored slice packs from 0 and the delta slice
+    from the stored per-split total of ``r.measure``, so the snapshot
+    rows are never re-read for packing. The two manifests' rows merge
+    per shard by :func:`_roll`, with ``<count>_stored`` and
+    ``<count>_delta`` keeping each side's row count, and
+    :func:`_split_audit_df` adds ``matches_recompute``; the DuckDB
+    oracle keeps the full pack per shard."""
     from pyspark.sql import functions as F
 
-    # ONE range partitioning (+ pid) serves all pack arms (r12), and
-    # since r13 it is the session ranged-rail plane shared with the
-    # manifest query (the rail composed + ranged once per dataset,
-    # not per run)
-    ranged = spark.table(ensure_release_rel_view(spark, key=key))
-    cut = spark.table("documents").agg(F.expr(
+    cut = ranged.sparkSession.table("documents").agg(F.expr(
         f"cast((max(doc_id) * {RELEASE_REFRESH_NUM}) "
         f"div {RELEASE_REFRESH_DEN} as bigint)").alias("cut"))
     rel2 = ranged.crossJoin(F.broadcast(cut))
-    srel = rel2.filter("doc_id <= cut").drop("cut")
-    drel = rel2.filter("doc_id > cut").drop("cut")
-    sman = _manifest_agg_df(_split_pack_df(srel, pre_ranged=True),
-                            with_path=False)
+    srel = rel2.filter(f"{r.id_col} <= cut").drop("cut")
+    drel = rel2.filter(f"{r.id_col} > cut").drop("cut")
     sbase = srel.groupBy("split").agg(
-        F.sum("n_toks").cast("bigint").alias("base"))
-    dman = _manifest_agg_df(
-        _split_pack_df(drel, base_offsets=sbase, pre_ranged=True),
-        with_path=False)
-    m = (sman.alias("s").join(
-        dman.alias("dl"),
-        (F.expr("dl.split = s.split")
-         & F.expr("dl.shard_id = s.shard_id")), "full_outer")
-        .selectExpr(
-            "coalesce(s.split, dl.split) AS split",
-            "coalesce(s.shard_id, dl.shard_id) AS shard_id",
-            "format_string('release/%s/shard-%05d.tar', "
-            "coalesce(s.split, dl.split), "
-            "coalesce(s.shard_id, dl.shard_id)) AS path",
-            "coalesce(s.n_docs, 0) + coalesce(dl.n_docs, 0) AS n_docs",
-            "coalesce(s.n_tokens, 0) + coalesce(dl.n_tokens, 0)"
-            " AS n_tokens",
-            "coalesce(s.n_bytes, 0) + coalesce(dl.n_bytes, 0)"
-            " AS n_bytes",
-            "coalesce(s.checksum_xor, 0) ^ coalesce(dl.checksum_xor, 0)"
-            " AS checksum_xor",
-            "CASE WHEN s.first_doc_id IS NULL THEN dl.first_doc_id"
-            " WHEN dl.first_doc_id IS NULL THEN s.first_doc_id"
-            " ELSE least(s.first_doc_id, dl.first_doc_id) END"
-            " AS first_doc_id",
-            "CASE WHEN s.last_doc_id IS NULL THEN dl.last_doc_id"
-            " WHEN dl.last_doc_id IS NULL THEN s.last_doc_id"
-            " ELSE greatest(s.last_doc_id, dl.last_doc_id) END"
-            " AS last_doc_id",
-            "coalesce(s.n_docs, 0) AS n_docs_stored",
-            "coalesce(dl.n_docs, 0) AS n_docs_delta"))
-    return _split_audit_df(m, ranged, _manifest_agg_df)
+        F.sum(F.expr(r.measure)).cast("bigint").alias("base"))
+    sman = r.agg(_release_pack_df(srel, r))
+    dman = r.agg(_release_pack_df(drel, r, base=sbase))
+    n = sman.columns[2]
+    stored, delta = f"{n}_stored", f"{n}_delta"
+    cols = sman.columns[2:] + [stored, delta]
+    m = (sman.withColumns({stored: F.col(n), delta: F.lit(0)})
+         .unionByName(dman.withColumns({stored: F.lit(0), delta: F.col(n)}))
+         .groupBy("split", "shard_id")
+         .agg(*[_roll(c).cast("bigint").alias(c) for c in cols]))
+    return _split_audit_df(_with_path(m, r.prefix), ranged, r.agg)
+
+
+def docs_release_refresh_df(spark, key: object = None):
+    """The registered Spark form of :func:`docs_release_refresh_oracle`
+    (:func:`release_refresh_df` over the session ranged rail)."""
+    return release_refresh_df(
+        spark.table(ensure_release_rel_view(spark, key=key)), DOC_RELEASE)
 
 
 BUILDERS = {

@@ -542,9 +542,7 @@ def _pair_array_verify_df(spark, pairs, base: str):
     shingle relation — callers apply their own threshold filter."""
     from pyspark.sql import functions as F
 
-    from aws_trusted_advisor_explorer_spark.session import (
-        range_partitions_for,
-    )
+    from aws_trusted_advisor_explorer_spark.session import range_partitions
 
     _require_shingle_base(base, "the distinct ride-along view holds "
                                 "the per-doc shingle sets")
@@ -554,7 +552,7 @@ def _pair_array_verify_df(spark, pairs, base: str):
             .localCheckpoint(eager=False))
     a = arrs.select(F.col("doc_id").alias("ia"), F.col("hvs").alias("ha"))
     b = arrs.select(F.col("doc_id").alias("ib"), F.col("hvs").alias("hb"))
-    return (pairs.repartition(range_partitions_for(pairs))
+    return (pairs.repartition(range_partitions(spark))
             .join(a, "ia").join(b, "ib")
             .withColumn("n_common",
                         F.expr("size(array_intersect(ha, hb))"))
@@ -1341,9 +1339,7 @@ def dedup_bloom_prefilter(d: Dialect, base: str | None = None) -> str:
     probes = ", ".join(
         f"(hv * {a} + {b}) % {P_MOD} % {BLOOM_BITS} AS p{i}"
         for i, (a, b) in enumerate(BLOOM_SALTS))
-    parr = "[" if d.name == "duck" else "array("
-    parr += ", ".join(f"p{i}" for i in range(BLOOM_K))
-    parr += "]" if d.name == "duck" else ")"
+    parr = d.arr_lit([f"p{i}" for i in range(BLOOM_K)])
     # the k probe positions EXPLODE from one array — a UNION ALL
     # branch per probe would re-evaluate the corpus poly-hash CTE per
     # branch under both engines' CTE inlining (measured 2.0s -> 0.7s

@@ -50,12 +50,12 @@ def events_sliding_window(d: Dialect) -> str:
     (type, window) with map-side combine — same shape as the tumbling
     aggregate, 2x the shuffle rows, no sort."""
     ep = d.epoch_us("ts")
-    idiv = "DIV" if d.name == "spark" else "//"
-    arr = ("array(w0, w0 - 1800)" if d.name == "spark"
-           else "[w0, w0 - 1800]")
+    sec = d.idiv(f"({ep} - ((({ep} % 1000000) + 1000000) % 1000000))",
+                 "1000000")
+    arr = d.arr_lit(["w0", "w0 - 1800"])
     return f"""WITH e AS (
   SELECT event_type,
-    ({ep} - ((({ep} % 1000000) + 1000000) % 1000000)) {idiv} 1000000 AS sec,
+    {sec} AS sec,
     value FROM events
 ),
 h AS (SELECT event_type, sec, value,
@@ -264,10 +264,10 @@ def events_retention(d: Dialect) -> str:
     relation — co-partitioned by the join key, no data-sized shuffle.
     """
     ep = d.epoch_us("ts")
-    idiv = "DIV" if d.name == "spark" else "//"
+    hr = d.idiv(d.idiv(f"({ep})", "1000000"), "3600")
     return f"""WITH e AS (
   SELECT DISTINCT user_id,
-    ((({ep}) {idiv} 1000000) {idiv} 3600) * 3600 AS hr
+    {hr} * 3600 AS hr
   FROM events
 )
 SELECT a.hr AS hour_sec,

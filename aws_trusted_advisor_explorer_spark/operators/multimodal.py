@@ -31,7 +31,7 @@ from pyspark.sql.types import (
 
 from aws_trusted_advisor_explorer_spark.functions.dual import Dialect
 # registers the dedup planes the pair-release plane declares as deps
-from aws_trusted_advisor_explorer_spark.operators import dedup
+from aws_trusted_advisor_explorer_spark.operators import corpusops, dedup
 from aws_trusted_advisor_explorer_spark.session import (
     materialize_plane_df, session_plane,
 )
@@ -496,7 +496,7 @@ def pairs_release_manifest(d: Dialect) -> str:
     Ref parity note: no reference analog (extension plane) — the
     composition mirrors the LAION-5B release recipe (pair dedup +
     caption filtering + fixed-count shards + per-shard metadata)."""
-    lp = (f"lpad(cast(shard_id as {'string' if d.name == 'spark' else 'varchar'}), 5, '0')")
+    lp = f"lpad({d.str_cast('shard_id')}, 5, '0')"
     return f"""WITH {_pairs_release_core(d)},
 r AS (
   SELECT pair_id, media_phash, split, n_toks, n_bytes, h,
@@ -521,10 +521,6 @@ def _pairs_release_core(d: Dialect) -> str:
     ∩ caption keep=1 with its split) joined to the caption's
     token/byte counts and content hash. The manifest packs it whole;
     the incremental refresh packs its stored/delta slices."""
-    from aws_trusted_advisor_explorer_spark.operators.corpusops import (
-        docs_curation_pipeline,
-    )
-
     mcp = media_caption_pairs(d)
     pnd = pairs_near_dedup(d)
     n_toks = d.arr_len(d.tokens("text"))
@@ -537,7 +533,7 @@ pnd AS (
 {pnd}
 ),
 pipe AS (
-{docs_curation_pipeline(d)}
+{corpusops.docs_curation_pipeline(d)}
 ),
 drops AS (SELECT DISTINCT pair_b AS pair_id FROM pnd),
 ctok AS (
@@ -590,13 +586,8 @@ def pairs_release_refresh(d: Dialect) -> str:
 
     Oracle form (per-split windows); the registered Spark twin is
     :func:`pairs_release_refresh_df` (two-phase count cumsum)."""
-    from aws_trusted_advisor_explorer_spark.operators.corpusops import (
-        RELEASE_REFRESH_DEN, RELEASE_REFRESH_NUM,
-    )
-
-    vc = "string" if d.name == "spark" else "varchar"
-    cut = d.idiv(f"(max(doc_id) * {RELEASE_REFRESH_NUM})",
-                 str(RELEASE_REFRESH_DEN))
+    cut = d.idiv(f"(max(doc_id) * {corpusops.RELEASE_REFRESH_NUM})",
+                 str(corpusops.RELEASE_REFRESH_DEN))
     agg = _pairs_manifest_agg_sql()
     nse = (lambda a, b: f"{a} <=> {b}") if d.name == "spark" else \
         (lambda a, b: f"{a} IS NOT DISTINCT FROM {b}")
@@ -672,7 +663,7 @@ full_rc AS (
 SELECT coalesce(m.split, f.split) AS split,
   coalesce(m.shard_id, f.shard_id) AS shard_id,
   'release-pairs/' || coalesce(m.split, f.split) || '/shard-'
-    || lpad(cast(coalesce(m.shard_id, f.shard_id) as {vc}), 5, '0')
+    || lpad({d.str_cast('coalesce(m.shard_id, f.shard_id)')}, 5, '0')
     || '.tar' AS path,
   m.n_pairs, m.n_caption_tokens, m.n_caption_bytes,
   m.caption_checksum_xor, m.media_checksum_xor,
@@ -684,73 +675,13 @@ FROM merged m FULL OUTER JOIN full_rc f
 
 
 def pairs_release_refresh_df(spark, key: object = None):
-    """The registered Spark form of :func:`pairs_release_refresh` —
-    stored and delta slices each rank with the two-phase count cumsum
-    (:func:`_pairs_count_rank_df`; the delta's rank starts at the
-    stored per-split pair count, so the snapshot rows are never
-    re-read for packing), counters merge additively, both modality
-    checksums by xor. The ``matches_recompute`` audit checks each
-    split against a plain aggregate of the ranged rail
-    (corpusops._split_audit_df, as in
-    corpusops.docs_release_refresh_df); the DuckDB oracle keeps the
-    full pack per shard."""
-    from pyspark.sql import functions as F
-
-    from aws_trusted_advisor_explorer_spark.operators.corpusops import (
-        RELEASE_REFRESH_DEN, RELEASE_REFRESH_NUM, _split_audit_df,
-    )
-
-    # one shared (split, pair_id) range layout for all rank arms (the
-    # corpusops docs_release_refresh_df r12 rule); since r13 the
-    # ranged rail is the session plane shared with the pair manifest
-    # (composed + ranged once per dataset, not per run)
-    ranged = spark.table(ensure_pairs_release_rel_view(spark, key=key))
-    cut = spark.table("documents").agg(F.expr(
-        f"cast((max(doc_id) * {RELEASE_REFRESH_NUM}) "
-        f"div {RELEASE_REFRESH_DEN} as bigint)").alias("cut"))
-    rel2 = ranged.crossJoin(F.broadcast(cut))
-    srel = rel2.filter("pair_id <= cut").drop("cut")
-    drel = rel2.filter("pair_id > cut").drop("cut")
-    sman = _pairs_manifest_agg_df(
-        _pairs_count_rank_df(srel, pre_ranged=True), with_path=False)
-    sbase = srel.groupBy("split").agg(
-        F.count(F.lit(1)).cast("bigint").alias("base"))
-    dman = _pairs_manifest_agg_df(
-        _pairs_count_rank_df(drel, base_counts=sbase, pre_ranged=True),
-        with_path=False)
-    m = (sman.alias("s").join(
-        dman.alias("dl"),
-        (F.expr("dl.split = s.split")
-         & F.expr("dl.shard_id = s.shard_id")), "full_outer")
-        .selectExpr(
-            "coalesce(s.split, dl.split) AS split",
-            "coalesce(s.shard_id, dl.shard_id) AS shard_id",
-            "format_string('release-pairs/%s/shard-%05d.tar', "
-            "coalesce(s.split, dl.split), "
-            "coalesce(s.shard_id, dl.shard_id)) AS path",
-            "coalesce(s.n_pairs, 0) + coalesce(dl.n_pairs, 0)"
-            " AS n_pairs",
-            "coalesce(s.n_caption_tokens, 0) "
-            "+ coalesce(dl.n_caption_tokens, 0) AS n_caption_tokens",
-            "coalesce(s.n_caption_bytes, 0) "
-            "+ coalesce(dl.n_caption_bytes, 0) AS n_caption_bytes",
-            "coalesce(s.caption_checksum_xor, 0) "
-            "^ coalesce(dl.caption_checksum_xor, 0)"
-            " AS caption_checksum_xor",
-            "coalesce(s.media_checksum_xor, 0) "
-            "^ coalesce(dl.media_checksum_xor, 0)"
-            " AS media_checksum_xor",
-            "CASE WHEN s.first_pair_id IS NULL THEN dl.first_pair_id"
-            " WHEN dl.first_pair_id IS NULL THEN s.first_pair_id"
-            " ELSE least(s.first_pair_id, dl.first_pair_id) END"
-            " AS first_pair_id",
-            "CASE WHEN s.last_pair_id IS NULL THEN dl.last_pair_id"
-            " WHEN dl.last_pair_id IS NULL THEN s.last_pair_id"
-            " ELSE greatest(s.last_pair_id, dl.last_pair_id) END"
-            " AS last_pair_id",
-            "coalesce(s.n_pairs, 0) AS n_pairs_stored",
-            "coalesce(dl.n_pairs, 0) AS n_pairs_delta"))
-    return _split_audit_df(m, ranged, _pairs_manifest_agg_df)
+    """The registered Spark form of :func:`pairs_release_refresh`:
+    ``corpusops.release_refresh_df`` over the session ranged pair rail
+    (the count rank's stored base is the stored per-split pair
+    count)."""
+    return corpusops.release_refresh_df(
+        spark.table(ensure_pairs_release_rel_view(spark, key=key)),
+        PAIR_RELEASE)
 
 
 def _pairs_release_rel_df(spark, key: object = None):
@@ -762,9 +693,6 @@ def _pairs_release_rel_df(spark, key: object = None):
     from pyspark.sql import functions as F
 
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-    from aws_trusted_advisor_explorer_spark.operators.corpusops import (
-        docs_curation_pipeline,
-    )
 
     base = ensure_phash_view(spark, key=key)
     pv = dedup.ensure_minhash_pairs_view(spark, key=key)
@@ -772,7 +700,7 @@ def _pairs_release_rel_df(spark, key: object = None):
            .select("pair_id", "media_id", "caption_id", "media_phash"))
     drops = (spark.sql(pairs_near_dedup(SPARK, base=base, pairs_view=pv))
              .select(F.col("pair_b").alias("pair_id")).distinct())
-    pipe = (spark.sql(docs_curation_pipeline(SPARK))
+    pipe = (spark.sql(corpusops.docs_curation_pipeline(SPARK))
             .filter("keep = 1").select("doc_id", "split"))
     ctok = spark.table("documents").selectExpr(
         "doc_id",
@@ -792,77 +720,26 @@ def _pairs_release_rel_df(spark, key: object = None):
             .join(hv, "caption_id"))
 
 
-def _pairs_count_rank_df(rel, base_counts=None,
-                         pre_ranged: bool = False):
-    """Per-split COUNT rank + shard assignment via the two-phase
-    range-partition cumsum (rank = partition offset + in-partition
-    row_number; no split is globally sorted on one machine — the
-    docs-release `_split_pack_df` pattern with a count measure).
-    ``base_counts`` (split, base) shifts every rank — the incremental-
-    refresh hook: a delta batch ranks AFTER the stored snapshot by
-    starting at the stored per-split pair count. ``pre_ranged=True``
-    skips the range exchange — ``rel`` already carries ``pid`` from a
-    shared (split, pair_id) range layout (the corpusops
-    _split_pack_df rule: filtered slices of one pid-monotone layout
-    rank identically)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from aws_trusted_advisor_explorer_spark.session import (
-        range_partitions_for,
-    )
-
-    ranged = rel if pre_ranged else (
-        rel.repartitionByRange(range_partitions_for(rel),
-                               "split", "pair_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=False))
-    totals = (ranged.groupBy("split", "pid")
-              .agg(F.count(F.lit(1)).alias("part_n")))
-    w_off = (Window.partitionBy("split").orderBy("pid")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offsets = (totals.withColumn(
-        "offset", F.coalesce(F.sum("part_n").over(w_off), F.lit(0)))
-        .select("split", "pid", "offset"))
-    if base_counts is not None:
-        offsets = (offsets.join(F.broadcast(base_counts), "split",
-                                "left")
-                   .withColumn("offset", F.col("offset")
-                               + F.coalesce(F.col("base"), F.lit(0)))
-                   .select("split", "pid", "offset"))
-    w_in = Window.partitionBy("split", "pid").orderBy("pair_id")
-    return (ranged.join(F.broadcast(offsets), ["split", "pid"])
-            .withColumn("rk", F.col("offset")
-                        + F.row_number().over(w_in))
-            .withColumn("shard_id",
-                        F.floor((F.col("rk") - 1) / PAIRS_PER_SHARD)
-                        .cast("bigint")))
-
-
-def _pairs_manifest_agg_df(a, with_path: bool = True):
+def _pairs_manifest_agg_df(a):
     """The pair-manifest aggregate over a ranked pair relation — the
     DataFrame twin of :func:`_pairs_manifest_agg_sql`."""
     from pyspark.sql import functions as F
 
-    out = (a.groupBy("split", "shard_id")
-           .agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-                F.sum("n_toks").cast("bigint").alias("n_caption_tokens"),
-                F.sum("n_bytes").cast("bigint").alias("n_caption_bytes"),
-                F.expr("cast(bit_xor(h) as bigint)")
-                .alias("caption_checksum_xor"),
-                F.expr("cast(bit_xor(media_phash) as bigint)")
-                .alias("media_checksum_xor"),
-                F.min("pair_id").cast("bigint").alias("first_pair_id"),
-                F.max("pair_id").cast("bigint").alias("last_pair_id")))
-    if not with_path:
-        return out
-    return out.select("split", "shard_id",
-                      F.format_string("release-pairs/%s/shard-%05d.tar",
-                                      F.col("split"), F.col("shard_id"))
-                      .alias("path"),
-                      "n_pairs", "n_caption_tokens", "n_caption_bytes",
-                      "caption_checksum_xor", "media_checksum_xor",
-                      "first_pair_id", "last_pair_id")
+    return (a.groupBy("split", "shard_id")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
+                 F.sum("n_toks").cast("bigint").alias("n_caption_tokens"),
+                 F.sum("n_bytes").cast("bigint").alias("n_caption_bytes"),
+                 F.expr("cast(bit_xor(h) as bigint)")
+                 .alias("caption_checksum_xor"),
+                 F.expr("cast(bit_xor(media_phash) as bigint)")
+                 .alias("media_checksum_xor"),
+                 F.min("pair_id").cast("bigint").alias("first_pair_id"),
+                 F.max("pair_id").cast("bigint").alias("last_pair_id")))
+
+
+# a count rank per split in pair-id order, PAIRS_PER_SHARD pairs a shard
+PAIR_RELEASE = corpusops.ReleaseRail("pair_id", "1", PAIRS_PER_SHARD,
+                                     _pairs_manifest_agg_df, "release-pairs")
 
 
 PAIRS_RELEASE_REL_VIEW = "__pairs_release_rel_ranged"
@@ -871,34 +748,29 @@ PAIRS_RELEASE_REL_VIEW = "__pairs_release_rel_ranged"
 @session_plane("pairs_release_rel_ranged",
                deps=("media_phash_sig", "minhash_pairs", "doc_content_hv"))
 def ensure_pairs_release_rel_view(spark, key: object = None) -> str:
-    """Materialize the RANGED pair-release rail (the
-    :func:`_pairs_release_rel_df` composition range-partitioned by
-    (split, pair_id) with ``pid`` frozen) once per (session, dataset)
-    — the corpusops.ensure_release_rel_view pattern at the pair level
-    (r13): the pair manifest and the pair refresh each re-composed
-    and re-ranged the full rail per run; both now rank filtered
-    slices of this one pid-monotone layout."""
-    from pyspark.sql import functions as F
-
-    from aws_trusted_advisor_explorer_spark.session import (
-        range_partitions_for,
+    """Materialize the pair-release rail (:func:`_pairs_release_rel_df`)
+    as a ``functions.ranged.range_layout`` by (split, pair_id) once per
+    (session, dataset) — the corpusops.ensure_release_rel_view plane at
+    the pair level: the pair manifest and the pair refresh rank
+    filtered slices of this one layout."""
+    from aws_trusted_advisor_explorer_spark.functions.ranged import (
+        range_layout,
     )
 
-    rel = _pairs_release_rel_df(spark, key=key)
     materialize_plane_df(
-        rel.repartitionByRange(range_partitions_for(rel), "split", "pair_id")
-        .withColumn("pid", F.spark_partition_id()), PAIRS_RELEASE_REL_VIEW)
+        range_layout(_pairs_release_rel_df(spark, key=key),
+                     "split", "pair_id"), PAIRS_RELEASE_REL_VIEW)
     return PAIRS_RELEASE_REL_VIEW
 
 
 def pairs_release_manifest_df(spark, key: object = None):
     """The pair-release manifest as a DataFrame (the registered Spark
-    form of :func:`pairs_release_manifest`): one map-side-combining
-    aggregate over the pair assignment relation, which is the session
-    ranged rail count-ranked per split (:func:`_pairs_count_rank_df`)."""
-    ranged = spark.table(ensure_pairs_release_rel_view(spark, key=key))
-    return _pairs_manifest_agg_df(
-        _pairs_count_rank_df(ranged, pre_ranged=True))
+    form of :func:`pairs_release_manifest`):
+    ``corpusops.release_manifest_df`` over the session ranged pair
+    rail."""
+    return corpusops.release_manifest_df(
+        spark.table(ensure_pairs_release_rel_view(spark, key=key)),
+        PAIR_RELEASE)
 
 
 def media_phash_dedup(d: Dialect, base: str | None = None) -> str:

@@ -974,19 +974,17 @@ def docs_quality_cutoff_calibration_df(spark):
     wired Spark plan (the SQL form's global ``row_number() OVER (ORDER
     BY ...)`` is a single-partition sort — the exact WindowExec
     "Moving all data to a single partition" scale-killer, fine only as
-    the DuckDB oracle). Two-phase exact rank selection, the
-    docs_pack_bins_df pattern:
+    the DuckDB oracle). Exact rank selection over the two-phase prefix
+    sum of :mod:`functions.ranged`:
 
-    1. Range-repartition the scored relation by the selection order
+    1. Range-partition the scored relation by the selection order
        (score DESC, doc_id) — a parallel range shuffle, no global sort.
-    2. Per-partition counts -> exclusive prefix offsets (the
-       unpartitioned window is BOUNDED: one row per range partition).
-    3. Global rank = within-partition row_number + broadcast offset;
-       the cutoff is the single row at rank n_keep (scores are
-       non-increasing in rank, so the rank-n_keep score IS the minimum
-       kept score), fetched via a broadcast equi-join against the
-       one-row (n, n_keep) relation — no driver collect, no
-       single-partition window over the corpus.
+    2. Global rank = the count prefix (``prior + 1``); the cutoff is
+       the single row at rank n_keep (scores are non-increasing in
+       rank, so the rank-n_keep score IS the minimum kept score),
+       fetched via a broadcast equi-join against the one-row
+       (n, n_keep) relation — no driver collect, no single-partition
+       window over the corpus.
 
     Identical output to the SQL window form (exact rank, same
     deterministic total order, long arithmetic; the cutoff rank is
@@ -997,51 +995,35 @@ def docs_quality_cutoff_calibration_df(spark):
     mode-equality tests at driver SF and on planted NULL-heavy
     corpora."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
+    from aws_trusted_advisor_explorer_spark.functions.ranged import (
+        prefix_total, range_layout,
+    )
 
     q = spark.sql(text_quality(SPARK)).select("doc_id", "quality_score")
-    # the ranged relation feeds three consumers (per-partition counts,
-    # the global total, the rank join); without materialization the
+    order = [F.col("quality_score").desc(), F.col("doc_id").asc()]
+    # the layout feeds three consumers (per-partition counts, the
+    # global total, the rank join); without materialization the
     # scoring chain + range shuffle re-ran per consumer (measured 3
     # parquet scans, 0 ReusedExchange under AQE) — the checkpoint is
     # (doc_id, score, pid), 2 longs + a double per row
-    from aws_trusted_advisor_explorer_spark.session import (
-        range_partitions_for,
-    )
-
-    ranged = (q.repartitionByRange(
-                  range_partitions_for(q),
-                  F.col("quality_score").desc(), F.col("doc_id").asc())
-              .withColumn("pid", F.spark_partition_id())
-              .localCheckpoint(eager=False))
-    totals = ranged.groupBy("pid").agg(
-        F.count("*").alias("part_n"),
-        F.count("quality_score").alias("part_nn"))
-    # unpartitioned window is BOUNDED: `totals` has one row per range
-    # partition (<= 32 here, O(partitions) on a cluster)
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "offset", F.coalesce(F.sum("part_n").over(w_off), F.lit(0)))
+    ranged = range_layout(q, *order).localCheckpoint(eager=False)
     # the oracle's cutoff is min(score) over the kept rows SKIPPING
     # NULLs (zero-token docs score NULL and sort last under DESC), so
     # the rank to fetch is r* = least(n_keep, #non-NULL) — picking the
     # rank-n_keep row verbatim would return NULL the moment NULL-score
     # docs cross into the kept band (review finding)
-    glob = (offsets.agg(F.sum("part_n").alias("n"),
-                        F.sum("part_nn").alias("n_nonnull"))
+    # (n is a sum, NULL on an empty corpus like the oracle's max(n))
+    glob = (ranged.agg(F.sum(F.lit(1)).alias("n"),
+                       F.count("quality_score").alias("n_nonnull"))
             .withColumn("n_keep",
                         F.expr(f"cast((n * {CALIB_KEEP_PCT}) div 100"
                                f" as bigint)"))
             .withColumn("rstar", F.least(F.col("n_keep"),
                                          F.col("n_nonnull"))))
-    w_in = (Window.partitionBy("pid")
-            .orderBy(F.col("quality_score").desc(), F.col("doc_id").asc()))
-    ranked = (ranged.join(F.broadcast(offsets.select("pid", "offset")), "pid")
-              .withColumn("rn",
-                          F.row_number().over(w_in).cast("bigint")
-                          + F.col("offset")))
+    ranked = (prefix_total(ranged, order, F.lit(1))
+              .withColumn("rn", F.col("prior") + 1))
     out_cols = [
         F.col("n").cast("bigint").alias("n_docs"),
         F.lit(CALIB_KEEP_PCT).cast("bigint").alias("target_keep_pct"),

@@ -508,9 +508,10 @@ def register_raw_tables(spark: SparkSession,
     import hashlib
     import os
     import tempfile
+    from functools import partial
 
     from aws_trusted_advisor_explorer_spark.session import (
-        load_tables, source_stamp,
+        land_once, load_tables, source_stamp,
     )
 
     load_tables(spark, sf_dir)
@@ -557,34 +558,16 @@ def register_raw_tables(spark: SparkSession,
         return re.sub(
             rf"(FROM|JOIN) ({'|'.join(FIXTURE_BASE_TABLES)})\b", sub, sql)
 
+    def derive(name: str, sql: str) -> DataFrame:
+        df = spark.sql(_landing_sql(to_spark_sql(sql)))
+        # tags ends in DISTINCT, whose post-shuffle partition count AQE
+        # coalesces by size (~1 at sf0.1) — re-spread so the landed
+        # file count still equals n_files
+        return df.repartition(n_files) if name == "tags" else df
+
     for name, sql in sqls.items():
-        path = os.path.join(base, name)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            import time
-
-            from aws_trusted_advisor_explorer_spark.session import (
-                record_plane,
-            )
-
-            t0 = time.perf_counter()
-            tmp = f"{path}.tmp-{os.getpid()}"
-            df = spark.sql(_landing_sql(to_spark_sql(sql)))
-            if name == "tags":
-                # tags ends in DISTINCT, whose post-shuffle partition
-                # count AQE coalesces by size (~1 at sf0.1) — re-spread
-                # so the landed file count still equals n_files
-                df = df.repartition(n_files)
-            df.write.mode("overwrite").parquet(tmp)
-            record_plane(f"fixture_land:{name}", time.perf_counter() - t0)
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                import shutil
-                shutil.rmtree(tmp, ignore_errors=True)
-                # benign only if a concurrent builder won the race
-                if not os.path.exists(os.path.join(path, "_SUCCESS")):
-                    raise
-        df = spark.read.parquet(path)
+        df = land_once(spark, os.path.join(base, name), name,
+                       partial(derive, name, sql))
         df.createOrReplaceTempView(name)
         out[name] = df
     return out

@@ -15,17 +15,36 @@ import threading
 from pyspark.sql import SparkSession
 
 
+# The runtime SQL confs every session runs with: semantics (UTC
+# timestamps, so hashes match DuckDB) and plans (AQE). The 64MB
+# broadcast thresholds are dimension-broadcast headroom: the stock
+# 10MB is sized for small executors; with multi-GB executor memory a
+# 64MB broadcast is routine and turns the fact-to-tags view joins into
+# broadcast hash joins (measured 2-5x over the sort-merge pick at
+# sf0.1, where tags is ~11MB on disk — just past the default
+# threshold). Oversized dimensions still fall back to shuffle joins
+# automatically, so the 100 TB posture is unchanged.
+RUNTIME_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    "spark.sql.adaptive.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+}
+
+
 def get_spark(app_name: str = "ta_explorer_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
+        # the builder's SQL confs become the context defaults that
+        # every newSession() starts from (a runtime conf.set reaches
+        # only this session), so RUNTIME_CONFS go here too
+        .config(map=RUNTIME_CONFS)
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # workers fork from the package's daemon, whose zip importers
         # skip the per-task re-read of an unchanged pyspark.zip (see
@@ -48,11 +67,6 @@ def get_spark(app_name: str = "ta_explorer_spark", cpus: int | None = None) -> S
         # classes resident (generated classes are KB-scale; heap cost
         # is negligible against the 8g driver).
         .config("spark.sql.codegen.cache.maxEntries", "8000")
-        # see tune_session: dimension-broadcast headroom over the stock
-        # 10MB (the sf0.1 tags dim is ~11MB -> broadcast, 2-5x)
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
-                str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         # progress bars land on the Python process's stdout and would
         # corrupt bench.py's one-JSON-line stdout contract
@@ -64,39 +78,21 @@ def get_spark(app_name: str = "ta_explorer_spark", cpus: int | None = None) -> S
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable configs to an externally-provided session.
+    """Apply :data:`RUNTIME_CONFS` to an externally-provided session.
 
     The driver hands our ``queries()`` callables its own SparkSession;
     these settings keep semantics (UTC timestamps) and plans (AQE) in
     line with what we test with, without restarting the JVM.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    # Dimension-broadcast headroom: the stock 10MB threshold is sized
-    # for small executors; with multi-GB executor memory a 64MB
-    # broadcast is routine and turns the fact-to-tags view joins into
-    # broadcast hash joins (measured 2-5x over the sort-merge pick at
-    # sf0.1, where tags is ~11MB on disk — just past the default
-    # threshold). Oversized dimensions still fall back to shuffle
-    # joins automatically, so the 100 TB posture is unchanged.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold",
-                   str(64 * 1024 * 1024))
+    for k, v in RUNTIME_CONFS.items():
+        spark.conf.set(k, v)
     return spark
 
 
-def range_partitions_for(df_or_spark) -> int:
-    """:func:`range_partitions` for call sites holding a DataFrame or
-    a SparkSession (the two-phase-cumsum helpers take relations)."""
-    spark = getattr(df_or_spark, "sparkSession", df_or_spark)
-    return range_partitions(spark)
-
-
 def range_partitions(spark: SparkSession) -> int:
-    """Partition count for the two-phase-cumsum range layouts (r12:
-    was a hard-coded 32 tuned to local[32]). Scale-adaptive:
+    """Partition count for the range layouts of
+    ``functions/ranged.py`` (r12: was a hard-coded 32 tuned to
+    local[32]). Scale-adaptive:
     defaultParallelism = the session's core count locally, total
     executor cores on a cluster — so the driver's lower-core scaling
     runs and a real deployment both get proportionate layouts. The
@@ -214,7 +210,6 @@ def _land_multifile(spark: SparkSession, sf_dir: str, name: str,
     landing is priced as a ``fixture_land:land_<name>`` plane row."""
     import hashlib
     import tempfile
-    import time
 
     if name not in LAND_TABLES:
         return df
@@ -230,24 +225,35 @@ def _land_multifile(spark: SparkSession, sf_dir: str, name: str,
     key = hashlib.md5(
         f"{sf_dir}|{name}|corpus-land-v1|{n_files}|{stamp}".encode()
     ).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), "spark_fixture_cache",
-                        f"land-{key}")
-    dest = os.path.join(base, name)
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-        os.makedirs(base, exist_ok=True)
+    dest = os.path.join(tempfile.gettempdir(), "spark_fixture_cache",
+                        f"land-{key}", name)
+    return land_once(spark, dest, f"land_{name}",
+                     lambda: df.repartition(n_files))
+
+
+def land_once(spark: SparkSession, path: str, label: str, build):
+    """Scan of the parquet dataset at ``path``, first written from the
+    DataFrame ``build()`` returns when no completed copy (``_SUCCESS``)
+    is there: the write goes to a per-process temp dir renamed into
+    place, so a reader never sees a partial copy and losing the rename
+    race to a concurrent writer is benign. The write is priced as the
+    ``fixture_land:<label>`` plane row."""
+    import shutil
+    import time
+
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
         t0 = time.perf_counter()
-        tmp = f"{dest}.tmp-{os.getpid()}"
-        df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-        record_plane(f"fixture_land:land_{name}",
-                     time.perf_counter() - t0)
+        tmp = f"{path}.tmp-{os.getpid()}"
+        build().write.mode("overwrite").parquet(tmp)
+        record_plane(f"fixture_land:{label}", time.perf_counter() - t0)
         try:
-            os.rename(tmp, dest)
+            os.rename(tmp, path)
         except OSError:
-            import shutil
             shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(os.path.join(dest, "_SUCCESS")):
+            # benign only if a concurrent writer won the race
+            if not os.path.exists(os.path.join(path, "_SUCCESS")):
                 raise
-    return spark.read.parquet(dest)
+    return spark.read.parquet(path)
 
 
 def _nanos_timestamp_cols(path: str) -> list[str]:

@@ -150,13 +150,13 @@ FORBIDDEN = ("CartesianProduct", "BatchEvalPython")
 #                            survivors (corpusops.py, text_vocab_topk)
 #   events_key_skew_audit  — ranks only the post-LIMIT top-N key rows
 #                            (eventops.py, events_key_skew_audit)
-#   docs_pack_bins         — the two-phase cumsum's offsets window runs
-#                            over ONE ROW PER RANGE PARTITION
-#                            (corpusops.docs_pack_bins_df), O(partitions)
-#   docs_quality_cutoff_calibration — same offsets-window shape
-#                            (textops.docs_quality_cutoff_calibration_df)
+#   docs_pack_bins         — the bounded offsets window of
+#                            functions.ranged.prefix_total runs over ONE
+#                            ROW PER RANGE PARTITION, O(partitions)
+#   docs_quality_cutoff_calibration — the same prefix_total offsets
+#                            window (count rank, no grouping column)
 #   docs_pack_efficiency   — rolls up docs_pack_bins_df, so it carries
-#                            the same O(partitions) offsets window
+#                            the same prefix_total offsets window
 #   docs_kmv_distinct_union — every windowed relation is sketch-sized
 #                            by construction (<= KMV_SHARDS x KMV_K =
 #                            4096 rows: per-shard k-minima and their
@@ -529,9 +529,11 @@ def test_r11_operator_plan_shapes(spark):
       input row, never a per-set rescan — exactly one scan of events)
       feeding a partial+final hash aggregate with exactly ONE hash
       exchange; no join, no window.
-    * docs_release_manifest: the per-split two-phase cumsum keeps its
-      RANGE repartition (never a global single-partition sort); every
-      window is partitioned; offsets come back via broadcast.
+    * docs_release_manifest: the per-split running total
+      (functions.ranged.prefix_total) keeps its RANGE repartition
+      (never a global single-partition sort); every window is
+      partitioned, the offsets window by split; offsets come back via
+      broadcast.
     * pairs_near_dedup / media_caption_pairs: hash-plane joins only —
       no cartesian anywhere.
     """
@@ -557,8 +559,8 @@ def test_r11_operator_plan_shapes(spark):
     plan, hashes = shape("docs_release_manifest")
     # the range-partitioned doc relation is the localCheckpointed
     # plane (lineage cut -> the final plan reads it as an RDD scan;
-    # the range exchange lives in the checkpoint's build, the
-    # docs_pack_bins_df pattern)
+    # the range exchange lives in the checkpoint's build,
+    # functions.ranged.range_layout)
     assert "Scan ExistingRDD" in plan, plan[:2000]
     assert "BroadcastExchange" in plan
     # every WindowExec is partitioned (the two-phase cumsum rule)
@@ -580,9 +582,10 @@ def test_r12_operator_plan_shapes(spark):
       pinned BROADCAST(q) keeps both exact ranking arms on the
       broadcast-nested-loop shape (never CartesianProduct — the
       global gate) and every rank window is partitioned by query.
-    * pairs_release_manifest: the two-phase count cumsum keeps its
-      range-partitioned checkpoint plane (Scan ExistingRDD), offsets
-      return via broadcast, every window partitioned.
+    * pairs_release_manifest: the count rank (prefix_total with a
+      lit(1) measure) keeps its range-partitioned checkpoint plane
+      (Scan ExistingRDD), offsets return via broadcast, every window
+      (the bounded offsets window included) partitioned by split.
     * docs_release_refresh: the id-cut is a scalar broadcast (one
       BNLJ), the stored/delta packings and the per-split audit all
       ride partitioned windows, and stored-side totals reach the delta

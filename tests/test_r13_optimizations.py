@@ -238,24 +238,32 @@ def test_emb_gram_plane_backed_forms_match_standalone(spark):
 def test_release_rel_plane_backed_forms_match_fresh_rail(spark):
     """The r13 ranged-rail planes (ensure_release_rel_view /
     ensure_pairs_release_rel_view): the plane-backed manifest and
-    refresh reports must equal forms that compose + range the rail
-    fresh per run (the r12 shape)."""
+    refresh reports must equal the same forms over a rail composed and
+    laid out fresh (functions.ranged.range_layout) per run."""
+    from aws_trusted_advisor_explorer_spark.functions.ranged import (
+        range_layout,
+    )
     from aws_trusted_advisor_explorer_spark.operators import (
         corpusops, multimodal,
     )
 
     drop_planes(spark, "release_rel_ranged", "pairs_release_rel_ranged")
-    new_m = corpusops.docs_release_manifest_df(spark, key=SF_DIR)
-    old_m = corpusops._manifest_agg_df(corpusops._split_pack_df(
-        corpusops._release_rel_df(spark, key=SF_DIR)))
-    assert new_m.schema.simpleString() == old_m.schema.simpleString()
-    assert _rows(new_m) == _rows(old_m)
-    new_p = multimodal.pairs_release_manifest_df(spark, key=SF_DIR)
-    old_p = multimodal._pairs_manifest_agg_df(
-        multimodal._pairs_count_rank_df(
-            multimodal._pairs_release_rel_df(spark, key=SF_DIR)))
-    assert new_p.schema.simpleString() == old_p.schema.simpleString()
-    assert _rows(new_p) == _rows(old_p)
+    for rel, rail, manifest, refresh in (
+            (corpusops._release_rel_df, corpusops.DOC_RELEASE,
+             corpusops.docs_release_manifest_df,
+             corpusops.docs_release_refresh_df),
+            (multimodal._pairs_release_rel_df, multimodal.PAIR_RELEASE,
+             multimodal.pairs_release_manifest_df,
+             multimodal.pairs_release_refresh_df)):
+        fresh = range_layout(rel(spark, key=SF_DIR), "split", rail.id_col) \
+            .localCheckpoint(eager=False)
+        for new, old in (
+                (manifest(spark, key=SF_DIR),
+                 corpusops.release_manifest_df(fresh, rail)),
+                (refresh(spark, key=SF_DIR),
+                 corpusops.release_refresh_df(fresh, rail))):
+            assert new.schema.simpleString() == old.schema.simpleString()
+            assert _rows(new) == _rows(old), rail.id_col
 
 
 def test_gram_hv_kernel_rejects_k1():
