@@ -38,6 +38,12 @@ class Dialect:
     def arr_len(self, a: str) -> str:
         return f"size({a})" if self.name == "spark" else f"len({a})"
 
+    def slice(self, a: str, start: str, length: int | str) -> str:
+        """``length`` elements of ``a`` from the 1-based ``start``."""
+        if self.name == "spark":
+            return f"slice({a}, {start}, {length})"
+        return f"list_slice({a}, {start}, {start} + {length} - 1)"
+
     def arr_distinct(self, a: str) -> str:
         return f"array_distinct({a})" if self.name == "spark" else f"list_distinct({a})"
 
@@ -116,11 +122,11 @@ class Dialect:
         """
         if self.name == "spark":
             body = (f"transform(sequence(1, size({toks}) - {n} + 1), "
-                    f"i -> concat_ws(' ', slice({toks}, i, {n})))")
+                    f"i -> concat_ws(' ', {self.slice(toks, 'i', n)}))")
             return (f"CASE WHEN size({toks}) < {n} "
                     f"THEN cast(array() as array<string>) ELSE {body} END")
         return (f"list_transform(range(1, greatest(len({toks}) - {n} + 2, 1)), "
-                f"i -> array_to_string(list_slice({toks}, i, i + {n} - 1), ' '))")
+                f"i -> array_to_string({self.slice(toks, 'i', n)}, ' '))")
 
     def shingle_hvs(self, toks: str, n: int) -> str:
         """Word n-gram shingle HASHES (array<bigint>) without building
@@ -133,11 +139,7 @@ class Dialect:
         string form, so a query must use one or the other on BOTH
         sides."""
         th = self.transform(toks, "t", self.poly_hash("t"))
-        if self.name == "spark":
-            window = f"slice(th, i, {n})"
-        else:
-            window = f"list_slice(th, i, i + {n} - 1)"
-        comb = self.fold(window, f"cast({HASH_INIT} as bigint)", "a", "h",
+        comb = self.fold(self.slice("th", "i", n), f"cast({HASH_INIT} as bigint)", "a", "h",
                          f"(a * {SHINGLE_MULT} + h) % {P_MOD}")
         if self.name == "spark":
             body = f"transform(sequence(1, size(th) - {n} + 1), i -> {comb})"

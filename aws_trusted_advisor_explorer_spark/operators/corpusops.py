@@ -371,11 +371,7 @@ def chunk_parts(d: Dialect) -> tuple[str, str, str]:
     n_chunks = (f"CASE WHEN {n} <= {CHUNK_TOKS} THEN 1 "
                 f"ELSE {d.idiv(f'({n} - {CHUNK_TOKS} + {CHUNK_STRIDE} - 1)', str(CHUNK_STRIDE))} + 1 END")
     start = f"(k * {CHUNK_STRIDE} + 1)"
-    if d.name == "spark":
-        piece = f"slice(toks, {start}, {CHUNK_TOKS})"
-    else:
-        piece = f"list_slice(toks, {start}, {start} + {CHUNK_TOKS} - 1)"
-    return n_chunks, start, piece
+    return n_chunks, start, d.slice("toks", start, CHUNK_TOKS)
 
 
 def docs_chunking(d: Dialect) -> str:
@@ -594,12 +590,12 @@ def _block_parts(d: Dialect) -> tuple[str, str, str]:
         nb = f"cast(ceil(size(toks) / {n}.0) as int)"
         # sequence(1, 0) DESCENDS in Spark — build >=1 slot, slice to nb
         idx = f"slice(sequence(1, greatest({nb}, 1)), 1, {nb})"
-        blk = f"concat_ws(' ', slice(toks, (i - 1) * {n} + 1, {n}))"
+        blk = f"concat_ws(' ', {d.slice('toks', f'(i - 1) * {n} + 1', n)})"
     else:
         nb = f"cast(ceil(len(toks) / {n}.0) as int)"
         idx = f"range(1, {nb} + 1)"
-        blk = (f"array_to_string(list_slice(toks, (i - 1) * {n} + 1, "
-               f"(i - 1) * {n} + {n}), ' ')")
+        blk = (f"array_to_string("
+               f"{d.slice('toks', f'(i - 1) * {n} + 1', n)}, ' ')")
     return nb, idx, blk
 
 

@@ -34,42 +34,23 @@ def _norm(d: Dialect) -> str:
     return f"sqrt({d.dot('embedding', 'embedding')})"
 
 
-def _vec_base(d: Dialect, with_bucket: bool = False) -> str:
+def _vec_base(d: Dialect, on: tuple[str, ...] = ()) -> str:
     """The filtered vector-relation CTE body ``(vec_id, embedding,
-    nrm[, bucket])`` every similarity query starts from. Zero-norm
-    embeddings are EXCLUDED here — a zero vector has no direction,
-    and the unguarded cosine division diverges three ways on one
-    (Spark ANSI throws DIVIDE_BY_ZERO, DuckDB returns NULL, the Arrow
-    kernel twins produce NaN which sorts FIRST under DESC);
-    embeddings_norm_audit's ``n_zero`` column is the audit that counts
+    nrm[, bucket][, label])`` every similarity query starts from;
+    ``on`` names the candidate-join columns to attach (the sign-LSH
+    bucket, and the label as a bigint — int32 vs int64 must not differ
+    cross-engine). Zero-norm embeddings are EXCLUDED here — a zero
+    vector has no direction, and the unguarded cosine division
+    diverges three ways on one (Spark ANSI throws DIVIDE_BY_ZERO,
+    DuckDB returns NULL, the Arrow kernel twins produce NaN which
+    sorts FIRST under DESC); embeddings_norm_audit's ``n_zero`` column is the audit that counts
     what this filter drops. The norm is computed once in an inner
     select (filter + projection don't share subexpressions)."""
-    bucket = f", {_bucket_expr(d, 'embedding')} AS bucket" if with_bucket \
-        else ""
+    cols = {"bucket": _bucket_expr(d, "embedding"),
+            "label": "cast(label as bigint)"}
+    extra = "".join(f", {cols[c]} AS {c}" for c in on)
     return (f"SELECT * FROM (SELECT vec_id, embedding, {_norm(d)} AS nrm"
-            f"{bucket} FROM embeddings) i0 WHERE nrm > 0")
-
-
-def knn_bruteforce(d: Dialect) -> str:
-    """Exact top-k: query set x corpus cosine (norms precomputed per
-    vector), row_number ranking with a deterministic
-    (cosine DESC, neighbor id ASC) tiebreak."""
-    cos = f"{d.dot('q.embedding', 'c.embedding')} / (q.nrm * c.nrm)"
-    return f"""WITH v AS ({_vec_base(d)}),
-q AS (SELECT vec_id, embedding, nrm FROM v WHERE vec_id % {QUERY_MOD} = 0),
-c AS (SELECT vec_id, embedding, nrm FROM v WHERE vec_id % {QUERY_MOD} <> 0),
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-    {cos} AS cosine
-  FROM q CROSS JOIN c
-),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id, cosine
-FROM ranked WHERE rank <= {TOP_K}"""
+            f"{extra} FROM embeddings) i0 WHERE nrm > 0")
 
 
 def _bucket_expr(d: Dialect, emb: str) -> str:
@@ -87,27 +68,68 @@ def _bucket_expr(d: Dialect, emb: str) -> str:
     return "(" + " + ".join(bits) + ")"
 
 
+def _knn_sql(d: Dialect, on: tuple[str, ...] = (), probe: bool = False,
+             radius: float | None = None) -> str:
+    """The ONE SQL rendering of a kNN search: split :func:`_vec_base`'s
+    relation into the query set (``vec_id % {QUERY_MOD} = 0``) and the
+    corpus, join the candidates on ``on`` (no columns: every query
+    against every corpus vector), score the fold cosine (norms
+    precomputed per vector), then keep the top-{TOP_K} by row_number
+    with the deterministic (cosine DESC, neighbor id ASC) tiebreak —
+    or, with ``radius``, every candidate at least that similar, with
+    no window at all. ``probe`` fans each query out to its own bucket
+    plus every bucket one flipped plane bit away (multi-probe); a
+    corpus vector lives in exactly one bucket, so the fan-out adds no
+    duplicate candidates. Join columns other than the bucket (the
+    label) ride through to the output."""
+    keep = [c for c in on if c != "bucket"]
+    bucket = "bucket"
+    if probe:
+        flips = [d.xor("bucket", str(1 << j)) for j in range(N_PLANES)]
+        bucket = f"{d.explode(d.arr_lit(['bucket', *flips]))} AS bucket"
+    q_cols = ", ".join(["vec_id", "embedding", "nrm",
+                        *(bucket if c == "bucket" else c for c in on)])
+    join = (f"JOIN c ON {' AND '.join(f'c.{c} = q.{c}' for c in on)}"
+            if on else "CROSS JOIN c")
+    cos = f"{d.dot('q.embedding', 'c.embedding')} / (q.nrm * c.nrm)"
+    head = f"""WITH v AS ({_vec_base(d, on)}),
+q AS (SELECT {q_cols} FROM v WHERE vec_id % {QUERY_MOD} = 0),
+c AS (SELECT * FROM v WHERE vec_id % {QUERY_MOD} <> 0),
+scored AS (
+  SELECT {', '.join(['q.vec_id AS query_id', *(f'q.{c}' for c in keep)])},
+    c.vec_id AS neighbor_id, {cos} AS cosine
+  FROM q {join}
+)"""
+    if radius is not None:
+        return head + f"""
+SELECT query_id, neighbor_id, cosine
+FROM scored WHERE cosine >= {radius}"""
+    # the rank as a CTE, not a FROM subquery: under the subquery form
+    # knn_serving_report_df ran 34 jobs at sf0.01, not 32
+    ids = ", ".join(["query_id", *keep])
+    return head + f""",
+ranked AS (
+  SELECT {ids}, neighbor_id, cosine,
+    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
+  FROM scored
+)
+SELECT {ids}, rank, neighbor_id, cosine
+FROM ranked WHERE rank <= {TOP_K}"""
+
+
+def knn_bruteforce(d: Dialect) -> str:
+    """Exact top-k: query set x corpus cosine (norms precomputed per
+    vector), row_number ranking with a deterministic
+    (cosine DESC, neighbor id ASC) tiebreak."""
+    return _knn_sql(d)
+
+
 def knn_lsh(d: Dialect) -> str:
     """ANN top-k: candidates restricted to the query's sign-LSH bucket
     (equi-join on bucket id), then exact cosine rank within the bucket.
     May return fewer than k (or zero) neighbors for sparse buckets —
     the accepted ANN recall trade; identical in both engines."""
-    cos = f"{d.dot('q.embedding', 'c.embedding')} / (q.nrm * c.nrm)"
-    return f"""WITH h AS ({_vec_base(d, with_bucket=True)}),
-q AS (SELECT vec_id, embedding, nrm, bucket FROM h WHERE vec_id % {QUERY_MOD} = 0),
-c AS (SELECT vec_id, embedding, nrm, bucket FROM h WHERE vec_id % {QUERY_MOD} <> 0),
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-    {cos} AS cosine
-  FROM q JOIN c ON q.bucket = c.bucket
-),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id, cosine
-FROM ranked WHERE rank <= {TOP_K}"""
+    return _knn_sql(d, on=("bucket",))
 
 
 def knn_multiprobe(d: Dialect) -> str:
@@ -119,60 +141,43 @@ def knn_multiprobe(d: Dialect) -> str:
     (probe cost: 1 + n_planes buckets of ~N/2^n_planes vectors each).
     A corpus vector lives in exactly one bucket, so the probe fan-out
     introduces no duplicate candidates."""
-    cos = f"{d.dot('p.embedding', 'c.embedding')} / (p.nrm * c.nrm)"
-    flips = ", ".join(d.xor("bucket", str(1 << j)) for j in range(N_PLANES))
-    if d.name == "spark":
-        probe_arr = f"array(bucket, {flips})"
-    else:
-        probe_arr = f"[bucket, {flips}]"
-    return f"""WITH h AS ({_vec_base(d, with_bucket=True)}),
-q AS (SELECT vec_id, embedding, nrm, bucket FROM h WHERE vec_id % {QUERY_MOD} = 0),
-p AS (SELECT vec_id, embedding, nrm, {d.explode(probe_arr)} AS probe FROM q),
-c AS (SELECT vec_id, embedding, nrm, bucket FROM h WHERE vec_id % {QUERY_MOD} <> 0),
-scored AS (
-  SELECT p.vec_id AS query_id, c.vec_id AS neighbor_id,
-    {cos} AS cosine
-  FROM p JOIN c ON c.bucket = p.probe
-),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id, cosine
-FROM ranked WHERE rank <= {TOP_K}"""
+    return _knn_sql(d, on=("bucket",), probe=True)
 
 
-def knn_ivf_multiprobe_df(spark, sf_dir: str):
-    """Multi-probe ANN over the IVF layout: the probe list becomes a
-    partition filter (each probed bucket is one partition directory),
-    so the scan touches 1 + n_planes of the 2^n_planes partitions.
-    Cosines via the vectorized kernel — results bit-match
-    :func:`knn_multiprobe`'s fold (its DuckDB rendering is the
-    oracle)."""
+def _knn_df(v, on: tuple[str, ...] = (), probe: bool = False,
+            keep: tuple[str, ...] = ()):
+    """The ONE DataFrame kNN scorer (the Spark twin of
+    :func:`_knn_sql`): split the vector relation ``v`` (vec_id,
+    embedding and the ``on`` columns) into queries and corpus, join the
+    candidates on ``on`` — no columns: the ~1% query set is broadcast
+    against a single scan of the corpus (BroadcastNestedLoopJoin, no
+    shuffle of the big side) — score each pair in the batched Pandas
+    cosine kernel instead of the interpreted fold, and rank. ``probe``
+    explodes each query's bucket into the multi-probe list; ``keep``
+    columns (the label) ride to the output. The kernel's doubles
+    bit-match the SQL fold's, so the rankings are identical (tested)."""
     from pyspark.sql import functions as F
 
     from aws_trusted_advisor_explorer_spark.functions import vectorized as V
 
-    v = spark.read.parquet(build_ivf_index(spark, sf_dir))
-    probe_arr = F.array(
-        F.col("bucket"),
-        *[F.col("bucket").bitwiseXOR(1 << j) for j in range(N_PLANES)])
-    q = (v.filter(F.col("vec_id") % QUERY_MOD == 0)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("q_emb"),
-                 F.explode(probe_arr).alias("bucket")))
-    c = (v.filter(F.col("vec_id") % QUERY_MOD != 0)
-         .select(F.col("vec_id").alias("neighbor_id"),
-                 F.col("embedding").alias("c_emb"),
-                 "bucket"))
-    scored = (q.join(c, "bucket")
-              .select("query_id", "neighbor_id",
-                      V.pair_cosine("q_emb", "c_emb").alias("cosine")))
-    return _rank_topk(scored)
+    bucket = F.col("bucket")
+    if probe:
+        bucket = F.explode(F.array(bucket, *[
+            bucket.bitwiseXOR(1 << j) for j in range(N_PLANES)
+        ])).alias("bucket")
+    is_q = F.col("vec_id") % QUERY_MOD == 0
+    q = v.filter(is_q).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"),
+        *[bucket if c == "bucket" else c for c in on])
+    c = v.filter(~is_q).select(F.col("vec_id").alias("neighbor_id"),
+                               F.col("embedding").alias("c_emb"), *on)
+    pairs = q.join(c, list(on)) if on else F.broadcast(q).crossJoin(c)
+    return _rank_topk(pairs.select(
+        "query_id", *keep, "neighbor_id",
+        V.pair_cosine("q_emb", "c_emb").alias("cosine")), keep)
 
 
-def _rank_topk(scored):
+def _rank_topk(scored, keep: tuple[str, ...]):
     """row_number rank (cosine DESC, neighbor_id ASC) + top-k filter —
     shared tail of every knn plan; ranks are deterministic because the
     cosines are bit-identical to the SQL fold's."""
@@ -183,7 +188,19 @@ def _rank_topk(scored):
         F.col("cosine").desc(), F.col("neighbor_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= TOP_K)
-            .select("query_id", "rank", "neighbor_id", "cosine"))
+            .select("query_id", *keep, "rank", "neighbor_id", "cosine"))
+
+
+def _nonzero_embeddings(spark):
+    """The embeddings with :func:`_vec_base`'s zero-norm exclusion: the
+    Arrow kernel would NaN on a zero vector where the SQL forms filter
+    it out."""
+    from pyspark.sql import functions as F
+
+    from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
+
+    return spark.table("embeddings").where(
+        F.expr(f"{SPARK.dot('embedding', 'embedding')} > 0"))
 
 
 def knn_bruteforce_df(spark):
@@ -192,117 +209,50 @@ def knn_bruteforce_df(spark):
     the big side — BroadcastNestedLoopJoin), and the per-pair cosine
     runs in the batched Pandas kernel instead of the interpreted fold.
     Bit-identical doubles -> identical rankings (tested)."""
-    from pyspark.sql import functions as F
-
-    from aws_trusted_advisor_explorer_spark.functions import vectorized as V
-
-    from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-
-    # zero-norm exclusion (the _vec_base rule): the Arrow kernel would
-    # NaN on a zero vector where the SQL forms filter it out
-    v = (spark.table("embeddings").select("vec_id", "embedding")
-         .where(F.expr(f"{SPARK.dot('embedding', 'embedding')} > 0")))
-    q = (v.filter(F.col("vec_id") % QUERY_MOD == 0)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("q_emb")))
-    c = (v.filter(F.col("vec_id") % QUERY_MOD != 0)
-         .select(F.col("vec_id").alias("neighbor_id"),
-                 F.col("embedding").alias("c_emb")))
-    scored = (F.broadcast(q).crossJoin(c)
-              .select("query_id", "neighbor_id",
-                      V.pair_cosine("q_emb", "c_emb").alias("cosine")))
-    return _rank_topk(scored)
+    return _knn_df(_nonzero_embeddings(spark).select("vec_id", "embedding"))
 
 
 def knn_lsh_df(spark):
     """Arrow-vectorized twin of :func:`knn_lsh`: sign-LSH bucket and
     cosine via the batched Pandas kernels, candidates restricted to the
     query's bucket by an equi-join."""
-    from pyspark.sql import functions as F
-
     from aws_trusted_advisor_explorer_spark.functions import vectorized as V
 
-    from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-
     bucket = V.make_lsh_bucket(N_PLANES)
-    h = (spark.table("embeddings")
-         .where(F.expr(f"{SPARK.dot('embedding', 'embedding')} > 0"))
-         .select("vec_id", "embedding", bucket("embedding").alias("bucket")))
-    q = (h.filter(F.col("vec_id") % QUERY_MOD == 0)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("q_emb"), "bucket"))
-    c = (h.filter(F.col("vec_id") % QUERY_MOD != 0)
-         .select(F.col("vec_id").alias("neighbor_id"),
-                 F.col("embedding").alias("c_emb"), "bucket"))
-    scored = (q.join(c, "bucket")
-              .select("query_id", "neighbor_id",
-                      V.pair_cosine("q_emb", "c_emb").alias("cosine")))
-    return _rank_topk(scored)
+    return _knn_df(_nonzero_embeddings(spark).select(
+        "vec_id", "embedding", bucket("embedding").alias("bucket")),
+        on=("bucket",))
 
 
-def ivf_index_path(sf_dir: str, variant: str = "v2") -> str:
-    """Content-keyed scratch location for an IVF layout of ``sf_dir``'s
-    embeddings. The key includes the source parquet's size+mtime so a
-    regenerated dataset at the same path invalidates the cache;
-    ``variant`` keeps differently-partitioned layouts (bucket-only vs
-    the filtered two-level form) in distinct cache entries."""
+def ivf_layout(spark, sf_dir: str, on: tuple[str, ...]):
+    """Scan of the embeddings written with their ``on`` columns as
+    PARTITION columns — IVF in data-lake form: a probe of bucket b
+    (and, for filtered search, label l) touches only that leaf
+    directory (partition pruning), which is how the ANN path scales
+    past what a bucket equi-join over one big file can do. The rows
+    are :func:`_vec_base`'s filtered relation WITHOUT the norm column —
+    no index consumer reads it (the pair kernel recomputes both norms
+    in its fixed IEEE op order). Landed once through
+    :func:`session.land_once`, keyed on the source file's stamp and the
+    layout's SQL text, so an edit to the bucket formula or the
+    zero-norm filter lands a new layout instead of serving the old."""
     import hashlib
     import os
     import tempfile
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        stamp = f"{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        stamp = "missing"
-    key = hashlib.md5(
-        f"{sf_dir}|{stamp}|planes={N_PLANES}|{variant}".encode()
-    ).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), "spark_ivf_cache", key)
-
-
-def _build_ivf(spark, sf_dir: str, path: str, select: str,
-               partition_cols: tuple) -> str:
-    """The ONE index-landing implementation (cache probe, tmp write,
-    rename with the concurrent-builder race guard) shared by every
-    IVF layout — a fix to the invalidation or race handling cannot
-    silently miss a variant."""
-    import os
-
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    df = spark.sql(select)
-    tmp = f"{path}.tmp-{os.getpid()}"
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(tmp)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        import shutil
-        shutil.rmtree(tmp, ignore_errors=True)
-        # benign only if a concurrent builder won the race — otherwise
-        # surface the failure instead of returning an empty path
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            raise
-    return path
-
-
-def build_ivf_index(spark, sf_dir: str) -> str:
-    """Write the embeddings with their sign-LSH bucket as a PARTITION
-    column — IVF in data-lake form: a probe of bucket b touches only
-    bucket=b files (partition pruning), which is how the ANN path
-    scales past what a bucket equi-join over one big file can do.
-    Idempotent per (sf_dir, plane count)."""
     from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
+    from aws_trusted_advisor_explorer_spark.session import (
+        land_once, source_stamp,
+    )
 
-    # same filtered relation as the SQL forms (_vec_base), WITHOUT the
-    # norm column — no index consumer reads it (the pair kernel
-    # recomputes both norms in its fixed IEEE op order), so persisting
-    # it only inflated every partition file
-    return _build_ivf(
-        spark, sf_dir, ivf_index_path(sf_dir),
-        f"SELECT vec_id, embedding, bucket FROM ({_vec_base(SPARK, True)}) b",
-        ("bucket",))
+    sql = (f"SELECT vec_id, embedding, {', '.join(on)} "
+           f"FROM ({_vec_base(SPARK, on)}) b")
+    stamp = source_stamp(os.path.join(sf_dir, "embeddings.parquet"))
+    key = hashlib.md5(f"{sf_dir}|{stamp}|{sql}".encode()).hexdigest()[:12]
+    return land_once(spark, os.path.join(tempfile.gettempdir(),
+                                         "spark_ivf_cache", key),
+                     f"ivf_{'_'.join(on)}", lambda: spark.sql(sql),
+                     partition_by=on)
 
 
 def knn_ivf_df(spark, sf_dir: str):
@@ -310,50 +260,18 @@ def knn_ivf_df(spark, sf_dir: str):
     bucket equi-join against partition-pruned files; results are
     IDENTICAL to knn_lsh (same planes, same buckets), so its DuckDB
     oracle is knn_lsh's oracle."""
-    from pyspark.sql import functions as F
-
-    from aws_trusted_advisor_explorer_spark.functions import vectorized as V
-
-    v = spark.read.parquet(build_ivf_index(spark, sf_dir))
-    q = v.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        "bucket")
-    c = v.filter(F.col("vec_id") % QUERY_MOD != 0).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        "bucket")
-    scored = (q.join(c, "bucket")
-              .select("query_id", "neighbor_id",
-                      V.pair_cosine("q_emb", "c_emb").alias("cosine")))
-    return _rank_topk(scored)
+    return _knn_df(ivf_layout(spark, sf_dir, ("bucket",)), on=("bucket",))
 
 
-def _labeled_vec_base(d: Dialect) -> str:
-    """:func:`_vec_base`'s relation with the label carried through
-    (bigint — int32 vs int64 must not differ cross-engine) and the
-    bucket attached — the base of BOTH knn_filtered's SQL form and
-    the two-level physical index, defined once."""
-    return (f"SELECT * FROM (SELECT vec_id, cast(label as bigint) AS label,"
-            f" embedding, {_norm(d)} AS nrm,"
-            f" {_bucket_expr(d, 'embedding')} AS bucket FROM embeddings) i0"
-            f" WHERE nrm > 0")
-
-
-def build_filtered_ivf_index(spark, sf_dir: str) -> str:
-    """Write the embeddings partitioned by (bucket, label) — the IVF
-    layout for FILTERED search, where the metadata predicate prunes
-    physical directories exactly like the coarse cell does (a probe of
-    (bucket=b, label=l) touches only that one leaf). This is the
-    implemented form of knn_filtered's docstring claim. Idempotent
-    per (sf_dir, plane count)."""
-    from aws_trusted_advisor_explorer_spark.functions.dual import SPARK
-
-    return _build_ivf(
-        spark, sf_dir, ivf_index_path(sf_dir, variant="label-v1"),
-        f"SELECT vec_id, label, embedding, bucket "
-        f"FROM ({_labeled_vec_base(SPARK)}) b",
-        ("bucket", "label"))
+def knn_ivf_multiprobe_df(spark, sf_dir: str):
+    """Multi-probe ANN over the IVF layout: the probe list becomes a
+    partition filter (each probed bucket is one partition directory),
+    so the scan touches 1 + n_planes of the 2^n_planes partitions.
+    Cosines via the vectorized kernel — results bit-match
+    :func:`knn_multiprobe`'s fold (its DuckDB rendering is the
+    oracle)."""
+    return _knn_df(ivf_layout(spark, sf_dir, ("bucket",)), on=("bucket",),
+                   probe=True)
 
 
 def knn_filtered_df(spark, sf_dir: str):
@@ -364,26 +282,27 @@ def knn_filtered_df(spark, sf_dir: str):
     results are IDENTICAL to :func:`knn_filtered` (same planes, same
     composite candidate restriction), so its DuckDB rendering is the
     oracle."""
-    from pyspark.sql import functions as F
+    on = ("bucket", "label")
+    return _knn_df(ivf_layout(spark, sf_dir, on), on=on, keep=("label",))
 
-    from aws_trusted_advisor_explorer_spark.functions import vectorized as V
 
-    v = spark.read.parquet(build_filtered_ivf_index(spark, sf_dir))
-    q = (v.filter(F.col("vec_id") % QUERY_MOD == 0)
-         .select(F.col("vec_id").alias("query_id"), "label",
-                 F.col("embedding").alias("q_emb"), "bucket"))
-    c = (v.filter(F.col("vec_id") % QUERY_MOD != 0)
-         .select(F.col("vec_id").alias("neighbor_id"), "label",
-                 F.col("embedding").alias("c_emb"), "bucket"))
-    scored = (q.join(c, ["bucket", "label"])
-              .select("query_id", "label", "neighbor_id",
-                      V.pair_cosine("q_emb", "c_emb").alias("cosine")))
-    from pyspark.sql.window import Window
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", "label", "rank", "neighbor_id", "cosine"))
+def _recall_gate(d: Dialect, ann: str) -> str:
+    """recall@{TOP_K} per query of the ``ann`` top-k SQL against the
+    exact brute-force top-k: the two rankings joined on (query,
+    neighbor), |intersection| / k — the acceptance gate every
+    approximate arm ships with."""
+    return f"""WITH bf AS (
+{knn_bruteforce(d)}
+),
+ann AS (
+{ann}
+)
+SELECT bf.query_id,
+  cast(count(ann.neighbor_id) as bigint) AS n_hits,
+  cast(count(ann.neighbor_id) as double) / {TOP_K} AS recall_at_k
+FROM bf LEFT JOIN ann
+  ON ann.query_id = bf.query_id AND ann.neighbor_id = bf.neighbor_id
+GROUP BY bf.query_id"""
 
 
 def knn_recall_at_k(d: Dialect) -> str:
@@ -396,20 +315,7 @@ def knn_recall_at_k(d: Dialect) -> str:
     Scale posture: both inputs are top-k relations (k rows per query),
     so the join and aggregate are query-set-sized — negligible next to
     the searches themselves."""
-    bf = knn_bruteforce(d)
-    ls = knn_lsh(d)
-    return f"""WITH bf AS (
-{bf}
-),
-ls AS (
-{ls}
-)
-SELECT bf.query_id,
-  cast(count(ls.neighbor_id) as bigint) AS n_hits,
-  cast(count(ls.neighbor_id) as double) / {TOP_K} AS recall_at_k
-FROM bf LEFT JOIN ls
-  ON ls.query_id = bf.query_id AND ls.neighbor_id = bf.neighbor_id
-GROUP BY bf.query_id"""
+    return _recall_gate(d, knn_lsh(d))
 
 
 RANGE_COS_MIN = 0.25  # report every bucket-mate at least this similar
@@ -428,16 +334,7 @@ def knn_range_search(d: Dialect) -> str:
     per-query ranking), so the plan is join -> filter, fully
     streamable. Recall is bucket-bounded like every LSH probe; the
     multi-probe rail applies unchanged if more is needed."""
-    cos = f"{d.dot('q.embedding', 'c.embedding')} / (q.nrm * c.nrm)"
-    return f"""WITH h AS ({_vec_base(d, with_bucket=True)}),
-q AS (SELECT vec_id, embedding, nrm, bucket FROM h WHERE vec_id % {QUERY_MOD} = 0),
-c AS (SELECT vec_id, embedding, nrm, bucket FROM h WHERE vec_id % {QUERY_MOD} <> 0),
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {cos} AS cosine
-  FROM q JOIN c ON q.bucket = c.bucket
-)
-SELECT query_id, neighbor_id, cosine
-FROM scored WHERE cosine >= {RANGE_COS_MIN}"""
+    return _knn_sql(d, on=("bucket",), radius=RANGE_COS_MIN)
 
 
 NORM_TOL_NUM, NORM_TOL_DEN = 1, 1000  # unit band = |norm - 1| <= 1/1000
@@ -501,8 +398,7 @@ def embeddings_matryoshka_audit(d: Dialect) -> str:
     ss_cols = []
     entries = []
     for k in MRL_DIMS:
-        sl = (f"slice(embedding, 1, {k})" if d.name == "spark"
-              else f"list_slice(embedding, 1, {k})")
+        sl = d.slice("embedding", "1", k)
         ss_cols.append(f"{d.dot(sl, sl)} AS ss{k}")
         entries.append(d.struct_(
             ("k_dims", f"cast({k} as bigint)"),
@@ -558,9 +454,7 @@ def embeddings_matryoshka_recall(d: Dialect) -> str:
     — that IS the gate working; MRL training exists precisely to make
     prefixes rank like the full vector, and this gate is how you
     verify a model delivers it before shrinking the index."""
-    sl = lambda col: (f"slice({col}, 1, {MRL_RECALL_DIM})"
-                      if d.name == "spark"
-                      else f"list_slice({col}, 1, {MRL_RECALL_DIM})")
+    sl = lambda col: d.slice(col, "1", MRL_RECALL_DIM)
     pn = f"sqrt({d.dot(sl('embedding'), sl('embedding'))})"
     cos = f"{d.dot('q.embedding', 'c.embedding')} / (q.nrm * c.nrm)"
     pcos = (f"CASE WHEN q.pnrm * c.pnrm = cast(0 as double) THEN NULL "
@@ -676,24 +570,10 @@ def knn_filtered(d: Dialect) -> str:
     partition count (2^planes x |labels|), shrinking each candidate
     block ~|labels|-fold vs knn_lsh; the IMPLEMENTED serving form is
     :func:`knn_filtered_df` over the two-level (bucket, label)
-    physical layout of :func:`build_filtered_ivf_index`, where the
+    physical layout of :func:`ivf_layout`, where the
     probe partition-prunes on both columns. Same recall caveats as any
     single-probe LSH — the multi-probe rail composes unchanged."""
-    cos = f"{d.dot('q.embedding', 'c.embedding')} / (q.nrm * c.nrm)"
-    return f"""WITH h AS ({_labeled_vec_base(d)}),
-q AS (SELECT * FROM h WHERE vec_id % {QUERY_MOD} = 0),
-c AS (SELECT * FROM h WHERE vec_id % {QUERY_MOD} <> 0),
-scored AS (
-  SELECT q.vec_id AS query_id, q.label, c.vec_id AS neighbor_id,
-    {cos} AS cosine
-  FROM q JOIN c ON c.bucket = q.bucket AND c.label = q.label
-)
-SELECT query_id, label, rank, neighbor_id, cosine FROM (
-  SELECT query_id, label, neighbor_id, cosine,
-    row_number() OVER (PARTITION BY query_id
-                       ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored
-) r WHERE rank <= {TOP_K}"""
+    return _knn_sql(d, on=("bucket", "label"))
 
 
 def knn_hamming_recall(d: Dialect) -> str:
@@ -708,20 +588,7 @@ def knn_hamming_recall(d: Dialect) -> str:
     Scale posture: both inputs are top-k relations (k rows per
     query), so the gate join and aggregate are query-set-sized —
     negligible next to the searches themselves."""
-    bf = knn_bruteforce(d)
-    hr = knn_hamming_rerank(d)
-    return f"""WITH bf AS (
-{bf}
-),
-hr AS (
-{hr}
-)
-SELECT bf.query_id,
-  cast(count(hr.neighbor_id) as bigint) AS n_hits,
-  cast(count(hr.neighbor_id) as double) / {TOP_K} AS recall_at_k
-FROM bf LEFT JOIN hr
-  ON hr.query_id = bf.query_id AND hr.neighbor_id = bf.neighbor_id
-GROUP BY bf.query_id"""
+    return _recall_gate(d, knn_hamming_rerank(d))
 
 
 VEC_BYTES = DIM * 8              # full-vector payload per candidate
@@ -734,9 +601,7 @@ def _mrl_prefix_topk(d: Dialect) -> str:
     :func:`embeddings_matryoshka_recall`, needed separately by the
     serving report). Zero-prefix-norm candidates are excluded from the
     ranking (the recall gate's NULL-similarity rule)."""
-    sl = lambda col: (f"slice({col}, 1, {MRL_RECALL_DIM})"
-                      if d.name == "spark"
-                      else f"list_slice({col}, 1, {MRL_RECALL_DIM})")
+    sl = lambda col: d.slice(col, "1", MRL_RECALL_DIM)
     pn = f"sqrt({d.dot(sl('embedding'), sl('embedding'))})"
     pcos = (f"CASE WHEN q.pnrm * c.pnrm = cast(0 as double) THEN NULL "
             f"ELSE {d.dot(sl('q.embedding'), sl('c.embedding'))}"
@@ -774,7 +639,7 @@ def _serving_counts_sql(d: Dialect) -> str:
     entries += [d.struct_(("probe", d.xor("bucket", str(1 << j))),
                           ("is_own", "cast(0 as bigint)"))
                 for j in range(N_PLANES)]
-    return f"""WITH b AS ({_vec_base(d, with_bucket=True)}),
+    return f"""WITH b AS ({_vec_base(d, ("bucket",))}),
 q AS (SELECT vec_id, bucket FROM b WHERE vec_id % {QUERY_MOD} = 0),
 c AS (SELECT vec_id, bucket FROM b WHERE vec_id % {QUERY_MOD} <> 0),
 pr AS (SELECT {d.explode(d.arr_lit(entries))} AS s FROM q),
@@ -851,6 +716,11 @@ def knn_serving_report(d: Dialect) -> str:
   SELECT 'exact', cast(5 as bigint), cnt.nq, cnt.nq * cnt.nc,
     cnt.nq * cnt.nc * {VEC_BYTES}, h_bf.n
   FROM cnt CROSS JOIN h_bf"""
+    hits = ",\n".join(
+        f"h_{r} AS (SELECT cast(count(*) as bigint) AS n FROM {r}\n"
+        f"         JOIN bf ON bf.query_id = {r}.query_id\n"
+        f"                AND bf.neighbor_id = {r}.neighbor_id)"
+        for r in ("sg", "ls", "mp", "mr"))
     return f"""WITH bf {d.cte_as()} (
 {knn_bruteforce(d)}
 ),
@@ -869,18 +739,7 @@ mr AS (
 cnt AS (
 {_serving_counts_sql(d)}
 ),
-h_sg AS (SELECT cast(count(*) as bigint) AS n FROM sg
-         JOIN bf ON bf.query_id = sg.query_id
-                AND bf.neighbor_id = sg.neighbor_id),
-h_ls AS (SELECT cast(count(*) as bigint) AS n FROM ls
-         JOIN bf ON bf.query_id = ls.query_id
-                AND bf.neighbor_id = ls.neighbor_id),
-h_mp AS (SELECT cast(count(*) as bigint) AS n FROM mp
-         JOIN bf ON bf.query_id = mp.query_id
-                AND bf.neighbor_id = mp.neighbor_id),
-h_mr AS (SELECT cast(count(*) as bigint) AS n FROM mr
-         JOIN bf ON bf.query_id = mr.query_id
-                AND bf.neighbor_id = mr.neighbor_id),
+{hits},
 h_bf AS (SELECT cast(count(*) as bigint) AS n FROM bf)
 SELECT rung, rung_order, n_queries, cand_rows, bytes_touched, n_hits,
   cast({d.idiv('(1000000 * n_hits)',
@@ -1557,9 +1416,7 @@ def knn_pca_prefix_recall(d: Dialect, dirs: str | None = None) -> str:
         head = f"WITH pca_dirs AS (SELECT r, varr FROM {dirs})"
     else:
         head = f"WITH {_pca_dirs_ctes(d)}"
-    sl = lambda col: (f"slice({col}, 1, {PCA_DIRS})"
-                      if d.name == "spark"
-                      else f"list_slice({col}, 1, {PCA_DIRS})")
+    sl = lambda col: d.slice(col, "1", PCA_DIRS)
     pn = f"sqrt({d.dot(sl('embedding'), sl('embedding'))})"
     cos = f"{d.dot('q.embedding', 'c.embedding')} / (q.nrm * c.nrm)"
     zcos = (f"CASE WHEN q.znrm * c.znrm = cast(0 as double) THEN NULL "

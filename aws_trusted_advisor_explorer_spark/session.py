@@ -231,20 +231,24 @@ def _land_multifile(spark: SparkSession, sf_dir: str, name: str,
                      lambda: df.repartition(n_files))
 
 
-def land_once(spark: SparkSession, path: str, label: str, build):
+def land_once(spark: SparkSession, path: str, label: str, build,
+              partition_by: tuple[str, ...] = ()):
     """Scan of the parquet dataset at ``path``, first written from the
     DataFrame ``build()`` returns when no completed copy (``_SUCCESS``)
-    is there: the write goes to a per-process temp dir renamed into
+    is there, with ``partition_by`` as its directory partition columns:
+    the write goes to a per-process temp dir renamed into
     place, so a reader never sees a partial copy and losing the rename
     race to a concurrent writer is benign. The write is priced as the
-    ``fixture_land:<label>`` plane row."""
+    ``fixture_land:<label>`` plane row. ``path`` must be keyed on
+    everything the rows derive from (source stamps, the SQL text)."""
     import shutil
     import time
 
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         t0 = time.perf_counter()
         tmp = f"{path}.tmp-{os.getpid()}"
-        build().write.mode("overwrite").parquet(tmp)
+        (build().write.mode("overwrite").partitionBy(*partition_by)
+         .parquet(tmp))
         record_plane(f"fixture_land:{label}", time.perf_counter() - t0)
         try:
             os.rename(tmp, path)

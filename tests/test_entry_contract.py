@@ -107,6 +107,31 @@ def test_driver_threads_inherit_the_job_group():
         assert starts.search(f.read()), "the scan no longer sees the ingest pool"
 
 
+def test_write_once_protocol_lives_only_in_land_once():
+    """The write-once cache protocol (a ``_SUCCESS`` probe, a temp
+    write and an ``os.rename`` into place) is written once, in
+    ``session.land_once``; every on-disk cache lands through it, so a
+    fix to its race handling or its keying cannot miss a hand-written
+    copy."""
+    import ast
+
+    found = set()
+    for module, tree in _modules_anyone_runs():
+        if module is None:
+            continue
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for n in ast.walk(fn):
+                probe = isinstance(n, ast.Constant) and n.value == "_SUCCESS"
+                rename = (isinstance(n, ast.Attribute) and n.attr == "rename"
+                          and getattr(n.value, "id", None) == "os")
+                if probe or rename:
+                    found.add(f"{module}.{fn.name}")
+    assert found == {"aws_trusted_advisor_explorer_spark.session.land_once"}, (
+        f"write-once protocol outside session.land_once: {sorted(found)}")
+
+
 def test_two_threads_build_unrelated_planes_at_once():
     """The running plane build is tracked per driver thread: two threads
     that each ensure an unrelated plane on their own session, with both

@@ -4743,17 +4743,52 @@ def test_knn_filtered_df_twin_equals_sql_form(spark, ddb):
 
     # pruning proof: a single (bucket, label) probe reads a strict
     # subset of the index files
+    _assert_probe_prunes(similarity.ivf_layout(
+        spark, "/root/testdata/sf0.001", ("bucket", "label")))
+
+
+def _assert_probe_prunes(idx):
+    """One probe of every partition column of the IVF layout ``idx``
+    reads a strict subset of its files."""
+    from functools import reduce
+
     from pyspark.sql import functions as F
 
-    path = similarity.build_filtered_ivf_index(
-        spark, "/root/testdata/sf0.001")
-    idx = spark.read.parquet(path)
+    cols = [f.name for f in idx.schema if f.name not in ("vec_id",
+                                                          "embedding")]
     total = idx.select(F.input_file_name()).distinct().count()
-    [probe] = idx.limit(1).select("bucket", "label").collect()
-    one = (idx.filter((F.col("bucket") == probe.bucket)
-                      & (F.col("label") == probe.label))
-           .select(F.input_file_name()).distinct().count())
+    [probe] = idx.limit(1).select(*cols).collect()
+    hit = reduce(lambda a, b: a & b, [F.col(c) == probe[c] for c in cols])
+    one = idx.filter(hit).select(F.input_file_name()).distinct().count()
     assert one < total
+
+
+def test_ivf_layout_prunes_one_bucket_probe(spark):
+    """The bucket-only IVF layout: a one-bucket probe reads a strict
+    subset of the files, like the (bucket, label) layout's leaf."""
+    from tests.conftest import SF_DIR
+
+    _assert_probe_prunes(similarity.ivf_layout(spark, SF_DIR, ("bucket",)))
+
+
+def test_ivf_layout_keyed_on_its_sql(spark, ddb, monkeypatch):
+    """The IVF layout's cache key covers the SQL that builds it: an
+    edit to the bucket formula lands a new layout instead of serving
+    the stale buckets, and knn_ivf still equals knn_lsh's oracle under
+    the edited formula (here, buckets merged into two, so stale buckets
+    would give different neighbors)."""
+    from tests.conftest import SF_DIR
+
+    before = set(similarity.ivf_layout(spark, SF_DIR, ("bucket",))
+                 .inputFiles())
+    bucket_expr = similarity._bucket_expr
+    monkeypatch.setattr(similarity, "_bucket_expr",
+                        lambda d, emb: f"({bucket_expr(d, emb)} % 2)")
+    after = set(similarity.ivf_layout(spark, SF_DIR, ("bucket",))
+                .inputFiles())
+    assert not before & after
+    assert_matches_oracle(similarity.knn_ivf_df(spark, SF_DIR), ddb,
+                          similarity.knn_lsh(DUCK))
 
 
 def test_knn_filtered_df_join_compares_two_sides(spark, monkeypatch):
