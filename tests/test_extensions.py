@@ -4733,18 +4733,16 @@ def test_knn_filtered_df_twin_equals_sql_form(spark, ddb):
     candidate restriction, kernel cosine bit-matching the fold) — and
     its scan must actually be partition-pruned to one leaf per
     (bucket, label) probe."""
-    from tests.conftest import canonicalize
+    from tests.conftest import SF_DIR, canonicalize
 
-    twin = canonicalize(
-        similarity.knn_filtered_df(spark, "/root/testdata/sf0.001")
-        .toPandas())
+    twin = canonicalize(similarity.knn_filtered_df(spark, SF_DIR).toPandas())
     want = canonicalize(ddb.sql(similarity.knn_filtered(DUCK)).df())
     assert twin.equals(want)
 
     # pruning proof: a single (bucket, label) probe reads a strict
     # subset of the index files
-    _assert_probe_prunes(similarity.ivf_layout(
-        spark, "/root/testdata/sf0.001", ("bucket", "label")))
+    _assert_probe_prunes(similarity.ivf_layout(spark, SF_DIR,
+                                               ("bucket", "label")))
 
 
 def _assert_probe_prunes(idx):
